@@ -10,18 +10,6 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Optional buffer pool: pin the (immutable) base tables in executor
-    // memory — the cacheTable pattern for hot dimensions. Off by
-    // default; set SPARK_GRAFT_CACHE=1 to compare.
-    if (sys.env.get("SPARK_GRAFT_CACHE").contains("1")) {
-      // events must go through Events.load (ns-timestamp normalization)
-      graft.sources.Tables.names.filterNot(_ == "events").foreach { n =>
-        val df = graft.sources.Tables.load(spark, sfDir, n)
-        df.persist(); df.count()
-      }
-      val ev = graft.sources.Events.load(spark, sfDir)
-      ev.persist(); ev.count()
-    }
     // SPARK_GRAFT_ONLY=q01,q169 benches a comma-separated subset
     // (prefix match), for spike bisects and scale probes of the heavy
     // queries without paying for the whole catalog.
@@ -54,10 +42,7 @@ object Bench {
     // rank spines) whose lifecycle ends with the query — clear them
     // between runs so a full-catalog sweep holds storage memory flat
     // instead of accumulating 100+ dead cached frames (GC churn).
-    // The optional pinned-base-tables mode must NOT be evicted, so the
-    // clear is skipped there (that mode re-reads nothing anyway).
-    val keepCache = sys.env.get("SPARK_GRAFT_CACHE").contains("1")
-    def clear(): Unit = if (!keepCache) spark.catalog.clearCache()
+    def clear(): Unit = spark.catalog.clearCache()
     clear()
     // A throwing query records -1 (NOT a silent timing): correctness
     // scoring catches real breakage, but the bench artifact must not be
@@ -110,16 +95,23 @@ object Bench {
     // write the same JSON to a sidecar file, and make the FINAL stdout
     // line a compact (<1 kB) summary that survives the tail capture:
     // totals + pass totals + the top-10 slowest + the sidecar path.
+    // Any earlier sidecar is deleted first, and the path is reported
+    // only when this run's write succeeded, so a stale file from an
+    // earlier run can never pass for this one.
     println(fullLine)
-    val sidecar = sys.env.getOrElse("SPARK_GRAFT_BENCH_QUERIES_FILE",
-      s"/tmp/graft_bench_queries_c$cpus.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(sidecar),
-      (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case _: Throwable => () } // the stdout lines are the record
+    val sidecar = java.nio.file.Paths.get(sys.env.getOrElse(
+      "SPARK_GRAFT_BENCH_QUERIES_FILE", s"/tmp/graft_bench_queries_c$cpus.json"))
+    val written = try {
+      java.nio.file.Files.deleteIfExists(sidecar)
+      java.nio.file.Files.write(sidecar,
+        (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      true
+    } catch { case _: Throwable => false } // the stdout lines are the record
+    val queriesFile = if (written) s""","queries_file":"$sidecar"""" else ""
     val slow10 = sorted.takeRight(10).reverse
       .map { case (k, v) => "\"" + k + "\":" + ms(v) }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","sf":"$sfDir","n_queries":${results.size},"n_failed":$nFailed,"total_pass1":${ms(passTotal(pass1))},"total_pass2":${ms(passTotal(pass2))},"total_min":${ms(total)},"total":${ms(total)},"queries_file":"$sidecar","slowest":$slow10}""")
+    println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","sf":"$sfDir","n_queries":${results.size},"n_failed":$nFailed,"total_pass1":${ms(passTotal(pass1))},"total_pass2":${ms(passTotal(pass2))},"total_min":${ms(total)},"total":${ms(total)}$queriesFile,"slowest":$slow10}""")
     spark.stop()
   }
 }

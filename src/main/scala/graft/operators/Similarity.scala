@@ -919,10 +919,6 @@ object Similarity {
       nSub: Int,
       dim: Int)
 
-  /** Public alias of [[quantCoords]] for dev tuning mains. */
-  def quantCoordsPub(df: DataFrame, id: String, vec: String): DataFrame =
-    quantCoords(df, id, vec)
-
   private[operators] def quantCoords(df: DataFrame, id: String,
       vec: String): DataFrame = df
     .select(col(id), posexplode(col(vec)))

@@ -246,7 +246,9 @@ class PipelineRunner(spark: SparkSession, root: String) {
     * aborting the build. Spark sessions are thread-safe; concurrent
     * jobs become concurrent Spark jobs sharing the cluster (use
     * scheduler pools for fairness at scale). Staleness/skip semantics
-    * identical to [[run]].
+    * identical to [[run]]. An aborted build drains: no further job
+    * starts, the running ones finish writing their targets, and then
+    * the first failure is rethrown.
     */
   def runParallel(
       jobs: Seq[PipelineJob],
@@ -264,10 +266,13 @@ class PipelineRunner(spark: SparkSession, root: String) {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
     val done = new java.util.concurrent.ExecutorCompletionService[
       (PipelineJob, Boolean)](pool)
+    var inFlight = 0
+    var failure: Option[Throwable] = None
     try {
       def submit(job: PipelineJob): Unit = {
         // decision made after all parents completed -> ranTargets stable
         val stale = isStale(job, now) || job.deps.exists(ranTargets.contains)
+        inFlight += 1
         done.submit(() => {
           if (stale) {
             var attempt = 0
@@ -286,18 +291,25 @@ class PipelineRunner(spark: SparkSession, root: String) {
       }
 
       jobs.filter(j => indeg(j.target) == 0).foreach(submit)
-      var remaining = jobs.size
-      while (remaining > 0) {
-        val (job, wasStale) = done.take().get()
-        remaining -= 1
-        if (wasStale) { ran += job.name; ranTargets += job.target }
-        else skipped += job.name
-        jobs.filter(_.deps.contains(job.target)).foreach { d =>
-          indeg(d.target) -= 1
-          if (indeg(d.target) == 0) submit(d)
+      while (inFlight > 0) {
+        val next = done.take()
+        inFlight -= 1
+        try {
+          val (job, wasStale) = next.get()
+          if (wasStale) { ran += job.name; ranTargets += job.target }
+          else skipped += job.name
+          if (failure.isEmpty)
+            jobs.filter(_.deps.contains(job.target)).foreach { d =>
+              indeg(d.target) -= 1
+              if (indeg(d.target) == 0) submit(d)
+            }
+        } catch {
+          case e: java.util.concurrent.ExecutionException =>
+            if (failure.isEmpty) failure = Some(e.getCause)
         }
       }
     } finally pool.shutdown()
+    failure.foreach(e => throw e)
     PipelineResult(ran.toSeq, skipped.toSeq)
   }
 
@@ -381,21 +393,9 @@ class PipelineRunner(spark: SparkSession, root: String) {
   }
 
   /** Run the graph: topo order, skipping fresh jobs; inputs are handed
-    * to each job as DataFrames read from dep targets.
+    * to each job as DataFrames read from dep targets. A job is also
+    * stale transitively if a dep target just re-ran.
     */
-  def run(jobs: Seq[PipelineJob]): PipelineResult = {
-    val now = System.currentTimeMillis()
-    val ran = collection.mutable.ArrayBuffer[String]()
-    val ranTargets = collection.mutable.Set[String]()
-    val skipped = collection.mutable.ArrayBuffer[String]()
-    topoSort(jobs).foreach { job =>
-      // a job is also stale transitively if a dep target just re-ran
-      if (isStale(job, now) || job.deps.exists(ranTargets.contains)) {
-        execute(job)
-        ran += job.name
-        ranTargets += job.target
-      } else skipped += job.name
-    }
-    PipelineResult(ran.toSeq, skipped.toSeq)
-  }
+  def run(jobs: Seq[PipelineJob]): PipelineResult =
+    runForced(jobs, Set.empty)
 }

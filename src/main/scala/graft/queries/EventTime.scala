@@ -23,14 +23,10 @@ object EventTime {
     * events) 32 stores are pure setup overhead, and on a real cluster
     * the state partition count should be sized to state volume, not to
     * the batch shuffle default. Results are partitioning-independent.
-    * SPARK_GRAFT_STREAM_PARTS overrides for measurement sweeps.
     */
   private[queries] def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val eff = sys.env.get("SPARK_GRAFT_STREAM_PARTS")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .getOrElse(n)
     val old = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", eff)
+    s.conf.set("spark.sql.shuffle.partitions", n)
     try body finally s.conf.set("spark.sql.shuffle.partitions", old)
   }
 

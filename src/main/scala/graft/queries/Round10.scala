@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.QueryDef
 import graft.operators.{IndexAdvisor, Similarity}
 import graft.sources.Tables
+import graft.util.Slots
 
 /** Round-10 batch: composing the last ANN family member — DiskANN-
   * shaped serving (graph navigation × PQ compression, q304 × q308) —
@@ -61,12 +62,13 @@ object Round10 {
   }
 
   /** The assembled q312 oracle for a (beam, rounds, nSub, nCodes) dial
-    * point — exposed for the dial sweep ([[graft.TuneDiskann]]): the
+    * point (swept in DuckDB at both SFs: visited-list pool b24/r4
+    * 0.984/0.880, every final-frontier-only pool below 0.8): the
     * shared exact CTEs, the stitched + NN-Descent-refined edge build
     * (q304's `e`), the PQ encode/ADC chain (`psc`), centroid-seeded
     * entries (`bent`), the ADC-ranked beam rounds ending in `pool`,
     * one exact re-rank of the pool, top-5, recall tail. */
-  private[graft] def diskannOracle(beam: Int, rounds: Int, nSub: Int,
+  private def diskannOracle(beam: Int, rounds: Int, nSub: Int,
       nCodes: Int): String =
     s"""${Round6c.exactRecallCte},
       ${Round8.stitchedEdgesSql(d = 4, nPlanes = 6, nTables = 4, out = "e0")},
@@ -95,8 +97,8 @@ object Round10 {
 
   /** q313's slot split (the q305/q311 ingest convention): standing
     * corpus = slot ≠ 0, streamed probes = slot 0. */
-  private val CorpPred = "(vec_id * 2654435761) % 10 <> 0"
-  private val ProbePred = "(vec_id * 2654435761) % 10 = 0"
+  private val CorpPred = Slots.Probe.outSql
+  private val ProbePred = Slots.Probe.inSql
 
   /** q313's walk dials — adviseServing's graph-pq branch constants
     * (d=24/beam=24/rounds=4/16×16 PQ, the q312 swept point). */
@@ -136,7 +138,7 @@ object Round10 {
       qtab AS MATERIALIZED (SELECT cqx.cid AS qid, (cqx.i - 1) // $dsub AS s,
           pqc.code, SUM(cqx.x * pqc.cx) AS pdot
         FROM cqx JOIN pqc ON cqx.i = pqc.i
-        WHERE (cqx.cid * 2654435761) % 10 = 0 GROUP BY 1, 2, 3),
+        WHERE ${Slots.Probe.inSql("cqx.cid")} GROUP BY 1, 2, 3),
       nrm AS MATERIALIZED (SELECT e.vec_id AS vid,
           sqrt(SUM(CAST(e.embedding[i.i] AS DOUBLE) * CAST(e.embedding[i.i] AS DOUBLE))) AS nn
         FROM embeddings e, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1),
@@ -170,7 +172,7 @@ object Round10 {
     * `smi`/`sml` and the calibrated decision `chosen` — q306's
     * measurement pipelines with the CORPUS side restricted to the
     * deterministic fixed-size Lehmer sample (`samp`: the CalSampleK
-    * lowest (vec_id·2654435761) mod 1000003 ranks, ties on vec_id —
+    * lowest `Slots.of(vec_id, 1000003)` ranks, ties on vec_id —
     * the TakeOrdered shape, no global sort at scale) and the exact
     * side (`sxr`) computed ON the sample (that is the cost being
     * saved). Decision arithmetic is IDENTICAL to q306's: costs
@@ -187,7 +189,7 @@ object Round10 {
     }.mkString(" UNION ALL ")
     s"""samp AS MATERIALIZED (SELECT vec_id, embedding FROM (
         SELECT vec_id, embedding,
-          row_number() OVER (ORDER BY (vec_id * 2654435761) % 1000003, vec_id) AS rn
+          row_number() OVER (ORDER BY ${Slots.sql("vec_id", 1000003)}, vec_id) AS rn
         FROM embeddings) WHERE rn <= $CalSampleK),
       s2c AS MATERIALIZED (SELECT vec_id AS id, embedding AS e FROM samp),
       sx0 AS MATERIALIZED (SELECT qs.qid, e.vec_id AS cid, ${Round6c.cosSql("qs2", "e")} AS cos
@@ -271,19 +273,11 @@ object Round10 {
          ORDER BY rec DESC, cand, fam LIMIT 1)) AS fam)"""
   }
 
-  /** Measurement-only probe of the q314 decision (the DuckDB dial
-    * sweep entry point): one row (mi, ml, fam). */
-  private[graft] def calSampledProbeSql: String =
-    s"""${Round6c.exactRecallCte},
-      ${calSampledDecisionSql}
-      SELECT (SELECT rec FROM smi) AS mi, (SELECT rec FROM sml) AS ml,
-        (SELECT fam FROM chosen) AS fam"""
-
-  /** The assembled q313 oracle for a (beam, rounds) dial point —
-    * exposed for the sweep: slot-filtered stitched + refined edges,
+  /** The assembled q313 oracle for a (beam, rounds) dial point:
+    * slot-filtered stitched + refined edges,
     * the ingest PQ/entry chain, the ADC walk, exact re-rank of the
     * visited pool, alerts at cos >= 0.35. */
-  private[graft] def ingestGraphOracle(beam: Int, rounds: Int): String =
+  private def ingestGraphOracle(beam: Int, rounds: Int): String =
     s"""WITH ${Round8.stitchedEdgesSql(d = 4, nPlanes = 6, nTables = 4,
         out = "e0", where = CorpPred)},
       ${Round9.nnDescentSql(rounds = Round9.NnRounds, d = Round9.NnDegree,
@@ -330,7 +324,6 @@ object Round10 {
   private[queries] def bpeMerges(s: SparkSession,
       dir: String): Array[(String, String)] = {
     val docs = t(s, dir, "documents")
-    val slot = pmod(col("doc_id") * lit(2654435761L), lit(10L))
     val norm = trim(regexp_replace(
       regexp_replace(lower(col("text")), "[^a-z ]", " "), " +", " "))
     def adjPairs(df: DataFrame): DataFrame = df
@@ -342,7 +335,7 @@ object Round10 {
       .agg(sum("f").as("cnt"))
     val mergesDf = graft.util.FixtureArtifact.parquet(s, dir,
       "documents.parquet", s"bpe_merges_r$BpeRounds") {
-      var voc = docs.filter(slot =!= 0)
+      var voc = docs.filter(Slots.Probe.out(col("doc_id")))
         .select(explode(split(norm, " ")).as("w"))
         .filter(length(col("w")).between(2, 30))
         .groupBy("w").agg(count(lit(1)).as("f"))
@@ -376,7 +369,7 @@ object Round10 {
   private[queries] def bpeTrainSql(rounds: Int): String = {
     val head =
       s"""tw0 AS MATERIALIZED (SELECT unnest(string_split($BpeNormSql, ' ')) AS w
-        FROM documents WHERE (doc_id * 2654435761) % 10 <> 0),
+        FROM documents WHERE ${Slots.Probe.outSql("doc_id")}),
       tvoc0 AS MATERIALIZED (SELECT
           ' ' || array_to_string(string_split_regex(w, ''), ' ') || ' ' AS seq,
           COUNT(*) AS f
@@ -404,7 +397,7 @@ object Round10 {
   private def bpeEncodeSql(rounds: Int): String = {
     val head =
       s"""pw0 AS MATERIALIZED (SELECT unnest(string_split($BpeNormSql, ' ')) AS w
-        FROM documents WHERE (doc_id * 2654435761) % 10 = 0),
+        FROM documents WHERE ${Slots.Probe.inSql("doc_id")}),
       pw AS MATERIALIZED (SELECT w, COUNT(*) AS f FROM pw0
         WHERE length(w) BETWEEN 2 AND 30 GROUP BY w),
       pvoc0 AS MATERIALIZED (SELECT
@@ -463,7 +456,7 @@ object Round10 {
       cnorms: DataFrame, cbArt: DataFrame): DataFrame = {
     val emb = t(s, dir, "embeddings")
     val probesAll = emb.filter(
-        pmod(col("vec_id") * lit(2654435761L), lit(10L)) === 0)
+        Slots.Probe.in)
       .select(col("vec_id").as("da"), col("embedding").as("ea"))
     EventTime.withShufflePartitions(s, 8) {
       graft.util.FixtureArtifact.parquet(s, dir, "embeddings.parquet",
@@ -565,9 +558,8 @@ object Round10 {
     "q313_stream_semdedup_graphidx" -> QueryDef(
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
-        val slot = pmod(col("vec_id") * lit(2654435761L), lit(10L))
         graft.plans.NativeExpressions.register(s)
-        val corpus0 = emb.filter(slot =!= 0)
+        val corpus0 = emb.filter(Slots.Probe.out)
           .select(col("vec_id").as("cid"), col("embedding").as("ce"))
         val st = Round6c.statsArtifact(s, dir, "embeddings.parquet",
           "stats_nnu_slotc")(corpus0.agg(count(lit(1)).as("n"),
@@ -625,7 +617,7 @@ object Round10 {
         val src = s.readStream.schema(emb.schema)
           .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
         val probe = src.filter(
-            pmod(col("vec_id") * lit(2654435761L), lit(10L)) === 0)
+            Slots.Probe.in)
           .select(col("vec_id").as("da"), col("embedding").as("ea"))
         val q = EventTime.withShufflePartitions(s, 8) {
           probe.writeStream.foreachBatch {
@@ -659,8 +651,8 @@ object Round10 {
     // right semantics, priced at 2.98×/decade (the steepest round-9
     // probe row; the round-9 verdict named sampling as the production
     // pattern). This twin runs the SAME measurement procedure on a
-    // deterministic FIXED-SIZE Lehmer sample (rank by (cid·2654435761)
-    // mod 1000003, ties on cid, keep 500 — the TakeOrdered shape, no
+    // deterministic FIXED-SIZE Lehmer sample (rank by Slots.of(cid,
+    // 1000003), ties on cid, keep 500 — the TakeOrdered shape, no
     // global sort): the exact side, the IVF index, and the LSH tables
     // are all built over 500 vectors regardless of corpus size, so the
     // calibration pass goes ~flat per decade while the DECISION
@@ -681,7 +673,7 @@ object Round10 {
         val nu = st.getLong(1)
         val dupRate = if (n == 0L) 0.0 else 1.0 - nu.toDouble / n
         val sample = corpus.orderBy(
-            pmod(col("cid") * lit(2654435761L), lit(1000003L)), col("cid"))
+            Slots.of(col("cid"), 1000003L), col("cid"))
           .limit(CalSampleK)
         val exactS = Similarity.cosineTopK(qs, sample, k = 5)
           .select(col("qid"), col("cid")).persist()
@@ -995,7 +987,6 @@ object Round10 {
     "q316_llm_bpe_encode" -> QueryDef(
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        val slot = pmod(col("doc_id") * lit(2654435761L), lit(10L))
         val norm = trim(regexp_replace(
           regexp_replace(lower(col("text")), "[^a-z ]", " "), " +", " "))
         def vocabOf(d: DataFrame): DataFrame = d
@@ -1003,7 +994,7 @@ object Round10 {
           .filter(length(col("w")).between(2, 30))
           .groupBy("w").agg(count(lit(1)).as("f"))
         val merges = bpeMerges(s, dir)
-        val pw = vocabOf(docs.filter(slot === 0))
+        val pw = vocabOf(docs.filter(Slots.Probe.in(col("doc_id"))))
         val enc = merges.foldLeft(pw.select(
             concat(lit(" "),
               array_join(expr("filter(split(w, ''), x -> x != '')"), " "),
@@ -1072,9 +1063,8 @@ object Round10 {
     "q317_stream_graph_insert" -> QueryDef(
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
-        val slot = pmod(col("vec_id") * lit(2654435761L), lit(10L))
         graft.plans.NativeExpressions.register(s)
-        val corpus0 = emb.filter(slot =!= 0)
+        val corpus0 = emb.filter(Slots.Probe.out)
           .select(col("vec_id").as("cid"), col("embedding").as("ce"))
         val st = Round6c.statsArtifact(s, dir, "embeddings.parquet",
           "stats_nnu_slotc")(corpus0.agg(count(lit(1)).as("n"),
@@ -1123,7 +1113,7 @@ object Round10 {
         val src = s.readStream.schema(emb.schema)
           .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
         val probe = src.filter(
-            pmod(col("vec_id") * lit(2654435761L), lit(10L)) === 0)
+            Slots.Probe.in)
           .select(col("vec_id").as("da"), col("embedding").as("ea"))
         val q = EventTime.withShufflePartitions(s, 8) {
           probe.writeStream.foreachBatch {
@@ -1154,7 +1144,7 @@ object Round10 {
         val acc = s.sql("SELECT u, v, cos FROM graftmem.graph_inserts")
         val wCap = Window.partitionBy("u").orderBy(col("cos").desc, col("v"))
         acc.withColumn("rn",
-            when(pmod(col("u") * lit(2654435761L), lit(10L)) === 0, lit(0))
+            when(Slots.Probe.in(col("u")), lit(0))
               .otherwise(row_number().over(wCap)))
           .filter(col("rn") <= 8)
           .select(col("u"), col("v"), col("cos"))
@@ -1178,7 +1168,7 @@ object Round10 {
       allx AS MATERIALIZED (SELECT u, v, cos FROM fwd
         UNION ALL SELECT v AS u, u AS v, cos FROM fwd),
       capped AS (SELECT u, v, cos FROM (SELECT u, v, cos,
-          CASE WHEN (u * 2654435761) % 10 = 0 THEN 0
+          CASE WHEN ${Slots.Probe.inSql("u")} THEN 0
                ELSE row_number() OVER (PARTITION BY u ORDER BY cos DESC, v) END AS rn
         FROM allx) WHERE rn <= 8)
       SELECT u, v, cos FROM capped ORDER BY u, v"""))

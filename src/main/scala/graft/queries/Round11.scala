@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.operators.{IndexAdvisor, Similarity}
 import graft.sources.Tables
+import graft.util.Slots
 
 /** Round-11 batch: ATTRIBUTE-FILTERED ANN serving (the production
   * "metadata predicate × vector top-k" shape, at two selectivities,
@@ -24,13 +25,12 @@ object Round11 {
   // that exposes the known failure modes (IVF cells empty out; the
   // graph walk's visited pool thins to sel·|visited|).
   private[queries] val F50Pred = "label < 5"
-  private[queries] val F05Pred = "(vec_id * 2654435761) % 20 = 3"
+  private val F05 = Slots.Split("vec_id", 20, 3)
+  private[queries] val F05Pred = F05.inSql
 
   private[queries] def keepOf(emb: DataFrame, tag: String): DataFrame = tag match {
     case "f50" => emb.filter(col("label") < 5).select(col("vec_id").as("cid"))
-    case "f05" => emb.filter(
-        pmod(col("vec_id") * lit(2654435761L), lit(20L)) === 3)
-      .select(col("vec_id").as("cid"))
+    case "f05" => emb.filter(F05.in).select(col("vec_id").as("cid"))
     case other => sys.error(s"unknown filter tag $other")
   }
 
@@ -210,213 +210,16 @@ object Round11 {
   private[queries] val GraphBoostBeam = 32 // beam is the recovery dial:
   private[queries] val GraphBoostRounds = 5 // f05 0.976/0.832 swept
 
-  // ---- q323's fixed-SLO dials (swept in DuckDB via sloFilteredProbeSql
-  // BEFORE wiring: sampled ivf np12 = 0.924/0.924; best small-dial walk
-  // b9r4 = 0.888/0.616 — the honest negative at sf0.1). Declared before
-  // `defs` per the q161 object-init rule. -------------------------------
+  // ---- q323's fixed-SLO dials (a DuckDB sweep at both SFs measured the
+  // sampled ivf np12 at 0.924/0.924 and the best small-dial walk b9r4 at
+  // 0.888/0.616 — the honest negative at sf0.1). Declared before `defs`
+  // per the q161 object-init rule. ---------------------------------------
   private[queries] val SloBeam = 9L
   private[queries] val SloRounds = 4L
 
   // ---- q321's takedown predicate (~14% of the corpus) ------------------
-  private[queries] val TombPred = "(vec_id * 2654435761) % 3 = 1"
-  private[queries] val SurvPred = "(vec_id * 2654435761) % 3 <> 1"
-
-  /** Sweep probe: avg filtered recall per (tag, nprobe) for the
-    * standing-IVF serve — run in DuckDB BEFORE the Spark side (the
-    * round-9 rule). One row per dial point. */
-  private[graft] def ivfFilteredProbeSql: String = {
-    val dials = for (tag <- Seq("f50", "f05"); np <- Seq(4, 6, 8, 10, 12, 14, 16))
-      yield (tag, np)
-    val serves = dials.zipWithIndex.map { case ((tag, np), i) =>
-      ivfFilteredAnnr(tag, np.toString, s"x$i", "iv") }.mkString(",\n      ")
-    val rows = dials.zipWithIndex.map { case ((tag, np), i) =>
-      s"""SELECT '$tag' AS sel, 'np$np' AS dial, round(AVG(recall), 3) AS rec
-        FROM (${taggedTailSql(tag, s"np$np", s"exf_$tag", s"x${i}annr")})"""
-    }.mkString(" UNION ALL ")
-    s"""${Round6c.exactRecallCte},
-      ${fsetExfSql("f50", F50Pred)},
-      ${fsetExfSql("f05", F05Pred)},
-      ${ivfStandingSql("16", "iv")},
-      ${ivfStandingSql("32", "jw")},
-      ${ivfFilteredAnnr("f50", "24", "y0", "jw")},
-      $serves
-      SELECT * FROM ($rows
-        UNION ALL
-        SELECT 'f50' AS sel, 'nl32np24' AS dial, round(AVG(recall), 3) AS rec
-        FROM (${taggedTailSql("f50", "nl32np24", "exf_f50", "y0annr")}))
-      ORDER BY sel, dial"""
-  }
-
-  /** Sweep probe: avg filtered recall per (tag, beam, rounds) for the
-    * full-graph walk with filtered re-rank. */
-  private[graft] def graphFilteredProbeSql: String = {
-    val chains = Seq(24, 32).map(b =>
-      beamAdcP(rounds = 6, beam = b, p = s"g$b", edge = "e",
-        entry = "gbent", psc = "psc")).mkString(",\n      ")
-    val pools = (for (b <- Seq(24, 32); r <- 3 to 6)
-      yield poolSql(s"g$b", r, s"pool_b${b}_r$r")).mkString(",\n      ")
-    val annrs = (for (tag <- Seq("f50", "f05"); b <- Seq(24, 32); r <- 3 to 6)
-      yield graphFilteredAnnr(tag, s"pool_b${b}_r$r", s"a_${tag}_b${b}_r$r"))
-      .mkString(",\n      ")
-    val rows = (for (tag <- Seq("f50", "f05"); b <- Seq(24, 32); r <- 3 to 6)
-      yield s"""SELECT '$tag' AS sel, 'b${b}r$r' AS dial, round(AVG(recall), 3) AS rec
-        FROM (${taggedTailSql(tag, s"b${b}r$r", s"exf_$tag", s"a_${tag}_b${b}_r${r}annr")})""")
-      .mkString(" UNION ALL ")
-    s"""${Round6c.exactRecallCte},
-      ${fsetExfSql("f50", F50Pred)},
-      ${fsetExfSql("f05", F05Pred)},
-      $fullGraphCtes,
-      ${graphEntrySql("g",
-        "SELECT vec_id, embedding FROM embeddings WHERE vec_id < 16")},
-      $chains,
-      $pools,
-      $annrs
-      SELECT * FROM ($rows) ORDER BY sel, dial"""
-  }
-
-  /** Sweep probe: avg survivor recall of the pruned vs compacted graph
-    * serve (q321's dial decision: compaction rounds 1 vs 2). */
-  private[graft] def deleteCompactProbeSql: String = {
-    val serves = Seq(
-      ("pruned", "ed"), ("compact1", "ec1"), ("compact2", "ec2"))
-    val walks = serves.map { case (lbl, edge) =>
-      beamAdcP(rounds = 4, beam = 24, p = s"w$lbl", edge = edge,
-        entry = "sbent", psc = "psc") }.mkString(",\n      ")
-    val pools = serves.map { case (lbl, _) =>
-      poolSql(s"w$lbl", 4, s"pool_$lbl") }.mkString(",\n      ")
-    val annrs = serves.map { case (lbl, _) =>
-      graphAnnr(s"pool_$lbl", s"an_$lbl") }.mkString(",\n      ")
-    val rows = serves.map { case (lbl, _) =>
-      s"""SELECT 'surv' AS sel, '$lbl' AS dial, round(AVG(recall), 3) AS rec
-        FROM (${taggedTailSql("surv", lbl, "exf_surv", s"an_${lbl}annr")})"""
-    }.mkString(" UNION ALL ")
-    s"""${Round6c.exactRecallCte},
-      ${fsetExfSql("surv", SurvPred)},
-      $fullGraphCtes,
-      tomb AS MATERIALIZED (SELECT vec_id AS cid FROM embeddings WHERE $TombPred),
-      ed AS MATERIALIZED (SELECT e.u, e.v FROM e
-        WHERE e.u NOT IN (SELECT cid FROM tomb)
-          AND e.v NOT IN (SELECT cid FROM tomb)),
-      ${Round9.nnDescentSql(rounds = 1, d = Round9.NnDegree,
-        src = "ed", out = "ec1", p = "k1")},
-      ${Round9.nnDescentSql(rounds = 2, d = Round9.NnDegree,
-        src = "ed", out = "ec2", p = "k2")},
-      ${graphEntrySql("s",
-        s"SELECT vec_id, embedding FROM embeddings WHERE $SurvPred ORDER BY vec_id LIMIT 16")},
-      $walks,
-      $pools,
-      $annrs
-      SELECT * FROM ($rows) ORDER BY sel, dial"""
-  }
-
-  /** Sweep probe (q325): filtered recall ON THE MAINTAINED GRAPH —
-    * takedown 1/3 (q321's tombstones), one compaction round, then f50
-    * filtered serving against the exact top-5 over survivors ∩ f50.
-    * Dials: the q321 serve point (b24r4) and the q319 boost (b32r5),
-    * swept in DuckDB at both SFs BEFORE the Spark side. */
-  private[graft] def maintainedFilteredProbeSql: String = {
-    val dials = Seq((24, 4), (32, 5))
-    val walks = dials.map { case (b, r) =>
-      beamAdcP(rounds = r, beam = b, p = s"mf$b", edge = "ec1",
-        entry = "sbent", psc = "psc") }.mkString(",\n      ")
-    val pools = dials.map { case (b, r) =>
-      poolSql(s"mf$b", r, s"mfpool_b${b}_r$r") }.mkString(",\n      ")
-    val annrs = dials.map { case (b, r) =>
-      graphFilteredAnnr("sf50", s"mfpool_b${b}_r$r", s"mfa_b${b}_r$r") }
-      .mkString(",\n      ")
-    val rows = dials.map { case (b, r) =>
-      s"""SELECT 'sf50' AS sel, 'b${b}r$r' AS dial, round(AVG(recall), 3) AS rec
-        FROM (${taggedTailSql("sf50", s"b${b}r$r", "exf_sf50", s"mfa_b${b}_r${r}annr")})"""
-    }.mkString(" UNION ALL ")
-    s"""${Round6c.exactRecallCte},
-      ${fsetExfSql("sf50", s"($SurvPred) AND ($F50Pred)")},
-      $fullGraphCtes,
-      tomb AS MATERIALIZED (SELECT vec_id AS cid FROM embeddings WHERE $TombPred),
-      ed AS MATERIALIZED (SELECT e.u, e.v FROM e
-        WHERE e.u NOT IN (SELECT cid FROM tomb)
-          AND e.v NOT IN (SELECT cid FROM tomb)),
-      ${Round9.nnDescentSql(rounds = 1, d = Round9.NnDegree,
-        src = "ed", out = "ec1", p = "k1")},
-      ${graphEntrySql("s",
-        s"SELECT vec_id, embedding FROM embeddings WHERE $SurvPred ORDER BY vec_id LIMIT 16")},
-      $walks,
-      $pools,
-      $annrs
-      SELECT * FROM ($rows) ORDER BY sel, dial"""
-  }
-
-  /** Sweep probe (q323): (a) the SAMPLED filtered-IVF measurement —
-    * the q314 Lehmer-500 sample carrying the filtered axis: standing
-    * 16-cell index over the sample, filter applied to the probed
-    * cells, recall vs the sampled filtered exact top-5 — and (b) the
-    * SMALL-DIAL graph walks whose candidate count beam·(d+1)·rounds
-    * fits a FIXED serving SLO budget (the standing d=24 graph costs
-    * 2400/query at q312's dials — more than sf0.1's whole f50
-    * survivor set, so a fixed budget needs leaner dials to keep the
-    * graph family admissible). Run in DuckDB at both SFs BEFORE any
-    * Spark wiring (the round-9 rule). */
-  private[graft] def sloFilteredProbeSql: String = {
-    val sampled = s"""smp AS MATERIALIZED (SELECT vec_id AS cid, embedding AS e
-        FROM embeddings
-        ORDER BY (vec_id * 2654435761) % 1000003, vec_id LIMIT 500),
-      mcent AS MATERIALIZED (SELECT cid AS centroid_id, e AS centroid
-        FROM smp ORDER BY cid LIMIT 16),
-      mq0 AS MATERIALIZED (SELECT q.id, c.centroid_id,
-          round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM q2 q, mcent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      mqa AS MATERIALIZED (SELECT id AS qid, centroid_id, r FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM mq0) WHERE r <= 16),
-      mc0 AS MATERIALIZED (SELECT s.cid AS id, c.centroid_id,
-          round(SUM(CAST(s.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM smp s, mcent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      mca AS MATERIALIZED (SELECT id AS cid, centroid_id FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM mc0) WHERE r = 1),
-      exs AS MATERIALIZED (SELECT qid, cid FROM (SELECT ex0.qid, ex0.cid,
-          row_number() OVER (PARTITION BY ex0.qid ORDER BY ex0.cos DESC, ex0.cid) AS rnk
-        FROM ex0 JOIN smp s ON ex0.cid = s.cid
-        JOIN fset_f50 f ON ex0.cid = f.cid) WHERE rnk <= 5)"""
-    val nps = Seq(8, 10, 12, 14, 16)
-    val mserves = nps.map { np =>
-      s"""m${np}cand AS MATERIALIZED (SELECT mqa.qid, mca.cid
-        FROM mqa JOIN mca ON mqa.centroid_id = mca.centroid_id
-        JOIN fset_f50 f ON mca.cid = f.cid
-        WHERE mqa.r <= $np AND mqa.qid <> mca.cid),
-      m${np}annr AS (SELECT qid, cid FROM (SELECT c.qid, c.cid,
-          row_number() OVER (PARTITION BY c.qid ORDER BY e.cos DESC, c.cid) AS rnk
-        FROM m${np}cand c JOIN ex0 e ON e.qid = c.qid AND e.cid = c.cid)
-      WHERE rnk <= 5)"""
-    }.mkString(",\n      ")
-    val mrows = nps.map { np =>
-      s"""SELECT 'smp' AS sel, 'np$np' AS dial, round(AVG(recall), 3) AS rec
-        FROM (${taggedTailSql("smp", s"np$np", "exs", s"m${np}annr")})"""
-    }.mkString(" UNION ALL ")
-    val dials = Seq((8, 3), (8, 4), (9, 4), (12, 3), (16, 2))
-    val chains = dials.map(_._1).distinct.map(b =>
-      beamAdcP(rounds = 4, beam = b, p = s"h$b", edge = "e",
-        entry = "gbent", psc = "psc")).mkString(",\n      ")
-    val pools = dials.map { case (b, r) =>
-      poolSql(s"h$b", r, s"spool_b${b}_r$r") }.mkString(",\n      ")
-    val annrs = dials.map { case (b, r) =>
-      graphFilteredAnnr("f50", s"spool_b${b}_r$r", s"sw_b${b}_r$r") }
-      .mkString(",\n      ")
-    val grows = dials.map { case (b, r) =>
-      s"""SELECT 'f50' AS sel, 'b${b}r$r' AS dial, round(AVG(recall), 3) AS rec
-        FROM (${taggedTailSql("f50", s"b${b}r$r", "exf_f50", s"sw_b${b}_r${r}annr")})"""
-    }.mkString(" UNION ALL ")
-    s"""${Round6c.exactRecallCte},
-      ${fsetExfSql("f50", F50Pred)},
-      $sampled,
-      $mserves,
-      $fullGraphCtes,
-      ${graphEntrySql("g",
-        "SELECT vec_id, embedding FROM embeddings WHERE vec_id < 16")},
-      $chains,
-      $pools,
-      $annrs
-      SELECT * FROM ($mrows UNION ALL $grows) ORDER BY sel, dial"""
-  }
+  private[queries] val TombPred = Slots.Tomb.inSql
+  private[queries] val SurvPred = Slots.Tomb.outSql
 
   /** The exact-reranked VISITED pool of one ADC walk over the 50-query
     * harness sample, as a fixture+dial-keyed artifact — the exact-top5
@@ -760,10 +563,10 @@ object Round11 {
         val corpus = emb
           .select(col("vec_id").as("cid"), col("embedding").as("ce"))
         val tomb = emb.filter(
-            pmod(col("vec_id") * lit(2654435761L), lit(3L)) === 1)
+            Slots.Tomb.in)
           .select(col("vec_id").as("cid"))
         val keepSurv = emb.filter(
-            pmod(col("vec_id") * lit(2654435761L), lit(3L)) =!= 1)
+            Slots.Tomb.out)
           .select(col("vec_id").as("cid"))
         val refined = Round9.refinedGraphArtifact(s, dir, corpus)
         val codes = graft.util.FixtureArtifact.parquet(s, dir,
@@ -998,7 +801,7 @@ object Round11 {
           else {
             // (a) sampled IVF measurement — the q314 Lehmer sample
             val sample = corpus.orderBy(
-                pmod(col("cid") * lit(2654435761L), lit(1000003L)),
+                Slots.of(col("cid"), 1000003L),
                 col("cid"))
               .limit(Round10.CalSampleK)
             val exS = Similarity.cosineTopK(qs,
@@ -1219,10 +1022,10 @@ object Round11 {
         val corpus = emb
           .select(col("vec_id").as("cid"), col("embedding").as("ce"))
         val tomb = emb.filter(
-            pmod(col("vec_id") * lit(2654435761L), lit(3L)) === 1)
+            Slots.Tomb.in)
           .select(col("vec_id").as("cid"))
         val keep = emb.filter(
-            pmod(col("vec_id") * lit(2654435761L), lit(3L)) =!= 1 &&
+            Slots.Tomb.out &&
               col("label") < 5)
           .select(col("vec_id").as("cid"))
         val refined = Round9.refinedGraphArtifact(s, dir, corpus)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.operators.{FixedPoint, IndexAdvisor, Ranks, Similarity}
 import graft.sources.Tables
+import graft.util.Slots
 
 /** Round-11 second batch: the SQ8 compression point on the ANN
   * memory/recall curve (q326 — FAISS's production-default `IVF,SQ8`
@@ -47,21 +48,14 @@ object Round11b {
 
   // ---- the Lehmer doc-id hash domain (shared by q331/q332/q335/q336) --
 
-  /** doc_id bound for the seedless Lehmer hash: id·2654435761 must stay
-    * in int64 (the round-11 ADVICE catch — ids in [2^31.7, 2^32) passed
-    * the old `< 2^32` require yet produced a wrapped-negative hash in
-    * Spark and a BIGINT-overflow error in DuckDB). ≈ 3.47·10^9, itself
-    * < 2^32, so this single bound also covers the okey packing. */
-  private[queries] val MaxHashId: Long = Long.MaxValue / 2654435761L
-
-  /** `id` verified into [0, MaxHashId] as a row-local projection — the
+  /** `id` verified into [0, Slots.MaxKey] as a row-local projection — the
     * loud guard for the hash's callers that have no aggregate at hand
     * (q331's fill, q335's split). raise_error keeps both engines on
     * the same side of the domain edge. */
   private[queries] def guardedId(id: Column): Column =
-    when(id.between(0L, MaxHashId), id).otherwise(expr(
+    when(id.between(0L, Slots.MaxKey), id).otherwise(expr(
       s"CAST(raise_error('doc_id exceeds the Lehmer-hash int64 domain " +
-        s"[0, $MaxHashId]') AS BIGINT)"))
+        s"[0, ${Slots.MaxKey}]') AS BIGINT)"))
 
   // ---- q326/q328 oracle fragments (the SQ8 standing index) ------------
 
@@ -457,9 +451,8 @@ object Round11b {
     "q329_stream_semdedup_sq8" -> QueryDef(
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
-        val slot = pmod(col("vec_id") * lit(2654435761L), lit(10L))
         graft.plans.NativeExpressions.register(s)
-        val corpus0 = emb.filter(slot =!= 0)
+        val corpus0 = emb.filter(Slots.Probe.out)
           .select(col("vec_id").as("cid"), col("embedding").as("ce"))
         val cents = broadcast(corpus0.orderBy("cid").limit(16)
           .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
@@ -485,7 +478,7 @@ object Round11b {
         val src = s.readStream.schema(emb.schema)
           .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
         val probe = src.filter(
-            pmod(col("vec_id") * lit(2654435761L), lit(10L)) === 0)
+            Slots.Probe.in)
           .select(col("vec_id").as("da"), col("embedding").as("ea"))
         val q = EventTime.withShufflePartitions(s, 8) {
           probe.writeStream.foreachBatch {
@@ -506,9 +499,9 @@ object Round11b {
           ORDER BY da, db""")
       },
       Some(s"""WITH corp AS MATERIALIZED (SELECT vec_id, embedding FROM embeddings
-        WHERE (vec_id * 2654435761) % 10 <> 0),
+        WHERE ${Slots.Probe.outSql}),
       pb0 AS MATERIALIZED (SELECT vec_id, embedding FROM embeddings
-        WHERE (vec_id * 2654435761) % 10 = 0),
+        WHERE ${Slots.Probe.inSql}),
       grp AS MATERIALIZED (SELECT embedding, MIN(vec_id) AS rep FROM corp GROUP BY 1),
       pg AS MATERIALIZED (SELECT embedding, MIN(vec_id) AS pa FROM pb0 GROUP BY 1),
       cents AS MATERIALIZED (SELECT vec_id AS centroid_id, embedding AS centroid
@@ -566,7 +559,7 @@ object Round11b {
     // DoReMi-adjacent deterministic form): give every language domain
     // an equal half-share token budget B = total_tokens div (2·D),
     // then greedily fill each domain in seedless-Lehmer-hash order
-    // (h = doc_id·2654435761 mod 1000003 — the q314 sampling prime;
+    // (h = Slots.hash(doc_id) mod 1000003 — the q314 sampling prime;
     // the q172 prime would never wrap at fixture ids and the "shuffle"
     // would silently be id order. doc_id tie-break on collisions; the
     // q261/q286 no-RNG convention) until the running total reaches B. The
@@ -589,7 +582,7 @@ object Round11b {
           regexp_replace(lower(col("text")), "[^a-z ]", " "), " +", " "))
         val td = docs.select(col("doc_id"), col("lang"),
           size(split(norm, " ")).cast("long").as("tok"),
-          (guardedId(col("doc_id")) * lit(2654435761L) % lit(1000003L))
+          (Slots.hash(guardedId(col("doc_id"))) % lit(1000003L))
             .as("hsh"))
         val bud = broadcast(td
           .agg(sum("tok").as("tt"), countDistinct("lang").as("dd"))
@@ -604,10 +597,10 @@ object Round11b {
               .otherwise(0L).as("selected"))
           .orderBy("lang", "hsh", "doc_id")
       },
-      Some("""WITH td AS (SELECT doc_id, lang,
+      Some(s"""WITH td AS (SELECT doc_id, lang,
           CAST(len(string_split(trim(regexp_replace(regexp_replace(
             lower(text), '[^a-z ]', ' ', 'g'), ' +', ' ', 'g')), ' ')) AS BIGINT) AS tok,
-          CAST((doc_id * 2654435761) % 1000003 AS BIGINT) AS hsh
+          CAST(${Slots.sql("doc_id", 1000003)} AS BIGINT) AS hsh
         FROM documents),
       bud AS (SELECT CAST(SUM(tok) AS BIGINT) // (2 * COUNT(DISTINCT lang)) AS bud
         FROM td),
@@ -643,11 +636,11 @@ object Round11b {
           regexp_replace(lower(col("text")), "[^a-z ]", " "), " +", " "))
         val td = docs.select(col("doc_id"), col("lang"),
           size(split(norm, " ")).cast("long").as("tok"),
-          (col("doc_id") * lit(2654435761L) % lit(1000003L)).as("hsh"))
+          (Slots.hash(col("doc_id")) % lit(1000003L)).as("hsh"))
         val mx = td.agg(max("doc_id")).head().getLong(0)
-        require(mx <= MaxHashId,
-          s"doc_id·2654435761 must stay in int64 AND the okey packing " +
-            s"needs doc_id < 2^32 — both bound by $MaxHashId (max seen $mx)")
+        require(mx <= Slots.MaxKey,
+          s"doc_id·${Slots.Multiplier} must stay in int64 AND the okey packing " +
+            s"needs doc_id < 2^32 — both bound by ${Slots.MaxKey} (max seen $mx)")
         val keyed = td.withColumn("okey",
           col("hsh") * lit(4294967296L) + col("doc_id"))
         Ranks.cumSums(keyed, "okey", Seq("tok"), bins = 64)
@@ -659,10 +652,10 @@ object Round11b {
               1L).otherwise(0L).as("crosses"))
           .orderBy("hsh", "doc_id")
       },
-      Some("""WITH td AS (SELECT doc_id, lang,
+      Some(s"""WITH td AS (SELECT doc_id, lang,
           CAST(len(string_split(trim(regexp_replace(regexp_replace(
             lower(text), '[^a-z ]', ' ', 'g'), ' +', ' ', 'g')), ' ')) AS BIGINT) AS tok,
-          CAST((doc_id * 2654435761) % 1000003 AS BIGINT) AS hsh
+          CAST(${Slots.sql("doc_id", 1000003)} AS BIGINT) AS hsh
         FROM documents),
       rn AS (SELECT *, CAST(SUM(tok) OVER (ORDER BY hsh, doc_id
           ROWS UNBOUNDED PRECEDING) AS BIGINT) AS run FROM td)
@@ -884,8 +877,7 @@ object Round11b {
           "greatest(least(((least(tok, 25) - lo) * 16) div (hi - lo + 1), 15), 0)")
         val labeled = binned.select(explode(array(
             struct(lit("split").as("cmp"),
-              (pmod(guardedId(col("doc_id")) * lit(2654435761L),
-                lit(1000003L)) % 2 === 0)
+              (Slots.of(guardedId(col("doc_id")), 1000003L) % 2 === 0)
                 .as("isRef"), col("bin")),
             struct(lit("inject").as("cmp"), lit(true).as("isRef"), col("bin")),
             struct(lit("inject").as("cmp"), lit(false).as("isRef"),
@@ -937,7 +929,7 @@ object Round11b {
             // ((SELECT hi FROM mm) - (SELECT lo FROM mm) + 1), 15) AS bin
         FROM td),
       labeled AS (
-        SELECT 'split' AS cmp, ((doc_id * 2654435761) % 1000003) % 2 = 0 AS isref, bin FROM binned
+        SELECT 'split' AS cmp, (${Slots.sql("doc_id", 1000003)}) % 2 = 0 AS isref, bin FROM binned
         UNION ALL
         SELECT 'inject' AS cmp, true AS isref, bin FROM binned
         UNION ALL
@@ -994,7 +986,7 @@ object Round11b {
         val td = sel.join(docs, Seq("doc_id"))
           .select(col("doc_id"), col("lang"),
             size(split(norm, " ")).cast("long").as("tok"),
-            (guardedId(col("doc_id")) * lit(2654435761L) % lit(1000003L))
+            (Slots.hash(guardedId(col("doc_id"))) % lit(1000003L))
               .as("hsh"))
         val bud = broadcast(td
           .agg(sum("tok").as("tt"), countDistinct("lang").as("dd"))
@@ -1006,9 +998,9 @@ object Round11b {
           .filter(col("run_tok") - col("tok") < col("bud"))
           .select(col("doc_id"), col("lang"), col("tok"), col("hsh"))
         val mx = mixed.agg(max("doc_id")).head().getLong(0)
-        require(mx <= MaxHashId,
-          s"doc_id·2654435761 must stay in int64 AND the okey packing " +
-            s"needs doc_id < 2^32 — both bound by $MaxHashId (max seen $mx)")
+        require(mx <= Slots.MaxKey,
+          s"doc_id·${Slots.Multiplier} must stay in int64 AND the okey packing " +
+            s"needs doc_id < 2^32 — both bound by ${Slots.MaxKey} (max seen $mx)")
         val keyed = mixed.withColumn("okey",
           col("hsh") * lit(4294967296L) + col("doc_id"))
         Ranks.cumSums(keyed, "okey", Seq("tok"), bins = 64)
@@ -1024,7 +1016,7 @@ object Round11b {
       td2 AS (SELECT d.doc_id, sd.lang,
           CAST(len(string_split(trim(regexp_replace(regexp_replace(
             lower(d.text), '[^a-z ]', ' ', 'g'), ' +', ' ', 'g')), ' ')) AS BIGINT) AS tok,
-          CAST((d.doc_id * 2654435761) % 1000003 AS BIGINT) AS hsh
+          CAST(${Slots.sql("d.doc_id", 1000003)} AS BIGINT) AS hsh
         FROM (SELECT doc_id, lang FROM dsel WHERE selected = 1) sd
         JOIN documents d USING (doc_id)),
       bud2 AS (SELECT CAST(SUM(tok) AS BIGINT) // (2 * COUNT(DISTINCT lang)) AS bud

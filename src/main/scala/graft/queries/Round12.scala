@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.operators.{IndexAdvisor, Similarity}
 import graft.sources.Tables
+import graft.util.Slots
 
 /** Round-12 batch: the two round-11 axes composed — attribute-FILTERED
   * serving on the COMPRESSED rungs (SQ8/IVFPQ) with a unified filtered
@@ -62,96 +63,9 @@ object Round12 {
         FROM ${p}fpool pl JOIN ex0 e ON pl.qid = e.qid AND pl.cid = e.cid)
       WHERE rnk <= 5)"""
 
-  // ---- round-12 DuckDB dial sweeps (run BEFORE any Spark wiring) ------
-
-  /** Sweep probe: avg FILTERED recall per (tag, nprobe, m) for the
-    * SQ8 standing serve — the interaction to measure is filtered-cell
-    * emptying (expected survivors ≈ sel·nu·nprobe/nlist) × the
-    * near-lossless SQ8 pool depth. */
-  private[graft] def sq8FilteredProbeSql: String = {
-    val cands = for (tag <- Seq("f50", "f05"); np <- Seq(8, 10, 12, 14, 16))
-      yield (tag, np)
-    val candCtes = cands.map { case (tag, np) =>
-      sq8CandWhereSql(tag, np.toString, s"c${tag}n$np", "") }
-      .mkString(",\n      ")
-    val dials = for ((tag, np) <- cands; m <- Seq(5, 8, 16)) yield (tag, np, m)
-    val poolCtes = dials.map { case (tag, np, m) =>
-      sq8PoolAnnrSql(m.toString, s"p${tag}n${np}m$m", s"c${tag}n$np") }
-      .mkString(",\n      ")
-    val rows = dials.map { case (tag, np, m) =>
-      s"""SELECT '$tag' AS sel, 'np${np}m$m' AS dial, round(AVG(recall), 3) AS rec
-        FROM (${Round11.taggedTailSql(tag, s"np${np}m$m", s"exf_$tag",
-          s"p${tag}n${np}m${m}annr")})"""
-    }.mkString(" UNION ALL ")
-    s"""${Round6c.exactRecallCte},
-      ${Round11.fsetExfSql("f50", Round11.F50Pred)},
-      ${Round11.fsetExfSql("f05", Round11.F05Pred)},
-      ${Round11b.sq8StandingSql("")},
-      $candCtes,
-      $poolCtes
-      SELECT * FROM ($rows) ORDER BY sel, dial"""
-  }
-
-  /** Sweep probe: avg FILTERED recall per (tag, nprobe, pool dial) for
-    * the IVFADC serve — here the pool depth carries the ranking error
-    * (the q308 law), so the sweep crosses the over-probe dial with a
-    * corpus-scaled vs a SELECTIVITY-scaled pool. */
-  private[graft] def ivfpqFilteredProbeSql: String = {
-    val nps = Seq(10, 12, 14, 16)
-    val chains = nps.map(np => Round9.ivfPqSqlE("16", np.toString, "1",
-      nSub = 16, nCodes = 16, prefix = s"w$np")).mkString(",\n      ")
-    val pools = Seq(
-      ("mc", "GREATEST(100, (SELECT COUNT(*) FROM embeddings) * 3 // 20)"),
-      ("mf", null)) // per-tag: GREATEST(50, 3*fNu/20)
-    val dials = for (tag <- Seq("f50", "f05"); np <- nps; (pd, _) <- pools)
-      yield (tag, np, pd)
-    val poolCtes = dials.map { case (tag, np, pd) =>
-      val m = if (pd == "mc")
-        "GREATEST(100, (SELECT COUNT(*) FROM embeddings) * 3 // 20)"
-      else s"GREATEST(50, 3 * (SELECT COUNT(*) FROM fset_$tag) // 20)"
-      pqFPoolAnnrSql(tag, m, s"q${tag}n$np$pd", s"w$np") }
-      .mkString(",\n      ")
-    val rows = dials.map { case (tag, np, pd) =>
-      s"""SELECT '$tag' AS sel, 'np$np$pd' AS dial, round(AVG(recall), 3) AS rec
-        FROM (${Round11.taggedTailSql(tag, s"np$np$pd", s"exf_$tag",
-          s"q${tag}n$np${pd}annr")})"""
-    }.mkString(" UNION ALL ")
-    s"""${Round6c.exactRecallCte},
-      ${Round11.fsetExfSql("f50", Round11.F50Pred)},
-      ${Round11.fsetExfSql("f05", Round11.F05Pred)},
-      $chains,
-      $poolCtes
-      SELECT * FROM ($rows) ORDER BY sel, dial"""
-  }
-
-  /** Sweep probe: the q339 branch-B serve point — filtered IVFPQ at
-    * the RE-DERIVED sf0.1 dials (nlist=32, nprobe=28, corpus pool) —
-    * checked in DuckDB before wiring (the advisor serves re-derived
-    * dials the nlist-16 grid never measured; the q310 precedent says
-    * sweep them too). */
-  private[graft] def ivfpqRederivedProbeSql: String =
-    s"""${Round6c.exactRecallCte},
-      ${Round11.fsetExfSql("f50", Round11.F50Pred)},
-      ${Round9.ivfPqSqlE("32", "28", "1", nSub = 16, nCodes = 16,
-        prefix = "v")},
-      ${pqFPoolAnnrSql("f50", "300", "z", "v")}
-      SELECT 'f50' AS sel, 'nl32np28m300' AS dial, round(AVG(recall), 3) AS rec
-      FROM (${Round11.taggedTailSql("f50", "x", "exf_f50", "zannr")})"""
-
   // ---- q340/q341: takedowns + drift-retrain on the scan index --------
 
-  /** q340/q341 takedown predicates: the Lehmer mod-3 slot (q321's —
-    * pseudo-random, cell-uniform: the NULL drift case) and the label
-    * half-space (label >= 5 removed — a publisher-takedown-shaped
-    * deletion whose geometric footprint the PSI must detect iff the
-    * label correlates with embedding geometry; swept first). */
-  private[queries] val NullTombPred = "(vec_id * 2654435761) % 3 = 1"
-  private[queries] val NullSurvPred = "(vec_id * 2654435761) % 3 <> 1"
-  private[queries] val DriftTombPred = "label >= 5"
-  private[queries] val DriftSurvPred = "label < 5"
-
-  /** Quantized int64 coords of every corpus vector (the q225 kernel) —
-    * shared by the Lloyd retrain CTEs. */
+  /** Quantized int64 coords of every corpus vector (the q225 kernel). */
   private def quantCoordsSql: String =
     """cq AS MATERIALIZED (SELECT vec_id AS cid, i.i AS i,
         CAST(FLOOR(CAST(embedding[i.i] AS DOUBLE) * 1000000) AS BIGINT) AS x
@@ -188,49 +102,6 @@ object Round12 {
           CAST(SUM((h.x - h.y) * (lx.ln_fx - ly.ln_fx)) AS BIGINT) AS term_sum
         FROM hxy_$tag h JOIN hln_$tag lx ON h.x = lx.n
         JOIN hln_$tag ly ON h.y = ly.n)"""
-
-  /** ONE Lloyd round over the survivors, seeded from the standing
-    * centroids (the q225 kernel: int64 L2 assignment with (dist, cid)
-    * ties, floor-mean update in DOUBLE division), then survivor and
-    * query re-assignment to the RETRAINED centroids. Emits
-    * `ra1_<tag>` (cid, ccid) and `qa1_<tag>` (qid, ccid, r). */
-  private def lloydRetrainSql(tag: String): String =
-    s"""ctq_$tag AS (SELECT cid AS ccid, i, x FROM cq WHERE cid < 16),
-      ld_$tag AS (SELECT cq.cid, c.ccid, SUM((cq.x - c.x) * (cq.x - c.x)) AS dist
-        FROM cq JOIN fset_$tag f ON cq.cid = f.cid
-        JOIN ctq_$tag c USING (i) GROUP BY 1, 2),
-      la_$tag AS (SELECT cid, ccid FROM (SELECT cid, ccid,
-          row_number() OVER (PARTITION BY cid ORDER BY dist, ccid) AS rn
-        FROM ld_$tag) WHERE rn = 1),
-      c1_$tag AS (SELECT la.ccid, cq.i,
-          CAST(FLOOR(CAST(SUM(cq.x) AS DOUBLE) / COUNT(*)) AS BIGINT) AS c
-        FROM cq JOIN la_$tag la ON cq.cid = la.cid GROUP BY 1, 2),
-      rd_$tag AS (SELECT cq.cid, c.ccid, SUM((cq.x - c.c) * (cq.x - c.c)) AS dist
-        FROM cq JOIN fset_$tag f ON cq.cid = f.cid
-        JOIN c1_$tag c USING (i) GROUP BY 1, 2),
-      ra1_$tag AS (SELECT cid, ccid FROM (SELECT cid, ccid,
-          row_number() OVER (PARTITION BY cid ORDER BY dist, ccid) AS rn
-        FROM rd_$tag) WHERE rn = 1),
-      qd_$tag AS (SELECT cq.cid AS qid, c.ccid, SUM((cq.x - c.c) * (cq.x - c.c)) AS dist
-        FROM cq JOIN c1_$tag c USING (i) WHERE cq.cid < 50 GROUP BY 1, 2),
-      qa1_$tag AS (SELECT qid, ccid, r FROM (SELECT qid, ccid,
-          row_number() OVER (PARTITION BY qid ORDER BY dist, ccid) AS r
-        FROM qd_$tag) WHERE r <= 16)"""
-
-  /** SQ8 serve over the RETRAINED assignment at (np, m): candidates =
-    * qa1 ∩ ra1 on the retrained cell, rank intdot·rc from the
-    * UNCHANGED standing codes (`zsq8` — row-local, takedown/retrain
-    * never re-encode), pool, exact rerank via ex0. Emits `<p>annr`. */
-  private def sq8RetrainedAnnrSql(tag: String, np: String, m: String,
-      p: String): String =
-    s"""${p}sadc AS MATERIALIZED (SELECT qa1_$tag.qid, ra1_$tag.cid,
-        CAST(list_sum(list_transform(range(1, 65), i -> q.qc[i] * c.qc[i])) AS BIGINT)
-          * c.rc AS akey
-      FROM qa1_$tag JOIN ra1_$tag ON qa1_$tag.ccid = ra1_$tag.ccid
-        AND qa1_$tag.qid <> ra1_$tag.cid
-      JOIN zsq8 q ON qa1_$tag.qid = q.id JOIN zsq8 c ON ra1_$tag.cid = c.id
-      WHERE qa1_$tag.r <= ($np)),
-      ${sq8PoolAnnrSql(m, p, p)}"""
 
   /** The RE-EMBEDDED world's CTEs (the q335 'inject' convention
     * applied to the index-maintenance loop: a deterministic
@@ -344,69 +215,12 @@ object Round12 {
         FROM ${p}spool pl JOIN rex0 e ON pl.qid = e.qid AND pl.cid = e.cid)
       WHERE rnk <= 5)"""
 
-  /** Sweep probe (q340/q341): cell-occupancy PSI per scenario — must
-    * read NULL on the Lehmer takedown and on the label takedown (the
-    * label has no geometric footprint: 0.0075 vs null 0.0068 at sf0.1
-    * — measured by the first sweep), and FIRE on the re-embedded
-    * corpus — plus survivor recall of stale vs Lloyd-retrained SQ8
-    * serves in each world. */
-  private[graft] def driftRetrainProbeSql: String = {
-    val tags = Seq(("ntmb", NullSurvPred), ("dtmb", DriftSurvPred))
-    val psis = tags.map { case (tag, _) => cellPsiSql(tag) }
-      .mkString(",\n      ")
-    val retrains = tags.map { case (tag, _) => lloydRetrainSql(tag) }
-      .mkString(",\n      ")
-    val staleServes = (for ((tag, _) <- tags; np <- Seq(10, 12)) yield
-      s"""${sq8CandWhereSql(tag, np.toString, s"st${tag}$np", "z")},
-      ${sq8PoolAnnrSql("8", s"st${tag}$np", s"st${tag}$np")}""")
-      .mkString(",\n      ")
-    val retrServes = (for ((tag, _) <- tags; np <- Seq(10, 12)) yield
-      sq8RetrainedAnnrSql(tag, np.toString, "8", s"rt${tag}$np"))
-      .mkString(",\n      ")
-    val rembServes = (for (np <- Seq(10, 12)) yield
-      s"""${rembServeSql("rqa", "rca", "centroid_id", np.toString, "8",
-        s"rs$np")},
-      ${rembServeSql("rqa1", "rra1", "ccid", np.toString, "8", s"rr$np")}""")
-      .mkString(",\n      ")
-    val psiRows = (tags.map(_._1) :+ "remb").map { tag =>
-      s"""SELECT '$tag' AS sel, 'psi' AS dial,
-        round(CAST(term_sum AS DOUBLE) / (CAST(na AS DOUBLE) * nb * 1000000.0), 4) AS rec
-      FROM psi_$tag"""
-    }.mkString(" UNION ALL ")
-    val recRows = (for ((tag, _) <- tags; d <- Seq("st", "rt");
-        np <- Seq(10, 12)) yield
-      s"""SELECT '$tag' AS sel, '$d$np' AS dial, round(AVG(recall), 3) AS rec
-        FROM (${Round11.taggedTailSql(tag, s"$d$np", s"exf_$tag",
-          s"$d${tag}${np}annr")})""")
-      .mkString(" UNION ALL ")
-    val rembRows = (for (d <- Seq("rs", "rr"); np <- Seq(10, 12)) yield
-      s"""SELECT 'remb' AS sel, '$d$np' AS dial, round(AVG(recall), 3) AS rec
-        FROM (${Round11.taggedTailSql("remb", s"$d$np", "rexr",
-          s"$d$np" + "annr")})""")
-      .mkString(" UNION ALL ")
-    s"""${Round6c.exactRecallCte},
-      ${Round11.fsetExfSql("ntmb", NullSurvPred)},
-      ${Round11.fsetExfSql("dtmb", DriftSurvPred)},
-      ${Round11b.sq8StandingSql("z")},
-      $quantCoordsSql,
-      $psis,
-      $retrains,
-      $staleServes,
-      $retrServes,
-      $rembWorldSql,
-      $rembPsiSql,
-      $rembRetrainSql,
-      $rembServes
-      SELECT * FROM ($psiRows UNION ALL $recRows UNION ALL $rembRows)
-      ORDER BY sel, dial"""
-  }
-
   // ---- q343: multi-vector (late-interaction) streaming ingest ---------
 
   /** q343's slot split on the DOC id (doc = vec_id div 4): slot 0
     * docs are the probe stream, the rest the standing corpus. */
-  private[queries] val MvProbePred = "((vec_id // 4) * 2654435761) % 10 = 0"
-  private[queries] val MvCorpusPred = "((vec_id // 4) * 2654435761) % 10 <> 0"
+  private[queries] val MvProbePred = Slots.Probe.inSql("(vec_id // 4)")
+  private[queries] val MvCorpusPred = Slots.Probe.outSql("(vec_id // 4)")
 
   /** The q343 standing-index + probe-scoring replay: token-level cells
     * and SQ8 codes over the STANDING (slot≠0) tokens, probe-token
@@ -473,82 +287,6 @@ object Round12 {
             SELECT qd, cd, qt, MAX(mc) AS mx2 FROM mvex0 GROUP BY 1, 2, 3)
           GROUP BY 1, 2)
         WHERE score >= ($minScore))"""
-
-  /** The EXACT alert set (brute maxsim of every probe doc against
-    * every standing doc, micro-cos BIGINT) — the sweep's truth. */
-  private def mvExactAlertSql(minScore: String): String =
-    s"""exal0 AS MATERIALIZED (SELECT q.doc AS qd, c.doc AS cd,
-          q.tid AS qt, c.tid AS ct,
-          CAST(round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.e[i.i] AS DOUBLE))
-            / (sqrt(ANY_VALUE(list_sum(list_transform(q.e, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)))))
-             * sqrt(ANY_VALUE(list_sum(list_transform(c.e, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))))))
-            * 1000000) AS BIGINT) AS mc
-        FROM ptok q, stok c, (SELECT unnest(range(1, 65)) AS i) i
-        GROUP BY 1, 2, 3, 4),
-      exal AS MATERIALIZED (SELECT qd AS da, cd AS db, score FROM (
-        SELECT qd, cd, CAST(SUM(mx2) AS BIGINT) AS score FROM (
-          SELECT qd, cd, qt, MAX(mc) AS mx2 FROM exal0 GROUP BY 1, 2, 3)
-        GROUP BY 1, 2) y
-      WHERE score >= ($minScore))"""
-
-  /** Sweep probe (q343): alert coverage of the ingest scorer vs the
-    * exact alert set across (np, m, threshold) dials, plus the exact
-    * alert counts (to size the threshold). */
-  private[graft] def mvIngestProbeSql: String = {
-    // grids share one standing-index prefix; each (np, m) re-derives
-    // its own candidate/pool/alert chain with a distinct CTE prefix
-    val dials = Seq((2, 10), (2, 20), (2, 40), (4, 40))
-    val thrs = Seq(800000L, 900000L, 1000000L)
-    val base = mvIngestSql(np = 2, m = 10, minScore = "0")
-    val extra = dials.drop(1).map { case (np, m) =>
-      s"""xq${np}_${m}qa AS (SELECT tid, centroid_id FROM (SELECT tid, centroid_id,
-          row_number() OVER (PARTITION BY tid ORDER BY d DESC, centroid_id) AS r
-        FROM (SELECT p.tid, c.centroid_id,
-            round(SUM(CAST(p.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-          FROM ptok p, mvcent c, (SELECT unnest(range(1, 65)) AS i) i
-          GROUP BY 1, 2)) WHERE r <= $np),
-      x${np}_${m}cd AS (SELECT DISTINCT p.doc AS qd, s.doc AS cd
-        FROM xq${np}_${m}qa JOIN ptok p ON xq${np}_${m}qa.tid = p.tid
-        JOIN mvca ON xq${np}_${m}qa.centroid_id = mvca.centroid_id
-        JOIN stok s ON mvca.tid = s.tid),
-      x${np}_${m}apx AS (SELECT x.qd, x.cd, q.tid AS qt,
-          MAX(CAST(list_sum(list_transform(range(1, 65), i -> qs.qc[i] * cs.qc[i])) AS BIGINT)
-            * cs.rc) AS amx
-        FROM x${np}_${m}cd x JOIN ptok q ON q.doc = x.qd JOIN stok c ON c.doc = x.cd
-        JOIN mvpsq8 qs ON q.tid = qs.tid JOIN mvsq8 cs ON c.tid = cs.tid
-        GROUP BY 1, 2, 3),
-      x${np}_${m}pool AS (SELECT qd, cd FROM (SELECT qd, cd,
-          row_number() OVER (PARTITION BY qd ORDER BY ascore DESC, cd) AS pr
-        FROM (SELECT qd, cd, CAST(SUM(amx) AS BIGINT) AS ascore
-          FROM x${np}_${m}apx GROUP BY 1, 2)) WHERE pr <= $m),
-      x${np}_${m}ex0 AS (SELECT pl.qd, pl.cd, q.tid AS qt, c.tid AS ct,
-          CAST(round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.e[i.i] AS DOUBLE))
-            / (sqrt(ANY_VALUE(list_sum(list_transform(q.e, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)))))
-             * sqrt(ANY_VALUE(list_sum(list_transform(c.e, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))))))
-            * 1000000) AS BIGINT) AS mc
-        FROM x${np}_${m}pool pl JOIN ptok q ON q.doc = pl.qd JOIN stok c ON c.doc = pl.cd,
-          (SELECT unnest(range(1, 65)) AS i) i
-        GROUP BY 1, 2, 3, 4),
-      x${np}_${m}al AS (SELECT qd AS da, cd AS db, score FROM (
-          SELECT qd, cd, CAST(SUM(mx2) AS BIGINT) AS score FROM (
-            SELECT qd, cd, qt, MAX(mc) AS mx2 FROM x${np}_${m}ex0 GROUP BY 1, 2, 3)
-          GROUP BY 1, 2))"""
-    }.mkString(",\n      ")
-    val exact = mvExactAlertSql("0")
-    def alName(np: Int, m: Int) =
-      if ((np, m) == dials.head) "al" else s"x${np}_${m}al"
-    val rows = (for ((np, m) <- dials; thr <- thrs) yield
-      s"""SELECT 'np${np}m$m' AS sel, 'thr$thr' AS dial,
-        CAST((SELECT COUNT(*) FROM ${alName(np, m)} a JOIN exal
-          ON a.da = exal.da AND a.db = exal.db
-          WHERE exal.score >= $thr AND a.score >= $thr) AS DOUBLE)
-        / GREATEST(1, (SELECT COUNT(*) FROM exal WHERE score >= $thr)) AS rec""")
-      .mkString(" UNION ALL ")
-    s"""WITH $base,
-      $extra,
-      $exact
-      SELECT * FROM ($rows) ORDER BY sel, dial"""
-  }
 
   // ---- q344: hybrid (lexical + vector) retrieval served -----------------
 
@@ -788,7 +526,7 @@ object Round12 {
     words.join(wtok.hint("shuffle_hash"), Seq("w"))
       .groupBy("doc_id", "lang").agg(sum("wt").as("tok"))
       .select(col("doc_id"), col("lang"), col("tok"),
-        (Round11b.guardedId(col("doc_id")) * lit(2654435761L)
+        (Slots.hash(Round11b.guardedId(col("doc_id")))
           % lit(1000003L)).as("hsh"))
       .write.mode("overwrite").parquet(out)
     s.read.parquet(out)
@@ -1063,7 +801,7 @@ object Round12 {
             partJob(s"q338_${tag}_fpool")(
               Round11.taggedRecall(tag, "fpool", exf, serve(14, mf))))
         }).flatten
-        parts.map(Await.result(_, Duration.Inf))
+        graft.util.Jobs.awaitAll(parts)
           .reduce(_ unionByName _).orderBy("sel", "dial", "qid")
       },
       Some(s"""${Round6c.exactRecallCte},
@@ -1292,7 +1030,7 @@ object Round12 {
         val corpus = emb
           .select(col("vec_id").as("cid"), col("embedding").as("ce"))
         val keep = emb.filter(
-            pmod(col("vec_id") * lit(2654435761L), lit(3L)) =!= 1)
+            Slots.Tomb.out)
           .select(col("vec_id").as("cid"))
         val exf = Round11.exactTop5Filtered(s, dir, "surv3", qs, corpus,
           keep).select("qid", "cid")
@@ -1381,7 +1119,7 @@ object Round12 {
         val zOld = zca.select(col("cid"), col("centroid_id").as("old"))
         // ---- scenario 1: takedown (null) ----
         val keep = emb.filter(
-            pmod(col("vec_id") * lit(2654435761L), lit(3L)) =!= 1)
+            Slots.Tomb.out)
           .select(col("vec_id").as("cid"))
         // the scenario statistics are independent count/scalar jobs —
         // overlap them (guide §2.6; values identical, the fixture-pin
@@ -1568,7 +1306,7 @@ object Round12 {
       td0 AS (SELECT doc_id, lang, CAST(SUM(wt) AS BIGINT) AS tok
         FROM dwords JOIN wtok USING (w) GROUP BY 1, 2),
       td AS (SELECT doc_id, lang, tok,
-          CAST((doc_id * 2654435761) % 1000003 AS BIGINT) AS hsh FROM td0),
+          CAST(${Slots.sql("doc_id", 1000003)} AS BIGINT) AS hsh FROM td0),
       bud AS (SELECT CAST(SUM(tok) AS BIGINT) // (2 * COUNT(DISTINCT lang)) AS bud
         FROM td),
       rn AS (SELECT *, CAST(SUM(tok) OVER (PARTITION BY lang
@@ -1607,9 +1345,7 @@ object Round12 {
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
         graft.plans.NativeExpressions.register(s)
-        val docSlot = pmod(expr("vec_id div 4") * lit(2654435761L),
-          lit(10L))
-        val stok = emb.filter(docSlot =!= 0)
+        val stok = emb.filter(Slots.Probe.out(expr("vec_id div 4")))
           .select(expr("vec_id div 4").as("cd"), col("vec_id").as("ct"),
             col("embedding").as("ce"))
         val cents = broadcast(stok.orderBy("ct").limit(16)
@@ -1640,7 +1376,7 @@ object Round12 {
         val src = s.readStream.schema(emb.schema)
           .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
         val probe = src.filter(
-            pmod(expr("vec_id div 4") * lit(2654435761L), lit(10L)) === 0)
+            Slots.Probe.in(expr("vec_id div 4")))
           .select(expr("vec_id div 4").as("qd"), col("vec_id").as("qt"),
             col("embedding").as("qe"))
         val q = EventTime.withShufflePartitions(s, 8) {
@@ -1822,7 +1558,7 @@ object Round12 {
       etd0 AS (SELECT doc_id, lang, CAST(SUM(wt) AS BIGINT) AS tok
         FROM dwords JOIN wtok USING (w) GROUP BY 1, 2),
       etd AS (SELECT e.doc_id, e.lang, e.tok,
-          CAST((e.doc_id * 2654435761) % 1000003 AS BIGINT) AS hsh
+          CAST(${Slots.sql("e.doc_id", 1000003)} AS BIGINT) AS hsh
         FROM etd0 e JOIN (SELECT doc_id FROM dsel WHERE selected = 1) sd
           USING (doc_id)),
       ebud AS (SELECT CAST(SUM(tok) AS BIGINT) // (2 * COUNT(DISTINCT lang)) AS bud

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.operators.{IndexAdvisor, Similarity}
 import graft.sources.Tables
+import graft.util.Slots
 
 /** Round-13 batch: the advisor/maintenance machinery extended to the
   * two families it never reached — the multi-vector (token-level)
@@ -26,8 +27,8 @@ object Round13 {
 
   /** The q343/q334 doc-level takedown predicate (Lehmer mod-3 on the
     * DOC id — all four token rows of a tombstoned doc go cold). */
-  private[queries] val MvTombPred = "((cd) * 2654435761) % 3 = 1"
-  private[queries] val MvSurvPred = "((tid // 4) * 2654435761) % 3 <> 1"
+  private[queries] val MvTombPred = Slots.Tomb.inSql("(cd)")
+  private[queries] val MvSurvPred = Slots.Tomb.outSql("(tid // 4)")
 
   /** Shared token-level SQ8 code CTE — dial-free, one per oracle
     * (the q334 replay's code table), parameterized by token table and
@@ -111,11 +112,6 @@ object Round13 {
         JOIN $annr ON $exr.qd = $annr.qd AND $exr.cd = $annr.cd
         GROUP BY 1) h ON q.qd = h.qd"""
 
-  private def mvAvgSql(sel: String, dial: String, exr: String,
-      annr: String): String =
-    s"""SELECT '$sel' AS sel, '$dial' AS dial, round(AVG(recall), 3) AS rec
-      FROM (${mvTailSql(s"'$sel'", s"'$dial'", exr, annr)})"""
-
   /** Tagged per-query-doc recall rows of `ann` vs truth `exact` on
     * (qd, cd) — [[Round11]].taggedRecall lifted to doc ids. */
   private[queries] def mvTaggedRecall(sel: String, dial: String, exact: DataFrame,
@@ -141,41 +137,6 @@ object Round13 {
     val wx = Window.partitionBy("qd").orderBy(col("score").desc, col("cd"))
     ms.withColumn("rnk", row_number().over(wx))
       .filter(col("rnk") <= 5).select("qd", "cd")
-  }
-
-  /** Sweep probe (q346/q347): serve recall per (nlist, nprobe) on the
-    * token index — the q334 dial grid widened to corpus-scaled cells —
-    * plus the doc-level takedown serve (survivor candidates vs the
-    * survivor truth) at the advised points and their over-probes. */
-  private[graft] def mvAdvisedProbeSql: String = {
-    val grids = Seq(16, 32)
-    val standing = grids.map(nl => mvStandingSql(nl.toString, s"g$nl"))
-      .mkString(",\n      ")
-    val serveDials = Seq((16, 1), (16, 2), (16, 4), (32, 2), (32, 4), (32, 8))
-    val serves = serveDials.map { case (nl, np) =>
-      mvServeAnnrSql(s"g$nl", np.toString, m = 10, p = s"s${nl}_$np") }
-      .mkString(",\n      ")
-    val tdDials = Seq((16, 2), (16, 4), (32, 4), (32, 8))
-    val tds = tdDials.map { case (nl, np) =>
-      mvServeAnnrSql(s"g$nl", np.toString, m = 10, p = s"t${nl}_$np",
-        candPred = MvSurvPred.replace("tid", "c.tid")) }
-      .mkString(",\n      ")
-    val exrt =
-      s"""exrt AS MATERIALIZED (SELECT qd, cd FROM (SELECT qd, cd,
-          row_number() OVER (PARTITION BY qd ORDER BY score DESC, cd) AS rnk
-        FROM ms WHERE NOT ($MvTombPred)) WHERE rnk <= 5)"""
-    val rows = (serveDials.map { case (nl, np) =>
-      mvAvgSql("serve", s"nl${nl}np$np", "exr", s"s${nl}_${np}annr") } ++
-      tdDials.map { case (nl, np) =>
-        mvAvgSql("takedown", s"nl${nl}np$np", "exrt", s"t${nl}_${np}annr") })
-      .mkString(" UNION ALL ")
-    s"""WITH ${Round11b.maxsimBaseSql},
-      ${mvSq8Sql()},
-      $standing,
-      $serves,
-      $exrt,
-      $tds
-      SELECT * FROM ($rows) ORDER BY sel, dial"""
   }
 
   // ---- q348: the q343 ingest chain with the token-index dials as SQL
@@ -269,87 +230,6 @@ object Round13 {
          FROM mvst)),
       mvnp AS (SELECT LEAST((SELECT nlist FROM mvnl), GREATEST(1,
         ($measNp * (SELECT nlist FROM mvnl)) // 16)) AS np)"""
-
-  /** Sweep probe (q348): alert coverage of the advised-dial ingest
-    * scorer vs the exact alert set — the (nlist, np) grid the advised
-    * dials land on at the two SFs, m=40, the q343 thresholds. */
-  private[graft] def mvIngestAdvProbeSql: String = {
-    // one shared standing/exact prefix at (16, 4) == q343's point;
-    // extra dials re-derive their own qa/cd/... chains
-    val base = s"""$mvIngestTokSql,
-      ${mvIngestChainSql("16", "4", m = 40, minScore = "0")}"""
-    val extraDials = Seq((32, 4), (32, 8))
-    val extra = extraDials.map { case (nl, np) =>
-      s"""x${nl}_${np}cent AS MATERIALIZED (SELECT tid AS centroid_id, e AS centroid
-        FROM (SELECT * FROM stok ORDER BY tid LIMIT $nl)),
-      x${nl}_${np}ca AS MATERIALIZED (SELECT tid, centroid_id FROM (SELECT tid, centroid_id,
-          row_number() OVER (PARTITION BY tid ORDER BY d DESC, centroid_id) AS r
-        FROM (SELECT s.tid, c.centroid_id,
-            round(SUM(CAST(s.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-          FROM stok s, x${nl}_${np}cent c, (SELECT unnest(range(1, 65)) AS i) i
-          GROUP BY 1, 2)) WHERE r = 1),
-      x${nl}_${np}qa AS MATERIALIZED (SELECT tid, centroid_id FROM (SELECT tid, centroid_id,
-          row_number() OVER (PARTITION BY tid ORDER BY d DESC, centroid_id) AS r
-        FROM (SELECT p.tid, c.centroid_id,
-            round(SUM(CAST(p.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-          FROM ptok p, x${nl}_${np}cent c, (SELECT unnest(range(1, 65)) AS i) i
-          GROUP BY 1, 2)) WHERE r <= $np),
-      x${nl}_${np}cd AS (SELECT DISTINCT p.doc AS qd, s.doc AS cd
-        FROM x${nl}_${np}qa JOIN ptok p ON x${nl}_${np}qa.tid = p.tid
-        JOIN x${nl}_${np}ca ON x${nl}_${np}qa.centroid_id = x${nl}_${np}ca.centroid_id
-        JOIN stok s ON x${nl}_${np}ca.tid = s.tid),
-      x${nl}_${np}apx AS (SELECT x.qd, x.cd, q.tid AS qt,
-          MAX(CAST(list_sum(list_transform(range(1, 65), i -> qs.qc[i] * cs.qc[i])) AS BIGINT)
-            * cs.rc) AS amx
-        FROM x${nl}_${np}cd x JOIN ptok q ON q.doc = x.qd JOIN stok c ON c.doc = x.cd
-        JOIN mvpsq8 qs ON q.tid = qs.tid JOIN mvsq8 cs ON c.tid = cs.tid
-        GROUP BY 1, 2, 3),
-      x${nl}_${np}pool AS (SELECT qd, cd FROM (SELECT qd, cd,
-          row_number() OVER (PARTITION BY qd ORDER BY ascore DESC, cd) AS pr
-        FROM (SELECT qd, cd, CAST(SUM(amx) AS BIGINT) AS ascore
-          FROM x${nl}_${np}apx GROUP BY 1, 2)) WHERE pr <= 40),
-      x${nl}_${np}ex0 AS (SELECT pl.qd, pl.cd, q.tid AS qt, c.tid AS ct,
-          CAST(round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.e[i.i] AS DOUBLE))
-            / (sqrt(ANY_VALUE(list_sum(list_transform(q.e, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)))))
-             * sqrt(ANY_VALUE(list_sum(list_transform(c.e, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))))))
-            * 1000000) AS BIGINT) AS mc
-        FROM x${nl}_${np}pool pl JOIN ptok q ON q.doc = pl.qd JOIN stok c ON c.doc = pl.cd,
-          (SELECT unnest(range(1, 65)) AS i) i
-        GROUP BY 1, 2, 3, 4),
-      x${nl}_${np}al AS (SELECT qd AS da, cd AS db, score FROM (
-          SELECT qd, cd, CAST(SUM(mx2) AS BIGINT) AS score FROM (
-            SELECT qd, cd, qt, MAX(mc) AS mx2 FROM x${nl}_${np}ex0 GROUP BY 1, 2, 3)
-          GROUP BY 1, 2))"""
-    }.mkString(",\n      ")
-    val exact =
-      s"""exal0 AS MATERIALIZED (SELECT q.doc AS qd, c.doc AS cd,
-          q.tid AS qt, c.tid AS ct,
-          CAST(round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.e[i.i] AS DOUBLE))
-            / (sqrt(ANY_VALUE(list_sum(list_transform(q.e, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)))))
-             * sqrt(ANY_VALUE(list_sum(list_transform(c.e, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))))))
-            * 1000000) AS BIGINT) AS mc
-        FROM ptok q, stok c, (SELECT unnest(range(1, 65)) AS i) i
-        GROUP BY 1, 2, 3, 4),
-      exal AS MATERIALIZED (SELECT qd AS da, cd AS db, score FROM (
-        SELECT qd, cd, CAST(SUM(mx2) AS BIGINT) AS score FROM (
-          SELECT qd, cd, qt, MAX(mc) AS mx2 FROM exal0 GROUP BY 1, 2, 3)
-        GROUP BY 1, 2) y)"""
-    def alName(nl: Int, np: Int) =
-      if ((nl, np) == ((16, 4))) "al" else s"x${nl}_${np}al"
-    val dials = Seq((16, 4)) ++ extraDials
-    val thrs = Seq(800000L, 900000L, 1000000L)
-    val rows = (for ((nl, np) <- dials; thr <- thrs) yield
-      s"""SELECT 'nl${nl}np$np' AS sel, 'thr$thr' AS dial,
-        CAST((SELECT COUNT(*) FROM ${alName(nl, np)} a JOIN exal
-          ON a.da = exal.da AND a.db = exal.db
-          WHERE exal.score >= $thr AND a.score >= $thr) AS DOUBLE)
-        / GREATEST(1, (SELECT COUNT(*) FROM exal WHERE score >= $thr)) AS rec""")
-      .mkString(" UNION ALL ")
-    s"""WITH $base,
-      $extra,
-      $exact
-      SELECT * FROM ($rows) ORDER BY sel, dial"""
-  }
 
   // ---- q349: graph-family drift response --------------------------------
 
@@ -448,27 +328,6 @@ object Round13 {
         src = "b0", out = "eb", p = "rb", tbl = "gwt")},
       ${worldServeSql("wt", "eb", "tb")}"""
 
-  /** Sweep probe (q349): edge-churn stats per scenario + avg recall of
-    * the kept/stale/repaired/rebuilt serves in their worlds — run in
-    * DuckDB at both SFs BEFORE any Spark wiring. */
-  private[graft] def graphDriftProbeSql: String = {
-    def avg(sel: String, dial: String, exr: String, annr: String) =
-      s"""SELECT '$sel' AS sel, '$dial' AS dial, round(AVG(recall), 3) AS rec
-        FROM (${Round11.taggedTailSql(sel, dial, exr, annr)})"""
-    s"""WITH $graphDriftCtes
-      SELECT * FROM (
-        SELECT 'iso' AS sel, 'echurn' AS dial,
-          CAST((SELECT moved FROM mvi) AS DOUBLE) / (SELECT ne FROM ne) AS rec
-        UNION ALL
-        SELECT 'trunc', 'echurn',
-          CAST((SELECT moved FROM mvt) AS DOUBLE) / (SELECT ne FROM ne)
-        UNION ALL ${avg("iso", "kept", "wiexr", "kiannr")}
-        UNION ALL ${avg("trunc", "stale", "wtexr", "tsannr")}
-        UNION ALL ${avg("trunc", "repaired", "wtexr", "trannr")}
-        UNION ALL ${avg("trunc", "rebuilt", "wtexr", "tbannr")})
-      ORDER BY sel, dial"""
-  }
-
   // ---- q351: the hybrid serve's vector arm through the advisor ----------
 
   /** Exact top-20 vector ranks (rv) for the 20 hybrid query docs —
@@ -520,51 +379,14 @@ object Round13 {
     * bytes at nu=2000 (144 kB), IVFPQ always resident. */
   private val HybMemBudget = 60000L
 
-  /** Sweep probe (q351): the two arms' recall@20 at the measured
-    * configs, the re-derived sf0.1 IVFPQ dials, and each arm's FUSED
-    * recall vs the exact fused truth — both SFs, BEFORE wiring. */
-  private[graft] def hybAdvisedProbeSql: String = {
-    def avgF(dial: String, fused: String) =
-      s"""SELECT 'fused' AS sel, '$dial' AS dial, round(AVG(recall), 3) AS rec
-        FROM (${Round11.taggedTailSql("fused", dial, "tfused", fused)})"""
-    s"""${Round6c.exactRecallCte},
-      $hybVxSql,
-      nq20 AS (SELECT COUNT(DISTINCT qid) AS nq FROM vx),
-      ${Round11b.sq8StandingSql("")},
-      ${sq8Rv20Sql("8", 24, "s8")},
-      ${sq8Rv20Sql("10", 24, "s10")},
-      ${Round9.ivfPqSqlE("16", "10", HybMcE, nSub = 16, nCodes = 16,
-        prefix = "p1")},
-      ${pqRv20Sql("p1", "q1")},
-      ${Round9.ivfPqSqlE("32", "20", HybMcE, nSub = 16, nCodes = 16,
-        prefix = "p2")},
-      ${pqRv20Sql("p2", "q2")},
-      ${Round12.bm25DocSql(20)},
-      ${Round12.rrfFuseSql("vx", "t")},
-      ${Round12.rrfFuseSql("s8rv", "a")},
-      ${Round12.rrfFuseSql("s10rv", "a2")},
-      ${Round12.rrfFuseSql("q1rv", "b")},
-      ${Round12.rrfFuseSql("q2rv", "c")}
-      SELECT * FROM (
-        SELECT 'arm' AS sel, 'sq8np8' AS dial, round(rec, 3) AS rec FROM (${rec20Sql("s8rv")})
-        UNION ALL SELECT 'arm', 'sq8np10', round(rec, 3) FROM (${rec20Sql("s10rv")})
-        UNION ALL SELECT 'arm', 'pq16np10', round(rec, 3) FROM (${rec20Sql("q1rv")})
-        UNION ALL SELECT 'arm', 'pq32np20', round(rec, 3) FROM (${rec20Sql("q2rv")})
-        UNION ALL ${avgF("sq8np8", "afused")}
-        UNION ALL ${avgF("sq8np10", "a2fused")}
-        UNION ALL ${avgF("pq16np10", "bfused")}
-        UNION ALL ${avgF("pq32np20", "cfused")})
-      ORDER BY sel, dial"""
-  }
-
   // ---- q350: the training pipeline's INGEST loop -------------------------
 
   /** q350's arrival split (the repo's Lehmer doc-slot convention):
     * slot ≠ 0 docs are the BASE corpus (the pipeline's standing state
     * is trained and packed on them); slot 0 docs arrive as the
     * stream. */
-  private[queries] val PipeBasePred = "(doc_id * 2654435761) % 10 <> 0"
-  private[queries] val PipeStreamPred = "(doc_id * 2654435761) % 10 = 0"
+  private[queries] val PipeBasePred = Slots.Probe.outSql("doc_id")
+  private[queries] val PipeStreamPred = Slots.Probe.inSql("doc_id")
 
   /** Bigram hashed features of a doc frame (doc_id, lang, text) — the
     * q327 feature fn verbatim (same wordHm, same bucket fold), shared
@@ -647,7 +469,7 @@ object Round13 {
       regexp_replace(lower(col("text")), "[^a-z ]", " "), " +", " "))
     d.select(col("doc_id"), col("lang"),
       size(split(norm, " ")).cast("long").as("tok"),
-      (Round11b.guardedId(col("doc_id")) * lit(2654435761L)
+      (Slots.hash(Round11b.guardedId(col("doc_id")))
         % lit(1000003L)).as("hsh"))
   }
 
@@ -701,7 +523,7 @@ object Round13 {
     val docs = t(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("text"))
     val base = docs.filter(
-      pmod(col("doc_id") * lit(2654435761L), lit(10L)) =!= 0)
+      Slots.Probe.out(col("doc_id")))
     // ONE shared per-feature count artifact feeds both the weight and
     // kk builds — the corpus tokenize + explode + aggregate is paid
     // once per cold fixture, not twice (round-13 verdict hygiene)
@@ -823,7 +645,7 @@ object Round13 {
         val corpusTok = tok.select(col("doc").as("cd"), col("tid").as("ct"),
           col("e").as("ce"))
         val keepDocs = corpusTok.select("cd").distinct()
-          .filter(pmod(col("cd") * lit(2654435761L), lit(3L)) =!= 1)
+          .filter(Slots.Tomb.out(col("cd")))
         val exrt = mvExactTop5(s, dir, keepDocs = Some(keepDocs))
         def serve(npd: Long): DataFrame =
           Similarity.maxsimPlaidTopK(qtok, corpusTok, ca, codes, cents,
@@ -868,9 +690,7 @@ object Round13 {
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
         graft.plans.NativeExpressions.register(s)
-        val docSlot = pmod(expr("vec_id div 4") * lit(2654435761L),
-          lit(10L))
-        val stok = emb.filter(docSlot =!= 0)
+        val stok = emb.filter(Slots.Probe.out(expr("vec_id div 4")))
           .select(expr("vec_id div 4").as("cd"), col("vec_id").as("ct"),
             col("embedding").as("ce"))
         val nTok = Round6c.statsArtifact(s, dir, "embeddings.parquet",
@@ -905,7 +725,7 @@ object Round13 {
         val src = s.readStream.schema(emb.schema)
           .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
         val probe = src.filter(
-            pmod(expr("vec_id div 4") * lit(2654435761L), lit(10L)) === 0)
+            Slots.Probe.in(expr("vec_id div 4")))
           .select(expr("vec_id div 4").as("qd"), col("vec_id").as("qt"),
             col("embedding").as("qe"))
         val q = EventTime.withShufflePartitions(s, 8) {
@@ -1118,11 +938,10 @@ object Round13 {
         val movedIso = Await.result(fMovedIso, Duration.Inf)
         val movedTrunc = Await.result(fMovedTrunc, Duration.Inf)
         // pin the scenario branches (the q320/q341 convention: a
-        // regenerated fixture that flips a branch fails LOUDLY). On the
-        // failure path, drain the in-flight walks FIRST so the throw
-        // leaves no background jobs writing scratch into the harness's
-        // next query (the round-14 advice item).
-        def pins(): Unit = {
+        // regenerated fixture that flips a branch fails LOUDLY). The
+        // in-flight walks are drained before any throw, so it leaves no
+        // background jobs writing scratch into the harness's next query.
+        val pinned = scala.util.Try {
           require(2L * movedIso < nE,
             s"the isometric scenario must stay below the churn threshold " +
               s"($movedIso of $nE edges moved)")
@@ -1130,14 +949,9 @@ object Round13 {
             s"the non-isometric scenario must fire the churn threshold " +
               s"($movedTrunc of $nE edges moved)")
         }
-        try pins() catch { case t: Throwable =>
-          Seq(fKept, fRep).foreach(f =>
-            try Await.result(f, Duration.Inf)
-            catch { case _: Throwable => () })
-          throw t
-        }
-        val kept = Await.result(fKept, Duration.Inf)
-        val repaired = Await.result(fRep, Duration.Inf)
+        val walks = scala.util.Try(graft.util.Jobs.awaitAll(Seq(fKept, fRep)))
+        pinned.get
+        val Seq(kept, repaired) = walks.get
         val stale = serve(truncQ, trunc, e, truncCodes, "stale",
           asArtifact = true)
         val rebuilt = serve(truncQ, trunc, rebuiltE, truncCodes, "reb",
@@ -1482,7 +1296,7 @@ object Round13 {
     def tdCtes(docs: String, selCte: String, p: String) =
       s"""${p}td AS (SELECT d.doc_id, d.lang,
           CAST(len(${Round14.DsirSplitTl}) AS BIGINT) AS tok,
-          CAST((d.doc_id * 2654435761) % 1000003 AS BIGINT) AS hsh
+          CAST(${Slots.sql("d.doc_id", 1000003)} AS BIGINT) AS hsh
         FROM $docs d JOIN $selCte USING (doc_id)),
       ${p}bud AS (SELECT CAST(SUM(tok) AS BIGINT) // (2 * COUNT(DISTINCT lang)) AS bud
         FROM ${p}td),

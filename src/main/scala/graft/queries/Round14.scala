@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.operators.IndexAdvisor
 import graft.sources.Tables
+import graft.util.Slots
 
 /** Round-14 batch: the monitoring→maintenance doctrine closed on the
   * PIPELINE itself and on the arms the machinery still skipped — the
@@ -78,7 +79,7 @@ object Round14 {
       out: String): String =
     s"""$out AS MATERIALIZED (SELECT d.doc_id, d.lang,
         CAST(len($DsirSplitTl) AS BIGINT) AS tok,
-        CAST((d.doc_id * 2654435761) % 1000003 AS BIGINT) AS hsh
+        CAST(${Slots.sql("d.doc_id", 1000003)} AS BIGINT) AS hsh
       FROM $docs d JOIN $selCte USING (doc_id))"""
 
   /** q355's per-query posting budget — the q328 60 kB convention on
@@ -104,133 +105,6 @@ object Round14 {
       ${p}fused AS (SELECT qid, cid FROM (SELECT qid, cid,
           row_number() OVER (PARTITION BY qid ORDER BY rrf DESC, cid) AS rnk
         FROM ${p}fr) WHERE rnk <= 5)"""
-
-  /** Sweep probe (q355): the prefix-rung grid — arm recall@20 and
-    * fused recall@5 at each swept T plus the worst-query cost table —
-    * run in DuckDB at both SFs BEFORE the Spark side was wired (the
-    * round-9 rule). The grid is how the 90000 budget and the
-    * T*=21-at-sf0.1 point were chosen. */
-  private[graft] def lexBudgetProbeSql: String = {
-    def serveAt(tE: String, p: String) =
-      s"""${p}pool AS MATERIALIZED (SELECT qid, cid FROM (
-          SELECT qid, cid, row_number() OVER (PARTITION BY qid
-            ORDER BY ps DESC, cid) AS pr
-          FROM (SELECT q.qid, imp.doc_id AS cid,
-              round(list_reduce(list(tscore ORDER BY imp.term),
-                (a, x) -> a + x), 6) AS ps
-            FROM imp JOIN qord q ON imp.term = q.term
-            WHERE imp.doc_id <> q.qid AND q.tr <= ($tE)
-            GROUP BY 1, 2)) WHERE pr <= 200),
-        ${p}srv AS MATERIALIZED (SELECT qid, cid, rl FROM (
-          SELECT qid, cid, row_number() OVER (PARTITION BY qid
-            ORDER BY score DESC, cid) AS rl
-          FROM (SELECT pp.qid, pp.cid,
-              round(list_reduce(list(tscore ORDER BY imp.term),
-                (a, x) -> a + x), 6) AS score
-            FROM ${p}pool pp JOIN imp ON imp.doc_id = pp.cid
-            JOIN qt2 ON qt2.qid = pp.qid AND qt2.term = imp.term
-            GROUP BY 1, 2)) WHERE rl <= 20),
-        ${lexFuseSql(s"${p}srv", p)}"""
-    val grid = Seq(("4", "x4"), ("12", "x12"), ("21", "x21"),
-      ("(SELECT m FROM mxq)", "xf"))
-    val serves = grid.map { case (tE, p) => serveAt(tE, p) }
-      .mkString(",\n      ")
-    val rows = grid.map { case (tE, p) =>
-      s"""SELECT 'T=' || CAST(LEAST($tE, (SELECT m FROM mxq)) AS VARCHAR) AS dial,
-        round(CAST((SELECT COUNT(*) FROM lr20 JOIN ${p}srv
-          ON lr20.qid = ${p}srv.qid AND lr20.cid = ${p}srv.cid) AS DOUBLE)
-          / (20.0 * 20), 3) AS arm,
-        round(CAST((SELECT COUNT(*) FROM tfused JOIN ${p}fused
-          ON tfused.qid = ${p}fused.qid AND tfused.cid = ${p}fused.cid)
-          AS DOUBLE) / (5.0 * 20), 3) AS fused,
-        (SELECT cost FROM ctt
-          WHERE t = LEAST($tE, (SELECT m FROM mxq))) AS worstcost"""
-    }.mkString("\n      UNION ALL\n      ")
-    s"""${Round6c.exactRecallCte},
-      ${Round12.bm25DocSql(20)},
-      ${Round13.hybVxSql},
-      imp AS MATERIALIZED (SELECT tf2.doc_id, tf2.term, dfv2.df,
-          ((CAST(n_docs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5) /
-          (CAST(df AS DOUBLE) + 0.5)) * (CAST(f AS DOUBLE) * 2.2) /
-          (CAST(f AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) *
-          CAST(n_docs AS DOUBLE) / CAST(t_tokens AS DOUBLE))) AS tscore
-        FROM tf2 JOIN dfv2 USING (term)
-        JOIN dl2 ON tf2.doc_id = dl2.doc_id, st2),
-      qord AS MATERIALIZED (SELECT qid, term, df,
-          row_number() OVER (PARTITION BY qid ORDER BY df, term) AS tr
-        FROM qt2 JOIN dfv2 USING (term)),
-      lwk AS (SELECT qid, tr, CAST(SUM(df) OVER (PARTITION BY qid
-          ORDER BY tr) AS BIGINT) AS walk FROM qord),
-      lnq AS (SELECT qid, COUNT(*) AS nt FROM qord GROUP BY 1),
-      mxq AS (SELECT MAX(nt) AS m FROM lnq),
-      ctt AS (SELECT g.t, MAX(w.walk + 200 * n.nt) AS cost
-        FROM (SELECT unnest(range(1, (SELECT m FROM mxq) + 1)) AS t) g
-        JOIN lnq n ON TRUE
-        JOIN lwk w ON w.qid = n.qid AND w.tr = LEAST(g.t, n.nt)
-        GROUP BY 1),
-      lr20 AS (SELECT qid, cid, rl FROM lrank WHERE rl <= 20),
-      ${lexFuseSql("lr20", "t")},
-      $serves
-      $rows
-      ORDER BY dial"""
-  }
-
-  /** Sweep probe (q356): pooled-arm pool containment at the fixed
-    * m=40 vs the corpus-scaled m = max(20, 2·nDoc/5), plus the
-    * decision's exact cost/byte rows — the sweep that measured
-    * "pooling is cheap to hold but expensive to trust". */
-  private[graft] def mvPooledProbeSql: String =
-    s"""${Round11b.maxsimBaseSql},
-      ${Round13.mvDialsSql("tok", measNp = 2)},
-      pvq AS MATERIALIZED (SELECT doc, i.i AS i,
-          CAST(SUM(CAST(FLOOR(CAST(e[i.i] AS DOUBLE) * 1000000) AS BIGINT))
-            AS BIGINT) AS x
-        FROM tok, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      mvdoc AS (SELECT COUNT(DISTINCT l) AS nd FROM (
-        SELECT doc, list(x ORDER BY i) AS l FROM pvq GROUP BY doc)),
-      tpd AS (SELECT (SELECT COUNT(*) FROM tok)
-        // (SELECT COUNT(DISTINCT doc) FROM tok) AS t),
-      mpool AS (SELECT GREATEST(20, 2 * (SELECT nd FROM mvdoc) // 5) AS m),
-      pn2 AS (SELECT doc, CAST(SUM(x * x) AS BIGINT) AS n2 FROM pvq
-        GROUP BY 1),
-      pdot AS MATERIALIZED (SELECT q.doc AS qd, c.doc AS cd,
-          CAST(SUM(q.x * c.x) AS BIGINT) AS dot
-        FROM pvq q JOIN pvq c USING (i)
-        WHERE q.doc < 10 AND c.doc <> q.doc GROUP BY 1, 2),
-      ppr AS MATERIALIZED (SELECT qd, cd, row_number() OVER (
-          PARTITION BY qd ORDER BY pcos DESC, cd) AS pr
-        FROM (SELECT qd, cd, round(CAST(dot AS DOUBLE)
-            / (sqrt(CAST(qn.n2 AS DOUBLE)) * sqrt(CAST(cn.n2 AS DOUBLE))),
-            6) AS pcos
-          FROM pdot JOIN pn2 qn ON qn.doc = pdot.qd
-          JOIN pn2 cn ON cn.doc = pdot.cd)),
-      r40 AS (SELECT qd, cd FROM (SELECT pl.qd, pl.cd, row_number() OVER (
-          PARTITION BY pl.qd ORDER BY ms.score DESC, pl.cd) AS rnk
-        FROM (SELECT qd, cd FROM ppr WHERE pr <= 40) pl
-        JOIN ms ON pl.qd = ms.qd AND pl.cd = ms.cd) WHERE rnk <= 5),
-      rsc AS (SELECT qd, cd FROM (SELECT pl.qd, pl.cd, row_number() OVER (
-          PARTITION BY pl.qd ORDER BY ms.score DESC, pl.cd) AS rnk
-        FROM (SELECT qd, cd FROM ppr WHERE pr <= (SELECT m FROM mpool)) pl
-        JOIN ms ON pl.qd = ms.qd AND pl.cd = ms.cd) WHERE rnk <= 5)
-      SELECT 'pooled_m40' AS dial, round(CAST((SELECT COUNT(*) FROM exr
-          JOIN r40 USING (qd, cd)) AS DOUBLE) / (5.0 * 10), 3) AS rec,
-        CAST(40 AS BIGINT) AS n
-      UNION ALL
-      SELECT 'pooled_mscaled', round(CAST((SELECT COUNT(*) FROM exr
-          JOIN rsc USING (qd, cd)) AS DOUBLE) / (5.0 * 10), 3),
-        (SELECT m FROM mpool)
-      UNION ALL
-      SELECT 'cand_token',
-        CAST((SELECT t FROM tpd) * (SELECT np FROM mvnp)
-          * ((SELECT nu FROM mvst) // (SELECT nlist FROM mvnl))
-          + (SELECT t FROM tpd) * (SELECT t FROM tpd) * 10 AS DOUBLE),
-        (SELECT nu FROM mvst) * 76
-      UNION ALL
-      SELECT 'cand_pooled',
-        CAST((SELECT nd FROM mvdoc) + (SELECT t FROM tpd)
-          * (SELECT t FROM tpd) * (SELECT m FROM mpool) AS DOUBLE),
-        (SELECT nd FROM mvdoc) * 72
-      ORDER BY dial"""
 
   /** q356's serving-memory window — q328's 60 kB budget applied to the
     * maxsim node: the token index (76 B/token) fits at nTok=500
@@ -531,9 +405,9 @@ object Round14 {
         val docs = t(s, dir, "documents")
           .select(col("doc_id"), col("lang"), col("text"))
         val base = docs.filter(expr(
-          s"(doc_id * 2654435761) % 10 <> 0"))
+          Slots.Probe.outSql("doc_id")))
         val arrSame = docs.filter(expr(
-          s"(doc_id * 2654435761) % 10 = 0"))
+          Slots.Probe.inSql("doc_id")))
         def shifted(d: DataFrame): DataFrame = d.select(col("doc_id"),
           col("lang"), translate(col("text"), ShiftFrom, ShiftTo).as("text"))
         val arrShift = shifted(arrSame)
@@ -891,8 +765,7 @@ object Round14 {
           val src = s.readStream.schema(docsSchema)
             .option("pathGlobFilter", "documents.parquet").parquet(dir)
           val probe = src.filter(expr(Round13.PipeStreamPred))
-            .filter(pmod(pmod(col("doc_id") * lit(2654435761L),
-              lit(1000003L)), lit(3L)) === c)
+            .filter(pmod(Slots.of(col("doc_id"), 1000003L), lit(3L)) === c)
           val q = EventTime.withShufflePartitions(s, 8) {
             probe.writeStream.foreachBatch {
               (batch: DataFrame, bid: Long) =>
@@ -1610,11 +1483,11 @@ object Round14 {
           "stale", asArtifact = false))
         val movedIso = Await.result(fMovedIso, Duration.Inf)
         val movedTr = Await.result(fMovedTr, Duration.Inf)
-        // scenario pins; on the failure path drain the in-flight serves
-        // FIRST so the throw leaves no background jobs running (the
-        // round-14 advice item — submission stays before the pins for
-        // the measured §2.6 overlap, the A/B'd variant)
-        def pins(): Unit = {
+        // scenario pins; the in-flight serves are drained before any
+        // throw, so it leaves no background jobs running (submission
+        // stays before the pins for the measured §2.6 overlap, the
+        // A/B'd variant)
+        val pinned = scala.util.Try {
           require(2L * movedIso < nTok,
             s"the isometric world must stay below the assignment-churn " +
               s"threshold ($movedIso of $nTok tokens moved)")
@@ -1622,12 +1495,9 @@ object Round14 {
             s"the non-isometric world must fire the assignment-churn " +
               s"threshold ($movedTr of $nTok tokens moved)")
         }
-        try pins() catch { case t: Throwable =>
-          Seq(fKept, fStale).foreach(f =>
-            try Await.result(f, Duration.Inf)
-            catch { case _: Throwable => () })
-          throw t
-        }
+        if (pinned.isFailure)
+          scala.util.Try(graft.util.Jobs.awaitAll(Seq(fKept, fStale)))
+        pinned.get
         val keptNp1 = serve(toki, ca, codesI, centsI, 1, "kept",
           asArtifact = true)
         val staleNp1 = serve(tokt, ca, codesT, centsT, 1, "stale",
@@ -1680,8 +1550,7 @@ object Round14 {
           }
         val rec = recServe(np.toInt)
         val recNp1 = recServe(1)
-        val kept = Await.result(fKept, Duration.Inf)
-        val stale = Await.result(fStale, Duration.Inf)
+        val Seq(kept, stale) = graft.util.Jobs.awaitAll(Seq(fKept, fStale))
         // the decision at both rungs from measured hits (1-row scalars
         // over materialized serves — plan-choice class; independent
         // count jobs, submitted concurrently)

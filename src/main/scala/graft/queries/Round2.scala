@@ -8,6 +8,7 @@ import graft.operators.Skew
 import graft.sources.{Events, Tables}
 import graft.util.Det
 import graft.util.Det.{davgSql, dsumSql}
+import graft.util.Slots
 
 /** Round-2 completeness batch: deterministic hash sampling and
   * train/val/test splits, lateral (correlated) joins, exact median,
@@ -36,9 +37,9 @@ object Round2 {
     * (not available to the oracle).
     */
   private def hashBucket(key: org.apache.spark.sql.Column) =
-    pmod(key * lit(2654435761L), lit(1000L))
+    Slots.of(key, 1000L)
 
-  private val hashBucketSql = "(o_orderkey * 2654435761) % 1000"
+  private val hashBucketSql = Slots.sql("o_orderkey", 1000)
 
   val defs: Map[String, QueryDef] = Map(
     // ---- deterministic 10% sample ------------------------------------
@@ -488,11 +489,11 @@ object Round2 {
         // product overflows int64 once doc_id reaches ~3.5e9/1e6 — at
         // sf0.1 already (ANSI overflow), let alone at corpus scale
         chunks.filter(
-            pmod(pmod(col("doc_id") * 1009L + col("chunk_id"), lit(1000003L))
-              * lit(2654435761L), lit(1000L)) < 300)
+            hashBucket(pmod(col("doc_id") * 1009L + col("chunk_id"),
+              lit(1000003L))) < 300)
           .orderBy("doc_id", "chunk_id")
       },
-      Some("""WITH m AS (SELECT doc_id, text,
+      Some(s"""WITH m AS (SELECT doc_id, text,
         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
         CAST(length(replace(text, ' ', '')) AS DOUBLE)
           / len(string_split(text, ' ')) AS avg_wl,
@@ -512,7 +513,7 @@ object Round2 {
         CAST(len(chunk) AS BIGINT) AS n_words,
         md5(array_to_string(chunk, ' ')) AS chunk_fp
       FROM c
-      WHERE (((doc_id * 1009 + chunk_id) % 1000003) * 2654435761) % 1000 < 300
+      WHERE ${Slots.sql("((doc_id * 1009 + chunk_id) % 1000003)", 1000)} < 300
       ORDER BY doc_id, chunk_id""")),
 
     // ---- int8 embedding quantization -----------------------------------

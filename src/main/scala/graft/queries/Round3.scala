@@ -7,6 +7,7 @@ import graft.QueryDef
 import graft.sources.Tables
 import graft.util.Det
 import graft.util.Det.{davgSql, dsumSql}
+import graft.util.Slots
 
 /** Round-3 completeness batch: warehouse-maintenance operators (SCD2
   * dimension build, CDC snapshot diff), LLM sequence packing, mode
@@ -213,7 +214,7 @@ object Round3 {
     "q105_stratified_sample" -> QueryDef(
       (s, dir) => {
         val w = Window.partitionBy("lang")
-          .orderBy(pmod(col("doc_id") * lit(2654435761L), lit(1000000L)),
+          .orderBy(Slots.of(col("doc_id"), 1000000L),
             col("doc_id"))
         t(s, dir, "documents")
           .withColumn("rn", row_number().over(w))
@@ -221,9 +222,9 @@ object Round3 {
           .select(col("lang"), col("doc_id"), col("n_chars"))
           .orderBy("lang", "doc_id")
       },
-      Some("""WITH r AS (SELECT lang, doc_id, n_chars,
+      Some(s"""WITH r AS (SELECT lang, doc_id, n_chars,
         row_number() OVER (PARTITION BY lang
-          ORDER BY (doc_id * 2654435761) % 1000000, doc_id) AS rn
+          ORDER BY ${Slots.sql("doc_id", 1000000)}, doc_id) AS rn
         FROM documents)
       SELECT lang, doc_id, n_chars FROM r WHERE rn <= 20
       ORDER BY lang, doc_id""")),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.QueryDef
 import graft.sources.{Events, Tables}
+import graft.util.Slots
 
 /** Round-4 additions: the Avro ingest roundtrip (the one mainstream
   * event-pipeline format previously missing — spark-avro is bundled in
@@ -191,7 +192,7 @@ object Round4 {
           .when(idx < 13, lit(0.5)).otherwise(lit(0.125))
         val bySrc = Window.partitionBy("source")
         val w = bySrc.orderBy(
-          pmod(col("doc_id") * lit(2654435761L), lit(1000000L)),
+          Slots.of(col("doc_id"), 1000000L),
           col("doc_id"))
         t(s, dir, "documents")
           .withColumn("rn", row_number().over(w))
@@ -201,15 +202,15 @@ object Round4 {
           .select(col("source"), col("doc_id"))
           .orderBy("source", "doc_id")
       },
-      Some("""WITH d AS (SELECT doc_id, source,
-          TRY_CAST(regexp_extract(source, '([0-9]+)$', 1) AS INT) AS idx
+      Some(s"""WITH d AS (SELECT doc_id, source,
+          TRY_CAST(regexp_extract(source, '([0-9]+)$$', 1) AS INT) AS idx
         FROM documents),
       r AS (SELECT doc_id, source,
           CASE WHEN idx < 5 THEN CAST(0.75 AS DOUBLE)
                WHEN idx < 13 THEN CAST(0.5 AS DOUBLE)
                ELSE CAST(0.125 AS DOUBLE) END AS frac,
           row_number() OVER (PARTITION BY source
-            ORDER BY (doc_id * 2654435761) % 1000000, doc_id) AS rn,
+            ORDER BY ${Slots.sql("doc_id", 1000000)}, doc_id) AS rn,
           COUNT(*) OVER (PARTITION BY source) AS n
         FROM d)
       SELECT source, doc_id FROM r
@@ -505,8 +506,8 @@ object Round4 {
             FROM q167_customer)
           GROUP BY b ORDER BY b""")
       },
-      Some("""WITH k AS (SELECT CAST(c_custkey AS BIGINT) AS k,
-          (CAST(c_custkey AS BIGINT) * 2654435761) % 8 AS b
+      Some(s"""WITH k AS (SELECT CAST(c_custkey AS BIGINT) AS k,
+          ${Slots.sql("CAST(c_custkey AS BIGINT)", 8)} AS b
         FROM customer)
       SELECT b AS bucket, COUNT(*) AS n, MIN(k) AS min_key
       FROM k GROUP BY b ORDER BY b""")),

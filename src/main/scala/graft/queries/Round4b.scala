@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.operators.Graph
 import graft.sources.Tables
+import graft.util.Slots
 
 /** Round-4 catalog widening.
   *
@@ -1079,7 +1080,7 @@ object Round4b {
       (s, dir) => {
         val nTok = size(split(col("text"), " ")).cast("long")
         val w = Window.partitionBy("source").orderBy(
-          pmod(col("doc_id") * lit(2654435761L), lit(1000000L)), col("doc_id"))
+          Slots.of(col("doc_id"), 1000000L), col("doc_id"))
         t(s, dir, "documents")
           .select(col("source"), col("doc_id"), nTok.as("n_tok"))
           .withColumn("cum_tok", sum("n_tok").over(
@@ -1088,12 +1089,12 @@ object Round4b {
           .select(col("source"), col("doc_id"), col("n_tok"), col("cum_tok"))
           .orderBy("source", "doc_id")
       },
-      Some("""WITH d AS (SELECT source, doc_id,
+      Some(s"""WITH d AS (SELECT source, doc_id,
           CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
         FROM documents),
       c AS (SELECT source, doc_id, n_tok,
           SUM(n_tok) OVER (PARTITION BY source
-            ORDER BY (doc_id * 2654435761) % 1000000, doc_id
+            ORDER BY ${Slots.sql("doc_id", 1000000)}, doc_id
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_tok
         FROM d)
       SELECT source, doc_id, n_tok, CAST(cum_tok AS BIGINT) AS cum_tok
@@ -1139,7 +1140,7 @@ object Round4b {
       (s, dir) => {
         val fps = Round4.winnowFingerprints(s, dir)
           .withColumn("is_train",
-            pmod(col("doc_id") * lit(2654435761L), lit(10L)) < 8)
+            Slots.of(col("doc_id"), 10L) < 8)
         val train = fps.filter(col("is_train")).select(col("fp")).distinct()
         fps.filter(!col("is_train"))
           .join(train, Seq("fp"), "left_semi")
@@ -1147,9 +1148,9 @@ object Round4b {
           .agg(count(lit(1)).as("n_shared_fp"))
           .orderBy("doc_id")
       },
-      Some(Round4.winnowCte + """,
+      Some(Round4.winnowCte + s""",
       fps AS (SELECT DISTINCT doc_id, fp FROM w),
-      t AS (SELECT doc_id, fp, (doc_id * 2654435761) % 10 < 8 AS is_train
+      t AS (SELECT doc_id, fp, ${Slots.sql("doc_id", 10)} < 8 AS is_train
         FROM fps),
       train AS (SELECT DISTINCT fp FROM t WHERE is_train)
       SELECT doc_id, COUNT(*) AS n_shared_fp
@@ -1411,7 +1412,7 @@ object Round4b {
               col("value") > 150, 1L)
             .otherwise(0L)).as("converted"))
           .withColumn("arm",
-            when(pmod(col("user_id") * lit(2654435761L), lit(2L)) === 0,
+            when(Slots.of(col("user_id"), 2L) === 0,
               "A").otherwise("B"))
         val arms = users.groupBy("arm")
           .agg(count(lit(1)).as("n_users"),
@@ -1430,9 +1431,9 @@ object Round4b {
               (lit(1.0) - (col("ca") + col("cb")).cast("double") / (col("na") + col("nb"))) *
               (lit(1.0) / col("na") + lit(1.0) / col("nb"))), 6).as("z"))
       },
-      Some("""WITH u AS (SELECT user_id,
+      Some(s"""WITH u AS (SELECT user_id,
           MAX(CASE WHEN event_type = 'purchase' AND value > 150 THEN 1 ELSE 0 END) AS converted,
-          CASE WHEN (user_id * 2654435761) % 2 = 0 THEN 'A' ELSE 'B' END AS arm
+          CASE WHEN ${Slots.sql("user_id", 2)} = 0 THEN 'A' ELSE 'B' END AS arm
         FROM events GROUP BY user_id),
       arms AS (SELECT arm, COUNT(*) AS n, CAST(SUM(converted) AS BIGINT) AS c
         FROM u GROUP BY arm),
@@ -1472,7 +1473,7 @@ object Round4b {
           Seq("doc_id"), "left_anti")
         val nTok = size(split(col("text"), " ")).cast("long")
         val w = Window.partitionBy("source").orderBy(
-          pmod(col("doc_id") * lit(2654435761L), lit(1000000L)), col("doc_id"))
+          Slots.of(col("doc_id"), 1000000L), col("doc_id"))
         survivors
           .select(col("source"), col("doc_id"), nTok.as("n_tok"))
           .withColumn("cum_tok", sum("n_tok").over(
@@ -1504,7 +1505,7 @@ object Round4b {
         FROM ex WHERE ex.doc_id NOT IN (SELECT doc_id FROM drop0)),
       c AS (SELECT source, doc_id, n_tok,
           SUM(n_tok) OVER (PARTITION BY source
-            ORDER BY (doc_id * 2654435761) % 1000000, doc_id
+            ORDER BY ${Slots.sql("doc_id", 1000000)}, doc_id
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_tok
         FROM sv)
       SELECT source, COUNT(*) AS n_docs,

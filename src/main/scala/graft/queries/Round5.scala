@@ -6,6 +6,7 @@ import graft.QueryDef
 import graft.operators.Dedup
 import graft.sources.Tables
 import graft.util.Det
+import graft.util.Slots
 
 /** Round-5 queries: the arbitrary-stateful-streaming surface scored as
   * a declared query (VERDICT r4 item 5), the q51 multimodal feature set
@@ -133,7 +134,7 @@ object Round5 {
     "q210_llm_incremental_neardup" -> QueryDef(
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        val isNew = pmod(col("doc_id") * lit(2654435761L), lit(10L)) === 0
+        val isNew = Slots.Probe.in(col("doc_id"))
         Dedup.jaccardPairsAgainst(docs.filter(isNew), docs.filter(!isNew),
             "doc_id", "text", n = 3, threshold = 0.5,
             blockCols = Seq("lang"))
@@ -146,8 +147,8 @@ object Round5 {
       sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
       p AS (SELECT a.doc_id AS da, b.doc_id AS db, COUNT(*) AS inter
         FROM sh a JOIN sh b ON a.g = b.g AND a.lang = b.lang
-        WHERE (a.doc_id * 2654435761) % 10 = 0
-          AND (b.doc_id * 2654435761) % 10 <> 0
+        WHERE ${Slots.Probe.inSql("a.doc_id")}
+          AND ${Slots.Probe.outSql("b.doc_id")}
         GROUP BY 1, 2)
       SELECT da, db, round(inter/(x.n + y.n - inter), 6) AS jaccard
       FROM p JOIN sz x ON p.da = x.doc_id JOIN sz y ON p.db = y.doc_id

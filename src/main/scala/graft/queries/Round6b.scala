@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.DecimalType
 import graft.QueryDef
 import graft.sources.Tables
 import graft.util.Det
+import graft.util.Slots
 
 /** Round-6 continuation batch: statistical LM quality scoring (the
   * CCNet-style filter, division-exact), weighted sampling without
@@ -387,7 +388,7 @@ object Round6b {
           "documents.parquet", "neardup_shingle_idx_h10",
           params = Map("holdoutMod" -> 10L))(
           Round6b.shingledDocs(t(s, dir, "documents")
-            .filter(pmod(col("doc_id") * lit(2654435761L), lit(10L)) =!= 0),
+            .filter(Slots.Probe.out(col("doc_id"))),
             "db", "nb"))
         s.conf.set("spark.sql.catalog.graftmem", "graft.sources.MemCatalog")
         s.sql("DROP TABLE IF EXISTS graftmem.neardup_alerts")
@@ -401,7 +402,7 @@ object Round6b {
         // narrow raw-doc rows is cheap; the heavy row-local shingling
         // then spreads across the session's shuffle partitions.
         val probe = Round6b.shingledDocs(src
-          .filter(pmod(col("doc_id") * lit(2654435761L), lit(10L)) === 0)
+          .filter(Slots.Probe.in(col("doc_id")))
           .repartition(col("doc_id")), "da", "na")
         val q = EventTime.withShufflePartitions(s, 8) {
           probe.writeStream.foreachBatch {
@@ -426,8 +427,8 @@ object Round6b {
       sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
       p AS (SELECT a.doc_id AS da, b.doc_id AS db, COUNT(*) AS inter
         FROM sh a JOIN sh b ON a.g = b.g AND a.lang = b.lang
-        WHERE (a.doc_id * 2654435761) % 10 = 0
-          AND (b.doc_id * 2654435761) % 10 <> 0
+        WHERE ${Slots.Probe.inSql("a.doc_id")}
+          AND ${Slots.Probe.outSql("b.doc_id")}
         GROUP BY 1, 2)
       SELECT da, db, round(inter/(x.n + y.n - inter), 6) AS jaccard
       FROM p JOIN sz x ON p.da = x.doc_id JOIN sz y ON p.db = y.doc_id

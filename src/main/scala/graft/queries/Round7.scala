@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.operators.Ranks
 import graft.sources.Tables
+import graft.util.Slots
 
 /** Round-7 batch: closing the ANN recall gap the round-6 harness
   * measured (best config was IVF nprobe=1 at 0.46 average recall@5 —
@@ -534,7 +535,6 @@ object Round7 {
     "q291_stream_semdedup" -> QueryDef(
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
-        val slot = pmod(col("vec_id") * lit(2654435761L), lit(10L))
         val cents = broadcast(emb.filter(col("vec_id") < 16)
           .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid")))
         // shared rank-1 cell assignment (Similarity.assignToCentroids):
@@ -543,7 +543,7 @@ object Round7 {
         def assign(df: DataFrame, id: String, vec: String): DataFrame =
           graft.operators.Similarity.assignToCentroids(df, id, vec, cents)
         graft.plans.NativeExpressions.register(s)
-        val corpus = assign(emb.filter(slot =!= 0)
+        val corpus = assign(emb.filter(Slots.Probe.out)
             .select(col("vec_id").as("db"), col("embedding").as("eb")), "db", "eb")
           .withColumn("nb", expr("sqrt(vec_dot(eb, eb))"))
           .persist()
@@ -552,7 +552,7 @@ object Round7 {
         s.sql("CREATE TABLE graftmem.semdedup_alerts (da BIGINT, db BIGINT, cos DOUBLE)")
         val src = s.readStream.schema(emb.schema)
           .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
-        val probe = src.filter(pmod(col("vec_id") * lit(2654435761L), lit(10L)) === 0)
+        val probe = src.filter(Slots.Probe.in)
           .select(col("vec_id").as("da"), col("embedding").as("ea"))
         val q = EventTime.withShufflePartitions(s, 8) {
           probe.writeStream.foreachBatch {
@@ -581,14 +581,14 @@ object Round7 {
       qa0 AS (SELECT e.vec_id, c.centroid_id,
           round(SUM(CAST(e.embedding[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
         FROM embeddings e, cent c, (SELECT unnest(range(1, 65)) AS i) i
-        WHERE (e.vec_id * 2654435761) % 10 = 0 GROUP BY 1, 2),
+        WHERE ${Slots.Probe.inSql("e.vec_id")} GROUP BY 1, 2),
       qa AS (SELECT vec_id, centroid_id FROM (SELECT vec_id, centroid_id,
           row_number() OVER (PARTITION BY vec_id ORDER BY d DESC, centroid_id) AS r
         FROM qa0) WHERE r = 1),
       ca0 AS (SELECT e.vec_id, c.centroid_id,
           round(SUM(CAST(e.embedding[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
         FROM embeddings e, cent c, (SELECT unnest(range(1, 65)) AS i) i
-        WHERE (e.vec_id * 2654435761) % 10 <> 0 GROUP BY 1, 2),
+        WHERE ${Slots.Probe.outSql("e.vec_id")} GROUP BY 1, 2),
       ca AS (SELECT vec_id, centroid_id FROM (SELECT vec_id, centroid_id,
           row_number() OVER (PARTITION BY vec_id ORDER BY d DESC, centroid_id) AS r
         FROM ca0) WHERE r = 1),

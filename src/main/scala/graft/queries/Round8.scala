@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.operators.{IndexAdvisor, Similarity}
 import graft.sources.Tables
+import graft.util.Slots
 
 /** Round-8 batch: making the round-7 documentation-only claims
   * executable. The headline is q294 — the first scored query whose ANN
@@ -424,8 +425,7 @@ object Round8 {
     "q297_stream_neardup_dedup" -> QueryDef(
       (s, dir) => {
         val docsSchema = t(s, dir, "documents").schema
-        val slot = pmod(col("doc_id") * lit(2654435761L), lit(10L))
-        val cgrp = t(s, dir, "documents").filter(slot =!= 0)
+        val cgrp = t(s, dir, "documents").filter(Slots.Probe.out(col("doc_id")))
           .groupBy("lang", "text")
           .agg(min("doc_id").as("rep"), collect_list("doc_id").as("ids"))
           .persist() // two lineage paths: rep index + member expansion
@@ -439,7 +439,7 @@ object Round8 {
           (da BIGINT, db BIGINT, jaccard DOUBLE)""")
         val src = s.readStream.schema(docsSchema)
           .option("pathGlobFilter", "documents.parquet").parquet(dir)
-        val probe = src.filter(slot === 0)
+        val probe = src.filter(Slots.Probe.in(col("doc_id")))
         val q = EventTime.withShufflePartitions(s, 8) {
           probe.writeStream.foreachBatch {
             (batch: DataFrame, _: Long) =>
@@ -471,11 +471,10 @@ object Round8 {
     "q298_stream_semdedup_dedup" -> QueryDef(
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
-        val slot = pmod(col("vec_id") * lit(2654435761L), lit(10L))
         graft.plans.NativeExpressions.register(s)
         val cents = broadcast(emb.filter(col("vec_id") < 16)
           .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid")))
-        val cgrp = emb.filter(slot =!= 0)
+        val cgrp = emb.filter(Slots.Probe.out)
           .select(col("vec_id").as("db"), col("embedding").as("eb"))
           .groupBy("eb")
           .agg(min("db").as("rep"), collect_list("db").as("ids"))
@@ -491,7 +490,7 @@ object Round8 {
           (da BIGINT, db BIGINT, cos DOUBLE)""")
         val src = s.readStream.schema(emb.schema)
           .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
-        val probe = src.filter(pmod(col("vec_id") * lit(2654435761L), lit(10L)) === 0)
+        val probe = src.filter(Slots.Probe.in)
           .select(col("vec_id").as("da"), col("embedding").as("ea"))
         val q = EventTime.withShufflePartitions(s, 8) {
           probe.writeStream.foreachBatch {
@@ -583,7 +582,7 @@ object Round8 {
         val survivors = kept.join(dropped, Seq("doc_id"), "left_anti")
         val nTok = size(split(col("text"), " ")).cast("long")
         val ws = Window.partitionBy("source").orderBy(
-          pmod(col("doc_id") * lit(2654435761L), lit(1000000L)), col("doc_id"))
+          Slots.of(col("doc_id"), 1000000L), col("doc_id"))
         survivors
           .select(col("source"), col("doc_id"), nTok.as("n_tok"))
           .withColumn("cum_tok", sum("n_tok").over(
@@ -630,7 +629,7 @@ object Round8 {
         FROM q WHERE doc_id NOT IN (SELECT doc_id FROM drop0)),
       c AS (SELECT source, doc_id, n_tok,
           SUM(n_tok) OVER (PARTITION BY source
-            ORDER BY (doc_id * 2654435761) % 1000000, doc_id
+            ORDER BY ${Slots.sql("doc_id", 1000000)}, doc_id
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_tok
         FROM sv)
       SELECT source, COUNT(*) AS n_docs,

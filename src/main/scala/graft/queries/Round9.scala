@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.operators.{IndexAdvisor, Similarity}
 import graft.sources.Tables
+import graft.util.Slots
 
 /** Round-9 batch: completing the graph-ANN ladder. q301→q302→q303
   * measured entries, then connectivity, one variable at a time and
@@ -64,8 +65,8 @@ object Round9 {
       Seq(rev, und, cand, score, keep).mkString(",\n      ")
     }.mkString(",\n      ")
 
-  /** q304's dials, picked by the measured sf0.1 sweep (TuneRecall
-    * graph mode, one variable at a time): NN-Descent rounds saturate at
+  /** q304's dials, picked by a measured sf0.1 sweep of the graph
+    * family (one variable at a time): NN-Descent rounds saturate at
     * 2 (3 adds +0.004), degree 24 over 16 is +0.11, beam 24 over 16 is
     * +0.08; the chosen point measured recall@5 = 0.924 at sf0.1.
     * Per-query serving cost is beam·(d+1)·rounds = 2400 cosines —
@@ -292,9 +293,8 @@ object Round9 {
     "q305_stream_semdedup_advised" -> QueryDef(
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
-        val slot = pmod(col("vec_id") * lit(2654435761L), lit(10L))
         graft.plans.NativeExpressions.register(s)
-        val corpus0 = emb.filter(slot =!= 0)
+        val corpus0 = emb.filter(Slots.Probe.out)
           .select(col("vec_id").as("db"), col("embedding").as("eb"))
         val st = corpus0.agg(count(lit(1)).as("n"),
           countDistinct(col("eb")).as("nu")).head()
@@ -324,7 +324,7 @@ object Round9 {
         val src = s.readStream.schema(emb.schema)
           .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
         val probe = src.filter(
-            pmod(col("vec_id") * lit(2654435761L), lit(10L)) === 0)
+            Slots.Probe.in)
           .select(col("vec_id").as("da"), col("embedding").as("ea"))
         val q = EventTime.withShufflePartitions(s, 8) {
           probe.writeStream.foreachBatch {
@@ -345,7 +345,7 @@ object Round9 {
           ORDER BY da, db""")
       },
       Some(s"""WITH st AS (SELECT COUNT(*) AS n, COUNT(DISTINCT embedding) AS nu
-        FROM embeddings WHERE (vec_id * 2654435761) % 10 <> 0),
+        FROM embeddings WHERE ${Slots.Probe.outSql}),
       p2t AS (SELECT CAST(power(2, x.x) AS BIGINT) AS p
         FROM (SELECT unnest(range(0, 40)) AS x) x),
       nl AS (SELECT CASE WHEN l / lower < (lower * 2) / l
@@ -359,14 +359,14 @@ object Round9 {
       qa0 AS (SELECT e.vec_id, c.centroid_id,
           round(SUM(CAST(e.embedding[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
         FROM embeddings e, cent c, (SELECT unnest(range(1, 65)) AS i) i
-        WHERE (e.vec_id * 2654435761) % 10 = 0 GROUP BY 1, 2),
+        WHERE ${Slots.Probe.inSql("e.vec_id")} GROUP BY 1, 2),
       qa AS (SELECT vec_id, centroid_id FROM (SELECT vec_id, centroid_id,
           row_number() OVER (PARTITION BY vec_id ORDER BY d DESC, centroid_id) AS r
         FROM qa0) WHERE r = 1),
       ca0 AS (SELECT e.vec_id, c.centroid_id,
           round(SUM(CAST(e.embedding[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
         FROM embeddings e, cent c, (SELECT unnest(range(1, 65)) AS i) i
-        WHERE (e.vec_id * 2654435761) % 10 <> 0 GROUP BY 1, 2),
+        WHERE ${Slots.Probe.outSql("e.vec_id")} GROUP BY 1, 2),
       ca AS (SELECT vec_id, centroid_id FROM (SELECT vec_id, centroid_id,
           row_number() OVER (PARTITION BY vec_id ORDER BY d DESC, centroid_id) AS r
         FROM ca0) WHERE r = 1),
@@ -776,9 +776,8 @@ object Round9 {
     "q311_stream_semdedup_pq" -> QueryDef(
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
-        val slot = pmod(col("vec_id") * lit(2654435761L), lit(10L))
         graft.plans.NativeExpressions.register(s)
-        val corpus0 = emb.filter(slot =!= 0)
+        val corpus0 = emb.filter(Slots.Probe.out)
           .select(col("vec_id").as("cid"), col("embedding").as("ce"))
         val st = corpus0.agg(count(lit(1)).as("n"),
           countDistinct(col("ce")).as("nu")).head()
@@ -807,7 +806,7 @@ object Round9 {
         val src = s.readStream.schema(emb.schema)
           .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
         val probe = src.filter(
-            pmod(col("vec_id") * lit(2654435761L), lit(10L)) === 0)
+            Slots.Probe.in)
           .select(col("vec_id").as("da"), col("embedding").as("ea"))
         val q = EventTime.withShufflePartitions(s, 8) {
           probe.writeStream.foreachBatch {
@@ -830,7 +829,7 @@ object Round9 {
       },
       Some(s"""WITH st AS MATERIALIZED (SELECT COUNT(*) AS n,
           COUNT(DISTINCT embedding) AS nu FROM embeddings
-        WHERE (vec_id * 2654435761) % 10 <> 0),
+        WHERE ${Slots.Probe.outSql}),
       p2t AS (SELECT CAST(power(2, x.x) AS BIGINT) AS p
         FROM (SELECT unnest(range(0, 40)) AS x) x),
       nl AS MATERIALIZED (SELECT CASE WHEN l / lower < (lower * 2) / l
@@ -841,20 +840,20 @@ object Round9 {
          FROM st)),
       cpos AS MATERIALIZED (SELECT vec_id, embedding,
           row_number() OVER (ORDER BY vec_id) AS rn
-        FROM embeddings WHERE (vec_id * 2654435761) % 10 <> 0),
+        FROM embeddings WHERE ${Slots.Probe.outSql}),
       cent AS MATERIALIZED (SELECT vec_id AS centroid_id, embedding AS centroid
         FROM cpos WHERE rn <= (SELECT nlist FROM nl)),
       ca0 AS MATERIALIZED (SELECT e.vec_id AS cid, c.centroid_id,
           round(SUM(CAST(e.embedding[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
         FROM embeddings e, cent c, (SELECT unnest(range(1, 65)) AS i) i
-        WHERE (e.vec_id * 2654435761) % 10 <> 0 GROUP BY 1, 2),
+        WHERE ${Slots.Probe.outSql("e.vec_id")} GROUP BY 1, 2),
       ica AS MATERIALIZED (SELECT cid, centroid_id FROM (SELECT cid, centroid_id,
           row_number() OVER (PARTITION BY cid ORDER BY d DESC, centroid_id) AS r
         FROM ca0) WHERE r = 1),
       pa0 AS MATERIALIZED (SELECT e.vec_id AS da, c.centroid_id,
           round(SUM(CAST(e.embedding[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
         FROM embeddings e, cent c, (SELECT unnest(range(1, 65)) AS i) i
-        WHERE (e.vec_id * 2654435761) % 10 = 0 GROUP BY 1, 2),
+        WHERE ${Slots.Probe.inSql("e.vec_id")} GROUP BY 1, 2),
       ipa AS MATERIALIZED (SELECT da, centroid_id FROM (SELECT da, centroid_id,
           row_number() OVER (PARTITION BY da ORDER BY d DESC, centroid_id) AS r
         FROM pa0) WHERE r = 1),

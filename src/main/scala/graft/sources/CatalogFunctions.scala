@@ -18,9 +18,9 @@ import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, 
 object CatalogFunctions {
 
   /** Deterministic multiplicative-hash shard assignment — the same
-    * `(k * 2654435761) % n` used by the hash-sampling queries, so the
+    * [[graft.util.Slots]] split the hash-sampling queries use, so the
     * DuckDB oracle can reproduce it arithmetically. Exact in int64 for
-    * any key below ~3.5e9.
+    * any key up to `Slots.MaxKey` (~3.5e9).
     */
   object HashBucket extends UnboundFunction {
     override def name(): String = "hash_bucket"
@@ -40,10 +40,7 @@ object CatalogFunctions {
       override def resultType(): DataType = LongType
       override def isResultNullable: Boolean = false
       // the magic method: codegen invokes this directly with primitives
-      def invoke(key: Long, n: Int): Long = {
-        val m = (key * 2654435761L) % n
-        if (m < 0) m + n else m
-      }
+      def invoke(key: Long, n: Int): Long = graft.util.Slots.bucket(key, n)
       // interpreted fallback (also exercised by the spec)
       override def produceResult(input: InternalRow): java.lang.Long =
         invoke(input.getLong(0), input.getInt(1))

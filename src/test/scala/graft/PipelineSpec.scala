@@ -230,6 +230,36 @@ class PipelineSpec extends SparkTestBase {
     assert(r2.ran.isEmpty && r2.skipped.size == 4)
   }
 
+  test("runParallel: a failed job drains running siblings and starts nothing new") {
+    val root = Files.createTempDirectory("graft_par_fail").toString
+    val downstreamStarted = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val src = PipelineJob("src", "src.parquet", Nil)(
+      (s, _) => Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+    val bad = PipelineJob("bad", "bad.parquet", Seq("src.parquet"))(
+      (s, _) => sys.error("bad job"))
+    val slow = PipelineJob("slow", "slow.parquet", Seq("src.parquet")) { (s, in) =>
+      Thread.sleep(1500)
+      in("src.parquet")
+    }
+    def downstream(name: String, deps: Seq[String]) =
+      PipelineJob(name, s"$name.parquet", deps) { (s, in) =>
+        downstreamStarted.set(true)
+        in(deps.head)
+      }
+    val runner = new PipelineRunner(spark, root)
+    val e = intercept[Exception] {
+      runner.runParallel(Seq(src, bad, slow,
+        downstream("after_slow", Seq("slow.parquet")),
+        downstream("after_both", Seq("bad.parquet", "slow.parquet"))),
+        parallelism = 4)
+    }
+    assert(e.getMessage.contains("bad job"), e)
+    // the sibling's write finished before runParallel threw
+    assert(Files.exists(java.nio.file.Paths.get(root, "slow.parquet", "_GRAFT_DEPS")))
+    assert(spark.read.parquet(s"$root/slow.parquet").count() == 2)
+    assert(!downstreamStarted.get(), "a job started after the build failed")
+  }
+
   test("Compact merges a many-small-file table, preserving rows") {
     val src = Files.createTempDirectory("graft_compact_src").toString
     val dst = Files.createTempDirectory("graft_compact_dst").toString
