@@ -23,16 +23,6 @@ object TextFunctions {
         i => concat_ws("_", slice(words, i, lit(n)))))
       .otherwise(array().cast("array<string>"))
 
-  /** 64-bit shingle hashes: xxhash64 over the n words directly — no
-    * intermediate shingle strings (which dominate cost at scale).
-    * Distinct hashes ≡ distinct shingles up to ~n²/2⁶⁴ collisions.
-    */
-  def shingleHashes(words: Column, n: Int): Column =
-    when(size(words) >= n,
-      transform(sequence(lit(1), size(words) - lit(n - 1)),
-        i => xxhash64((0 until n).map(k => element_at(words, i + lit(k))): _*)))
-      .otherwise(array().cast("array<bigint>"))
-
   /** Document fingerprint: md5 of lowercased text (identical hex in
     * Spark and DuckDB).
     */

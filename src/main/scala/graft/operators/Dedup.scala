@@ -397,19 +397,6 @@ object Dedup {
       .filter(col("n_shared") >= minShared)
   }
 
-  /** MinHash signature: for each of `numHashes` seeded permutations,
-    * min over shingle hashes. Pure column expressions over xxhash64.
-    * NOTE: inlines the shingle expression once per hash — only use on a
-    * column that is already a plain array attribute; for whole-table
-    * signatures prefer the explode+groupBy form in [[minHashCandidates]],
-    * which computes shingles once and min-aggregates (vectorized, one
-    * shuffle, no 32×-duplicated expression trees).
-    */
-  def minHashSignature(shingleArr: Column, numHashes: Int): Column =
-    array((0 until numHashes).map { seed =>
-      array_min(transform(shingleArr, s => xxhash64(lit(seed), s)))
-    }: _*)
-
   /** MinHash-LSH candidate pairs: signatures banded into `bands`, docs
     * sharing any band bucket become candidates. Approximate (no oracle);
     * deterministic given the fixed seeds.

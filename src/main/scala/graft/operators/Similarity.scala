@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
 import graft.plans.NativeExpressions
+import graft.util.Jobs
 
 /** Similarity search over embedding columns (`array<float>`).
   *
@@ -669,12 +670,7 @@ object Similarity {
     val c = corpus.withColumn("nn", expr("sqrt(vec_dot(ce, ce))"))
     val cu = c.select(col("cid").as("u"), col("ce").as("ue"), col("nn").as("un"))
     val cv = c.select(col("cid").as("v"), col("ce").as("ve"), col("nn").as("vn"))
-    def cut(df: DataFrame, label: String): DataFrame = {
-      val out = graft.util.Scratch.dir(s"nndescent_$label")
-      df.write.mode("overwrite").parquet(out)
-      spark.read.parquet(out)
-    }
-    var edges = cut(edges0.select(col("u"), col("v")), "e0")
+    var edges = Jobs.cut(edges0.select(col("u"), col("v")), "nndescent_e0")
     for (r <- 1 to rounds) {
       val wr = Window.partitionBy("u").orderBy("v")
       val rev = edges.select(col("v").as("u"), col("u").as("v"))
@@ -689,8 +685,8 @@ object Similarity {
         .select(col("u"), col("v"),
           round(expr("vec_dot(ue, ve)") / (col("un") * col("vn")), 6).as("cos"))
       val w = Window.partitionBy("u").orderBy(col("cos").desc, col("v"))
-      edges = cut(scored.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= d).select(col("u"), col("v")), s"e$r")
+      edges = Jobs.cut(scored.withColumn("rn", row_number().over(w))
+        .filter(col("rn") <= d).select(col("u"), col("v")), s"nndescent_e$r")
     }
     edges
   }
@@ -824,10 +820,7 @@ object Similarity {
       .filter(col("rn") === 1).select("rep", "s", "code")
     val codes = grp.select(col("rep"), explode(col("ids")).as("cid"))
       .join(enc, "rep").select("cid", "s", "code")
-    val out = graft.util.Scratch.dir("pq_codes")
-    codes.write.mode("overwrite").parquet(out)
-    grp.unpersist()
-    spark.read.parquet(out)
+    Jobs.cut(codes, "pq_codes", grp.unpersist())
   }
 
   def pqTopK(
@@ -1036,10 +1029,7 @@ object Similarity {
     // call-local cache lifecycle (the round-9 operator finding): the
     // answer-sized result is materialized, then the index's grouped
     // frame is released HERE — nothing waits for a harness clearCache
-    val out = graft.util.Scratch.dir("ivfpq_topk")
-    result.write.mode("overwrite").parquet(out)
-    idx.grp.unpersist()
-    queries.sparkSession.read.parquet(out)
+    Jobs.cut(result, "ivfpq_topk", idx.grp.unpersist())
   }
 
   /** The ADC-ranked candidate table of one IVFADC probe pass (qid,
@@ -1217,11 +1207,6 @@ object Similarity {
     // paths (edge expansion + union), and a persist would outlive the
     // call (the round-9 operator-lifecycle finding) — the write is
     // answer-sized and leaves nothing cached behind
-    def cut(df: DataFrame, label: String): DataFrame = {
-      val out = graft.util.Scratch.dir(s"beam_$label")
-      df.write.mode("overwrite").parquet(out)
-      spark.read.parquet(out)
-    }
     var frontier = entries.select(col("qid"), col("cid"))
       .withColumn("cos", lit(null).cast("double"))
     for (r <- 1 to rounds) {
@@ -1235,9 +1220,9 @@ object Similarity {
         .select(col("qid"), col("cid"),
           round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn")), 6).as("cos"))
       val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))
-      frontier = cut(scored.withColumn("rn", row_number().over(w))
+      frontier = Jobs.cut(scored.withColumn("rn", row_number().over(w))
         .filter(col("rn") <= beam)
-        .select(col("qid"), col("cid"), col("cos")), s"f$r")
+        .select(col("qid"), col("cid"), col("cos")), s"beam_f$r")
     }
     val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))
     frontier.withColumn("rnk", row_number().over(w).cast("long"))
@@ -1406,11 +1391,6 @@ object Similarity {
     // stored norms: index metadata (4 B/vector, written with the codes
     // in a production layout); one column-pruned scan here
     val cn = norms.getOrElse(cosNormsDF(corpus))
-    def cut(df: DataFrame, label: String): DataFrame = {
-      val out = graft.util.Scratch.dir(s"beampq_$label")
-      df.write.mode("overwrite").parquet(out)
-      spark.read.parquet(out)
-    }
     var frontier = entries.select(col("qid"), col("cid"))
     var visited: DataFrame = null // the DiskANN search list, round-cut
     for (r <- 1 to rounds) {
@@ -1430,8 +1410,8 @@ object Similarity {
       // one round-boundary write serves both consumers: the ranked
       // frontier (navigation) and the visited accumulation (rerank)
       val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))
-      val roundScored = cut(scored.withColumn("rn", row_number().over(w)),
-        s"r$r")
+      val roundScored = Jobs.cut(
+        scored.withColumn("rn", row_number().over(w)), s"beampq_r$r")
       frontier = roundScored.filter(col("rn") <= beam).select("qid", "cid")
       val ids = roundScored.select("qid", "cid")
       visited = if (visited == null) ids else visited.unionByName(ids)

@@ -1,10 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
 /** Native Catalyst expressions for the embedding hot path.
@@ -107,11 +106,11 @@ case class LongVectorDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration + Column helpers for the native expressions. */
+/** Registration of the native expressions. */
 object NativeExpressions {
 
   /** Register `vec_dot` in the session's function registry (idempotent)
-    * so it is usable from SQL and via [[vecDot]].
+    * so it is usable from SQL and from `expr` columns.
     */
   def register(spark: SparkSession): Unit = {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
@@ -132,13 +131,4 @@ object NativeExpressions {
       case other => throw new IllegalArgumentException(
         s"word_ngram_hashes n must be an integer literal, got $other")
     }
-
-  /** Codegen'd dot product of two float-array columns. Columns are
-    * referenced by name (resolution happens via expr), so pass plain
-    * attribute names.
-    */
-  def vecDot(spark: SparkSession, a: String, b: String): Column = {
-    register(spark)
-    expr(s"vec_dot($a, $b)")
-  }
 }

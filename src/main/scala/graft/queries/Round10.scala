@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.QueryDef
 import graft.operators.{IndexAdvisor, Similarity}
 import graft.sources.Tables
-import graft.util.Slots
+import graft.util.{Jobs, Slots}
 
 /** Round-10 batch: composing the last ANN family member — DiskANN-
   * shaped serving (graph navigation × PQ compression, q304 × q308) —
@@ -351,12 +351,9 @@ object Round10 {
           val a = best(0).getString(0); val b = best(0).getString(1)
           acc += ((r.toLong, a, b))
           val pat = s" $a $b "; val rep = s" $a$b "
-          val out = graft.util.Scratch.dir(s"bpe_t$r")
-          voc.select(expr(
+          voc = Jobs.cut(voc.select(expr(
               s"replace(replace(seq, '$pat', '$rep'), '$pat', '$rep')")
-              .as("seq"), col("f"))
-            .write.mode("overwrite").parquet(out)
-          voc = s.read.parquet(out)
+              .as("seq"), col("f")), s"bpe_t$r")
         }
       }
       import s.implicits._
@@ -677,22 +674,12 @@ object Round10 {
           .limit(CalSampleK)
         val exactS = Similarity.cosineTopK(qs, sample, k = 5)
           .select(col("qid"), col("cid")).persist()
-        // populate the persist once, then overlap the three independent
-        // measurement counts (guide §2.6; values identical)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import graft.util.Jobs.ec
-        val nq = exactS.select("qid").distinct().count()
-        def hitsOf(ann: org.apache.spark.sql.DataFrame): Future[Long] =
-          Future(exactS
-            .join(ann.select(col("qid"), col("cid")), Seq("qid", "cid"))
-            .count())
-        val fHi = hitsOf(Similarity.ivfTopKProbe(qs, sample, k = 5,
-          nlist = 16, nprobe = 8))
-        val fHl = hitsOf(Similarity.lshMultiTableTopK(qs, sample, k = 5,
-          nPlanes = 4, dim = 64, nTables = 8))
-        val mi = Await.result(fHi, Duration.Inf).toDouble / (5.0 * nq)
-        val ml = Await.result(fHl, Duration.Inf).toDouble / (5.0 * nq)
+        // the query count populates the persist before the hit counts
+        val Seq(mi, ml) = Jobs.recall("q314", exactS, countFirst = true)(
+          () => Similarity.ivfTopKProbe(qs, sample, k = 5,
+            nlist = 16, nprobe = 8),
+          () => Similarity.lshMultiTableTopK(qs, sample, k = 5,
+            nPlanes = 4, dim = 64, nTables = 8)).rates
         exactS.unpersist()
         val adv = IndexAdvisor.adviseCalibrated(n, dim = 64, dupRate,
           targetRecall = Round9.CalTarget,
@@ -799,23 +786,12 @@ object Round10 {
         val nu = st.getLong(1)
         val dupRate = if (n == 0L) 0.0 else 1.0 - nu.toDouble / n
         val exact = Round6c.exactTop5(s, dir).select(col("qid"), col("cid"))
-        // independent measurement counts — overlap (guide §2.6)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import graft.util.Jobs.ec
-        val fNq = Future(exact.select("qid").distinct().count())
-        def hitsOf(ann: org.apache.spark.sql.DataFrame): Future[Long] =
-          Future(exact
-            .join(ann.select(col("qid"), col("cid")), Seq("qid", "cid"))
-            .count())
         // the two measured serves are fixture artifacts read warm (the
         // round-12 serve-sharing shape); the ivfpq one is byte-shared
         // with q328's measurement 2
-        val fMi = hitsOf(calIvfMeasuredServe(s, dir, qs, corpus))
-        val fMp = hitsOf(calPqMeasuredServe(s, dir, qs, corpus, n))
-        val nq = Await.result(fNq, Duration.Inf)
-        val mi = Await.result(fMi, Duration.Inf).toDouble / (5.0 * nq)
-        val mp = Await.result(fMp, Duration.Inf).toDouble / (5.0 * nq)
+        val Seq(mi, mp) = Jobs.recall("q315", exact)(
+          () => calIvfMeasuredServe(s, dir, qs, corpus),
+          () => calPqMeasuredServe(s, dir, qs, corpus, n)).rates
         val adv = IndexAdvisor.adviseCalibratedServing(n, dim = 64,
           dupRate, targetRecall = Round9.CalTarget,
           candidateBudget = nu * 9L / 10L,

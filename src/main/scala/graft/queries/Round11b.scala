@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.operators.{FixedPoint, IndexAdvisor, Ranks, Similarity}
 import graft.sources.Tables
-import graft.util.Slots
+import graft.util.{Jobs, Slots}
 
 /** Round-11 second batch: the SQ8 compression point on the ANN
   * memory/recall curve (q326 — FAISS's production-default `IVF,SQ8`
@@ -246,22 +246,11 @@ object Round11b {
           s"raw vectors fit the $Sq8MemBudget B budget at nu=$nu — " +
             "the ivf row would need measuring (q315 scores that regime)")
         val exact = Round6c.exactTop5(s, dir).select(col("qid"), col("cid"))
-        // independent measurement counts — overlap (guide §2.6)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import graft.util.Jobs.ec
-        val fNq = Future(exact.select("qid").distinct().count())
-        def hitsOf(ann: DataFrame): Future[Long] =
-          Future(exact
-            .join(ann.select(col("qid"), col("cid")), Seq("qid", "cid"))
-            .count())
         // measured serves as fixture artifacts (the round-12 sharing
         // shape); the ivfpq one is byte-shared with q315's measurement
-        val fMs = hitsOf(calSq8MeasuredServe(s, dir, qs, corpus))
-        val fMp = hitsOf(Round10.calPqMeasuredServe(s, dir, qs, corpus, n))
-        val nq = Await.result(fNq, Duration.Inf)
-        val ms = Await.result(fMs, Duration.Inf).toDouble / (5.0 * nq)
-        val mp = Await.result(fMp, Duration.Inf).toDouble / (5.0 * nq)
+        val Seq(ms, mp) = Jobs.recall("q328", exact)(
+          () => calSq8MeasuredServe(s, dir, qs, corpus),
+          () => Round10.calPqMeasuredServe(s, dir, qs, corpus, n)).rates
         val adv = IndexAdvisor.adviseCalibratedServing(n, dim = 64,
           dupRate, targetRecall = 0.8,
           candidateBudget = nu * 9L / 10L,
@@ -1134,10 +1123,8 @@ object Round11b {
             col("rn").as("rnk"),
             when(col("rn") <= expr("nd div 4"), 1L).otherwise(0L)
               .as("selected"))
-        val outDir = graft.util.Scratch.dir("dsir_out")
-        out.write.mode("overwrite").parquet(outDir)
-        fh.unpersist(); cf.unpersist(); alld.unpersist()
-        s.read.parquet(outDir)
+        Jobs.cut(out, "dsir_out",
+          { fh.unpersist(); cf.unpersist(); alld.unpersist() })
   }
 
   /** q327's oracle CTE chain (through `dsel`: ranked docs + the

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.operators.{IndexAdvisor, Similarity}
 import graft.sources.Tables
-import graft.util.Slots
+import graft.util.{Jobs, Slots}
 
 /** Round-12 batch: the two round-11 axes composed — attribute-FILTERED
   * serving on the COMPRESSED rungs (SQ8/IVFPQ) with a unified filtered
@@ -522,14 +522,11 @@ object Round12 {
     // is one accounting row per document. Still computed live on
     // every execution — this is within-query de-duplication, not a
     // cross-run cache.
-    val out = graft.util.Scratch.dir("encoded_doctok")
-    words.join(wtok.hint("shuffle_hash"), Seq("w"))
+    Jobs.cut(words.join(wtok.hint("shuffle_hash"), Seq("w"))
       .groupBy("doc_id", "lang").agg(sum("wt").as("tok"))
       .select(col("doc_id"), col("lang"), col("tok"),
         (Slots.hash(Round11b.guardedId(col("doc_id")))
-          % lit(1000003L)).as("hsh"))
-      .write.mode("overwrite").parquet(out)
-    s.read.parquet(out)
+          % lit(1000003L)).as("hsh")), "encoded_doctok")
   }
 
   /** q339's serving-memory budget: the q328 60 kB window applied to
@@ -734,22 +731,18 @@ object Round12 {
     // corpus pool), fpool (np14, fNu-scaled pool) at both
     // selectivities, one standing index (q328's artifacts).
     "q338_llm_ann_filtered_ivfpq" -> QueryDef(
-      (s, dir) => {
+      (s, dir) => Jobs.scope(s) { j =>
         val emb = t(s, dir, "embeddings")
         val qs = emb.filter(col("vec_id") < 50)
           .select(col("vec_id").as("qid"), col("embedding").as("qe"))
         val corpus = emb
           .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-        // the corpus count and the two keep counts are independent
-        // 1-row jobs — overlap them (guide §2.6); values identical
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import graft.util.Jobs.ec
-        val fN = Future(corpus.count())
+        val fN = j.part("q338_n")(corpus.count())
         val keeps = Seq("f50", "f05")
           .map(tag => tag -> Round11.keepOf(emb, tag)).toMap
-        val fKc = keeps.map { case (tag, k) => tag -> Future(k.count()) }
-        val n = Await.result(fN, Duration.Inf)
+        val fKc = keeps.map { case (tag, k) =>
+          tag -> j.part(s"q338_${tag}_n")(k.count()) }
+        val n = fN.get
         val mc = math.max(100L, 3L * n / 20L).toInt
         // ONE ivfPqIndex (artifact-resident pieces) and ONE ADC
         // candidate scan per (tag, nprobe) — the three pool dials
@@ -764,20 +757,12 @@ object Round12 {
         // planning/AQE-replanning cost scales with that, and the six
         // branches' stages serialize behind one job's tail. Compute
         // each part as its OWN concurrently-submitted job cut to
-        // scratch (guide §2.6 + the q249 plan-size rule); the final
-        // plan unions six flat 50-row scans. Values identical — the
-        // same part frames, parquet-roundtripped (exact for
-        // BIGINT/DOUBLE/VARCHAR).
-        def partJob(label: String)(df: => DataFrame): scala.concurrent.Future[DataFrame] =
-          Future {
-            val out = graft.util.Scratch.dir(label)
-            df.write.mode("overwrite").parquet(out)
-            s.read.parquet(out)
-          }
+        // scratch (the q249 plan-size rule); the final plan unions six
+        // flat 50-row scans. Values identical — the same part frames,
+        // parquet-roundtripped (exact for BIGINT/DOUBLE/VARCHAR).
         val parts = (for (tag <- Seq("f50", "f05")) yield {
           val keep = keeps(tag)
-          val mf = math.max(50L,
-            3L * Await.result(fKc(tag), Duration.Inf) / 20L).toInt
+          val mf = math.max(50L, 3L * fKc(tag).get / 20L).toInt
           val exf = Round11.exactTop5Filtered(s, dir, tag, qs, corpus, keep)
             .select("qid", "cid")
           def cand(nprobe: Int): DataFrame =
@@ -794,14 +779,14 @@ object Round12 {
                 cand14 = Some(cand(14)))
             else serve(14, mc)
           Seq(
-            partJob(s"q338_${tag}_naive")(
+            j.cut(s"q338_${tag}_naive")(
               Round11.taggedRecall(tag, "naive", exf, serve(10, mc))),
-            partJob(s"q338_${tag}_probed")(
+            j.cut(s"q338_${tag}_probed")(
               Round11.taggedRecall(tag, "probed", exf, probed)),
-            partJob(s"q338_${tag}_fpool")(
+            j.cut(s"q338_${tag}_fpool")(
               Round11.taggedRecall(tag, "fpool", exf, serve(14, mf))))
         }).flatten
-        graft.util.Jobs.awaitAll(parts)
+        parts.map(_.get)
           .reduce(_ unionByName _).orderBy("sel", "dial", "qid")
       },
       Some(s"""${Round6c.exactRecallCte},
@@ -874,35 +859,26 @@ object Round12 {
         // or a duplicated corpus breaks fNu <= nu and inflates the
         // candidate arithmetic (caught by the x10 probe). Identical to
         // the id count on the all-distinct test fixtures.
-        // the fNu/nq statistics and the two measurement counts are four
-        // independent 1-row jobs previously run sequentially — overlap
-        // them (guide §2.6, the q306/q341 shape); artifact builds still
-        // run on the main thread (the serve arguments evaluate before
-        // the Future wraps the count), values identical
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import graft.util.Jobs.ec
-        val fFNu = Future(Round6c.statsArtifact(s, dir,
-          "embeddings.parquet", "stats_fnu_f50")(
-          corpus.join(keep, Seq("cid"), "left_semi")
-            .agg(countDistinct(col("ce")))).getLong(0))
-        val exf = Round11.exactTop5Filtered(s, dir, "f50", qs, corpus, keep)
-          .select("qid", "cid")
-        val fNq = Future(exf.select("qid").distinct().count())
-        def hitsOf(ann: DataFrame): Long =
-          exf.join(ann.select("qid", "cid"), Seq("qid", "cid")).count()
-        // the two measurements ARE q337's/q338's probed-f50 serves —
-        // read from the shared fixture artifacts, never recomputed
-        // (the r11 ivfF50ProbedServe sharing precedent)
-        val sqServe = sq8F50ProbedServe(s, dir, qs, corpus, keep)
-        val pqServe = ivfpqF50ProbedServe(s, dir, qs, corpus, keep,
-          mc = math.max(100L, 3L * n / 20L).toInt)
-        val fMsqH = Future(hitsOf(sqServe))
-        val fMpqH = Future(hitsOf(pqServe))
-        val fNu = Await.result(fFNu, Duration.Inf)
-        val nq = Await.result(fNq, Duration.Inf)
-        val msq = Await.result(fMsqH, Duration.Inf).toDouble / (5.0 * nq)
-        val mpq = Await.result(fMpqH, Duration.Inf).toDouble / (5.0 * nq)
+        // artifact builds run on the main thread, between the part
+        // submissions
+        val (fNu, exf, msq, mpq) = Jobs.scope(s) { j =>
+          val fNu = j.part("q339_fnu")(Round6c.statsArtifact(s, dir,
+            "embeddings.parquet", "stats_fnu_f50")(
+            corpus.join(keep, Seq("cid"), "left_semi")
+              .agg(countDistinct(col("ce")))).getLong(0))
+          val exf = Round11.exactTop5Filtered(s, dir, "f50", qs, corpus, keep)
+            .select("qid", "cid")
+          // the two measurements ARE q337's/q338's probed-f50 serves —
+          // read from the shared fixture artifacts, never recomputed
+          // (the r11 ivfF50ProbedServe sharing precedent); both are
+          // read before either hit count is submitted
+          lazy val serves = (sq8F50ProbedServe(s, dir, qs, corpus, keep),
+            ivfpqF50ProbedServe(s, dir, qs, corpus, keep,
+              mc = math.max(100L, 3L * n / 20L).toInt))
+          val Seq(msq, mpq) = Jobs.recall("q339", exf)(
+            () => serves._1, () => serves._2).rates
+          (fNu.get, exf, msq, mpq)
+        }
         val adv = IndexAdvisor.adviseFilteredServing(nu, fNu, dim = 64,
           targetRecall = 0.8, candidateBudget = nu * 9L / 10L,
           memoryBudgetBytes = F50MemBudget,
@@ -1121,35 +1097,31 @@ object Round12 {
         val keep = emb.filter(
             Slots.Tomb.out)
           .select(col("vec_id").as("cid"))
-        // the scenario statistics are independent count/scalar jobs —
-        // overlap them (guide §2.6; values identical, the fixture-pin
-        // requires still run before any result is consumed)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import graft.util.Jobs.ec
-        val fNSurv = Future(keep.count())
         val curT = zca.join(keep, Seq("cid"), "left_semi")
-        val fMovedT = Future(curT.join(zOld, Seq("cid"))
-          .filter(col("centroid_id") =!= col("old")).count())
-        val fPsiT = Future(cellPsi(zca.select(col("centroid_id").as("cell")),
-          curT.select(col("centroid_id").as("cell")), cells).head())
         // ---- scenario 2: re-embed (fires) ----
         val rvecs = corpus.select(col("cid"), reverse(col("ce")).as("ce"))
         val rqs = qs.select(col("qid"), reverse(col("qe")).as("qe"))
-        val rca = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet", "remb_ca_n16",
-          params = Map("nlist" -> 16L))(
-          Similarity.assignToCentroids(rvecs, "cid", "ce", cents,
-            nKeep = 1).select(col("cid"), col("centroid_id")))
-        val fMovedR = Future(rca.join(zOld, Seq("cid"))
-          .filter(col("centroid_id") =!= col("old")).count())
-        val fPsiR = Future(cellPsi(zca.select(col("centroid_id").as("cell")),
-          rca.select(col("centroid_id").as("cell")), cells).head())
-        val nSurv = Await.result(fNSurv, Duration.Inf)
-        val movedT = Await.result(fMovedT, Duration.Inf)
-        val psiT = Await.result(fPsiT, Duration.Inf)
-        val movedR = Await.result(fMovedR, Duration.Inf)
-        val psiR = Await.result(fPsiR, Duration.Inf)
+        // the scenario statistics run as parts; the fixture-pin
+        // requires still run before any result is consumed
+        val (nSurv, movedT, psiT, movedR, psiR) = Jobs.scope(s) { j =>
+          val nSurv = j.part("q341_nsurv")(keep.count())
+          val movedT = j.part("q341_moved_t")(curT.join(zOld, Seq("cid"))
+            .filter(col("centroid_id") =!= col("old")).count())
+          val psiT = j.part("q341_psi_t")(
+            cellPsi(zca.select(col("centroid_id").as("cell")),
+              curT.select(col("centroid_id").as("cell")), cells).head())
+          val rca = graft.util.FixtureArtifact.parquet(s, dir,
+            "embeddings.parquet", "remb_ca_n16",
+            params = Map("nlist" -> 16L))(
+            Similarity.assignToCentroids(rvecs, "cid", "ce", cents,
+              nKeep = 1).select(col("cid"), col("centroid_id")))
+          val movedR = j.part("q341_moved_r")(rca.join(zOld, Seq("cid"))
+            .filter(col("centroid_id") =!= col("old")).count())
+          val psiR = j.part("q341_psi_r")(
+            cellPsi(zca.select(col("centroid_id").as("cell")),
+              rca.select(col("centroid_id").as("cell")), cells).head())
+          (nSurv.get, movedT.get, psiT.get, movedR.get, psiR.get)
+        }
         // the decision rule: retrain iff 2·moved >= n (exact BIGINT) —
         // requires pin the expected branches so a fixture change fails
         // loudly instead of silently flipping (the q320 convention)

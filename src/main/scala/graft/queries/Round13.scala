@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.operators.{IndexAdvisor, Similarity}
 import graft.sources.Tables
-import graft.util.Slots
+import graft.util.{Jobs, Slots}
 
 /** Round-13 batch: the advisor/maintenance machinery extended to the
   * two families it never reached — the multi-vector (token-level)
@@ -786,7 +786,7 @@ object Round13 {
     //     q312's corpus-size-independent serves; edges/codes/truths
     //     are fixture artifacts.
     "q349_llm_graph_drift_response" -> QueryDef(
-      (s, dir) => {
+      (s, dir) => Jobs.scope(s) { j =>
         import s.implicits._
         graft.plans.NativeExpressions.register(s)
         val emb = t(s, dir, "embeddings")
@@ -806,12 +806,7 @@ object Round13 {
         // it (and the two derived worlds) ONCE per execution (guide
         // §2.4; the round-9 artifact rule, applied to the per-pass live
         // path).
-        def cutDF(df: DataFrame, label: String): DataFrame = {
-          val out = graft.util.Scratch.dir(label)
-          df.write.mode("overwrite").parquet(out)
-          s.read.parquet(out)
-        }
-        val corpus = cutDF(emb
+        val corpus = Jobs.cut(emb
           .select(col("vec_id").as("cid"), col("embedding").as("ce"))
           .groupBy("ce").agg(min("cid").as("cid"))
           .select("cid", "ce"), "q349_corpus")
@@ -832,10 +827,10 @@ object Round13 {
         val nE = e.count()
         def truncOf(c: String) = expr(
           s"transform(sequence(1, 64), i -> IF(i <= 32, element_at($c, i), CAST(0.0 AS FLOAT)))")
-        val iso = cutDF(corpus.select(col("cid"),
+        val iso = Jobs.cut(corpus.select(col("cid"),
           reverse(col("ce")).as("ce")), "q349_wiso")
         val isoQ = qs.select(col("qid"), reverse(col("qe")).as("qe"))
-        val trunc = cutDF(corpus.select(col("cid"),
+        val trunc = Jobs.cut(corpus.select(col("cid"),
           truncOf("ce").as("ce")), "q349_wtrunc")
         val truncQ = qs.select(col("qid"), truncOf("qe").as("qe"))
         // the drift trigger: rounded edge cosines, old vs new — a
@@ -848,19 +843,14 @@ object Round13 {
                 (expr("sqrt(vec_dot(ue, ue))") *
                  expr("sqrt(vec_dot(ve, ve))")), 6).as("cos"))
         // old-edge cosines feed BOTH movedOf counts — cut once
-        val oldC = cutDF(edgeCos(corpus), "q349_oldc")
+        val oldC = Jobs.cut(edgeCos(corpus), "q349_oldc")
         def movedOf(w: DataFrame): Long = oldC
           .join(edgeCos(w).withColumnRenamed("cos", "ncos"), Seq("u", "v"))
           .filter(col("cos") =!= col("ncos")).count()
         // The two churn counts are independent jobs over tiny frames —
-        // submit them concurrently so the second backfills the first's
-        // straggler tail (guide §2.6; identical values, only the
-        // submission order changes)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import graft.util.Jobs.ec
-        val fMovedIso = Future(movedOf(iso))
-        val fMovedTrunc = Future(movedOf(trunc))
+        // parts, so the second backfills the first's straggler tail
+        val fMovedIso = j.part("q349_moved_iso")(movedOf(iso))
+        val fMovedTrunc = j.part("q349_moved_trunc")(movedOf(trunc))
         // per-world serving state (codes/edges/truths = artifacts)
         def cents16(w: DataFrame) = broadcast(w.orderBy("cid").limit(16)
           .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
@@ -868,28 +858,15 @@ object Round13 {
         // DECIDED repaired serve) stay priced every bench pass; the
         // stale/rebuilt CONTRAST measurements are fixture artifacts
         // read warm (the q339 measurement-sharing shape)
-        def serve(wq: DataFrame, w: DataFrame, edges: DataFrame,
-            codes: DataFrame, label: String,
-            asArtifact: Boolean): DataFrame = {
-          def walk: DataFrame = {
-            val entries = Similarity.assignToCentroids(wq, "qid", "qe",
-              cents16(w), nKeep = 2)
-              .select(col("qid"), col("centroid_id").as("cid"))
-            Similarity.beamPqTopKFrom(wq, w, edges, codes, entries, k = 5,
-                beam = Round9.BeamWidth, rounds = Round9.BeamRounds,
-                nSub = 16, nCodes = 16, dim = 64)
-              .select("qid", "cid")
-          }
-          if (asArtifact)
-            graft.util.FixtureArtifact.parquet(s, dir,
-              "embeddings.parquet", s"q349_${label}_rv_b${Round9.BeamWidth}_r${Round9.BeamRounds}",
-              params = Map("beam" -> Round9.BeamWidth.toLong,
-                "rounds" -> Round9.BeamRounds.toLong, "k" -> 5L))(walk)
-          else {
-            val out = graft.util.Scratch.dir(s"q349_$label")
-            walk.write.mode("overwrite").parquet(out)
-            s.read.parquet(out)
-          }
+        def walk(wq: DataFrame, w: DataFrame, edges: DataFrame,
+            codes: DataFrame): DataFrame = {
+          val entries = Similarity.assignToCentroids(wq, "qid", "qe",
+            cents16(w), nKeep = 2)
+            .select(col("qid"), col("centroid_id").as("cid"))
+          Similarity.beamPqTopKFrom(wq, w, edges, codes, entries, k = 5,
+              beam = Round9.BeamWidth, rounds = Round9.BeamRounds,
+              nSub = 16, nCodes = 16, dim = 64)
+            .select("qid", "cid")
         }
         val isoCodes = graft.util.FixtureArtifact.parquet(s, dir,
           "embeddings.parquet", "pqcodes_s16_c16_gwi_reps")(
@@ -926,46 +903,38 @@ object Round13 {
           Similarity.nnDescentEdges(stitched, trunc, d = Round9.NnDegree,
             rounds = Round9.NnRounds)
         }
-        // the two LIVE walks are independent multi-job loops — run them
-        // concurrently with each other AND with the churn counts (guide
-        // §2.6): each walk's round tail leaves most cores idle, the
+        // the two LIVE walks are independent multi-job loops — parts
+        // running concurrently with each other AND with the churn
+        // counts: each walk's round tail leaves most cores idle, the
         // other jobs backfill. (Same-window A/B: pins-before-submit
         // serialized the walks behind the churn scans, +0.8 s.)
-        val fKept = Future(serve(isoQ, iso, e, isoCodes, "kept",
-          asArtifact = false))
-        val fRep = Future(serve(truncQ, trunc, repairedE, truncCodes, "rep",
-          asArtifact = false))
-        val movedIso = Await.result(fMovedIso, Duration.Inf)
-        val movedTrunc = Await.result(fMovedTrunc, Duration.Inf)
+        val fKept = j.cut("q349_kept")(walk(isoQ, iso, e, isoCodes))
+        val fRep = j.cut("q349_rep")(walk(truncQ, trunc, repairedE,
+          truncCodes))
+        val movedIso = fMovedIso.get
+        val movedTrunc = fMovedTrunc.get
         // pin the scenario branches (the q320/q341 convention: a
-        // regenerated fixture that flips a branch fails LOUDLY). The
-        // in-flight walks are drained before any throw, so it leaves no
-        // background jobs writing scratch into the harness's next query.
-        val pinned = scala.util.Try {
-          require(2L * movedIso < nE,
-            s"the isometric scenario must stay below the churn threshold " +
-              s"($movedIso of $nE edges moved)")
-          require(2L * movedTrunc >= nE,
-            s"the non-isometric scenario must fire the churn threshold " +
-              s"($movedTrunc of $nE edges moved)")
-        }
-        val walks = scala.util.Try(graft.util.Jobs.awaitAll(Seq(fKept, fRep)))
-        pinned.get
-        val Seq(kept, repaired) = walks.get
-        val stale = serve(truncQ, trunc, e, truncCodes, "stale",
-          asArtifact = true)
-        val rebuilt = serve(truncQ, trunc, rebuiltE, truncCodes, "reb",
-          asArtifact = true)
+        // regenerated fixture that flips a branch fails LOUDLY)
+        require(2L * movedIso < nE,
+          s"the isometric scenario must stay below the churn threshold " +
+            s"($movedIso of $nE edges moved)")
+        require(2L * movedTrunc >= nE,
+          s"the non-isometric scenario must fire the churn threshold " +
+            s"($movedTrunc of $nE edges moved)")
+        val kept = fKept.get
+        val repaired = fRep.get
+        def warmWalk(edges: DataFrame, label: String): DataFrame =
+          graft.util.FixtureArtifact.parquet(s, dir,
+            "embeddings.parquet", s"q349_${label}_rv_b${Round9.BeamWidth}_r${Round9.BeamRounds}",
+            params = Map("beam" -> Round9.BeamWidth.toLong,
+              "rounds" -> Round9.BeamRounds.toLong, "k" -> 5L))(
+            walk(truncQ, trunc, edges, truncCodes))
+        val stale = warmWalk(e, "stale")
+        val rebuilt = warmWalk(rebuiltE, "reb")
         // the repair-vs-rebuild decision from measured hits (1-row
-        // scalars over the materialized serves — plan-choice class;
-        // three independent count jobs, submitted concurrently)
-        val (nq, rpHits, rbHits) = {
-          val a = Future(exTrunc.select("qid").distinct().count())
-          val b = Future(exTrunc.join(repaired, Seq("qid", "cid")).count())
-          val c = Future(exTrunc.join(rebuilt, Seq("qid", "cid")).count())
-          (Await.result(a, Duration.Inf), Await.result(b, Duration.Inf),
-            Await.result(c, Duration.Inf))
-        }
+        // scalars over the materialized serves — plan-choice class)
+        val Jobs.Recall(nq, Seq(rpHits, rbHits)) =
+          Jobs.recall("q349", exTrunc)(() => repaired, () => rebuilt)
         val decision = IndexAdvisor.adviseGraphDrift(movedTrunc, nE,
           rpHits, rbHits, nq)
         val stats = Seq(

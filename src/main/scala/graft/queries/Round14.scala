@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.operators.IndexAdvisor
 import graft.sources.Tables
-import graft.util.Slots
+import graft.util.{Jobs, Slots}
 
 /** Round-14 batch: the monitoring→maintenance doctrine closed on the
   * PIPELINE itself and on the arms the machinery still skipped — the
@@ -203,7 +203,6 @@ object Round14 {
   private def cycleMixPackAll(s: SparkSession, src: DataFrame,
       bend: Long, label: String):
       (Seq[(Int, Long, Long, Long)], Long, DataFrame, DataFrame) = {
-    import graft.util.Scratch
     // the cycle column must be LongType (the ctot collect reads
     // getLong) and within {0,1,2} (offBase folds over exactly those,
     // with a null default) — normalize and fail loudly on a new
@@ -214,14 +213,12 @@ object Round14 {
     val buds = withC.groupBy("c")
       .agg(sum("tok").as("tt"), countDistinct("lang").as("dd"))
       .select(col("c"), expr("tt div (2 * dd)").as("bud"))
-    val mixDir = Scratch.dir(s"${label}_mixed")
-    graft.operators.Ranks.runningSumsBinned(withC, "cl", "hsh",
-        Seq("hsh", "doc_id"), Seq("tok"), bins = 32, hotThreshold = 1L)
+    val mixed = Jobs.cut(graft.operators.Ranks.runningSumsBinned(withC,
+        "cl", "hsh", Seq("hsh", "doc_id"), Seq("tok"), bins = 32,
+        hotThreshold = 1L)
       .join(broadcast(buds), Seq("c"))
       .filter(col("run_tok") - col("tok") < col("bud"))
-      .select("c", "doc_id", "lang", "tok", "hsh")
-      .write.mode("overwrite").parquet(mixDir)
-    val mixed = s.read.parquet(mixDir)
+      .select("c", "doc_id", "lang", "tok", "hsh"), s"${label}_mixed")
     val ctot = mixed.groupBy("c").agg(sum("tok").as("t"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     require(ctot.keySet.subsetOf(Set(0L, 1L, 2L)),
@@ -401,7 +398,7 @@ object Round14 {
     // here). Models/thetas are fixture artifacts; live per-pass work
     // is two slice-feature scans + four slice scorings.
     "q352_llm_pipeline_drift_refresh" -> QueryDef(
-      (s, dir) => {
+      (s, dir) => Jobs.scope(s) { j =>
         val docs = t(s, dir, "documents")
           .select(col("doc_id"), col("lang"), col("text"))
         val base = docs.filter(expr(
@@ -420,13 +417,9 @@ object Round14 {
         // and every scoring below would otherwise each re-run the
         // slice tokenize + bigram window (6 executions per pass —
         // guide §2.4); the feature frame is (doc_id, lang, f) rows.
-        def featsCut(arr: DataFrame, label: String): DataFrame = {
-          val out = graft.util.Scratch.dir(s"q352_feats_$label")
-          Round13.pipeFeats(arr).write.mode("overwrite").parquet(out)
-          s.read.parquet(out)
-        }
-        val featsSame = featsCut(arrSame, "same")
-        val featsShift = featsCut(arrShift, "shift")
+        val featsSame = Jobs.cut(Round13.pipeFeats(arrSame), "q352_feats_same")
+        val featsShift =
+          Jobs.cut(Round13.pipeFeats(arrShift), "q352_feats_shift")
         // the trigger: arriving feature instances unseen by the frozen
         // weight table (exact BIGINT, one slice scan per world)
         def churnOf(feats: DataFrame): (Long, Long) = {
@@ -437,14 +430,10 @@ object Round14 {
               count(lit(1))).head()
           (r.getLong(0), r.getLong(1))
         }
-        // independent count jobs — overlap (guide §2.6)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import graft.util.Jobs.ec
-        val fChS = Future(churnOf(featsSame))
-        val fChH = Future(churnOf(featsShift))
-        val (unS, totS) = Await.result(fChS, Duration.Inf)
-        val (unH, totH) = Await.result(fChH, Duration.Inf)
+        val fChS = j.part("q352_churn_same")(churnOf(featsSame))
+        val fChH = j.part("q352_churn_shift")(churnOf(featsShift))
+        val (unS, totS) = fChS.get
+        val (unH, totH) = fChH.get
         // pin the scenario branches (q320/q341 convention)
         require(2L * unS < totS,
           s"the same-distribution slice must stay below the churn " +
@@ -453,12 +442,12 @@ object Round14 {
           s"the drifted slice must fire the churn threshold " +
             s"($unH of $totH instances unseen)")
         // selection counts per (world, model)
-        def nSel(feats: DataFrame, w: DataFrame, k: Long,
-            th: Long): Future[Long] = Future(
+        def nSel(label: String, feats: DataFrame, w: DataFrame, k: Long,
+            th: Long): Jobs.Part[Long] = j.part(s"q352_sel_$label")(
           Round13.dsirScore(feats, w, k)
             .filter(col("w_fx") > lit(th)).count())
-        val fSameStale = nSel(featsSame, wt, kk, theta)
-        val fShiftStale = nSel(featsShift, wt, kk, theta)
+        val fSameStale = nSel("same_stale", featsSame, wt, kk, theta)
+        val fShiftStale = nSel("shift_stale", featsShift, wt, kk, theta)
         // refreshed model: retrained on base(original) + arrived(shift)
         // — the cheap warm option (the pipeline has observed exactly
         // this data); theta re-derived by the same top-quarter rule
@@ -484,12 +473,12 @@ object Round14 {
           trainArt("ref", base.unionByName(arrShift))
         val (fWt, fKk, fTheta) =
           trainArt("full", shifted(base).unionByName(arrShift))
-        val fShiftRef = nSel(featsShift, rWt, rKk, rTheta)
-        val fShiftFull = nSel(featsShift, fWt, fKk, fTheta)
-        val nSameStale = Await.result(fSameStale, Duration.Inf)
-        val nShiftStale = Await.result(fShiftStale, Duration.Inf)
-        val nShiftRef = Await.result(fShiftRef, Duration.Inf)
-        val nShiftFull = Await.result(fShiftFull, Duration.Inf)
+        val fShiftRef = nSel("shift_ref", featsShift, rWt, rKk, rTheta)
+        val fShiftFull = nSel("shift_full", featsShift, fWt, fKk, fTheta)
+        val nSameStale = fSameStale.get
+        val nShiftStale = fShiftStale.get
+        val nShiftRef = fShiftRef.get
+        val nShiftFull = fShiftFull.get
         // rate deviations from the top-quarter design rate, in exact
         // 4·count units (dev/nArr = 4·|rate − 0.25|)
         def dev(n: Long): Long = math.abs(4L * n - nArr)
@@ -629,7 +618,6 @@ object Round14 {
     // appended tail; base state is the q350 artifact set, byte-shared.
     "q354_llm_pack_waste_compaction" -> QueryDef(
       (s, dir) => {
-        import graft.util.Scratch
         val (wt, kkA, selB, packBase) = Round13.pipeBaseState(s, dir)
         val kk = kkA.head().getLong(0)
         val theta = selB.agg(min("w_fx")).head().getLong(0)
@@ -646,11 +634,8 @@ object Round14 {
         // passes over the arriving docs per execution — guide §2.4,
         // "remove shuffles outright"; the frame is a few hundred
         // 4-column rows, the lineage hard-cut costs nothing).
-        val tdDir = Scratch.dir("q354_td")
-        Round13.pipeTokHsh(arr)
-          .join(selArr, Seq("doc_id"), "left_semi")
-          .write.mode("overwrite").parquet(tdDir)
-        val tdAll = s.read.parquet(tdDir)
+        val tdAll = Jobs.cut(Round13.pipeTokHsh(arr)
+          .join(selArr, Seq("doc_id"), "left_semi"), "q354_td")
         require(tdAll.limit(1).count() > 0,
           "no streamed doc beat the frozen threshold — the appended " +
             "slice is empty on this fixture (q320 convention)")
@@ -747,7 +732,6 @@ object Round14 {
     // churn scan per batch.
     "q357_stream_pipeline_maintained" -> QueryDef(
       (s, dir) => {
-        import graft.util.Scratch
         val (wt, kkA, selB, packBase) = Round13.pipeBaseState(s, dir)
         val kk = kkA.head().getLong(0)
         val theta = selB.agg(min("w_fx")).head().getLong(0)
@@ -1023,9 +1007,7 @@ object Round14 {
           .groupBy("qid", "cid").agg(foldScore.as("score"))
           .withColumn("rl", row_number().over(wr))
           .filter(col("rl") <= 20).select("qid", "cid", "rl")
-        val out = graft.util.Scratch.dir("q355_srv")
-        srv0.write.mode("overwrite").parquet(out)
-        val srv = s.read.parquet(out)
+        val srv = Jobs.cut(srv0, "q355_srv")
         def fuse(l: DataFrame): DataFrame = {
           val l20 = l.filter(col("rl") <= 20)
           val v20 = vx.filter(col("rv") <= 20)
@@ -1169,18 +1151,15 @@ object Round14 {
         // admissibility): distinct token vectors, distinct POOLED
         // vectors (duplicate docs pool identically), and tokens/doc
         // from the id-level ratio (4 at every replication factor)
-        // independent statistic/measurement jobs — overlap (guide §2.6)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import graft.util.Jobs.ec
-        val fNTok = Future(Round6c.statsArtifact(s, dir,
-          "embeddings.parquet", "stats_ntok_mv")(
-          tok.agg(countDistinct(col("e")))).getLong(0))
-        val fCnt = Future(Round6c.statsArtifact(s, dir,
-          "embeddings.parquet", "stats_ct_docs_mv")(
-          tok.agg(count(lit(1)), countDistinct(col("doc")))))
-        val nTok = Await.result(fNTok, Duration.Inf)
-        val cnt = Await.result(fCnt, Duration.Inf)
+        val (nTok, cnt) = Jobs.scope(s) { j =>
+          val nTok = j.part("q356_ntok")(Round6c.statsArtifact(s, dir,
+            "embeddings.parquet", "stats_ntok_mv")(
+            tok.agg(countDistinct(col("e")))).getLong(0))
+          val cnt = j.part("q356_cnt")(Round6c.statsArtifact(s, dir,
+            "embeddings.parquet", "stats_ct_docs_mv")(
+            tok.agg(count(lit(1)), countDistinct(col("doc")))))
+          (nTok.get, cnt.get)
+        }
         val tpd = cnt.getLong(0) / cnt.getLong(1)
         val pv = FixtureArtifact.parquet(s, dir, "embeddings.parquet",
           "mv_pooled_int64")(
@@ -1242,23 +1221,18 @@ object Round14 {
         val pooledArt = FixtureArtifact.parquet(s, dir,
           "embeddings.parquet", s"mvpooled_top5_m$mPool",
           params = Map("m" -> mPool, "k" -> 5L))(pooledServe())
-        val fNq = Future(exr.select("qd").distinct().count())
-        def hitsOf(ann: DataFrame): Future[Long] =
-          Future(exr.join(ann.select("qd", "cd"), Seq("qd", "cd")).count())
-        val (fHT, fHP) = (hitsOf(tokenArt), hitsOf(pooledArt))
-        val nq = Await.result(fNq, Duration.Inf)
-        def recOf(f: Future[Long]): Double =
-          Await.result(f, Duration.Inf).toDouble / (5.0 * nq)
+        val Seq(recT, recP) = Jobs.recall("q356", exr, Seq("qd", "cd"))(
+          () => tokenArt, () => pooledArt).rates
         val candT = tpd * np * (nTok / nlist) + tpd * tpd * 10L
         val candP = nDocU + tpd * tpd * mPool
         val adv = IndexAdvisor.adviseMaxsimServing(Seq(
             IndexAdvisor.RecallRow("mv-token",
               Map("bytes" -> 76L * nTok, "cand" -> candT,
                 "nlist" -> nlist, "np" -> np, "m" -> 10L),
-              recOf(fHT)),
+              recT),
             IndexAdvisor.RecallRow("mv-pooled",
               Map("bytes" -> 72L * nDocU, "cand" -> candP, "m" -> mPool),
-              recOf(fHP))),
+              recP)),
           targetRecall = 0.8, candidateBudget = 2L * nTok,
           memoryBudgetBytes = MvMemBudget)
         // the decided family serves LIVE (the q351 contract: measured
@@ -1394,7 +1368,7 @@ object Round14 {
     // contrast serves, assignments, codes, truths, Lloyd layout are
     // fixture artifacts.
     "q353_llm_maxsim_drift_response" -> QueryDef(
-      (s, dir) => {
+      (s, dir) => Jobs.scope(s) { j =>
         graft.plans.NativeExpressions.register(s)
         import graft.operators.Similarity
         import graft.util.FixtureArtifact
@@ -1421,15 +1395,11 @@ object Round14 {
         def movedOf(caW: DataFrame): Long =
           ca.withColumnRenamed("centroid_id", "c0").join(caW, Seq("tid"))
             .filter(col("c0") =!= col("centroid_id")).count()
-        // the two churn counts, the two LIVE serves and the decision
-        // counts below are independent jobs — overlap them (guide
-        // §2.6); the scenario requires are still checked before any
-        // result is consumed
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import graft.util.Jobs.ec
-        val fMovedIso = Future(movedOf(caI))
-        val fMovedTr = Future(movedOf(caT))
+        // the two churn counts and the two LIVE serves are parts; the
+        // scenario requires are still checked before any result is
+        // consumed
+        val fMovedIso = j.part("q353_moved_iso")(movedOf(caI))
+        val fMovedTr = j.part("q353_moved_trunc")(movedOf(caT))
         def codesArt(w: DataFrame, label: String) =
           FixtureArtifact.parquet(s, dir, "embeddings.parquet",
             s"mvdrift_sq8_$label")(
@@ -1462,50 +1432,34 @@ object Round14 {
         val exTr = exactArt(tokt, "gwt")
         // serves: cells × world; live = the iso kept serve and the
         // decided trunc serve (stale cells, advised np); the rest warm
-        def serve(w: DataFrame, caX: DataFrame, codesX: DataFrame,
-            csX: DataFrame, npd: Int, label: String,
-            asArtifact: Boolean): DataFrame = {
-          def run: DataFrame = Similarity.maxsimPlaidTopK(qtokOf(w),
-            ctokOf(w), caX, codesX, csX, np = npd, m = 10, k = 5)
-          if (asArtifact)
-            FixtureArtifact.parquet(s, dir, "embeddings.parquet",
-              s"mvdrift_${label}_np$npd",
-              params = Map("np" -> npd.toLong, "m" -> 10L, "k" -> 5L))(run)
-          else {
-            val out = graft.util.Scratch.dir(s"q353_$label")
-            run.write.mode("overwrite").parquet(out)
-            s.read.parquet(out)
-          }
-        }
-        val fKept = Future(serve(toki, ca, codesI, centsI, np.toInt,
-          "kept", asArtifact = false))
-        val fStale = Future(serve(tokt, ca, codesT, centsT, np.toInt,
-          "stale", asArtifact = false))
-        val movedIso = Await.result(fMovedIso, Duration.Inf)
-        val movedTr = Await.result(fMovedTr, Duration.Inf)
-        // scenario pins; the in-flight serves are drained before any
-        // throw, so it leaves no background jobs running (submission
-        // stays before the pins for the measured §2.6 overlap, the
+        def run(w: DataFrame, caX: DataFrame, codesX: DataFrame,
+            csX: DataFrame, npd: Int): DataFrame =
+          Similarity.maxsimPlaidTopK(qtokOf(w), ctokOf(w), caX, codesX,
+            csX, np = npd, m = 10, k = 5)
+        def warmServe(w: DataFrame, caX: DataFrame, codesX: DataFrame,
+            csX: DataFrame, npd: Int, label: String): DataFrame =
+          FixtureArtifact.parquet(s, dir, "embeddings.parquet",
+            s"mvdrift_${label}_np$npd",
+            params = Map("np" -> npd.toLong, "m" -> 10L, "k" -> 5L))(
+            run(w, caX, codesX, csX, npd))
+        // submitted before the pins for the measured overlap (the
         // A/B'd variant)
-        val pinned = scala.util.Try {
-          require(2L * movedIso < nTok,
-            s"the isometric world must stay below the assignment-churn " +
-              s"threshold ($movedIso of $nTok tokens moved)")
-          require(2L * movedTr >= nTok,
-            s"the non-isometric world must fire the assignment-churn " +
-              s"threshold ($movedTr of $nTok tokens moved)")
-        }
-        if (pinned.isFailure)
-          scala.util.Try(graft.util.Jobs.awaitAll(Seq(fKept, fStale)))
-        pinned.get
-        val keptNp1 = serve(toki, ca, codesI, centsI, 1, "kept",
-          asArtifact = true)
-        val staleNp1 = serve(tokt, ca, codesT, centsT, 1, "stale",
-          asArtifact = true)
-        val rebuilt = serve(tokt, caT, codesT, centsT, np.toInt, "reb",
-          asArtifact = true)
-        val rebuiltNp1 = serve(tokt, caT, codesT, centsT, 1, "reb",
-          asArtifact = true)
+        val fKept = j.cut("q353_kept")(run(toki, ca, codesI, centsI,
+          np.toInt))
+        val fStale = j.cut("q353_stale")(run(tokt, ca, codesT, centsT,
+          np.toInt))
+        val movedIso = fMovedIso.get
+        val movedTr = fMovedTr.get
+        require(2L * movedIso < nTok,
+          s"the isometric world must stay below the assignment-churn " +
+            s"threshold ($movedIso of $nTok tokens moved)")
+        require(2L * movedTr >= nTok,
+          s"the non-isometric world must fire the assignment-churn " +
+            s"threshold ($movedTr of $nTok tokens moved)")
+        val keptNp1 = warmServe(toki, ca, codesI, centsI, 1, "kept")
+        val staleNp1 = warmServe(tokt, ca, codesT, centsT, 1, "stale")
+        val rebuilt = warmServe(tokt, caT, codesT, centsT, np.toInt, "reb")
+        val rebuiltNp1 = warmServe(tokt, caT, codesT, centsT, 1, "reb")
         // recentered: one warm Lloyd round (the q341 kernel) over the
         // new-world token coords, seeded from the standing centroid
         // tokens' new coords; serves from the recentered assignments
@@ -1550,18 +1504,13 @@ object Round14 {
           }
         val rec = recServe(np.toInt)
         val recNp1 = recServe(1)
-        val Seq(kept, stale) = graft.util.Jobs.awaitAll(Seq(fKept, fStale))
+        val kept = fKept.get
+        val stale = fStale.get
         // the decision at both rungs from measured hits (1-row scalars
-        // over materialized serves — plan-choice class; independent
-        // count jobs, submitted concurrently)
-        val fNq = Future(exTr.select("qd").distinct().count())
-        def hits(ann: DataFrame): Future[Long] =
-          Future(exTr.join(ann, Seq("qd", "cd")).count())
-        val Seq(stH, rcH, rbH, stH1, rcH1, rbH1) =
-          Seq(hits(stale), hits(rec), hits(rebuilt), hits(staleNp1),
-            hits(recNp1), hits(rebuiltNp1))
-            .map(Await.result(_, Duration.Inf))
-        val nq = Await.result(fNq, Duration.Inf)
+        // over materialized serves — plan-choice class)
+        val Jobs.Recall(nq, Seq(stH, rcH, rbH, stH1, rcH1, rbH1)) =
+          Jobs.recall("q353", exTr, Seq("qd", "cd"))(() => stale, () => rec,
+            () => rebuilt, () => staleNp1, () => recNp1, () => rebuiltNp1)
         def code(d: String): Long = d match {
           case "keep" => 0L; case "recenter" => 1L; case _ => 2L }
         val decAdv = IndexAdvisor.adviseTokenDrift(movedTr, nTok,

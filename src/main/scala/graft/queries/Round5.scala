@@ -1947,11 +1947,8 @@ object Round5 {
         // plan was 425 kB / 392 Exchanges of duplicated subtrees, paid
         // in planning time alone (guide §3.3: materialise to truncate
         // a huge plan).
-        val devDir = graft.util.Scratch.dir("q249_dev")
-        e.join(broadcast(m1), Seq("event_type"))
-          .withColumn("adev", abs(col("value") - col("med")))
-          .write.mode("overwrite").parquet(devDir)
-        val dev = s.read.parquet(devDir)
+        val dev = graft.util.Jobs.cut(e.join(broadcast(m1), Seq("event_type"))
+          .withColumn("adev", abs(col("value") - col("med"))), "q249_dev")
         val m2 = med(dev, "adev", "mad")
         dev.join(broadcast(m2), Seq("event_type"))
           .groupBy("event_type")

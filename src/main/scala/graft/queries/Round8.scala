@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.operators.{IndexAdvisor, Similarity}
 import graft.sources.Tables
-import graft.util.Slots
+import graft.util.{Jobs, Slots}
 
 /** Round-8 batch: making the round-7 documentation-only claims
   * executable. The headline is q294 — the first scored query whose ANN
@@ -394,11 +394,10 @@ object Round8 {
         // warm-up + two timed passes held 3 copies, and sweeps grew
         // unboundedly). The returned frame reads flat scratch parquet,
         // so the drop cannot invalidate it.
-        val out = graft.util.Scratch.dir("q296_diff")
-        diff.write.mode("overwrite").parquet(out)
-        s.sql(s"DROP TABLE IF EXISTS $tbl")
-        s.catalog.dropTempView(seed)
-        s.read.parquet(out).orderBy("doc_id")
+        Jobs.cut(diff, "q296_diff", {
+          s.sql(s"DROP TABLE IF EXISTS $tbl")
+          s.catalog.dropTempView(seed)
+        }).orderBy("doc_id")
       },
       Some("""SELECT doc_id,
         CASE WHEN doc_id % 10 = 3 THEN 'removed'

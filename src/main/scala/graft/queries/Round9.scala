@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.operators.{IndexAdvisor, Similarity}
 import graft.sources.Tables
-import graft.util.Slots
+import graft.util.{Jobs, Slots}
 
 /** Round-9 batch: completing the graph-ANN ladder. q301→q302→q303
   * measured entries, then connectivity, one variable at a time and
@@ -418,23 +418,11 @@ object Round9 {
         // same set-membership metric the harness scores the result by
         // (the shared fixture-keyed exact artifact — one build per run)
         val exact = Round6c.exactTop5(s, dir).select(col("qid"), col("cid"))
-        // the three calibration statistics are independent count jobs —
-        // overlap them (guide §2.6; values identical)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import graft.util.Jobs.ec
-        val fNq = Future(exact.select("qid").distinct().count())
-        def hitsOf(ann: org.apache.spark.sql.DataFrame): Future[Long] =
-          Future(exact
-            .join(ann.select(col("qid"), col("cid")), Seq("qid", "cid"))
-            .count())
-        val fHi = hitsOf(Similarity.ivfTopKProbe(qs, corpus, k = 5,
-          nlist = 16, nprobe = 8))
-        val fHl = hitsOf(Similarity.lshMultiTableTopK(qs, corpus, k = 5,
-          nPlanes = 4, dim = 64, nTables = 8))
-        val nq = Await.result(fNq, Duration.Inf)
-        val mi = Await.result(fHi, Duration.Inf).toDouble / (5.0 * nq)
-        val ml = Await.result(fHl, Duration.Inf).toDouble / (5.0 * nq)
+        val Seq(mi, ml) = Jobs.recall("q306", exact)(
+          () => Similarity.ivfTopKProbe(qs, corpus, k = 5,
+            nlist = 16, nprobe = 8),
+          () => Similarity.lshMultiTableTopK(qs, corpus, k = 5,
+            nPlanes = 4, dim = 64, nTables = 8)).rates
         val adv = IndexAdvisor.adviseCalibrated(n, dim = 64, dupRate,
           targetRecall = CalTarget, candidateBudget = calBudget(nu),
           measured = Seq(

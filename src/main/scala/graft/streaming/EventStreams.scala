@@ -19,13 +19,6 @@ object EventStreams {
       .groupBy(window(col("ts"), window_).as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"))
 
-  /** Sliding counts. */
-  def slidingCounts(events: DataFrame, window_ : String = "1 hour",
-      slide: String = "15 minutes", watermark: String = "1 hour"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), window_, slide).as("w"))
-      .agg(count(lit(1)).as("n"))
-
   /** Session counts per user (gap-based). */
   def sessionCounts(events: DataFrame, gap: String = "30 minutes",
       watermark: String = "1 hour"): DataFrame =

@@ -40,12 +40,10 @@ object Det {
   /** Oracle SQL fragment mirroring [[davg]]. */
   def davgSql(e: String): String = s"${dsumSql(e)}/COUNT($e)"
 
-  /** Whole-second epoch. The only oracle-safe projection of `events.ts`:
+  /** Whole-second epoch in oracle SQL, the twin of Spark's
+    * `unix_timestamp`. The only oracle-safe projection of `events.ts`:
     * parquet stores ns, Spark truncates to µs, DuckDB keeps ns
     * (SURVEY.md §1.2) — both floor identically to whole seconds.
     */
-  def epochSec(c: Column): Column = unix_timestamp(c)
-
-  /** Oracle SQL fragment mirroring [[epochSec]]. */
   def epochSecSql(e: String): String = s"CAST(floor(epoch($e)) AS BIGINT)"
 }

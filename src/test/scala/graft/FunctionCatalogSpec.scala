@@ -67,20 +67,24 @@ class FunctionCatalogSpec extends SparkTestBase {
     }
   }
 
-  test("src/main: one home for the slot multiplier, mains only in Verify, Bench, Probe") {
+  /** Every `src/main` Scala source with its text. */
+  private lazy val sources: Seq[(java.io.File, String)] = {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"run from the repository root (cwd ${new java.io.File(".").getAbsolutePath})")
     def files(d: java.io.File): Seq[java.io.File] =
       d.listFiles.toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
-    val sources = files(root).filter(_.getName.endsWith(".scala"))
-    assert(sources.size > 50)
-    val multiplierHomes = sources.filter(f =>
-      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        .contains("2654435761")).map(_.getName)
+    val found = files(root).filter(_.getName.endsWith(".scala")).map(f =>
+      f -> new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+    assert(found.size > 50)
+    found
+  }
+
+  test("src/main: one home for the slot multiplier, mains only in Verify, Bench, Probe") {
+    val multiplierHomes = sources.collect {
+      case (f, text) if text.contains("2654435761") => f.getName }
     assert(multiplierHomes == Seq("Slots.scala"),
       s"the slot multiplier must appear only in Slots.scala: $multiplierHomes")
-    val mainObjects = sources.flatMap { f =>
-      val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    val mainObjects = sources.flatMap { case (f, text) =>
       """def\s+main\s*\(""".r.findAllMatchIn(text).map { m =>
         """object\s+(\w+)""".r.findAllMatchIn(text.substring(0, m.start))
           .map(_.group(1)).toSeq.lastOption.getOrElse(f.getName)
@@ -88,6 +92,16 @@ class FunctionCatalogSpec extends SparkTestBase {
     }.toSet
     assert(mainObjects == Set("Verify", "Bench", "Probe"),
       s"entry points other than Verify, Bench and Probe: $mainObjects")
+  }
+
+  test("src/main: Future and Await only in Jobs.scala") {
+    val overlapHomes = sources.collect {
+      case (f, text) if Seq("Await.", "Future(", "Future {", "Jobs.ec")
+          .exists(text.contains) =>
+        f.getPath.replace(java.io.File.separatorChar, '/')
+    }
+    assert(overlapHomes == Seq("src/main/scala/graft/util/Jobs.scala"),
+      s"overlap goes through Jobs.scope, cuts through Jobs.cut: $overlapHomes")
   }
 
   test("catalog aggregate function is exact and partitioning-independent") {
