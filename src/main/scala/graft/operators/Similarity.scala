@@ -29,6 +29,12 @@ import graft.util.Jobs
   */
 object Similarity {
 
+  /** Per-query top-k of a scored (qid, cid, cos) frame by (cos DESC,
+    * cid), numbered `rnk` — the rank every ANN serve and the recall
+    * harness share. */
+  private def topKByCos(scored: DataFrame, k: Int): DataFrame =
+    TopK.perGroup(scored, Seq("qid"), Seq(col("cos").desc, col("cid")), k)
+
   /** Exact cosine top-k of `corpus` rows for each row of `queries`.
     * Scores are rounded to 6 digits *before* ranking so ordering is
     * reproducible across engines and partitionings; ties break on id.
@@ -46,9 +52,7 @@ object Similarity {
       .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
         round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn")), 6).as("cos"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
+    topKByCos(scored, k)
   }
 
   /** Embedding-cosine near-dup pairs within a blocking column (e.g. a
@@ -171,9 +175,7 @@ object Similarity {
       .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
         round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn")), 6).as("cos"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
+    topKByCos(scored, k)
   }
 
   /** IVF with multi-probe (`nprobe` > 1): identical index to [[ivfTopK]]
@@ -254,9 +256,7 @@ object Similarity {
       .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
         round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn")), 6).as("cos"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
+    topKByCos(scored, k)
   }
 
   /** ATTRIBUTE-FILTERED IVF serving (q318/q320) — the most common
@@ -330,9 +330,7 @@ object Similarity {
       .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
         round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn")), 6).as("cos"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
+    topKByCos(scored, k)
   }
 
   /** IVF with a Lloyd-REFINED coarse quantizer: seed centroids from the
@@ -393,9 +391,7 @@ object Similarity {
       .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
         round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn")), 6).as("cos"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
+    topKByCos(scored, k)
   }
 
   /** Multi-table LSH top-k (the classic L-table OR-construction): build
@@ -432,9 +428,7 @@ object Similarity {
     val scored = cand.join(broadcast(q), "qid").join(c, "cid")
       .select(col("qid"), col("cid"),
         round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn")), 6).as("cos"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
+    topKByCos(scored, k)
   }
 
   /** Deterministic pseudo-random hyperplanes (linear-congruential doubles
@@ -471,9 +465,7 @@ object Similarity {
       .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
         round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn")), 6).as("cos"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
+    topKByCos(scored, k)
   }
 
   /** Multi-probe LSH top-k (Lv et al.): each query probes its own
@@ -507,9 +499,7 @@ object Similarity {
       .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
         round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn")), 6).as("cos"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
+    topKByCos(scored, k)
   }
 
   /** Bounded-degree neighbor graph for graph-based ANN: every corpus
@@ -767,7 +757,7 @@ object Similarity {
     * sub-slices of the first `nCodes` corpus vectors, one row per
     * (coordinate, code) — the family's deterministic seeding
     * convention. Shared by [[pqTopK]]'s encode/LUT and
-    * [[beamPqTopKFrom]]'s LUT. */
+    * [[beamPqVisited]]'s LUT. */
   private def pqCodebook(corpus: DataFrame, nCodes: Int): DataFrame =
     broadcast(pqCodebookDF(corpus, nCodes))
 
@@ -791,7 +781,7 @@ object Similarity {
 
   /** Per-member PQ codes (cid, s, code) — the RESIDENT compressed
     * representation shared by the scan-all server ([[pqTopK]]) and the
-    * DiskANN-shaped graph server ([[beamPqTopKFrom]]): per-subspace
+    * DiskANN-shaped graph server ([[beamPqVisited]]): per-subspace
     * nearest code on exact int64 quantized L2 (ties on code id),
     * encoded at REP level (one row per distinct vector — a pure
     * function of the vector, replication-invariant) and expanded
@@ -1164,9 +1154,7 @@ object Similarity {
     * corpus scan (corpus never shuffles), plus a window whose groups
     * are capped at beam·(d+1) rows (bounded-GROUP-SIZE, so the
     * bounded-cardinality-partition trap does not apply). Round
-    * boundaries are cut to scratch parquet — each frontier feeds two
-    * lineage paths (edge expansion + union), and the cut keeps the
-    * cache lifecycle call-local (no persists survive the call).
+    * boundaries are cut to scratch parquet (see [[walkRounds]]).
     */
   def beamTopK(
       queries: DataFrame, // qid, qe
@@ -1187,8 +1175,11 @@ object Similarity {
     * the navigability lever the q301 measurement demanded: a beam can
     * only hill-climb from somewhere near the query, so production
     * graph-ANN seeds entries from a coarse structure (HNSW's upper
-    * layers; here the IVF centroid set, q302). Entry count per query
-    * must be bounded (it adds to the first round's candidate set).
+    * layers; here the IVF centroid set, q302 — see [[centroidEntries]]).
+    * Entry count per query must be bounded (it adds to the first
+    * round's candidate set). The answer is the top-k of the last
+    * round's scored set, which equals the top-k of the final frontier
+    * only when k ≤ beam — so k > beam is refused.
     */
   def beamTopKFrom(
       queries: DataFrame, // qid, qe
@@ -1198,36 +1189,60 @@ object Similarity {
       k: Int,
       beam: Int,
       rounds: Int): DataFrame = {
-    val spark = queries.sparkSession
-    NativeExpressions.register(spark)
+    require(k <= beam, s"k $k must not exceed beam $beam: the answer is " +
+      "the top-k of the final frontier")
+    NativeExpressions.register(queries.sparkSession)
     val q = queries.withColumn("qn", expr("sqrt(vec_dot(qe, qe))"))
     val c = corpus.withColumn("cn", expr("sqrt(vec_dot(ce, ce))"))
-    // each round boundary is CUT to scratch parquet (bounded |Q|·beam
-    // rows): the next round references the frontier through two lineage
-    // paths (edge expansion + union), and a persist would outlive the
-    // call (the round-9 operator-lifecycle finding) — the write is
-    // answer-sized and leaves nothing cached behind
-    var frontier = entries.select(col("qid"), col("cid"))
-      .withColumn("cos", lit(null).cast("double"))
-    for (r <- 1 to rounds) {
-      val f = frontier
-      val expanded = f.join(edges, f("cid") === edges("u"))
-        .select(col("qid"), col("v").as("cid"))
-        .unionByName(f.select("qid", "cid")).distinct()
-      val withQ = expanded.join(q, "qid")
-      val scored = c.join(broadcast(withQ), "cid")
-        .filter(col("cid") =!= col("qid"))
+    walkRounds(entries, edges, beam, rounds) { cand =>
+      c.join(broadcast(cand.join(q, "qid")), "cid")
         .select(col("qid"), col("cid"),
           round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn")), 6).as("cos"))
-      val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))
-      frontier = Jobs.cut(scored.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= beam)
-        .select(col("qid"), col("cid"), col("cos")), s"beam_f$r")
-    }
+    }.last.filter(col("rn") <= k)
+      .select(col("qid"), col("cid"), col("cos"), col("rn").cast("long").as("rnk"))
+  }
+
+  /** The walk entry convention (q302): each query (qid, qe) starts from
+    * its 2 nearest centroids of the broadcast (centroid_id, centroid)
+    * frame `cents` by [[assignToCentroids]]' rounded-dot rank, as
+    * (qid, cid). Every centroid-seeded walk and its oracle replay
+    * (`Round11.graphEntrySql`) use exactly this seed. */
+  def centroidEntries(queries: DataFrame, cents: DataFrame): DataFrame =
+    assignToCentroids(queries.select(col("qid"), col("qe")), "qid", "qe",
+        cents, nKeep = 2)
+      .select(col("qid"), col("centroid_id").as("cid"))
+
+  /** The one beam-walk round loop, shared by the exact walk
+    * ([[beamTopKFrom]]) and the ADC walk ([[beamPqVisited]]). Each
+    * round's candidates are the frontier ∪ its out-neighbours over
+    * `edges`, distinct, with qid = cid dropped; `score` maps them
+    * (qid, cid) to (qid, cid, cos); the scored set is ranked per query
+    * by (cos DESC, cid) as `rn` and cut to scratch parquet, and the
+    * next frontier is rn ≤ `beam`. Returns every round's ranked cut,
+    * first round first.
+    *
+    * The cut is the one round-boundary write (bounded |Q|·beam·(d+1)
+    * rows — the nnDescentEdges lineage rule): the next round
+    * references the frontier through two paths (edge expansion +
+    * union), the ADC walk's visited union re-references every round,
+    * and cache substitution through union + self-join aliasing is
+    * unreliable, so no persists outlive the call.
+    */
+  private def walkRounds(entries: DataFrame, edges: DataFrame, beam: Int,
+      rounds: Int)(score: DataFrame => DataFrame): Seq[DataFrame] = {
     val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))
-    frontier.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("cid"), col("cos"), col("rnk"))
+    var frontier = entries.select(col("qid"), col("cid"))
+    for (r <- 1 to rounds) yield {
+      val f = frontier
+      val cand = f.join(edges, f("cid") === edges("u"))
+        .select(col("qid"), col("v").as("cid"))
+        .unionByName(f).distinct()
+        .filter(col("qid") =!= col("cid"))
+      val ranked = Jobs.cut(score(cand).withColumn("rn", row_number().over(w)),
+        s"beam_r$r")
+      frontier = ranked.filter(col("rn") <= beam).select("qid", "cid")
+      ranked
+    }
   }
 
   /** DiskANN-shaped serving (Jayaram Subramanya et al., NeurIPS'19 —
@@ -1238,46 +1253,46 @@ object Similarity {
     * full-precision dot — and the VISITED candidate list (every
     * candidate any round scored — the paper's search list, ≤
     * beam·(d+1)·rounds per query) is re-ranked at exact cosine through
-    * a bounded join to the cold-storage vectors. Re-ranking only the
-    * final frontier is NOT enough: the dial sweep measured it at
-    * 0.55–0.72 recall (pool containment binds — the q295/q308 lesson a
-    * third time), while the visited list reaches 0.984/0.880 at q304's
-    * own dials for the SAME walk cost. Composes [[nnDescentEdges]]
-    * (edge quality — a navigable graph is what lets the ADC-guided
-    * walk hill-climb) with [[pqCodes]] (representation compression):
-    * resident bytes/vector = d·8 (edge list) + nSub·log2(nCodes)/8
-    * (codes) + 4 (stored norm), so the whole serving index fits
-    * executor memory at corpus sizes where even the PQ-augmented IVF
-    * index's nprobe/nlist candidate scans blow the per-query budget.
-    * This is precisely DiskANN's design point: per-query cost
-    * beam·(d+1)·rounds ADC lookups + a same-bound exact re-rank —
-    * BOTH corpus-size-independent.
+    * a bounded join to the cold-storage vectors. Returns that exact-
+    * reranked visited list (qid, cid, cos); a top-k serve ranks it with
+    * [[TopK.perGroup]] on (cos DESC, cid), a filtered serve (q319/q325)
+    * restricts it to the ids passing the predicate first — the walk
+    * itself always navigates the full graph, because filtered-out
+    * nodes are what keeps it connected under a selective predicate.
+    * Re-ranking only the final frontier is NOT enough: the dial sweep
+    * measured it at 0.55–0.72 recall (pool containment binds — the
+    * q295/q308 lesson a third time), while the visited list reaches
+    * 0.984/0.880 at q304's own dials for the SAME walk cost. Composes
+    * [[nnDescentEdges]] (edge quality — a navigable graph is what lets
+    * the ADC-guided walk hill-climb) with [[pqCodes]] (representation
+    * compression): resident bytes/vector = d·8 (edge list) +
+    * nSub·log2(nCodes)/8 (codes) + 4 (stored norm). Per-query cost is
+    * beam·(d+1)·rounds ADC lookups + a same-bound exact re-rank — BOTH
+    * corpus-size-independent.
     *
     * Determinism: ADC partial dots are exact int64 (q225 quantized
     * kernel) summed per candidate, divided ONCE by the true stored
     * norms and rounded 6dp (the q307 recipe) — so the walk's frontier
     * boundary is engine-portable and the whole serve carries an exact
-    * oracle. Candidates at qid = cid are dropped at scoring, exactly
-    * as [[beamTopKFrom]] does.
+    * oracle.
     *
     * Scale shape: per round, the candidate set is ≤ |Q|·beam·(d+1) BY
     * CONSTRUCTION; it hash-joins the resident code table on cid (nSub
     * rows per candidate) and the broadcast per-query LUT, then a
-    * window over ≤ beam·(d+1)-row groups. Every round's scored set is
-    * cut to scratch parquet (bounded |Q|·beam·(d+1) rows — the
-    * nnDescentEdges lineage rule: the next round references the
-    * frontier through two paths, the visited union re-references every
-    * round, and cache substitution through union + self-join aliasing
-    * is unreliable), so no persists outlive the call. The corpus
-    * (full vectors) is touched ONLY by the final rerank join.
+    * window over ≤ beam·(d+1)-row groups ([[walkRounds]]). The corpus
+    * (full vectors) is touched ONLY by the final rerank join. `norms`
+    * (cid, cn) and `codebook` (i, code, cx) are the standing index's
+    * stored metadata when the caller owns one (q312/q313/q317):
+    * otherwise the codebook (corpus TakeOrdered + explode) and the norm
+    * table (full-vector scan + vec_dot, referenced by EVERY round's
+    * join) are re-derived here — values identical by construction.
     */
-  def beamPqTopKFrom(
+  def beamPqVisited(
       queries: DataFrame, // qid, qe
       corpus: DataFrame, // cid, ce — cold storage; final rerank only
       edges: DataFrame, // u, v — the resident graph (refined artifact)
       codes: DataFrame, // cid, s, code — the resident PQ codes artifact
       entries: DataFrame, // qid, cid (bounded per qid)
-      k: Int,
       beam: Int,
       rounds: Int,
       nSub: Int,
@@ -1285,238 +1300,79 @@ object Similarity {
       dim: Int,
       norms: Option[DataFrame] = None,
       codebook: Option[DataFrame] = None): DataFrame = {
-    val scored = beamPqVisitedScored(queries, corpus, edges, codes,
-      entries, beam, rounds, nSub, nCodes, dim, norms = norms,
-      codebook = codebook)
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-  }
-
-  /** ATTRIBUTE-FILTERED DiskANN-shaped serving (q319/q320): the walk
-    * NAVIGATES THE FULL GRAPH — frontier ranking stays unfiltered,
-    * because filtered-out nodes are exactly what keeps the graph
-    * connected under a selective predicate (pruning them from the walk
-    * is the known recall-collapse mode: the filtered subgraph
-    * fragments) — and the filter applies where DiskANN's own filtered
-    * variant applies it, to the RESULT pool: the exact re-rank stage
-    * scores only visited ∩ `keep`, so the expensive full-precision
-    * joins are filter-pruned and the emitted top-k all satisfy the
-    * predicate. Recall under a selective filter is pool containment of
-    * the FILTERED truth in the visited list (the q295/q308 law on a
-    * new axis) — the q319 sweep measures exactly that at ~50% and ~5%
-    * selectivity, with `rounds`/`beam` as the recovery dials (more
-    * walk = more visited = more filtered survivors). Per-query cost is
-    * still ≤ beam·(d+1)·rounds ADC lookups + a ≤-same-bound exact
-    * re-rank — corpus-size-independent AND selectivity-independent on
-    * the walk side.
-    */
-  def beamPqTopKFromWhere(
-      queries: DataFrame, // qid, qe
-      corpus: DataFrame, // cid, ce — cold storage; final rerank only
-      edges: DataFrame, // u, v — the resident graph (FULL corpus)
-      codes: DataFrame, // cid, s, code — the resident PQ codes
-      entries: DataFrame, // qid, cid (bounded per qid)
-      keep: DataFrame, // cid — ids passing the metadata predicate
-      k: Int,
-      beam: Int,
-      rounds: Int,
-      nSub: Int,
-      nCodes: Int,
-      dim: Int): DataFrame = {
-    val scored = beamPqVisitedScored(queries, corpus, edges, codes,
-      entries, beam, rounds, nSub, nCodes, dim, keep = Some(keep))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-  }
-
-  /** The exact-reranked VISITED list of one ADC-guided walk (qid, cid,
-    * cos) — the DiskANN search list with exact scores. Public so a
-    * dial-grid query (q319) can run ONE walk and re-rank several
-    * filtered views of the bounded pool (a filtered top-k from this
-    * frame is value-identical to [[beamPqTopKFromWhere]]: same
-    * visited ∩ keep candidate set, same exact scores — spec-tested);
-    * [[beamPqTopKFrom]] / [[beamPqTopKFromWhere]] are its top-k
-    * serving forms. */
-  def beamPqVisited(
-      queries: DataFrame, // qid, qe
-      corpus: DataFrame, // cid, ce
-      edges: DataFrame, // u, v
-      codes: DataFrame, // cid, s, code
-      entries: DataFrame, // qid, cid
-      beam: Int,
-      rounds: Int,
-      nSub: Int,
-      nCodes: Int,
-      dim: Int): DataFrame =
-    beamPqVisitedScored(queries, corpus, edges, codes, entries, beam,
-      rounds, nSub, nCodes, dim)
-
-  /** The ADC-guided walk + exact visited-list re-rank shared by the
-    * top-k server ([[beamPqTopKFrom]]) and the streaming ingest scorer
-    * ([[beamPqSemDedupBatch]]): returns every VISITED candidate with
-    * its exact rounded cosine (qid, cid, cos). `keep` (optional)
-    * restricts the EXACT RE-RANK to visited ∩ keep — the walk itself
-    * always navigates unfiltered (see [[beamPqTopKFromWhere]]). */
-  private def beamPqVisitedScored(
-      queries: DataFrame, // qid, qe
-      corpus: DataFrame, // cid, ce
-      edges: DataFrame, // u, v
-      codes: DataFrame, // cid, s, code
-      entries: DataFrame, // qid, cid
-      beam: Int,
-      rounds: Int,
-      nSub: Int,
-      nCodes: Int,
-      dim: Int,
-      keep: Option[DataFrame] = None,
-      norms: Option[DataFrame] = None, // (cid, cn) standing artifact
-      codebook: Option[DataFrame] = None): DataFrame = { // (i, code, cx)
-    val spark = queries.sparkSession
-    NativeExpressions.register(spark)
+    NativeExpressions.register(queries.sparkSession)
     val dsub = dim / nSub
     require(dsub * nSub == dim, s"nSub $nSub must divide dim $dim")
-    // standing-index metadata: a per-batch/per-round re-derivation of
-    // the codebook (corpus TakeOrdered + explode) and the norm table
-    // (full-vector scan + vec_dot, referenced by EVERY round's join)
-    // collapses to flat artifact scans when the caller owns a standing
-    // index (q312/q313/q317 — guide §2.4); values identical by
-    // construction (both are pure functions of the corpus)
     val cb = codebook.map(broadcast).getOrElse(pqCodebook(corpus, nCodes))
     val qtab = broadcast(quantCoords(queries, "qid", "qe").join(cb, Seq("i"))
       .groupBy(col("qid"), expr(s"(i - 1) div $dsub").as("s"), col("code"))
       .agg(sum(col("x") * col("cx")).as("pdot")))
     val q = queries.withColumn("qn", expr("sqrt(vec_dot(qe, qe))"))
-    // stored norms: index metadata (4 B/vector, written with the codes
-    // in a production layout); one column-pruned scan here
+    val qn = broadcast(q.select(col("qid"), col("qn")))
     val cn = norms.getOrElse(cosNormsDF(corpus))
-    var frontier = entries.select(col("qid"), col("cid"))
-    var visited: DataFrame = null // the DiskANN search list, round-cut
-    for (r <- 1 to rounds) {
-      val expanded = frontier.join(edges, frontier("cid") === edges("u"))
-        .select(col("qid"), col("v").as("cid"))
-        .unionByName(frontier.select("qid", "cid")).distinct()
-      val adc = expanded.join(codes, "cid")
+    val visited = walkRounds(entries, edges, beam, rounds) { cand =>
+      cand.join(codes, "cid")
         .join(qtab, Seq("qid", "s", "code"))
         .groupBy("qid", "cid").agg(sum("pdot").as("adc"))
-      val scored = adc
-        .join(broadcast(q.select(col("qid"), col("qn"))), "qid")
+        .join(qn, "qid")
         .join(cn, "cid")
-        .filter(col("qid") =!= col("cid"))
         .select(col("qid"), col("cid"),
           round(col("adc").cast("double") /
             (lit(1.0e12) * col("qn") * col("cn")), 6).as("cos"))
-      // one round-boundary write serves both consumers: the ranked
-      // frontier (navigation) and the visited accumulation (rerank)
-      val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))
-      val roundScored = Jobs.cut(
-        scored.withColumn("rn", row_number().over(w)), s"beampq_r$r")
-      frontier = roundScored.filter(col("rn") <= beam).select("qid", "cid")
-      val ids = roundScored.select("qid", "cid")
-      visited = if (visited == null) ids else visited.unionByName(ids)
-    }
+    }.map(_.select("qid", "cid")).reduce(_ unionByName _)
     // the one full-precision stage: exact re-rank of the VISITED list
-    // (∩ keep when filtering — prune BEFORE the expensive vector join)
     val c = corpus.withColumn("cn", expr("sqrt(vec_dot(ce, ce))"))
-    val pool = keep.foldLeft(visited.distinct()) { (v, kset) =>
-      v.join(kset.select("cid"), Seq("cid"), "left_semi") }
-    pool.join(broadcast(q), "qid").join(c, "cid")
+    visited.distinct().join(broadcast(q), "qid").join(c, "cid")
       .select(col("qid"), col("cid"),
         round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn")), 6).as("cos"))
   }
 
   /** Incremental maintenance of a standing graph index — the DiskANN
-    * INSERT path (q317): each new rep (one per distinct payload in the
-    * micro-batch — walks are rep-level, replication-invariant) walks
-    * the standing graph ([[beamPqVisitedScored]]: ADC-guided, exact
-    * re-rank of the bounded visited list), its top-`dOut` visited
-    * neighbors by (cos DESC, cid) become the NEW NODE's out-edges
-    * (bounded and per-rep-deterministic), and each chosen target
-    * contributes a candidate REVERSE edge (standing node → new rep) so
-    * the graph stays navigable TOWARD inserted nodes. The rep's edges
-    * are then EXPANDED through the batch's duplicate-group map — every
-    * inserted id gets its own out-edges and its own reverse
-    * candidates, which is sound because duplicate members' walks are
-    * identical by construction (entries tie-break on centroid id over
-    * identical embeddings; the walk's qid ≠ cid guard is inert across
-    * the ingest slot split, so the rep's scores ARE each member's
-    * scores) — the round-10 advice catch: without the expansion,
-    * duplicate payloads would silently insert edge-less nodes, and
-    * which member got edges would depend on the micro-batch split.
-    * Reverse edges are emitted UNCAPPED — the reader caps them at
-    * top-`dOut` per standing node over the ACCUMULATED set (cos DESC,
-    * new id): capping at read time is what makes the maintained edge
-    * set BATCH-SPLIT INVARIANT (a per-batch cap would depend on which
-    * reps happened to share a micro-batch — the q296-class ordering
-    * hazard). Forward and reverse key spaces are disjoint by the
-    * ingest slot split, so an idempotent MERGE on (u, v) accumulates
-    * safely.
+    * INSERT path (q317), served from the probe workload's scored walk
+    * table `scored` (da, cid, cos, rn — [[beamPqWalkScoredAll]]): each
+    * batch probe's top-`dOut` visited neighbors by (cos DESC, cid)
+    * become the NEW NODE's out-edges (bounded and per-rep-
+    * deterministic), and each chosen target contributes a candidate
+    * REVERSE edge (standing node → new id) so the graph stays navigable
+    * TOWARD inserted nodes. Every duplicate member id carries its rep's
+    * rows (the table is pre-expanded through the duplicate-group map),
+    * so duplicate payloads never insert edge-less nodes and which
+    * member got edges cannot depend on the micro-batch split. Reverse
+    * edges are emitted UNCAPPED — the reader caps them at top-`dOut`
+    * per standing node over the ACCUMULATED set (cos DESC, new id):
+    * capping at read time is what makes the maintained edge set
+    * BATCH-SPLIT INVARIANT (a per-batch cap would depend on which reps
+    * happened to share a micro-batch — the q296-class ordering hazard).
+    * Forward and reverse key spaces are disjoint by the ingest slot
+    * split, so an idempotent MERGE on (u, v) accumulates safely.
     */
   def graphInsertBatch(
       batch: DataFrame, // da, ea
-      corpus: DataFrame, // cid, ce — cold storage
-      edges: DataFrame, // u, v — standing refined graph
-      codes: DataFrame, // cid, s, code — standing PQ codes
-      cents: DataFrame, // centroid_id, centroid (broadcast)
-      beam: Int,
-      rounds: Int,
-      nSub: Int,
-      nCodes: Int,
-      dim: Int,
-      dOut: Int,
-      norms: Option[DataFrame] = None,
-      codebook: Option[DataFrame] = None,
-      scoredAll: Option[DataFrame] = None): DataFrame = {
-    NativeExpressions.register(batch.sparkSession)
-    val fwd = scoredAll match {
-      case Some(sa) =>
-        // standing scored-walk table (da, cid, cos, rn): the batch's
-        // rows are a subset of the probe workload the table covers —
-        // per-probe results are payload-deterministic, so the semi-join
-        // serve is value-identical to the live walk below (incl. the
-        // duplicate-member expansion: every member id carries its own
-        // pre-expanded rows)
-        sa.join(batch.select(col("da")), Seq("da"), "left_semi")
-          .filter(col("rn") <= dOut)
-          .select(col("da").as("u"), col("cid").as("v"), col("cos"))
-      case None =>
-        val g = batch.groupBy("ea")
-          .agg(min("da").as("rep"), collect_list("da").as("ids"))
-        val reps = g.select(col("rep").as("qid"), col("ea").as("qe"))
-        val entries = assignToCentroids(reps, "qid", "qe", cents, nKeep = 2)
-          .select(col("qid"), col("centroid_id").as("cid"))
-        val scored = beamPqVisitedScored(reps, corpus, edges, codes, entries,
-          beam, rounds, nSub, nCodes, dim, norms = norms,
-          codebook = codebook)
-        val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))
-        val fwdRep = scored.withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= dOut)
-          .select(col("qid"), col("cid"), col("cos"))
-        // expand the rep's chosen edges to every duplicate member id
-        val mem = g.select(col("rep").as("qid"), explode(col("ids")).as("da"))
-        fwdRep.join(mem, Seq("qid"))
-          .select(col("da").as("u"), col("cid").as("v"), col("cos"))
-    }
+      scored: DataFrame, // da, cid, cos, rn — the scored walk table
+      dOut: Int): DataFrame = {
+    val fwd = scored.join(batch.select(col("da")), Seq("da"), "left_semi")
+      .filter(col("rn") <= dOut)
+      .select(col("da").as("u"), col("cid").as("v"), col("cos"))
     fwd.unionByName(
       fwd.select(col("v").as("u"), col("u").as("v"), col("cos")))
   }
 
   /** The standing probe WORKLOAD's scored walk table (q313/q317): rep-
     * groups the full probe set by payload, runs ONE ADC-guided walk +
-    * exact visited-list re-rank per rep, ranks per rep by (cos DESC,
-    * cid), and expands to every member probe id — returns (da, cid,
-    * cos, rn). The two streaming-maintenance consumers (alerting at a
-    * threshold, insert-edge selection at top-dOut) both derive their
-    * per-batch outputs from this ONE table by a semi-join on the
-    * batch's probe ids: value-identical to the live per-batch walk
-    * because the walk is a deterministic function of the probe PAYLOAD
-    * alone (tie-breaks are on cid; the qid =!= cid guard is inert
-    * across the ingest slot split), and per-member rows are identical
-    * to the per-batch duplicate-group expansion (spec-tested). The
-    * q315/q328 shared-pipeline rule: the walk over the standing index
-    * is the IDENTICAL sub-pipeline of both queries — one build serves
-    * both. Caller guarantees every batch row's da appears in `probes`.
+    * exact visited-list re-rank per rep ([[beamPqVisited]], entries by
+    * [[centroidEntries]]), ranks per rep by (cos DESC, cid), and
+    * expands to every member probe id — returns (da, cid, cos, rn).
+    * The two streaming-maintenance consumers (alerting at a threshold,
+    * [[beamPqSemDedupBatch]]; insert-edge selection at top-dOut,
+    * [[graphInsertBatch]]) both derive their per-batch outputs from
+    * this ONE table by a semi-join on the batch's probe ids: value-
+    * identical to walking the batch alone, because the walk is a
+    * deterministic function of the probe PAYLOAD (tie-breaks are on
+    * cid; the qid =!= cid guard is inert across the ingest slot split)
+    * — spec-tested. The q315/q328 shared-pipeline rule: the walk over
+    * the standing index is the IDENTICAL sub-pipeline of both queries —
+    * one build serves both. Caller guarantees every batch row's da
+    * appears in `probes`.
     */
   def beamPqWalkScoredAll(
       probes: DataFrame, // da, ea — the standing probe workload
@@ -1531,15 +1387,12 @@ object Similarity {
       dim: Int,
       norms: Option[DataFrame] = None,
       codebook: Option[DataFrame] = None): DataFrame = {
-    NativeExpressions.register(probes.sparkSession)
     val g = probes.groupBy("ea")
       .agg(min("da").as("rep"), collect_list("da").as("ids"))
     val reps = g.select(col("rep").as("qid"), col("ea").as("qe"))
-    val entries = assignToCentroids(reps, "qid", "qe", cents, nKeep = 2)
-      .select(col("qid"), col("centroid_id").as("cid"))
-    val scored = beamPqVisitedScored(reps, corpus, edges, codes, entries,
-      beam, rounds, nSub, nCodes, dim, norms = norms,
-      codebook = codebook)
+    val scored = beamPqVisited(reps, corpus, edges, codes,
+      centroidEntries(reps, cents), beam, rounds, nSub, nCodes, dim,
+      norms = norms, codebook = codebook)
     val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))
     val ranked = scored.withColumn("rn", row_number().over(w))
     val mem = g.select(col("rep").as("qid"), explode(col("ids")).as("da"))
@@ -1549,58 +1402,25 @@ object Similarity {
 
   /** Per-micro-batch semantic-dedup scoring against a standing GRAPH
     * index (q313) — the q305/q311 advisor→ingest loop on the GRAPH
-    * family: the resident standing index is the NN-Descent-refined
-    * edge set + PQ codes + stored norms (the q312 DiskANN layout); a
-    * probe micro-batch groups identical payloads (rep level —
-    * replication-invariant walk count), seeds each rep's walk at its 2
-    * nearest centroids (the q302 entry convention, `cents` broadcast),
-    * runs the ADC-guided beam walk over the standing edges, exact-
-    * re-ranks the bounded VISITED list against cold-storage vectors,
-    * emits pairs at cosine >= `threshold`, and expands through the
-    * probe group map. The alert set is visited-bounded (≤
-    * beam·(d+1)·rounds candidates per probe rep — corpus-size-
-    * independent, the honest walk/recall trade the q313 row measures
-    * against the exact scan); the corpus side is per-id (the graph is
-    * an id-level artifact), so duplicates cost pool slots, not extra
-    * cosines — the walk count never grows with replication.
+    * family, served from the probe workload's scored walk table
+    * `scored` (da, cid, cos, rn — [[beamPqWalkScoredAll]]: the q312
+    * DiskANN layout's ADC-guided walk from each rep's 2 nearest
+    * centroids, exact-re-ranked visited list, expanded through the
+    * probe group map): emits the batch probes' pairs at cosine >=
+    * `threshold`. The alert set is visited-bounded (≤ beam·(d+1)·rounds
+    * candidates per probe rep — corpus-size-independent, the honest
+    * walk/recall trade the q313 row measures against the exact scan);
+    * the corpus side is per-id (the graph is an id-level artifact), so
+    * duplicates cost pool slots, not extra cosines — the walk count
+    * never grows with replication.
     */
   def beamPqSemDedupBatch(
       batch: DataFrame, // da, ea
-      corpus: DataFrame, // cid, ce — cold storage
-      edges: DataFrame, // u, v — standing refined graph
-      codes: DataFrame, // cid, s, code — standing PQ codes
-      cents: DataFrame, // centroid_id, centroid (broadcast)
-      beam: Int,
-      rounds: Int,
-      nSub: Int,
-      nCodes: Int,
-      dim: Int,
-      threshold: Double,
-      norms: Option[DataFrame] = None,
-      codebook: Option[DataFrame] = None,
-      scoredAll: Option[DataFrame] = None): DataFrame = {
-    NativeExpressions.register(batch.sparkSession)
-    scoredAll match {
-      case Some(sa) =>
-        // standing scored-walk table serve (see [[beamPqWalkScoredAll]])
-        sa.join(batch.select(col("da")), Seq("da"), "left_semi")
-          .filter(col("cos") >= threshold)
-          .select(col("da"), col("cid").as("db"), col("cos"))
-      case None =>
-        val g = batch.groupBy("ea")
-          .agg(min("da").as("rep"), collect_list("da").as("ids"))
-        val reps = g.select(col("rep").as("qid"), col("ea").as("qe"))
-        val entries = assignToCentroids(reps, "qid", "qe", cents, nKeep = 2)
-          .select(col("qid"), col("centroid_id").as("cid"))
-        val scored = beamPqVisitedScored(reps, corpus, edges, codes, entries,
-            beam, rounds, nSub, nCodes, dim, norms = norms,
-            codebook = codebook)
-          .filter(col("cos") >= threshold)
-        val pmem = g.select(col("rep").as("qid"), explode(col("ids")).as("da"))
-        scored.join(pmem, Seq("qid"))
-          .select(col("da"), col("cid").as("db"), col("cos"))
-    }
-  }
+      scored: DataFrame, // da, cid, cos, rn — the scored walk table
+      threshold: Double): DataFrame =
+    scored.join(batch.select(col("da")), Seq("da"), "left_semi")
+      .filter(col("cos") >= threshold)
+      .select(col("da"), col("cid").as("db"), col("cos"))
 
   /** SQ8 standing-index variant of [[pqSemDedupBatch]] (q329): the
     * resident index is cell ids + SQ8 codes + the fixed-point rescale

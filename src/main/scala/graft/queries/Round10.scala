@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.QueryDef
-import graft.operators.{IndexAdvisor, Similarity}
+import graft.operators.{IndexAdvisor, Similarity, TopK}
 import graft.sources.Tables
 import graft.util.{Jobs, Slots}
 
@@ -23,44 +23,6 @@ object Round10 {
   private[queries] val DiskannBeam = 24
   private[queries] val DiskannRounds = 4
 
-  /** DuckDB replay of `rounds` ADC-ranked beam-search iterations — the
-    * [[Round8.beamRoundsSql]] chain with the SCORING swapped from exact
-    * cosine to the PQ approximate cosine CTE `psc` (from
-    * [[Round9.pqAdcSql]]): candidates pc_i = frontier ∪ out-neighbors
-    * over edge CTE `e`, scores looked up in psc (which already excludes
-    * qid = cid, exactly as the Spark operator's filter does), frontier
-    * pf_i = per-query top-`beam` on (adc-cos DESC, cid). The emitted
-    * CTE `pool` is the DISTINCT union of every round's candidate set —
-    * the DiskANN VISITED list (≤ beam·(d+1)·rounds per query, corpus-
-    * size-independent), which the exact re-rank stage consumes: the
-    * dial sweep measured the final-frontier-only pool at 0.55–0.72
-    * recall (pool containment binds, the q295/q308 lesson a third
-    * time), while the visited list reaches the bar at the same walk
-    * cost. All CTEs MATERIALIZED (the round-9 chained-CTE gotcha). */
-  private[queries] def beamRoundsAdcSql(rounds: Int, beam: Int): String = {
-    val steps = (1 to rounds).map { i =>
-      val src = if (i == 1) "bent" else s"pf${i - 1}"
-      val cand =
-        s"""pc$i AS MATERIALIZED (SELECT DISTINCT qid, cid FROM (
-          SELECT qid, cid FROM $src
-          UNION ALL
-          SELECT $src.qid, e.v AS cid FROM $src
-            JOIN e ON e.u = $src.cid))"""
-      val score =
-        s"""ps$i AS MATERIALIZED (SELECT pc$i.qid, pc$i.cid, psc.cos
-          FROM pc$i JOIN psc ON psc.qid = pc$i.qid AND psc.cid = pc$i.cid)"""
-      val front =
-        s"""pf$i AS MATERIALIZED (SELECT qid, cid FROM (SELECT qid, cid,
-          row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rn
-          FROM ps$i) WHERE rn <= $beam)"""
-      Seq(cand, score, front).mkString(",\n      ")
-    }
-    val visited = (1 to rounds).map(i => s"SELECT qid, cid FROM ps$i")
-      .mkString(" UNION ")
-    s"""${steps.mkString(",\n      ")},
-      pool AS MATERIALIZED (SELECT DISTINCT qid, cid FROM ($visited))"""
-  }
-
   /** The assembled q312 oracle for a (beam, rounds, nSub, nCodes) dial
     * point (swept in DuckDB at both SFs: visited-list pool b24/r4
     * 0.984/0.880, every final-frontier-only pool below 0.8): the
@@ -75,16 +37,10 @@ object Round10 {
       ${Round9.nnDescentSql(rounds = Round9.NnRounds, d = Round9.NnDegree,
         src = "e0", out = "e")},
       ${Round9.pqAdcSql(nSub = nSub, nCodes = nCodes)},
-      cent AS (SELECT vec_id AS centroid_id, embedding AS centroid
-        FROM embeddings WHERE vec_id < 16),
-      qa0 AS (SELECT q.id, c.centroid_id,
-          round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM q2 q, cent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      bent AS (SELECT id AS qid, centroid_id AS cid FROM (
-          SELECT id, centroid_id,
-            row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-          FROM qa0) WHERE r <= 2),
-      ${beamRoundsAdcSql(rounds = rounds, beam = beam)},
+      ${Round11.graphEntrySql("")},
+      ${Round11.beamAdcP(rounds = rounds, beam = beam, p = "p", edge = "e",
+        entry = "bent", psc = "psc")},
+      ${Round11.poolSql("p", rounds, "pool")},
       rsc AS MATERIALIZED (SELECT pool.qid, pool.cid, ${Round6c.cosSql("q", "c")} AS cos
         FROM pool JOIN embeddings q ON pool.qid = q.vec_id
         JOIN embeddings c ON pool.cid = c.vec_id,
@@ -114,7 +70,7 @@ object Round10 {
     * per-(vector, subspace) nearest-code encode, the per-probe LUT,
     * ADC sums against the true stored norms, and the 2-nearest-of-16
     * centroid entries (rounded-dot rank — the assignToCentroids
-    * replay). [[beamRoundsAdcSql]] then walks edge CTE `e` from `bent`
+    * replay). [[Round11.beamAdcP]] then walks edge CTE `e` from `bent`
     * scoring via this `psc`, identically to q312. All MATERIALIZED. */
   private def ingestPqSql(nSub: Int, nCodes: Int, nCents: Int): String = {
     val dsub = 64 / nSub
@@ -283,7 +239,9 @@ object Round10 {
       ${Round9.nnDescentSql(rounds = Round9.NnRounds, d = Round9.NnDegree,
         src = "e0", out = "e")},
       ${ingestPqSql(nSub = 16, nCodes = 16, nCents = 16)},
-      ${beamRoundsAdcSql(rounds = rounds, beam = beam)},
+      ${Round11.beamAdcP(rounds = rounds, beam = beam, p = "p", edge = "e",
+        entry = "bent", psc = "psc")},
+      ${Round11.poolSql("p", rounds, "pool")},
       rsc AS MATERIALIZED (SELECT pool.qid, pool.cid, ${Round6c.cosSql("q", "c")} AS cos
         FROM pool JOIN embeddings q ON pool.qid = q.vec_id
         JOIN embeddings c ON pool.cid = c.vec_id,
@@ -504,13 +462,9 @@ object Round10 {
       (s, dir) => Round6c.recallHarness(s, dir, (qs, corpus) => {
         val cents = broadcast(corpus.orderBy("cid").limit(16)
           .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
-        val entries = Similarity.assignToCentroids(
-            qs.select(col("qid"), col("qe")), "qid", "qe", cents, nKeep = 2)
-          .select(col("qid"), col("centroid_id").as("cid"))
+        val entries = Similarity.centroidEntries(qs, cents)
         val refined = Round9.refinedGraphArtifact(s, dir, corpus)
-        val codes = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet", "pqcodes_s16_c16")(
-          Similarity.pqCodes(corpus, nSub = 16, nCodes = 16, dim = 64))
+        val codes = Round9.pqCodesArtifact(s, dir, corpus)
         // standing-index metadata as artifacts (guide §2.4): the norm
         // table was re-derived (full-vector scan + vec_dot) by every
         // walk round's join, the codebook per execution
@@ -520,10 +474,11 @@ object Round10 {
           "embeddings.parquet", "pqcb_c16_full",
           params = Map("nCodes" -> 16L))(
           Similarity.pqCodebookDF(corpus, nCodes = 16))
-        Similarity.beamPqTopKFrom(qs, corpus, refined, codes, entries,
-          k = 5, beam = DiskannBeam, rounds = DiskannRounds,
-          nSub = 16, nCodes = 16, dim = 64,
-          norms = Some(cnorms), codebook = Some(cbArt))
+        TopK.perGroup(Similarity.beamPqVisited(qs, corpus, refined, codes,
+            entries, beam = DiskannBeam, rounds = DiskannRounds,
+            nSub = 16, nCodes = 16, dim = 64,
+            norms = Some(cnorms), codebook = Some(cbArt)),
+          Seq("qid"), Seq(col("cos").desc, col("cid")), 5)
       }),
       Some(diskannOracle(beam = DiskannBeam, rounds = DiskannRounds,
         nSub = 16, nCodes = 16))),
@@ -551,7 +506,7 @@ object Round10 {
     // artifact) — duplicates cost visited-list slots, never extra
     // walk rounds. Oracle: slot-filtered stitched+NN-Descent edge
     // build, the plain-PQ encode/LUT chain, centroid entries, the
-    // same beamRoundsAdcSql walk as q312, exact re-rank, 0.35 gate.
+    // same Round11.beamAdcP walk as q312, exact re-rank, 0.35 gate.
     "q313_stream_semdedup_graphidx" -> QueryDef(
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
@@ -603,8 +558,8 @@ object Round10 {
         // IDENTICAL sub-pipeline of q313 (threshold alerts) and q317
         // (insert-edge selection): one build serves both queries (the
         // q315/q328 shared-measurement rule); per-batch serving is a
-        // semi-join on the batch's probe ids, value-identical to the
-        // live walk (payload-deterministic; spec-tested)
+        // semi-join on the batch's probe ids, value-identical to
+        // walking the batch alone (payload-deterministic; spec-tested)
         val walkArt = ingestWalkScoredArtifact(s, dir, corpus0, edges,
           codes, cents, adv, cnorms, cbArt)
         s.conf.set("spark.sql.catalog.graftmem", "graft.sources.MemCatalog")
@@ -619,13 +574,8 @@ object Round10 {
         val q = EventTime.withShufflePartitions(s, 8) {
           probe.writeStream.foreachBatch {
             (batch: DataFrame, _: Long) =>
-              val alerts = Similarity.beamPqSemDedupBatch(batch, corpus0,
-                edges, codes, cents, beam = adv.params("beam").toInt,
-                rounds = adv.params("rounds").toInt,
-                nSub = adv.params("nSub").toInt,
-                nCodes = adv.params("nCodes").toInt, dim = 64,
-                threshold = 0.35, norms = Some(cnorms),
-                codebook = Some(cbArt), scoredAll = Some(walkArt))
+              val alerts = Similarity.beamPqSemDedupBatch(batch, walkArt,
+                threshold = 0.35)
               // the artifact-served result is rooted in the OUTER
               // session — register the view and run the MERGE there
               alerts.createOrReplaceTempView("q313_batch")
@@ -1094,13 +1044,7 @@ object Round10 {
         val q = EventTime.withShufflePartitions(s, 8) {
           probe.writeStream.foreachBatch {
             (batch: DataFrame, _: Long) =>
-              val ins = Similarity.graphInsertBatch(batch, corpus0, edges,
-                codes, cents, beam = adv.params("beam").toInt,
-                rounds = adv.params("rounds").toInt,
-                nSub = adv.params("nSub").toInt,
-                nCodes = adv.params("nCodes").toInt, dim = 64, dOut = 8,
-                norms = Some(cnorms), codebook = Some(cbArt),
-                scoredAll = Some(walkArt))
+              val ins = Similarity.graphInsertBatch(batch, walkArt, dOut = 8)
               // the artifact-served result is rooted in the OUTER
               // session — register the view and run the MERGE there
               ins.createOrReplaceTempView("q317_batch")
@@ -1131,7 +1075,9 @@ object Round10 {
       ${Round9.nnDescentSql(rounds = Round9.NnRounds, d = Round9.NnDegree,
         src = "e0", out = "e")},
       ${ingestPqSql(nSub = 16, nCodes = 16, nCents = 16)},
-      ${beamRoundsAdcSql(rounds = IngestRounds, beam = IngestBeam)},
+      ${Round11.beamAdcP(rounds = IngestRounds, beam = IngestBeam, p = "p",
+        edge = "e", entry = "bent", psc = "psc")},
+      ${Round11.poolSql("p", IngestRounds, "pool")},
       rsc AS MATERIALIZED (SELECT pool.qid, pool.cid, ${Round6c.cosSql("q", "c")} AS cos
         FROM pool JOIN embeddings q ON pool.qid = q.vec_id
         JOIN embeddings c ON pool.cid = c.vec_id,

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.QueryDef
-import graft.operators.{IndexAdvisor, Similarity}
+import graft.operators.{IndexAdvisor, Similarity, TopK}
 import graft.sources.Tables
 import graft.util.Slots
 
@@ -135,13 +135,22 @@ object Round11 {
         JOIN $annr ON $exf.qid = $annr.qid AND $exf.cid = $annr.cid
         GROUP BY 1) h ON q.qid = h.qid"""
 
-  /** Prefixed ADC-ranked beam rounds (the [[Round10.beamRoundsAdcSql]]
-    * chain, prefix-parameterized so several walks coexist in one
-    * oracle, with the edge/entry/score CTE names as parameters). Emits
-    * `<p>c<i>` (candidates), `<p>s<i>` (scored), `<p>f<i>` (frontier);
-    * pools are assembled separately by [[poolSql]] so one chain serves
-    * several `rounds` dials (round r's CTEs are a pure prefix of round
-    * r+1's — the walk recurrence). */
+  /** The one DuckDB replay of the beam walk (Similarity.walkRounds),
+    * for every walk-family oracle: `rounds` iterations over edge CTE
+    * `edge` from the per-query entry CTE `entry` (qid, cid), with
+    * scores looked up in the (qid, cid, cos) CTE `psc` — the exact
+    * rounded cosines (`ex0` of [[Round6c.exactRecallCte]] for the
+    * 50-query harness sample) or the PQ approximate cosines
+    * ([[Round9.pqAdcSql]]'s `psc`). A score CTE holds no qid = cid
+    * pair, so the join drops them exactly as the Spark walk does.
+    * Emits `<p>c<i>` (candidates = frontier ∪ out-neighbours),
+    * `<p>s<i>` (scored), `<p>f<i>` (frontier = per-query top-`beam`
+    * on (cos DESC, cid)). The exact walk's answer is the top-k of the
+    * last `<p>s<i>` (k ≤ beam); the ADC walk's visited list is
+    * [[poolSql]], assembled separately so one chain serves several
+    * `rounds` dials (round r's CTEs are a pure prefix of round r+1's —
+    * the walk recurrence). Prefixes let several walks coexist in one
+    * oracle. All CTEs MATERIALIZED (the round-9 chained-CTE gotcha). */
   private[queries] def beamAdcP(rounds: Int, beam: Int, p: String, edge: String,
       entry: String, psc: String): String =
     (1 to rounds).map { i =>
@@ -163,9 +172,12 @@ object Round11 {
     s"""$name AS MATERIALIZED (SELECT DISTINCT qid, cid FROM (${
       (1 to upTo).map(i => s"SELECT qid, cid FROM ${p}s$i").mkString(" UNION ")}))"""
 
-  /** Centroid-seeded walk entries (the q302/q312 convention): 2 nearest
-    * of the 16 centroids drawn from `centSrc` (rounded-dot rank). */
-  private def graphEntrySql(p: String, centSrc: String): String =
+  /** Centroid-seeded walk entries `<p>bent` (qid, cid) for the 50-query
+    * sample `q2` — the Similarity.centroidEntries replay: 2 nearest of
+    * the 16 centroids drawn from `centSrc` (vec_id, embedding), by
+    * rounded-dot rank; by default the 16 lowest-id corpus rows. */
+  private[queries] def graphEntrySql(p: String, centSrc: String =
+      "SELECT vec_id, embedding FROM embeddings WHERE vec_id < 16"): String =
     s"""${p}cent AS MATERIALIZED (SELECT vec_id AS centroid_id, embedding AS centroid
         FROM ($centSrc)),
       ${p}qa0 AS MATERIALIZED (SELECT q.id, c.centroid_id,
@@ -242,12 +254,9 @@ object Round11 {
         "nnr" -> Round9.NnRounds.toLong))(build)
 
   /** Per-query top-5 by (cos DESC, cid) — the harness rank. */
-  private[queries] def top5(df: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("cos").desc, col("cid"))
-    df.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 5)
+  private[queries] def top5(df: DataFrame): DataFrame =
+    TopK.perGroup(df, Seq("qid"), Seq(col("cos").desc, col("cid")), 5)
       .select("qid", "cid")
-  }
 
   val defs: Map[String, QueryDef] = Map(
 
@@ -340,8 +349,7 @@ object Round11 {
     // 0.996/0.912 at (32, 5) — ≥ 0.8 at both SFs, both tags. Output:
     // (sel, dial) recall rows — naive (24,4) vs boosted (32,5), both
     // selectivities, ONE walk per dial (the filtered re-ranks share
-    // the walk's bounded visited pool; spec-tests prove the shared-
-    // walk form ≡ beamPqTopKFromWhere). Per-query cost stays
+    // the walk's bounded visited pool). Per-query cost stays
     // beam·(d+1)·rounds ADC lookups — corpus-size- AND selectivity-
     // independent on the walk side.
     "q319_llm_ann_filtered_graph" -> QueryDef(
@@ -353,13 +361,9 @@ object Round11 {
           .select(col("vec_id").as("cid"), col("embedding").as("ce"))
         val cents = broadcast(corpus.orderBy("cid").limit(16)
           .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
-        val entries = Similarity.assignToCentroids(
-            qs.select(col("qid"), col("qe")), "qid", "qe", cents, nKeep = 2)
-          .select(col("qid"), col("centroid_id").as("cid"))
+        val entries = Similarity.centroidEntries(qs, cents)
         val refined = Round9.refinedGraphArtifact(s, dir, corpus)
-        val codes = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet", "pqcodes_s16_c16")(
-          Similarity.pqCodes(corpus, nSub = 16, nCodes = 16, dim = 64))
+        val codes = Round9.pqCodesArtifact(s, dir, corpus)
         val keeps = Seq("f50", "f05").map(tag => (tag, keepOf(emb, tag),
           exactTop5Filtered(s, dir, tag, qs, corpus, keepOf(emb, tag))
             .select("qid", "cid")))
@@ -390,8 +394,7 @@ object Round11 {
       ${fsetExfSql("f50", F50Pred)},
       ${fsetExfSql("f05", F05Pred)},
       $fullGraphCtes,
-      ${graphEntrySql("g",
-        "SELECT vec_id, embedding FROM embeddings WHERE vec_id < 16")},
+      ${graphEntrySql("g")},
       ${beamAdcP(rounds = GraphNaiveRounds, beam = GraphNaiveBeam,
         p = "gn", edge = "e", entry = "gbent", psc = "psc")},
       ${beamAdcP(rounds = GraphBoostRounds, beam = GraphBoostBeam,
@@ -569,9 +572,7 @@ object Round11 {
             Slots.Tomb.out)
           .select(col("vec_id").as("cid"))
         val refined = Round9.refinedGraphArtifact(s, dir, corpus)
-        val codes = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet", "pqcodes_s16_c16")(
-          Similarity.pqCodes(corpus, nSub = 16, nCodes = 16, dim = 64))
+        val codes = Round9.pqCodesArtifact(s, dir, corpus)
         val pruned = refined
           .join(tomb.select(col("cid").as("u")), Seq("u"), "left_anti")
           .join(tomb.select(col("cid").as("v")), Seq("v"), "left_anti")
@@ -586,9 +587,7 @@ object Round11 {
         val survivors = corpus.join(tomb, Seq("cid"), "left_anti")
         val cents = broadcast(survivors.orderBy("cid").limit(16)
           .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
-        val entries = Similarity.assignToCentroids(
-            qs.select(col("qid"), col("qe")), "qid", "qe", cents, nKeep = 2)
-          .select(col("qid"), col("centroid_id").as("cid"))
+        val entries = Similarity.centroidEntries(qs, cents)
         val exf = exactTop5Filtered(s, dir, "surv3", qs, corpus, keepSurv)
           .select("qid", "cid")
         // both serves' visited pools are fixture+tombstone-dial-keyed
@@ -669,13 +668,9 @@ object Round11 {
         val dupRate = if (n == 0L) 0.0 else 1.0 - nu.toDouble / n
         val cents = broadcast(corpus.orderBy("cid").limit(16)
           .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
-        val entries = Similarity.assignToCentroids(
-            qs.select(col("qid"), col("qe")), "qid", "qe", cents, nKeep = 2)
-          .select(col("qid"), col("centroid_id").as("cid"))
+        val entries = Similarity.centroidEntries(qs, cents)
         val refined = Round9.refinedGraphArtifact(s, dir, corpus)
-        val codes = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet", "pqcodes_s16_c16")(
-          Similarity.pqCodes(corpus, nSub = 16, nCodes = 16, dim = 64))
+        val codes = Round9.pqCodesArtifact(s, dir, corpus)
         // the b24r4 full-corpus pool — the SAME artifact q319's naive
         // dial reads (one walk serves the dial grid AND this
         // measurement; q312 prices the live walk)
@@ -715,8 +710,7 @@ object Round11 {
       }),
       Some(s"""${Round6c.exactRecallCte},
       $fullGraphCtes,
-      ${graphEntrySql("g",
-        "SELECT vec_id, embedding FROM embeddings WHERE vec_id < 16")},
+      ${graphEntrySql("g")},
       ${beamAdcP(rounds = Round9.BeamRounds, beam = Round9.BeamWidth,
         p = "v", edge = "e", entry = "gbent", psc = "psc")},
       ${poolSql("v", Round9.BeamRounds, "vpool")},
@@ -885,8 +879,7 @@ object Round11 {
       ${ivfStandingSql("(SELECT nlist FROM nl)", "vv")},
       ${ivfFilteredAnnr("f50", "(SELECT np FROM npx)", "vb", "vv")},
       $fullGraphCtes,
-      ${graphEntrySql("g",
-        "SELECT vec_id, embedding FROM embeddings WHERE vec_id < 16")},
+      ${graphEntrySql("g")},
       ${beamAdcP(rounds = 4, beam = 9, p = "h9", edge = "e",
         entry = "gbent", psc = "psc")},
       ${poolSql("h9", 4, "spool")},
@@ -1029,9 +1022,7 @@ object Round11 {
               col("label") < 5)
           .select(col("vec_id").as("cid"))
         val refined = Round9.refinedGraphArtifact(s, dir, corpus)
-        val codes = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet", "pqcodes_s16_c16")(
-          Similarity.pqCodes(corpus, nSub = 16, nCodes = 16, dim = 64))
+        val codes = Round9.pqCodesArtifact(s, dir, corpus)
         val compacted = graft.util.FixtureArtifact.parquet(s, dir,
           "embeddings.parquet",
           s"compact_tomb3_d${Round9.NnDegree}_r1_nnd_d${Round9.NnDegree}_r${Round9.NnRounds}",
@@ -1041,9 +1032,7 @@ object Round11 {
         val survivors = corpus.join(tomb, Seq("cid"), "left_anti")
         val cents = broadcast(survivors.orderBy("cid").limit(16)
           .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
-        val entries = Similarity.assignToCentroids(
-            qs.select(col("qid"), col("qe")), "qid", "qe", cents, nKeep = 2)
-          .select(col("qid"), col("centroid_id").as("cid"))
+        val entries = Similarity.centroidEntries(qs, cents)
         val exf = exactTop5Filtered(s, dir, "surv3f50", qs, corpus, keep)
           .select("qid", "cid")
         val parts = Seq((Round9.BeamWidth, Round9.BeamRounds),
@@ -1093,14 +1082,10 @@ object Round11 {
   private def sloGraphPool(s: SparkSession, dir: String,
       qs: DataFrame, corpus: DataFrame): DataFrame = {
     val refined = Round9.refinedGraphArtifact(s, dir, corpus)
-    val codes = graft.util.FixtureArtifact.parquet(s, dir,
-      "embeddings.parquet", "pqcodes_s16_c16")(
-      Similarity.pqCodes(corpus, nSub = 16, nCodes = 16, dim = 64))
+    val codes = Round9.pqCodesArtifact(s, dir, corpus)
     val cents = broadcast(corpus.orderBy("cid").limit(16)
       .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
-    val entries = Similarity.assignToCentroids(
-        qs.select(col("qid"), col("qe")), "qid", "qe", cents, nKeep = 2)
-      .select(col("qid"), col("centroid_id").as("cid"))
+    val entries = Similarity.centroidEntries(qs, cents)
     visitedPoolArtifact(s, dir, s"b${SloBeam}_r$SloRounds",
       SloBeam.toInt, SloRounds.toInt) {
       Similarity.beamPqVisited(qs, corpus, refined, codes, entries,

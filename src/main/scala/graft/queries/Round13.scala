@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.QueryDef
-import graft.operators.{IndexAdvisor, Similarity}
+import graft.operators.{IndexAdvisor, Similarity, TopK}
 import graft.sources.Tables
 import graft.util.{Jobs, Slots}
 
@@ -860,12 +860,11 @@ object Round13 {
         // read warm (the q339 measurement-sharing shape)
         def walk(wq: DataFrame, w: DataFrame, edges: DataFrame,
             codes: DataFrame): DataFrame = {
-          val entries = Similarity.assignToCentroids(wq, "qid", "qe",
-            cents16(w), nKeep = 2)
-            .select(col("qid"), col("centroid_id").as("cid"))
-          Similarity.beamPqTopKFrom(wq, w, edges, codes, entries, k = 5,
-              beam = Round9.BeamWidth, rounds = Round9.BeamRounds,
-              nSub = 16, nCodes = 16, dim = 64)
+          val entries = Similarity.centroidEntries(wq, cents16(w))
+          TopK.perGroup(Similarity.beamPqVisited(wq, w, edges, codes,
+              entries, beam = Round9.BeamWidth, rounds = Round9.BeamRounds,
+              nSub = 16, nCodes = 16, dim = 64),
+            Seq("qid"), Seq(col("cos").desc, col("cid")), 5)
             .select("qid", "cid")
         }
         val isoCodes = graft.util.FixtureArtifact.parquet(s, dir,

@@ -185,47 +185,26 @@ object Round6 {
       ORDER BY o_custkey, o_orderkey"""))
   )
 
-  /** Shared by q255/q258: replays the LSH-seeded kNN edge build and
-    * both beam rounds as CTEs (identical for both queries — the dedup-
-    * first build produces the identical edge set by construction). */
-  private lazy val beamOracle: String = {
-        val bucket = bucketSql(Similarity.hyperplanes(6, 64))
-        s"""WITH cb AS (SELECT vec_id AS cid, $bucket AS bucket
-            FROM (SELECT vec_id, embedding AS e FROM embeddings)),
-        ep AS (SELECT a.cid AS u, b.cid AS v, ${cosSql("x", "y")} AS cos
-          FROM cb a JOIN cb b ON a.bucket = b.bucket AND a.cid <> b.cid
-          JOIN embeddings x ON a.cid = x.vec_id
-          JOIN embeddings y ON b.cid = y.vec_id
-          CROSS JOIN (SELECT unnest(range(1, 65)) AS i) i
-          GROUP BY 1, 2),
-        e AS (SELECT u, v FROM (SELECT u, v, row_number() OVER (
-            PARTITION BY u ORDER BY cos DESC, v) AS rn FROM ep) WHERE rn <= 4),
-        ent AS (SELECT MIN(vec_id) AS cid FROM embeddings),
-        qs AS (SELECT vec_id AS qid FROM embeddings WHERE vec_id < 10),
-        c1 AS (SELECT DISTINCT qid, cid FROM (
-          SELECT qs.qid, ent.cid FROM qs CROSS JOIN ent
-          UNION ALL
-          SELECT qs.qid, e.v AS cid FROM qs CROSS JOIN ent
-            JOIN e ON e.u = ent.cid)),
-        s1 AS (SELECT c1.qid, c1.cid, ${cosSql("x", "y")} AS cos
-          FROM c1 JOIN embeddings x ON c1.qid = x.vec_id
-          JOIN embeddings y ON c1.cid = y.vec_id
-          CROSS JOIN (SELECT unnest(range(1, 65)) AS i) i
-          WHERE c1.cid <> c1.qid GROUP BY 1, 2),
-        b1 AS (SELECT qid, cid FROM (SELECT qid, cid, row_number() OVER (
-            PARTITION BY qid ORDER BY cos DESC, cid) AS rn FROM s1) WHERE rn <= 4),
-        c2 AS (SELECT DISTINCT qid, cid FROM (
-          SELECT qid, cid FROM b1
-          UNION ALL
-          SELECT b1.qid, e.v AS cid FROM b1 JOIN e ON e.u = b1.cid)),
-        s2 AS (SELECT c2.qid, c2.cid, ${cosSql("x", "y")} AS cos
-          FROM c2 JOIN embeddings x ON c2.qid = x.vec_id
-          JOIN embeddings y ON c2.cid = y.vec_id
-          CROSS JOIN (SELECT unnest(range(1, 65)) AS i) i
-          WHERE c2.cid <> c2.qid GROUP BY 1, 2),
-        r AS (SELECT qid, cid, cos, row_number() OVER (
-            PARTITION BY qid ORDER BY cos DESC, cid) AS rnk FROM s2)
-        SELECT qid, cid, cos, CAST(rnk AS BIGINT) AS rnk
-        FROM r WHERE rnk <= 3 ORDER BY qid, rnk"""
-  }
+  /** Shared by q255/q258 (identical for both queries — the dedup-first
+    * build produces the identical edge set by construction): the
+    * single-table LSH-kNN edge build, the fixed min-id entry for the
+    * 10 queries, their rounded cosines to every other corpus row
+    * (`bsc`), both beam rounds through the one walk replay
+    * ([[Round11.beamAdcP]]), top-3 of the last round. */
+  private lazy val beamOracle: String =
+    s"""WITH ${Round8.stitchedEdgesSql(d = 4, nPlanes = 6, nTables = 1)},
+      qs AS MATERIALIZED (SELECT vec_id AS qid FROM embeddings WHERE vec_id < 10),
+      bsc AS MATERIALIZED (SELECT qs.qid, y.vec_id AS cid, ${cosSql("x", "y")} AS cos
+        FROM qs JOIN embeddings x ON qs.qid = x.vec_id
+        JOIN embeddings y ON y.vec_id <> qs.qid
+        CROSS JOIN (SELECT unnest(range(1, 65)) AS i) i
+        GROUP BY 1, 2),
+      ent AS (SELECT MIN(vec_id) AS cid FROM embeddings),
+      bent AS (SELECT qs.qid, ent.cid FROM qs CROSS JOIN ent),
+      ${Round11.beamAdcP(rounds = 2, beam = 4, p = "b", edge = "e",
+        entry = "bent", psc = "bsc")},
+      r AS (SELECT qid, cid, cos, row_number() OVER (
+          PARTITION BY qid ORDER BY cos DESC, cid) AS rnk FROM bs2)
+      SELECT qid, cid, cos, CAST(rnk AS BIGINT) AS rnk
+      FROM r WHERE rnk <= 3 ORDER BY qid, rnk"""
 }

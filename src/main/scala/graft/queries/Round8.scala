@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.QueryDef
-import graft.operators.{IndexAdvisor, Similarity}
+import graft.operators.{IndexAdvisor, Similarity, TopK}
 import graft.sources.Tables
 import graft.util.{Jobs, Slots}
 
@@ -83,40 +83,6 @@ object Round8 {
     repPairs.join(pmem, Seq("pa")).join(cmem, Seq("pb"))
       .select(col("da"), col("db"), col("cos"))
   }
-
-  /** DuckDB replay of `rounds` beam-search iterations over edge CTE
-    * `e` from a caller-defined per-query ENTRY CTE `bent(qid, cid)`,
-    * for the 50-query harness sample `q2` — the q255 beamOracle
-    * generalized to any (rounds, beam) and any entry strategy (q301's
-    * fixed min-id entry, q302's centroid-seeded entries): candidates
-    * bc_i = frontier ∪ out-neighbors, scored bs_i on rounded cosines,
-    * frontier bf_i = per-query top-beam. The caller's `annr` takes
-    * top-k of the LAST bs_i (top-k of the final frontier equals top-k
-    * of its scored candidate set for k ≤ beam, exactly as
-    * [[graft.operators.Similarity.beamTopKFrom]] does). */
-  private[queries] def beamRoundsSql(rounds: Int, beam: Int): String =
-    (1 to rounds).map { i =>
-      val src = if (i == 1) "bent" else s"bf${i - 1}"
-      val cand =
-        s"""bc$i AS MATERIALIZED (SELECT DISTINCT qid, cid FROM (
-          SELECT qid, cid FROM $src
-          UNION ALL
-          SELECT $src.qid, e.v AS cid FROM $src
-            JOIN e ON e.u = $src.cid))"""
-      val score =
-        s"""bs$i AS MATERIALIZED (SELECT bc$i.qid, bc$i.cid, ${Round6c.cosSql("x", "y")} AS cos
-          FROM bc$i JOIN embeddings x ON bc$i.qid = x.vec_id
-          JOIN embeddings y ON bc$i.cid = y.vec_id
-          CROSS JOIN (SELECT unnest(range(1, 65)) AS i) i
-          WHERE bc$i.cid <> bc$i.qid GROUP BY 1, 2)"""
-      val front =
-        if (i < rounds)
-          s"""bf$i AS MATERIALIZED (SELECT qid, cid FROM (SELECT qid, cid, row_number() OVER (
-            PARTITION BY qid ORDER BY cos DESC, cid) AS rn FROM bs$i)
-            WHERE rn <= $beam)"""
-        else ""
-      Seq(cand, score, front).filter(_.nonEmpty).mkString(",\n      ")
-    }.mkString(",\n      ")
 
   /** DuckDB replay of [[graft.operators.Similarity.lshKnnEdgesMultiTable]]:
     * per-table bucket CTEs (seeds 42..42+nTables-1, the q280 fragment
@@ -214,12 +180,9 @@ object Round8 {
             .groupBy("qid", "rep").agg(max("cos").as("cos"))
           val members = corpus.join(grp, Seq("ce"))
             .select(col("rep"), col("cid"))
-          val w = Window.partitionBy("qid")
-            .orderBy(col("cos").desc, col("cid"))
-          cands.join(members, Seq("rep"))
-            .filter(col("cid") =!= col("qid"))
-            .withColumn("rnk", row_number().over(w).cast("long"))
-            .filter(col("rnk") <= 5)
+          TopK.perGroup(cands.join(members, Seq("rep"))
+              .filter(col("cid") =!= col("qid")),
+            Seq("qid"), Seq(col("cos").desc, col("cid")), 5)
             .select("qid", "cid")
         }
       }),
@@ -316,9 +279,7 @@ object Round8 {
             round(expr("vec_dot(qe, ce)") /
               (expr("sqrt(vec_dot(qe, qe))") *
                 expr("sqrt(vec_dot(ce, ce))")), 6).as("cos"))
-        val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))
-        re.withColumn("rnk", row_number().over(w).cast("long"))
-          .filter(col("rnk") <= 5)
+        TopK.perGroup(re, Seq("qid"), Seq(col("cos").desc, col("cid")), 5)
           .select("qid", "cid")
       }),
       Some(s"""${Round6c.exactRecallCte},
@@ -667,9 +628,7 @@ object Round8 {
             round(expr("vec_dot(qe, ce)") /
               (expr("sqrt(vec_dot(qe, qe))") *
                 expr("sqrt(vec_dot(ce, ce))")), 6).as("cos"))
-        val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))
-        re.withColumn("rnk", row_number().over(w).cast("long"))
-          .filter(col("rnk") <= 5)
+        TopK.perGroup(re, Seq("qid"), Seq(col("cos").desc, col("cid")), 5)
           .select("qid", "cid")
       }),
       Some(s"""${Round6c.exactRecallCte},
@@ -759,20 +718,11 @@ object Round8 {
           rounds = adv.params("rounds").toInt)
       }),
       Some(s"""${Round6c.exactRecallCte},
-      cb AS MATERIALIZED (SELECT vec_id AS cid, ${Round6.bucketSql(
-          graft.operators.Similarity.hyperplanes(6, 64))} AS bucket
-        FROM (SELECT vec_id, embedding AS e FROM embeddings)),
-      ep AS MATERIALIZED (SELECT a.cid AS u, b.cid AS v, ${Round6c.cosSql("x", "y")} AS cos
-        FROM cb a JOIN cb b ON a.bucket = b.bucket AND a.cid <> b.cid
-        JOIN embeddings x ON a.cid = x.vec_id
-        JOIN embeddings y ON b.cid = y.vec_id
-        CROSS JOIN (SELECT unnest(range(1, 65)) AS i) i
-        GROUP BY 1, 2),
-      e AS MATERIALIZED (SELECT u, v FROM (SELECT u, v, row_number() OVER (
-          PARTITION BY u ORDER BY cos DESC, v) AS rn FROM ep) WHERE rn <= 4),
+      ${stitchedEdgesSql(d = 4, nPlanes = 6, nTables = 1)},
       ent AS (SELECT MIN(vec_id) AS cid FROM embeddings),
       bent AS (SELECT q2.id AS qid, ent.cid FROM q2 CROSS JOIN ent),
-      ${beamRoundsSql(rounds = 3, beam = 8)},
+      ${Round11.beamAdcP(rounds = 3, beam = 8, p = "b", edge = "e",
+        entry = "bent", psc = "ex0")},
       annr AS (SELECT qid, cid FROM (SELECT qid, cid,
           row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rnk
         FROM bs3) WHERE rnk <= 5),
@@ -796,9 +746,7 @@ object Round8 {
       (s, dir) => Round6c.recallHarness(s, dir, (qs, corpus) => {
         val cents = broadcast(corpus.orderBy("cid").limit(16)
           .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
-        val entries = Similarity.assignToCentroids(
-            qs.select(col("qid"), col("qe")), "qid", "qe", cents, nKeep = 2)
-          .select(col("qid"), col("centroid_id").as("cid"))
+        val entries = Similarity.centroidEntries(qs, cents)
         val edges = graft.util.FixtureArtifact.parquet(s, dir,
           "embeddings.parquet", "lshknn_d4_p6")(
           Similarity.lshKnnEdgesDeduped(corpus, d = 4, nPlanes = 6,
@@ -807,27 +755,10 @@ object Round8 {
           beam = 8, rounds = 3)
       }),
       Some(s"""${Round6c.exactRecallCte},
-      cb AS MATERIALIZED (SELECT vec_id AS cid, ${Round6.bucketSql(
-          graft.operators.Similarity.hyperplanes(6, 64))} AS bucket
-        FROM (SELECT vec_id, embedding AS e FROM embeddings)),
-      ep AS MATERIALIZED (SELECT a.cid AS u, b.cid AS v, ${Round6c.cosSql("x", "y")} AS cos
-        FROM cb a JOIN cb b ON a.bucket = b.bucket AND a.cid <> b.cid
-        JOIN embeddings x ON a.cid = x.vec_id
-        JOIN embeddings y ON b.cid = y.vec_id
-        CROSS JOIN (SELECT unnest(range(1, 65)) AS i) i
-        GROUP BY 1, 2),
-      e AS MATERIALIZED (SELECT u, v FROM (SELECT u, v, row_number() OVER (
-          PARTITION BY u ORDER BY cos DESC, v) AS rn FROM ep) WHERE rn <= 4),
-      cent AS (SELECT vec_id AS centroid_id, embedding AS centroid
-        FROM embeddings WHERE vec_id < 16),
-      qa0 AS (SELECT q.id, c.centroid_id,
-          round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM q2 q, cent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      bent AS (SELECT id AS qid, centroid_id AS cid FROM (
-          SELECT id, centroid_id,
-            row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-          FROM qa0) WHERE r <= 2),
-      ${beamRoundsSql(rounds = 3, beam = 8)},
+      ${stitchedEdgesSql(d = 4, nPlanes = 6, nTables = 1)},
+      ${Round11.graphEntrySql("")},
+      ${Round11.beamAdcP(rounds = 3, beam = 8, p = "b", edge = "e",
+        entry = "bent", psc = "ex0")},
       annr AS (SELECT qid, cid FROM (SELECT qid, cid,
           row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rnk
         FROM bs3) WHERE rnk <= 5),
@@ -852,9 +783,7 @@ object Round8 {
       (s, dir) => Round6c.recallHarness(s, dir, (qs, corpus) => {
         val cents = broadcast(corpus.orderBy("cid").limit(16)
           .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
-        val entries = Similarity.assignToCentroids(
-            qs.select(col("qid"), col("qe")), "qid", "qe", cents, nKeep = 2)
-          .select(col("qid"), col("centroid_id").as("cid"))
+        val entries = Similarity.centroidEntries(qs, cents)
         val edges = graft.util.FixtureArtifact.parquet(s, dir,
           "embeddings.parquet", "stitched_d4_p6_t4")(
           Similarity.lshKnnEdgesMultiTable(corpus, d = 4,
@@ -864,16 +793,9 @@ object Round8 {
       }),
       Some(s"""${Round6c.exactRecallCte},
       ${stitchedEdgesSql(d = 4, nPlanes = 6, nTables = 4)},
-      cent AS (SELECT vec_id AS centroid_id, embedding AS centroid
-        FROM embeddings WHERE vec_id < 16),
-      qa0 AS (SELECT q.id, c.centroid_id,
-          round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM q2 q, cent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      bent AS (SELECT id AS qid, centroid_id AS cid FROM (
-          SELECT id, centroid_id,
-            row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-          FROM qa0) WHERE r <= 2),
-      ${beamRoundsSql(rounds = 3, beam = 8)},
+      ${Round11.graphEntrySql("")},
+      ${Round11.beamAdcP(rounds = 3, beam = 8, p = "b", edge = "e",
+        entry = "bent", psc = "ex0")},
       annr AS (SELECT qid, cid FROM (SELECT qid, cid,
           row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rnk
         FROM bs3) WHERE rnk <= 5),

@@ -97,6 +97,16 @@ object Round9 {
         d = NnDegree, rounds = NnRounds)
     }
 
+  /** The full-corpus 16×16 PQ codes as a fixture-keyed artifact — THE
+    * resident codes every full-corpus ADC walk reads (q312, q319,
+    * q321, q322, q323, q325): one label, so no caller can build a
+    * second copy under a different name. */
+  private[queries] def pqCodesArtifact(s: SparkSession, dir: String,
+      corpus: DataFrame): DataFrame =
+    graft.util.FixtureArtifact.parquet(s, dir, "embeddings.parquet",
+      "pqcodes_s16_c16")(
+      Similarity.pqCodes(corpus, nSub = 16, nCodes = 16, dim = 64))
+
   /** q306's calibration measurement points: the q279 IVF row and the
     * q280 multi-table-LSH row, re-measured live. Target/budget sit
     * where the MEASURED table decides: budget = ceil(nu·11/20) in
@@ -244,9 +254,7 @@ object Round9 {
       (s, dir) => Round6c.recallHarness(s, dir, (qs, corpus) => {
         val cents = broadcast(corpus.orderBy("cid").limit(16)
           .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
-        val entries = Similarity.assignToCentroids(
-            qs.select(col("qid"), col("qe")), "qid", "qe", cents, nKeep = 2)
-          .select(col("qid"), col("centroid_id").as("cid"))
+        val entries = Similarity.centroidEntries(qs, cents)
         // both build stages are fixture-keyed artifacts (built once
         // per harness run) — see refinedGraphArtifact
         val refined = refinedGraphArtifact(s, dir, corpus)
@@ -256,16 +264,9 @@ object Round9 {
       Some(s"""${Round6c.exactRecallCte},
       ${Round8.stitchedEdgesSql(d = 4, nPlanes = 6, nTables = 4, out = "e0")},
       ${nnDescentSql(rounds = NnRounds, d = NnDegree, src = "e0", out = "e")},
-      cent AS (SELECT vec_id AS centroid_id, embedding AS centroid
-        FROM embeddings WHERE vec_id < 16),
-      qa0 AS (SELECT q.id, c.centroid_id,
-          round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM q2 q, cent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      bent AS (SELECT id AS qid, centroid_id AS cid FROM (
-          SELECT id, centroid_id,
-            row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-          FROM qa0) WHERE r <= 2),
-      ${Round8.beamRoundsSql(rounds = BeamRounds, beam = BeamWidth)},
+      ${Round11.graphEntrySql("")},
+      ${Round11.beamAdcP(rounds = BeamRounds, beam = BeamWidth, p = "b",
+        edge = "e", entry = "bent", psc = "ex0")},
       annr AS (SELECT qid, cid FROM (SELECT qid, cid,
           row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rnk
         FROM bs$BeamRounds) WHERE rnk <= 5),

@@ -704,7 +704,7 @@ class OperatorsSpec extends SparkTestBase {
       a.params("d") == 24L, s"refined graph row must win: $a")
   }
 
-  test("pqCodes + beamPqTopKFrom: complete graph + wide beam = exact top-k") {
+  test("pqCodes + beamPqVisited: complete graph + wide beam = exact top-k") {
     // deterministic 24-node corpus (fixed LCG, nonzero vectors)
     var st = 98765L
     def nx(): Float = { st = st * 6364136223846793005L + 1442695040888963407L
@@ -732,15 +732,32 @@ class OperatorsSpec extends SparkTestBase {
     val complete = (for (u <- 0L until 24L; v <- 0L until 24L if u != v)
       yield (u, v)).toDF("u", "v")
     val entries = qs.select(col("qid")).withColumn("cid", lit(0L))
-    val got = Similarity.beamPqTopKFrom(qs, corpus, complete, codes,
-        entries, k = 3, beam = 24, rounds = 1, nSub = 4, nCodes = 8,
-        dim = 8)
+    val got = TopK.perGroup(Similarity.beamPqVisited(qs, corpus, complete,
+          codes, entries, beam = 24, rounds = 1, nSub = 4, nCodes = 8,
+          dim = 8),
+        Seq("qid"), Seq(col("cos").desc, col("cid")), 3)
       .select("qid", "cid", "rnk").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val exact = Similarity.cosineTopK(qs, corpus, k = 3)
       .select("qid", "cid", "rnk").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == exact)
+  }
+
+  test("beamTopKFrom refuses k > beam") {
+    // the answer is the top-k of the last round, which is the top-k of
+    // the final frontier only when k <= beam: a larger k must fail
+    // loudly instead of returning beam rows per query
+    val corpus = Seq((0L, Array(1.0f, 0.0f)), (1L, Array(0.0f, 1.0f)))
+      .toDF("cid", "ce")
+    val qs = corpus.select(col("cid").as("qid"), col("ce").as("qe"))
+    val edges = Seq((0L, 1L), (1L, 0L)).toDF("u", "v")
+    val entries = qs.select(col("qid"), lit(0L).as("cid"))
+    val e = intercept[IllegalArgumentException] {
+      Similarity.beamTopKFrom(qs, corpus, edges, entries, k = 5, beam = 4,
+        rounds = 1)
+    }
+    assert(e.getMessage.contains("k 5 must not exceed beam 4"))
   }
 
   test("beamPqSemDedupBatch: complete-graph alerts = exact scan; dedup-first expansion") {
@@ -756,11 +773,16 @@ class OperatorsSpec extends SparkTestBase {
       yield (u, v)).toDF("u", "v")
     val cents = broadcast(corpus.orderBy("cid").limit(4)
       .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
-    def alerts(b: org.apache.spark.sql.DataFrame) =
-      Similarity.beamPqSemDedupBatch(b, corpus, complete, codes, cents,
-          beam = 20, rounds = 1, nSub = 4, nCodes = 8, dim = 8,
-          threshold = 0.2)
+    // the batch's own scored walk is the live reference; the standing
+    // table below must serve the same alerts
+    def walk(b: org.apache.spark.sql.DataFrame) =
+      Similarity.beamPqWalkScoredAll(b, corpus, complete, codes, cents,
+        beam = 20, rounds = 1, nSub = 4, nCodes = 8, dim = 8)
+    def alertsFrom(b: org.apache.spark.sql.DataFrame,
+        scored: org.apache.spark.sql.DataFrame) =
+      Similarity.beamPqSemDedupBatch(b, scored, threshold = 0.2)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def alerts(b: org.apache.spark.sql.DataFrame) = alertsFrom(b, walk(b))
     // complete graph + beam >= corpus: the visited list is the whole
     // corpus, so alerts == the exact probe x corpus threshold scan
     val got = alerts(batch)
@@ -779,15 +801,9 @@ class OperatorsSpec extends SparkTestBase {
     // standing scored-walk table serve (q313/q317's shared artifact):
     // value-identical to the live walk, including duplicate expansion
     // and batch-subset semi-join serving
-    val sa = Similarity.beamPqWalkScoredAll(dupBatch, corpus, complete,
-      codes, cents, beam = 20, rounds = 1, nSub = 4, nCodes = 8, dim = 8)
-    def alertsSA(b: org.apache.spark.sql.DataFrame) =
-      Similarity.beamPqSemDedupBatch(b, corpus, complete, codes, cents,
-          beam = 20, rounds = 1, nSub = 4, nCodes = 8, dim = 8,
-          threshold = 0.2, scoredAll = Some(sa))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(alertsSA(dupBatch) == gotDup)
-    assert(alertsSA(batch) == got)
+    val sa = walk(dupBatch)
+    assert(alertsFrom(dupBatch, sa) == gotDup)
+    assert(alertsFrom(batch, sa) == got)
   }
 
   test("q314 sampled calibration decides like full calibration at both SFs") {
@@ -846,12 +862,18 @@ class OperatorsSpec extends SparkTestBase {
       yield (u, v)).toDF("u", "v")
     val cents = broadcast(corpus.orderBy("cid").limit(4)
       .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
+    def walk(b: org.apache.spark.sql.DataFrame) =
+      Similarity.beamPqWalkScoredAll(b, corpus, complete, codes, cents,
+        beam = 20, rounds = 1, nSub = 4, nCodes = 8, dim = 8)
     // the MERGE-accumulate + read-time cap, as the q317 reader does
-    // (probe ids here are >= 100 instead of the slot hash)
-    def finalEdges(batches: Seq[org.apache.spark.sql.DataFrame]) = {
+    // (probe ids here are >= 100 instead of the slot hash); each batch
+    // is served from `scored(batch)` — by default the batch's own walk,
+    // the live reference
+    def finalEdges(batches: Seq[org.apache.spark.sql.DataFrame],
+        scored: org.apache.spark.sql.DataFrame =>
+          org.apache.spark.sql.DataFrame = walk) = {
       val acc = batches.map(b =>
-          Similarity.graphInsertBatch(b, corpus, complete, codes, cents,
-            beam = 20, rounds = 1, nSub = 4, nCodes = 8, dim = 8, dOut = 3))
+          Similarity.graphInsertBatch(b, scored(b), dOut = 3))
         .reduce(_ unionByName _).dropDuplicates("u", "v")
       val wCap = org.apache.spark.sql.expressions.Window
         .partitionBy("u").orderBy(col("cos").desc, col("v"))
@@ -888,24 +910,10 @@ class OperatorsSpec extends SparkTestBase {
 
     // standing scored-walk table serve (q313/q317's shared artifact):
     // value-identical to the live walk, whole and split
-    val sa = Similarity.beamPqWalkScoredAll(batchD, corpus, complete,
-      codes, cents, beam = 20, rounds = 1, nSub = 4, nCodes = 8, dim = 8)
-    def finalEdgesSA(batches: Seq[org.apache.spark.sql.DataFrame]) = {
-      val acc = batches.map(b =>
-          Similarity.graphInsertBatch(b, corpus, complete, codes, cents,
-            beam = 20, rounds = 1, nSub = 4, nCodes = 8, dim = 8, dOut = 3,
-            scoredAll = Some(sa)))
-        .reduce(_ unionByName _).dropDuplicates("u", "v")
-      val wCap = org.apache.spark.sql.expressions.Window
-        .partitionBy("u").orderBy(col("cos").desc, col("v"))
-      acc.withColumn("rn", when(col("u") >= 100L, lit(0))
-          .otherwise(row_number().over(wCap)))
-        .filter(col("rn") <= 3).select("u", "v")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    }
-    assert(finalEdgesSA(Seq(batchD)) == wholeD)
-    assert(finalEdgesSA(Seq(batchD.filter(col("da") <= 105L),
-      batchD.filter(col("da") > 105L))) == wholeD)
+    val sa = walk(batchD)
+    assert(finalEdges(Seq(batchD), _ => sa) == wholeD)
+    assert(finalEdges(Seq(batchD.filter(col("da") <= 105L),
+      batchD.filter(col("da") > 105L)), _ => sa) == wholeD)
   }
 
   test("nnDescentEdges: degree cap, monotone best edge, exact on complete seed") {

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.operators.{IndexAdvisor, Similarity}
 import graft.operators.IndexAdvisor.RecallRow
 
@@ -80,35 +79,6 @@ class Round11Spec extends SparkTestBase {
     }
   }
 
-  test("beamPqTopKFromWhere == shared-walk filtered top-5 (q319's algebra)") {
-    val corpus = lcgCorpus(97531L, 24, 8).toDF("cid", "ce")
-    val queries = lcgCorpus(8642L, 3, 8).map { case (i, e) => (100L + i, e) }
-      .toDF("qid", "qe")
-    val edges = (for (u <- 0L until 24L; v <- 0L until 24L
-      if u != v && (u + v) % 3 != 0) yield (u, v)).toDF("u", "v")
-    val codes = Similarity.pqCodes(corpus, nSub = 4, nCodes = 8, dim = 8)
-    val cents = broadcast(corpus.orderBy("cid").limit(4)
-      .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
-    val entries = Similarity.assignToCentroids(queries, "qid", "qe",
-      cents, nKeep = 2).select(col("qid"), col("centroid_id").as("cid"))
-    val keep = corpus.filter(col("cid") % 2 === 0).select("cid")
-    val direct = Similarity.beamPqTopKFromWhere(queries, corpus, edges,
-        codes, entries, keep, k = 5, beam = 6, rounds = 2, nSub = 4,
-        nCodes = 8, dim = 8)
-      .select("qid", "cid", "cos").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val vis = Similarity.beamPqVisited(queries, corpus, edges, codes,
-      entries, beam = 6, rounds = 2, nSub = 4, nCodes = 8, dim = 8)
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))
-    val shared = vis.join(keep, Seq("cid"), "left_semi")
-      .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 5)
-      .select("qid", "cid", "cos").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(direct == shared && direct.nonEmpty)
-    // every emitted id satisfies the predicate
-    assert(direct.forall(_._2 % 2 == 0))
-  }
-
   test("graphDeleteCompact: complete-seed delete+compact == rebuild (q321)") {
     val vecs = lcgCorpus(24680L, 20, 8)
     val corpus = vecs.toDF("cid", "ce")
@@ -143,8 +113,9 @@ class Round11Spec extends SparkTestBase {
     val codes = Similarity.pqCodes(corpus, nSub = 4, nCodes = 8, dim = 8)
     val cents = broadcast(corpus.orderBy("cid").limit(4)
       .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
-    val inserted = Similarity.graphInsertBatch(batch, corpus, standing,
-      codes, cents, beam = 8, rounds = 1, nSub = 4, nCodes = 8, dim = 8,
+    val inserted = Similarity.graphInsertBatch(batch,
+      Similarity.beamPqWalkScoredAll(batch, corpus, standing, codes, cents,
+        beam = 8, rounds = 1, nSub = 4, nCodes = 8, dim = 8),
       dOut = 3)
     val maintained = standing.select(col("u"), col("v"))
       .unionByName(inserted.select("u", "v")).dropDuplicates("u", "v")
