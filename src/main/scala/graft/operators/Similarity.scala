@@ -30,10 +30,69 @@ import graft.util.Jobs
 object Similarity {
 
   /** Per-query top-k of a scored (qid, cid, cos) frame by (cos DESC,
-    * cid), numbered `rnk` — the rank every ANN serve and the recall
+    * cid), numbered `rankCol` — the rank every ANN serve and the recall
     * harness share. */
-  private def topKByCos(scored: DataFrame, k: Int): DataFrame =
-    TopK.perGroup(scored, Seq("qid"), Seq(col("cos").desc, col("cid")), k)
+  def topKByCos(scored: DataFrame, k: Int, rankCol: String = "rnk"): DataFrame =
+    TopK.perGroup(scored, Seq("qid"), Seq(col("cos").desc, col("cid")), k,
+      rankCol)
+
+  // ---- the exact score -------------------------------------------------
+  // Every engine path scores a vector pair the same way — the same norm,
+  // the same quotient, the same 6-digit rounding — which is what lets the
+  // recall family carry exact oracles (`Round6c.cosSql` is the DuckDB
+  // twin). These are the only spellings of that score in `src/main`.
+  // The callers must have registered `vec_dot` (NativeExpressions).
+
+  /** The vector norm `sqrt(v·v)` of the array column named `v`. */
+  def norm(v: String): Column = expr(s"sqrt(vec_dot($v, $v))")
+
+  /** `a·b / (na·nb)`, unrounded: the quotient [[cos]] and [[maxsim]]
+    * round. `vec_dot` is the codegen'd native expression — a tight
+    * primitive loop per pair. */
+  private def unitDot(a: String, b: String, na: Column, nb: Column): Column =
+    expr(s"vec_dot($a, $b)") / (na * nb)
+
+  /** The exact score of array columns `a` and `b` with norms `na` and
+    * `nb`: their cosine rounded to 6 digits *before* any ranking, so
+    * orderings are reproducible across engines and partitionings (ties
+    * then break on id). */
+  def cos(a: String, b: String, na: Column, nb: Column): Column =
+    round(unitDot(a, b, na, nb), 6)
+
+  /** [[cos]] with both norms computed in place, for pair sets that carry
+    * no per-row norm column. */
+  def cos(a: String, b: String): Column = cos(a, b, norm(a), norm(b))
+
+  /** Exact re-rank of a candidate pool: (qid, cid) pairs → (qid, cid,
+    * cos). The pool joins the broadcast queries (qid, qe) and then the
+    * corpus (cid, ce) on cid, so full-precision vectors are touched only
+    * for pool members; each norm is computed once per row, not per
+    * pair. Rank the result with [[topKByCos]]. */
+  def exactCos(pairs: DataFrame, queries: DataFrame,
+      corpus: DataFrame): DataFrame = {
+    NativeExpressions.register(pairs.sparkSession)
+    pairs.join(broadcast(queries.withColumn("qn", norm("qe"))), "qid")
+      .join(corpus.withColumn("cn", norm("ce")), "cid")
+      .select(col("qid"), col("cid"),
+        cos("qe", "ce", col("qn"), col("cn")).as("cos"))
+  }
+
+  /** The ColBERT maxsim score over already-joined token pairs (qd, cd,
+    * qt, qe, qn, ce, cn): per token pair the micro-cosine
+    * round(cos·10⁶) as BIGINT (ties away from zero in both engines),
+    * its max over the candidate doc's tokens per query token, summed
+    * per (qd, cd) — an exact int64 `score` that hash-compares. */
+  def maxsim(pairs: DataFrame): DataFrame =
+    pairs.select(col("qd"), col("cd"), col("qt"),
+        round(unitDot("qe", "ce", col("qn"), col("cn")) * lit(1000000.0))
+          .cast("long").as("mc"))
+      .groupBy("qd", "cd", "qt").agg(max("mc").as("mx"))
+      .groupBy("qd", "cd").agg(sum("mx").as("score"))
+
+  /** Per-query-doc top-k of a (qd, cd, score) [[maxsim]] frame by
+    * (score DESC, cd), numbered `rnk`. */
+  def topKByMaxsim(scored: DataFrame, k: Int): DataFrame =
+    TopK.perGroup(scored, Seq("qd"), Seq(col("score").desc, col("cd")), k)
 
   /** Exact cosine top-k of `corpus` rows for each row of `queries`.
     * Scores are rounded to 6 digits *before* ranking so ordering is
@@ -44,14 +103,13 @@ object Similarity {
       corpus: DataFrame, // cid, ce
       k: Int): DataFrame = {
     NativeExpressions.register(queries.sparkSession)
-    // norms once per side (not per pair); vec_dot is the codegen'd
-    // native expression — tight primitive loop per candidate pair
-    val q = queries.withColumn("qn", expr("sqrt(vec_dot(qe, qe))"))
-    val c = corpus.withColumn("cn", expr("sqrt(vec_dot(ce, ce))"))
+    // norms once per side (not per pair)
+    val q = queries.withColumn("qn", norm("qe"))
+    val c = corpus.withColumn("cn", norm("ce"))
     val scored = broadcast(q).crossJoin(c)
       .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
-        round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn")), 6).as("cos"))
+        cos("qe", "ce", col("qn"), col("cn")).as("cos"))
     topKByCos(scored, k)
   }
 
@@ -69,13 +127,13 @@ object Similarity {
     NativeExpressions.register(emb.sparkSession)
     val a = emb.select(col(idCol).as("va"), col(vecCol).as("ea"),
         col(blockCol).as("block"))
-      .withColumn("na", expr("sqrt(vec_dot(ea, ea))"))
+      .withColumn("na", norm("ea"))
     val b = emb.select(col(idCol).as("vb"), col(vecCol).as("eb"),
         col(blockCol).as("blockb"))
-      .withColumn("nb", expr("sqrt(vec_dot(eb, eb))"))
+      .withColumn("nb", norm("eb"))
     a.join(b, col("block") === col("blockb") && col("va") < col("vb"))
       .select(col("va"), col("vb"), col("block").cast("long").as("label"),
-        round(expr("vec_dot(ea, eb)") / (col("na") * col("nb")), 6).as("cos"))
+        cos("ea", "eb", col("na"), col("nb")).as("cos"))
       .filter(col("cos") >= threshold)
   }
 
@@ -106,14 +164,14 @@ object Similarity {
       .groupBy(col(blockCol).as("block"), col(vecCol).as("e"))
       .agg(min(col(idCol)).as("rep"), collect_list(col(idCol)).as("ids"))
     val a = g.select(col("rep").as("ra"), col("e").as("ea"), col("block"))
-      .withColumn("na", expr("sqrt(vec_dot(ea, ea))"))
+      .withColumn("na", norm("ea"))
     val b = g.select(col("rep").as("rb"), col("e").as("eb"),
         col("block").as("blockb"))
-      .withColumn("nb", expr("sqrt(vec_dot(eb, eb))"))
+      .withColumn("nb", norm("eb"))
     val repPairs = a
       .join(b, col("block") === col("blockb") && col("ra") < col("rb"))
       .select(col("ra"), col("rb"), col("block"),
-        round(expr("vec_dot(ea, eb)") / (col("na") * col("nb")), 6).as("cos"))
+        cos("ea", "eb", col("na"), col("nb")).as("cos"))
       .filter(col("cos") >= threshold)
     val cross = repPairs
       .join(g.select(col("rep").as("ra"), col("ids").as("idsa")), "ra")
@@ -125,8 +183,7 @@ object Similarity {
         col("block").cast("long").as("label"), col("cos"))
     val intra = g
       .filter(size(col("ids")) > 1)
-      .withColumn("cos", round(expr("vec_dot(e, e)")
-        / (expr("sqrt(vec_dot(e, e))") * expr("sqrt(vec_dot(e, e))")), 6))
+      .withColumn("cos", cos("e", "e"))
       .filter(col("cos") >= threshold)
       .select(explode(col("ids")).as("x"), col("ids"), col("block"), col("cos"))
       .select(col("x"), explode(col("ids")).as("y"), col("block"), col("cos"))
@@ -169,12 +226,12 @@ object Similarity {
         .drop("__d", "__r", "centroid")
     }
 
-    val qb = assign(queries.withColumn("qn", expr("sqrt(vec_dot(qe, qe))")), "qe")
-    val cb = assign(corpus.withColumn("cn", expr("sqrt(vec_dot(ce, ce))")), "ce")
+    val qb = assign(queries.withColumn("qn", norm("qe")), "qe")
+    val cb = assign(corpus.withColumn("cn", norm("ce")), "ce")
     val scored = qb.join(cb, "centroid_id")
       .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
-        round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn")), 6).as("cos"))
+        cos("qe", "ce", col("qn"), col("cn")).as("cos"))
     topKByCos(scored, k)
   }
 
@@ -247,15 +304,15 @@ object Similarity {
         .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
 
     val qb = assignToCentroids(
-      queries.withColumn("qn", expr("sqrt(vec_dot(qe, qe))")),
+      queries.withColumn("qn", norm("qe")),
       "qid", "qe", centroids, nprobe)
     val cb = assignToCentroids(
-      corpus.withColumn("cn", expr("sqrt(vec_dot(ce, ce))")),
+      corpus.withColumn("cn", norm("ce")),
       "cid", "ce", centroids, 1)
     val scored = qb.join(cb, "centroid_id")
       .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
-        round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn")), 6).as("cos"))
+        cos("qe", "ce", col("qn"), col("cn")).as("cos"))
     topKByCos(scored, k)
   }
 
@@ -308,7 +365,7 @@ object Similarity {
   def ivfAssignIndex(corpus: DataFrame, cents: DataFrame): DataFrame = {
     NativeExpressions.register(corpus.sparkSession)
     assignToCentroids(
-      corpus.withColumn("cn", expr("sqrt(vec_dot(ce, ce))")),
+      corpus.withColumn("cn", norm("ce")),
       "cid", "ce", cents, 1)
   }
 
@@ -323,13 +380,13 @@ object Similarity {
       nprobe: Int): DataFrame = {
     NativeExpressions.register(queries.sparkSession)
     val qb = assignToCentroids(
-      queries.withColumn("qn", expr("sqrt(vec_dot(qe, qe))")),
+      queries.withColumn("qn", norm("qe")),
       "qid", "qe", cents, nprobe)
     val filtered = cb.join(keep.select("cid"), Seq("cid"), "left_semi")
     val scored = qb.join(filtered, "centroid_id")
       .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
-        round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn")), 6).as("cos"))
+        cos("qe", "ce", col("qn"), col("cn")).as("cos"))
     topKByCos(scored, k)
   }
 
@@ -384,14 +441,8 @@ object Similarity {
       .withColumn("rn", row_number().over(
         Window.partitionBy("qid").orderBy(col("dist"), col("ccid"))))
       .filter(col("rn") <= nprobe).select(col("qid"), col("ccid"))
-    val q = queries.withColumn("qn", expr("sqrt(vec_dot(qe, qe))"))
-    val c = corpus.withColumn("cn", expr("sqrt(vec_dot(ce, ce))"))
-    val scored = qa.join(ca, "ccid")
-      .join(broadcast(q), "qid").join(c, "cid")
-      .filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
-        round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn")), 6).as("cos"))
-    topKByCos(scored, k)
+    val cand = qa.join(ca, "ccid").filter(col("qid") =!= col("cid"))
+    topKByCos(exactCos(cand, queries, corpus), k)
   }
 
   /** Multi-table LSH top-k (the classic L-table OR-construction): build
@@ -423,12 +474,7 @@ object Similarity {
     val cb = corpus.select(col("cid"), explode(tableKeys("ce")).as("tb"))
     val cand = qb.join(cb, "tb").filter(col("qid") =!= col("cid"))
       .select("qid", "cid").distinct()
-    val q = queries.withColumn("qn", expr("sqrt(vec_dot(qe, qe))"))
-    val c = corpus.withColumn("cn", expr("sqrt(vec_dot(ce, ce))"))
-    val scored = cand.join(broadcast(q), "qid").join(c, "cid")
-      .select(col("qid"), col("cid"),
-        round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn")), 6).as("cos"))
-    topKByCos(scored, k)
+    topKByCos(exactCos(cand, queries, corpus), k)
   }
 
   /** Deterministic pseudo-random hyperplanes (linear-congruential doubles
@@ -457,14 +503,14 @@ object Similarity {
     val planes = hyperplanes(nPlanes, dim)
     val qb = queries.withColumn("bucket",
         VectorFunctions.hyperplaneBucket(col("qe"), planes))
-      .withColumn("qn", expr("sqrt(vec_dot(qe, qe))"))
+      .withColumn("qn", norm("qe"))
     val cb = corpus.withColumn("bucket",
         VectorFunctions.hyperplaneBucket(col("ce"), planes))
-      .withColumn("cn", expr("sqrt(vec_dot(ce, ce))"))
+      .withColumn("cn", norm("ce"))
     val scored = qb.join(cb, "bucket")
       .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
-        round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn")), 6).as("cos"))
+        cos("qe", "ce", col("qn"), col("cn")).as("cos"))
     topKByCos(scored, k)
   }
 
@@ -490,15 +536,15 @@ object Similarity {
       (0 until nPlanes).map(j => expr(s"bucket0 ^ ${1L << j}"))
     val qb = queries.withColumn("bucket0",
         VectorFunctions.hyperplaneBucket(col("qe"), planes))
-      .withColumn("qn", expr("sqrt(vec_dot(qe, qe))"))
+      .withColumn("qn", norm("qe"))
       .withColumn("bucket", explode(array(probes: _*)))
     val cb = corpus.withColumn("bucket",
         VectorFunctions.hyperplaneBucket(col("ce"), planes))
-      .withColumn("cn", expr("sqrt(vec_dot(ce, ce))"))
+      .withColumn("cn", norm("ce"))
     val scored = qb.join(cb, "bucket")
       .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
-        round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn")), 6).as("cos"))
+        cos("qe", "ce", col("qn"), col("cn")).as("cos"))
     topKByCos(scored, k)
   }
 
@@ -518,14 +564,14 @@ object Similarity {
     val planes = hyperplanes(nPlanes, dim, seed)
     val cb = corpus.withColumn("bucket",
         VectorFunctions.hyperplaneBucket(col("ce"), planes))
-      .withColumn("cn", expr("sqrt(vec_dot(ce, ce))"))
+      .withColumn("cn", norm("ce"))
     val a = cb.select(col("cid").as("u"), col("ce").as("ue"),
       col("cn").as("un"), col("bucket"))
     val b = cb.select(col("cid").as("v"), col("ce").as("ve"),
       col("cn").as("vn"), col("bucket"))
     val scored = a.join(b, Seq("bucket")).filter(col("u") =!= col("v"))
       .select(col("u"), col("v"),
-        round(expr("vec_dot(ue, ve)") / (col("un") * col("vn")), 6).as("cos"))
+        cos("ue", "ve", col("un"), col("vn")).as("cos"))
     val w = Window.partitionBy("u").orderBy(col("cos").desc, col("v"))
     scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= d)
       .select(col("u"), col("v"))
@@ -583,7 +629,7 @@ object Similarity {
     val g = corpus.groupBy(col("ce"))
       .agg(min("cid").as("rep"), collect_list("cid").as("ids"))
       .withColumn("bucket", VectorFunctions.hyperplaneBucket(col("ce"), planes))
-      .withColumn("nn", expr("sqrt(vec_dot(ce, ce))"))
+      .withColumn("nn", norm("ce"))
       .persist()
     val a = g.select(col("rep").as("ra"), col("ce").as("ea"),
       col("nn").as("na"), col("bucket"), col("ids").as("idsa"))
@@ -591,12 +637,11 @@ object Similarity {
       col("nn").as("nb"), col("bucket"), col("ids").as("idsb"))
     val rp = a.join(b, Seq("bucket")).filter(col("ra") =!= col("rb"))
       .select(col("ra"), col("idsa"), col("rb"), col("idsb"),
-        round(expr("vec_dot(ea, eb)") / (col("na") * col("nb")), 6).as("cos"))
+        cos("ea", "eb", col("na"), col("nb")).as("cos"))
     val self = g.filter(size(col("ids")) > 1)
       .select(col("rep").as("ra"), col("ids").as("idsa"),
         col("rep").as("rb"), col("ids").as("idsb"),
-        round(expr("vec_dot(ce, ce)")
-          / (col("nn") * col("nn")), 6).as("cos"))
+        cos("ce", "ce", col("nn"), col("nn")).as("cos"))
     val wg = Window.partitionBy("ra").orderBy(col("cos").desc, col("rb"))
     val kept = rp.unionByName(self)
       .withColumn("gr", row_number().over(wg)).filter(col("gr") <= d + 1)
@@ -657,7 +702,7 @@ object Similarity {
       corpus: DataFrame /* cid, ce */ , d: Int, rounds: Int = 1): DataFrame = {
     val spark = corpus.sparkSession
     NativeExpressions.register(spark)
-    val c = corpus.withColumn("nn", expr("sqrt(vec_dot(ce, ce))"))
+    val c = corpus.withColumn("nn", norm("ce"))
     val cu = c.select(col("cid").as("u"), col("ce").as("ue"), col("nn").as("un"))
     val cv = c.select(col("cid").as("v"), col("ce").as("ve"), col("nn").as("vn"))
     var edges = Jobs.cut(edges0.select(col("u"), col("v")), "nndescent_e0")
@@ -673,7 +718,7 @@ object Similarity {
         .filter(col("u") =!= col("v")).distinct()
       val scored = cands.join(cu, Seq("u")).join(cv, Seq("v"))
         .select(col("u"), col("v"),
-          round(expr("vec_dot(ue, ve)") / (col("un") * col("vn")), 6).as("cos"))
+          cos("ue", "ve", col("un"), col("vn")).as("cos"))
       val w = Window.partitionBy("u").orderBy(col("cos").desc, col("v"))
       edges = Jobs.cut(scored.withColumn("rn", row_number().over(w))
         .filter(col("rn") <= d).select(col("u"), col("v")), s"nndescent_e$r")
@@ -776,8 +821,22 @@ object Similarity {
     * artifact instead of re-scanning full vectors per walk round. */
   def cosNormsDF(corpus: DataFrame): DataFrame = {
     NativeExpressions.register(corpus.sparkSession)
-    corpus.select(col("cid"), expr("sqrt(vec_dot(ce, ce))").as("cn"))
+    corpus.select(col("cid"), norm("ce").as("cn"))
   }
+
+  /** The broadcast query norms (qid, qn) the ADC scorers divide by. */
+  private def queryNorms(queries: DataFrame): DataFrame =
+    broadcast(queries.select(col("qid"), norm("qe").as("qn")))
+
+  /** The ADC-approximate cosine of (qid, cid, adc) rows: the exact int64
+    * partial-dot sum divided once by the true stored norms — `qn`
+    * (qid, qn) and `cn` (cid, cn) — and rounded to 6 digits (the q307
+    * recipe), so an ADC rank replays exactly in the oracle. */
+  private def adcCos(adc: DataFrame, qn: DataFrame, cn: DataFrame): DataFrame =
+    adc.join(qn, "qid").join(cn, "cid")
+      .select(col("qid"), col("cid"),
+        round(col("adc").cast("double") /
+          (lit(1.0e12) * col("qn") * col("cn")), 6).as("cos"))
 
   /** Per-member PQ codes (cid, s, code) — the RESIDENT compressed
     * representation shared by the scan-all server ([[pqTopK]]) and the
@@ -829,29 +888,14 @@ object Similarity {
     val qtab = broadcast(quantCoords(queries, "qid", "qe").join(cb, Seq("i"))
       .groupBy(col("qid"), expr(s"(i - 1) div $dsub").as("s"), col("code"))
       .agg(sum(col("x") * col("cx")).as("pdot")))
-    val q = queries.withColumn("qn", expr("sqrt(vec_dot(qe, qe))"))
-    val c = corpus.withColumn("cn", expr("sqrt(vec_dot(ce, ce))"))
     val adc = codes.join(qtab, Seq("s", "code"))
       .filter(col("qid") =!= col("cid"))
       .groupBy("qid", "cid").agg(sum("pdot").as("adc"))
-    val approx = adc
-      .join(broadcast(q.select(col("qid"), col("qn"))), "qid")
-      .join(c.select(col("cid"), col("cn")), "cid")
-      .select(col("qid"), col("cid"),
-        round(col("adc").cast("double") /
-          (lit(1.0e12) * col("qn") * col("cn")), 6).as("cos"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))
-    if (rerank <= 0) {
-      approx.withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= k)
-    } else {
-      val pool = approx.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= rerank).select("qid", "cid")
-      pool.join(broadcast(q), "qid").join(c, "cid")
-        .select(col("qid"), col("cid"),
-          round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn")), 6).as("cos"))
-        .withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= k)
+    val approx = adcCos(adc, queryNorms(queries), cosNormsDF(corpus))
+    if (rerank <= 0) topKByCos(approx, k)
+    else {
+      val pool = topKByCos(approx, rerank, "rn").select("qid", "cid")
+      topKByCos(exactCos(pool, queries, corpus), k)
     }
   }
 
@@ -1065,18 +1109,9 @@ object Similarity {
       corpus: DataFrame, // cid, ce — cold storage, pool-bounded join
       k: Int,
       rerank: Int): DataFrame = {
-    NativeExpressions.register(queries.sparkSession)
-    val wd = Window.partitionBy("qid").orderBy(col("dist"), col("cid"))
-    val pool = cand.withColumn("rn", row_number().over(wd))
-      .filter(col("rn") <= rerank).select("qid", "cid")
-    val q = queries.withColumn("qn", expr("sqrt(vec_dot(qe, qe))"))
-    val c = corpus.withColumn("cn", expr("sqrt(vec_dot(ce, ce))"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))
-    pool.join(broadcast(q), "qid").join(c, "cid")
-      .select(col("qid"), col("cid"),
-        round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn")), 6).as("cos"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
+    val pool = TopK.perGroup(cand, Seq("qid"), Seq(col("dist"), col("cid")),
+      rerank, rankCol = "rn").select("qid", "cid")
+    topKByCos(exactCos(pool, queries, corpus), k)
   }
 
   /** Per-micro-batch semantic-dedup scoring against a PQ-compressed
@@ -1108,7 +1143,7 @@ object Similarity {
       .agg(min("da").as("rep"), collect_list("da").as("ids"))
     val reps = g.select(col("rep").as("pa"), col("ea"))
     val assigned = assignToCentroids(reps, "pa", "ea", idx.cents)
-      .withColumn("na", expr("sqrt(vec_dot(ea, ea))"))
+      .withColumn("na", norm("ea"))
       .select(col("pa"), col("ea"), col("na"), col("centroid_id").as("cl"))
     val lut = broadcast(quantCoords(reps, "pa", "ea")
       .join(assigned.select("pa", "cl"), "pa")
@@ -1123,15 +1158,14 @@ object Similarity {
       .join(idx.enc.select(col("rep").as("pb"), col("s"), col("code")), "pb")
       .join(lut, Seq("pa", "s", "code"))
       .groupBy("pa", "pb").agg(sum("d").as("dist"))
-    val wd = Window.partitionBy("pa").orderBy(col("dist"), col("pb"))
-    val pool = adc.withColumn("rn", row_number().over(wd))
-      .filter(col("rn") <= m).select("pa", "pb")
+    val pool = TopK.perGroup(adc, Seq("pa"), Seq(col("dist"), col("pb")), m,
+      rankCol = "rn").select("pa", "pb")
     val corpusReps = idx.grp.select(col("rep").as("pb"), col("ce").as("eb"))
-      .withColumn("nb", expr("sqrt(vec_dot(eb, eb))"))
+      .withColumn("nb", norm("eb"))
     val scored = pool.join(assigned.select("pa", "ea", "na"), "pa")
       .join(corpusReps, "pb")
       .select(col("pa"), col("pb"),
-        round(expr("vec_dot(ea, eb)") / (col("na") * col("nb")), 6).as("cos"))
+        cos("ea", "eb", col("na"), col("nb")).as("cos"))
       .filter(col("cos") >= threshold)
     val pmem = g.select(col("rep").as("pa"), explode(col("ids")).as("da"))
     val cmem = idx.grp.select(col("rep").as("pb"), explode(col("ids")).as("db"))
@@ -1191,14 +1225,8 @@ object Similarity {
       rounds: Int): DataFrame = {
     require(k <= beam, s"k $k must not exceed beam $beam: the answer is " +
       "the top-k of the final frontier")
-    NativeExpressions.register(queries.sparkSession)
-    val q = queries.withColumn("qn", expr("sqrt(vec_dot(qe, qe))"))
-    val c = corpus.withColumn("cn", expr("sqrt(vec_dot(ce, ce))"))
-    walkRounds(entries, edges, beam, rounds) { cand =>
-      c.join(broadcast(cand.join(q, "qid")), "cid")
-        .select(col("qid"), col("cid"),
-          round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn")), 6).as("cos"))
-    }.last.filter(col("rn") <= k)
+    walkRounds(entries, edges, beam, rounds)(exactCos(_, queries, corpus))
+      .last.filter(col("rn") <= k)
       .select(col("qid"), col("cid"), col("cos"), col("rn").cast("long").as("rnk"))
   }
 
@@ -1307,24 +1335,15 @@ object Similarity {
     val qtab = broadcast(quantCoords(queries, "qid", "qe").join(cb, Seq("i"))
       .groupBy(col("qid"), expr(s"(i - 1) div $dsub").as("s"), col("code"))
       .agg(sum(col("x") * col("cx")).as("pdot")))
-    val q = queries.withColumn("qn", expr("sqrt(vec_dot(qe, qe))"))
-    val qn = broadcast(q.select(col("qid"), col("qn")))
+    val qn = queryNorms(queries)
     val cn = norms.getOrElse(cosNormsDF(corpus))
     val visited = walkRounds(entries, edges, beam, rounds) { cand =>
-      cand.join(codes, "cid")
+      adcCos(cand.join(codes, "cid")
         .join(qtab, Seq("qid", "s", "code"))
-        .groupBy("qid", "cid").agg(sum("pdot").as("adc"))
-        .join(qn, "qid")
-        .join(cn, "cid")
-        .select(col("qid"), col("cid"),
-          round(col("adc").cast("double") /
-            (lit(1.0e12) * col("qn") * col("cn")), 6).as("cos"))
+        .groupBy("qid", "cid").agg(sum("pdot").as("adc")), qn, cn)
     }.map(_.select("qid", "cid")).reduce(_ unionByName _)
     // the one full-precision stage: exact re-rank of the VISITED list
-    val c = corpus.withColumn("cn", expr("sqrt(vec_dot(ce, ce))"))
-    visited.distinct().join(broadcast(q), "qid").join(c, "cid")
-      .select(col("qid"), col("cid"),
-        round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn")), 6).as("cos"))
+    exactCos(visited.distinct(), queries, corpus)
   }
 
   /** Incremental maintenance of a standing graph index — the DiskANN
@@ -1447,7 +1466,7 @@ object Similarity {
       .agg(min("da").as("rep"), collect_list("da").as("ids"))
     val reps = g.select(col("rep").as("pa"), col("ea"))
     val assigned = assignToCentroids(reps, "pa", "ea", cents)
-      .withColumn("na", expr("sqrt(vec_dot(ea, ea))"))
+      .withColumn("na", norm("ea"))
       .select(col("pa"), col("ea"), col("na"), col("centroid_id").as("cl"))
     val bq = sq8Codes(reps, "pa", "ea")
       .select(col("id").as("pa"), col("qc").as("bq"))
@@ -1459,15 +1478,14 @@ object Similarity {
       .select(col("pa"), col("pb"),
         (expr("vec_dotl(bq, cq)")
           * col("rc")).as("akey"))
-    val wd = Window.partitionBy("pa").orderBy(col("akey").desc, col("pb"))
-    val pool = ranked.withColumn("rn", row_number().over(wd))
-      .filter(col("rn") <= m).select("pa", "pb")
+    val pool = TopK.perGroup(ranked, Seq("pa"), Seq(col("akey").desc, col("pb")),
+      m, rankCol = "rn").select("pa", "pb")
     val corpusReps = grp.select(col("rep").as("pb"), col("ce").as("eb"))
-      .withColumn("nb", expr("sqrt(vec_dot(eb, eb))"))
+      .withColumn("nb", norm("eb"))
     val scored = pool.join(assigned.select("pa", "ea", "na"), "pa")
       .join(corpusReps, "pb")
       .select(col("pa"), col("pb"),
-        round(expr("vec_dot(ea, eb)") / (col("na") * col("nb")), 6).as("cos"))
+        cos("ea", "eb", col("na"), col("nb")).as("cos"))
       .filter(col("cos") >= threshold)
     val pmem = g.select(col("rep").as("pa"), explode(col("ids")).as("da"))
     val cmem = grp.select(col("rep").as("pb"), explode(col("ids")).as("db"))
@@ -1545,18 +1563,11 @@ object Similarity {
           * col("rc")).as("apair"))
       .groupBy("qd", "cd", "qt").agg(max("apair").as("amx"))
       .groupBy("qd", "cd").agg(sum("amx").as("ascore"))
-    val wp = Window.partitionBy("qd").orderBy(col("ascore").desc, col("cd"))
-    val pool = apx.withColumn("pr", row_number().over(wp))
-      .filter(col("pr") <= m).select("qd", "cd")
-    val qv = broadcast(rbatch
-      .withColumn("qn", expr("sqrt(vec_dot(qe, qe))")))
-    val cv = corpusTok.withColumn("cn", expr("sqrt(vec_dot(ce, ce))"))
-    val repAlerts = pool.join(qv, Seq("qd")).join(cv, Seq("cd"))
-      .select(col("qd"), col("cd"), col("qt"),
-        round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn"))
-          * lit(1000000.0)).cast("long").as("mc"))
-      .groupBy("qd", "cd", "qt").agg(max("mc").as("mx"))
-      .groupBy("qd", "cd").agg(sum("mx").as("score"))
+    val pool = TopK.perGroup(apx, Seq("qd"),
+      Seq(col("ascore").desc, col("cd")), m, rankCol = "pr").select("qd", "cd")
+    val qv = broadcast(rbatch.withColumn("qn", norm("qe")))
+    val cv = corpusTok.withColumn("cn", norm("ce"))
+    val repAlerts = maxsim(pool.join(qv, Seq("qd")).join(cv, Seq("cd")))
       .filter(col("score") >= minScore)
     // expand rep alerts to every duplicate probe doc in the batch
     val mem = g.select(col("rep").as("qd"), explode(col("docs")).as("qdx"))
@@ -1637,20 +1648,12 @@ object Similarity {
           * col("rc")).as("apair"))
       .groupBy("qd", "cd", "qt").agg(max("apair").as("amx"))
       .groupBy("qd", "cd").agg(sum("amx").as("ascore"))
-    val wp = Window.partitionBy("qd").orderBy(col("ascore").desc, col("cd"))
-    val pool = apx.withColumn("pr", row_number().over(wp))
-      .filter(col("pr") <= m).select("qd", "cd")
-    val qv = broadcast(qtok.withColumn("qn", expr("sqrt(vec_dot(qe, qe))")))
-    val cv = corpusTok.withColumn("cn", expr("sqrt(vec_dot(ce, ce))"))
-    val served = pool.join(qv, Seq("qd")).join(cv, Seq("cd"))
-      .select(col("qd"), col("cd"), col("qt"),
-        round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn"))
-          * lit(1000000.0)).cast("long").as("mc"))
-      .groupBy("qd", "cd", "qt").agg(max("mc").as("mx"))
-      .groupBy("qd", "cd").agg(sum("mx").as("score"))
-    val ws = Window.partitionBy("qd").orderBy(col("score").desc, col("cd"))
-    served.withColumn("rnk", row_number().over(ws))
-      .filter(col("rnk") <= k).select("qd", "cd")
+    val pool = TopK.perGroup(apx, Seq("qd"),
+      Seq(col("ascore").desc, col("cd")), m, rankCol = "pr").select("qd", "cd")
+    val qv = broadcast(qtok.withColumn("qn", norm("qe")))
+    val cv = corpusTok.withColumn("cn", norm("ce"))
+    topKByMaxsim(maxsim(pool.join(qv, Seq("qd")).join(cv, Seq("cd"))), k)
+      .select("qd", "cd")
   }
 
   /** Per-vector int8 scalar quantization (the FAISS/ScaNN SQ8 layout):
@@ -1675,7 +1678,7 @@ object Similarity {
       .select(col(idCol).as("id"), col(vecCol).as("vv"))
       .withColumn("am",
         array_max(transform(col("vv"), y => abs(y.cast("double")))))
-      .withColumn("nn", expr("sqrt(vec_dot(vv, vv))"))
+      .withColumn("nn", norm("vv"))
       .select(col("id"),
         transform(col("vv"),
           x => round(x.cast("double") * lit(127.0) / col("am"))
@@ -1762,18 +1765,9 @@ object Similarity {
           (2 * ((CASE WHEN i < 32 THEN shiftright(h1, i)
                  ELSE shiftright(h2, i - 32) END) & 1) - 1)),
           0L, (a, x) -> a + x)""").as("adot"))
-    val wp = Window.partitionBy("qid").orderBy(col("adot").desc, col("cid"))
-    val pool = cand.withColumn("pr", row_number().over(wp))
-      .filter(col("pr") <= m).select("qid", "cid")
-    val q = queries.withColumn("qn", expr("sqrt(vec_dot(qe, qe))"))
-    val c = corpus.withColumn("cn", expr("sqrt(vec_dot(ce, ce))"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))
-    pool.join(broadcast(q), "qid").join(c, "cid")
-      .select(col("qid"), col("cid"),
-        round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn")), 6).as("cos"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select("qid", "cid")
+    val pool = TopK.perGroup(cand, Seq("qid"), Seq(col("adot").desc, col("cid")),
+      m, rankCol = "pr").select("qid", "cid")
+    topKByCos(exactCos(pool, queries, corpus), k).select("qid", "cid")
   }
 
   /** IVF-SQ8 top-k serving (the production-default FAISS `IVF,SQ8`
@@ -1843,17 +1837,8 @@ object Similarity {
       .select(col("qid"), col("cid"),
         (expr("vec_dotl(qq, qc)")
           * col("rc")).as("akey"))
-    val wp = Window.partitionBy("qid").orderBy(col("akey").desc, col("cid"))
-    val pool = cand.withColumn("pr", row_number().over(wp))
-      .filter(col("pr") <= m).select("qid", "cid")
-    val q = queries.withColumn("qn", expr("sqrt(vec_dot(qe, qe))"))
-    val c = corpus.withColumn("cn", expr("sqrt(vec_dot(ce, ce))"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))
-    pool.join(broadcast(q), "qid").join(c, "cid")
-      .select(col("qid"), col("cid"),
-        round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn")), 6).as("cos"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select("qid", "cid")
+    val pool = TopK.perGroup(cand, Seq("qid"), Seq(col("akey").desc, col("cid")),
+      m, rankCol = "pr").select("qid", "cid")
+    topKByCos(exactCos(pool, queries, corpus), k).select("qid", "cid")
   }
 }

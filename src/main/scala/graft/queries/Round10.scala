@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.QueryDef
-import graft.operators.{IndexAdvisor, Similarity, TopK}
+import graft.operators.{IndexAdvisor, Similarity}
 import graft.sources.Tables
 import graft.util.{Jobs, Slots}
 
@@ -474,11 +474,10 @@ object Round10 {
           "embeddings.parquet", "pqcb_c16_full",
           params = Map("nCodes" -> 16L))(
           Similarity.pqCodebookDF(corpus, nCodes = 16))
-        TopK.perGroup(Similarity.beamPqVisited(qs, corpus, refined, codes,
-            entries, beam = DiskannBeam, rounds = DiskannRounds,
+        Similarity.topKByCos(Similarity.beamPqVisited(qs, corpus, refined,
+            codes, entries, beam = DiskannBeam, rounds = DiskannRounds,
             nSub = 16, nCodes = 16, dim = 64,
-            norms = Some(cnorms), codebook = Some(cbArt)),
-          Seq("qid"), Seq(col("cos").desc, col("cid")), 5)
+            norms = Some(cnorms), codebook = Some(cbArt)), 5)
       }),
       Some(diskannOracle(beam = DiskannBeam, rounds = DiskannRounds,
         nSub = 16, nCodes = 16))),

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.QueryDef
-import graft.operators.{IndexAdvisor, Similarity, TopK}
+import graft.operators.{IndexAdvisor, Similarity}
 import graft.sources.Tables
 import graft.util.Slots
 
@@ -255,8 +255,7 @@ object Round11 {
 
   /** Per-query top-5 by (cos DESC, cid) — the harness rank. */
   private[queries] def top5(df: DataFrame): DataFrame =
-    TopK.perGroup(df, Seq("qid"), Seq(col("cos").desc, col("cid")), 5)
-      .select("qid", "cid")
+    Similarity.topKByCos(df, 5).select("qid", "cid")
 
   val defs: Map[String, QueryDef] = Map(
 

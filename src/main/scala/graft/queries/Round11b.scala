@@ -1,10 +1,9 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.QueryDef
-import graft.operators.{FixedPoint, IndexAdvisor, Ranks, Similarity}
+import graft.operators.{FixedPoint, IndexAdvisor, Ranks, Similarity, TopK}
 import graft.sources.Tables
 import graft.util.{Jobs, Slots}
 
@@ -132,16 +131,11 @@ object Round11b {
       val tok = mvTok(s, dir)
       val q = tok.filter(col("doc") < 10)
         .select(col("doc").as("qd"), col("tid").as("qt"), col("e").as("qe"))
-        .withColumn("qn", expr("sqrt(vec_dot(qe, qe))"))
+        .withColumn("qn", Similarity.norm("qe"))
       val c = tok
         .select(col("doc").as("cd"), col("e").as("ce"))
-        .withColumn("cn", expr("sqrt(vec_dot(ce, ce))"))
-      c.join(broadcast(q), col("cd") =!= col("qd"))
-        .select(col("qd"), col("cd"), col("qt"),
-          round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn"))
-            * lit(1000000.0)).cast("long").as("mc"))
-        .groupBy("qd", "cd", "qt").agg(max("mc").as("mx"))
-        .groupBy("qd", "cd").agg(sum("mx").as("score"))
+        .withColumn("cn", Similarity.norm("ce"))
+      Similarity.maxsim(c.join(broadcast(q), col("cd") =!= col("qd")))
     }
 
   /** Oracle twin of [[maxsimExact]]: CTEs tok/qtok/ms (exact BIGINT
@@ -666,10 +660,7 @@ object Round11b {
     // — q334's serve reranks against the same physics.
     "q333_llm_maxsim_exact" -> QueryDef(
       (s, dir) => {
-        val w = Window.partitionBy("qd").orderBy(col("score").desc, col("cd"))
-        maxsimExact(s, dir)
-          .withColumn("rnk", row_number().over(w).cast("long"))
-          .filter(col("rnk") <= 5)
+        Similarity.topKByMaxsim(maxsimExact(s, dir), 5)
           .select(col("qd"), col("cd"), col("score"), col("rnk"))
           .orderBy("qd", "rnk")
       },
@@ -731,28 +722,19 @@ object Round11b {
               * col("rc")).as("apair"))
           .groupBy("qd", "cd", "qt").agg(max("apair").as("amx"))
           .groupBy("qd", "cd").agg(sum("amx").as("ascore"))
-        val wp = Window.partitionBy("qd").orderBy(col("ascore").desc, col("cd"))
-        val pool = capx.withColumn("pr", row_number().over(wp))
-          .filter(col("pr") <= 10).select("qd", "cd")
+        val pool = TopK.perGroup(capx, Seq("qd"),
+          Seq(col("ascore").desc, col("cd")), 10, rankCol = "pr")
+          .select("qd", "cd")
         // exact rerank from raw vectors, pool-bounded (the serving
         // residency contract — the exact TABLE is only used to score)
-        val qv = broadcast(qtok
-          .withColumn("qn", expr("sqrt(vec_dot(qe, qe))")))
+        val qv = broadcast(qtok.withColumn("qn", Similarity.norm("qe")))
         val cv = tok.select(col("doc").as("cd"), col("e").as("ce"))
-          .withColumn("cn", expr("sqrt(vec_dot(ce, ce))"))
-        val served = pool.join(qv, Seq("qd")).join(cv, Seq("cd"))
-          .select(col("qd"), col("cd"), col("qt"),
-            round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn"))
-              * lit(1000000.0)).cast("long").as("mc"))
-          .groupBy("qd", "cd", "qt").agg(max("mc").as("mx"))
-          .groupBy("qd", "cd").agg(sum("mx").as("score"))
-        val ws = Window.partitionBy("qd").orderBy(col("score").desc, col("cd"))
-        val annr = served.withColumn("rnk", row_number().over(ws))
-          .filter(col("rnk") <= 5).select("qd", "cd")
-        val wx = Window.partitionBy("qd").orderBy(col("score").desc, col("cd"))
-        val exr = maxsimExact(s, dir)
-          .withColumn("rnk", row_number().over(wx))
-          .filter(col("rnk") <= 5).select("qd", "cd")
+          .withColumn("cn", Similarity.norm("ce"))
+        val annr = Similarity.topKByMaxsim(Similarity.maxsim(
+            pool.join(qv, Seq("qd")).join(cv, Seq("cd"))), 5)
+          .select("qd", "cd")
+        val exr = Similarity.topKByMaxsim(maxsimExact(s, dir), 5)
+          .select("qd", "cd")
         val hits = exr.join(annr, Seq("qd", "cd"))
           .groupBy("qd").agg(count(lit(1)).as("h"))
         exr.select("qd").distinct()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.QueryDef
-import graft.operators.{IndexAdvisor, Similarity}
+import graft.operators.{IndexAdvisor, Similarity, TopK}
 import graft.sources.Tables
 import graft.util.{Jobs, Slots}
 
@@ -375,17 +375,9 @@ object Round12 {
       .select(col("qid"), col("cid"),
         (expr("vec_dotl(qq, qc)")
           * col("rc")).as("akey"))
-    val wp = Window.partitionBy("qid").orderBy(col("akey").desc, col("cid"))
-    val pool = cand.withColumn("pr", row_number().over(wp))
-      .filter(col("pr") <= m).select("qid", "cid")
-    val q = qs.withColumn("qn", expr("sqrt(vec_dot(qe, qe))"))
-    val c = corpus.withColumn("cn", expr("sqrt(vec_dot(ce, ce))"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))
-    pool.join(broadcast(q), "qid").join(c, "cid")
-      .select(col("qid"), col("cid"),
-        round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn")), 6).as("cos"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= 5)
+    val pool = TopK.perGroup(cand, Seq("qid"), Seq(col("akey").desc, col("cid")),
+      m, rankCol = "pr").select("qid", "cid")
+    Similarity.topKByCos(Similarity.exactCos(pool, qs, corpus), 5)
       .select("qid", "cid")
   }
 
@@ -1420,14 +1412,8 @@ object Round12 {
         val pool = Similarity.ivfSq8TopK(qs20, corpus, k = 20, nlist = 16,
           nprobe = 10, m = 24,
           artifact = Some((dir, "embeddings.parquet", "ivfsq8")))
-        val q = qs20.withColumn("qn", expr("sqrt(vec_dot(qe, qe))"))
-        val c = corpus.withColumn("cn", expr("sqrt(vec_dot(ce, ce))"))
-        val wv = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))
-        val pvr = pool.join(broadcast(q), "qid").join(c, "cid")
-          .select(col("qid"), col("cid"),
-            round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn")), 6)
-              .as("cos"))
-          .withColumn("rv", row_number().over(wv))
+        val pvr = Similarity.topKByCos(Similarity.exactCos(pool, qs20, corpus),
+            20, rankCol = "rv")
           .select("qid", "cid", "rv")
         def fuse(v: DataFrame): DataFrame = {
           val l20 = lrank.filter(col("rl") <= 20)

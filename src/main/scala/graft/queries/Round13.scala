@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.QueryDef
-import graft.operators.{IndexAdvisor, Similarity, TopK}
+import graft.operators.{IndexAdvisor, Similarity}
 import graft.sources.Tables
 import graft.util.{Jobs, Slots}
 
@@ -134,9 +134,7 @@ object Round13 {
     val ms0 = Round11b.maxsimExact(s, dir)
     val ms = keepDocs.foldLeft(ms0) { (d, kset) =>
       d.join(kset.select("cd"), Seq("cd"), "left_semi") }
-    val wx = Window.partitionBy("qd").orderBy(col("score").desc, col("cd"))
-    ms.withColumn("rnk", row_number().over(wx))
-      .filter(col("rnk") <= 5).select("qd", "cd")
+    Similarity.topKByMaxsim(ms, 5).select("qd", "cd")
   }
 
   // ---- q348: the q343 ingest chain with the token-index dials as SQL
@@ -838,10 +836,7 @@ object Round13 {
         def edgeCos(vecs: DataFrame): DataFrame =
           e.join(vecs.select(col("cid").as("u"), col("ce").as("ue")), "u")
             .join(vecs.select(col("cid").as("v"), col("ce").as("ve")), "v")
-            .select(col("u"), col("v"),
-              round(expr("vec_dot(ue, ve)") /
-                (expr("sqrt(vec_dot(ue, ue))") *
-                 expr("sqrt(vec_dot(ve, ve))")), 6).as("cos"))
+            .select(col("u"), col("v"), Similarity.cos("ue", "ve").as("cos"))
         // old-edge cosines feed BOTH movedOf counts — cut once
         val oldC = Jobs.cut(edgeCos(corpus), "q349_oldc")
         def movedOf(w: DataFrame): Long = oldC
@@ -861,10 +856,9 @@ object Round13 {
         def walk(wq: DataFrame, w: DataFrame, edges: DataFrame,
             codes: DataFrame): DataFrame = {
           val entries = Similarity.centroidEntries(wq, cents16(w))
-          TopK.perGroup(Similarity.beamPqVisited(wq, w, edges, codes,
+          Similarity.topKByCos(Similarity.beamPqVisited(wq, w, edges, codes,
               entries, beam = Round9.BeamWidth, rounds = Round9.BeamRounds,
-              nSub = 16, nCodes = 16, dim = 64),
-            Seq("qid"), Seq(col("cos").desc, col("cid")), 5)
+              nSub = 16, nCodes = 16, dim = 64), 5)
             .select("qid", "cid")
         }
         val isoCodes = graft.util.FixtureArtifact.parquet(s, dir,
@@ -1120,16 +1114,10 @@ object Round13 {
           val pool = Similarity.ivfSq8TopK(qs20, corpus, k = 20,
             nlist = 16, nprobe = 8, m = 24,
             artifact = Some((dir, "embeddings.parquet", "ivfsq8")))
-          val q = qs20.withColumn("qn", expr("sqrt(vec_dot(qe, qe))"))
-          val c = corpus.withColumn("cn", expr("sqrt(vec_dot(ce, ce))"))
-          val wv = Window.partitionBy("qid")
-            .orderBy(col("cos").desc, col("cid"))
-          pool.select("qid", "cid").join(broadcast(q), "qid").join(c, "cid")
-            .select(col("qid"), col("cid"),
-              round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn")), 6)
-                .as("cos"))
-            .withColumn("rv", row_number().over(wv).cast("long"))
-            .filter(col("rv") <= 20).select("qid", "cid", "rv")
+          Similarity.topKByCos(
+              Similarity.exactCos(pool.select("qid", "cid"), qs20, corpus),
+              20, rankCol = "rv")
+            .select("qid", "cid", "rv")
         }
         def pqArm(nlist: Int, nprobe: Int, rerank: Int,
             art: Option[(String, String, String)]): DataFrame =

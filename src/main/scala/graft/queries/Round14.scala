@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.QueryDef
-import graft.operators.IndexAdvisor
+import graft.operators.{IndexAdvisor, Similarity, TopK}
 import graft.sources.Tables
 import graft.util.{Jobs, Slots}
 
@@ -926,7 +926,6 @@ object Round14 {
         val nQ = 20
         val poolM = 200
         graft.plans.NativeExpressions.register(s)
-        import graft.operators.Similarity
         val emb = t(s, dir, "embeddings")
         val qs20 = emb.filter(col("vec_id") < nQ)
           .select(col("vec_id").as("qid"), col("embedding").as("qe"))
@@ -982,22 +981,20 @@ object Round14 {
           """round(aggregate(transform(
              array_sort(collect_list(struct(term, tscore))), x -> x.tscore),
              0.0D, (a, x) -> a + x), 6)""")
-        val wp = Window.partitionBy("qid")
-          .orderBy(col("ps").desc, col("cid"))
         // the walked-terms side (≤ nQ × tStar rows) and the pool
         // (≤ nQ × poolM rows) are corpus-size-INDEPENDENT by
         // construction — broadcast them so the impact index is never
         // shuffled (guide §2.3/§3.1: without stats these joins planned
         // sort-merge, re-shuffling ~0.77·nd postings at the 100× probe
         // regardless of tStar — the PROBES_r14 4.9×/decade term)
-        val pool = imp
-          .join(broadcast(qt.filter(col("tr") <= tStar)
-            .select("qid", "term")), Seq("term"))
-          .filter(col("doc_id") =!= col("qid"))
-          .groupBy("qid", "doc_id").agg(foldScore.as("ps"))
-          .withColumnRenamed("doc_id", "cid")
-          .withColumn("pr", row_number().over(wp))
-          .filter(col("pr") <= poolM).select("qid", "cid")
+        val pool = TopK.perGroup(imp
+            .join(broadcast(qt.filter(col("tr") <= tStar)
+              .select("qid", "term")), Seq("term"))
+            .filter(col("doc_id") =!= col("qid"))
+            .groupBy("qid", "doc_id").agg(foldScore.as("ps"))
+            .withColumnRenamed("doc_id", "cid"),
+          Seq("qid"), Seq(col("ps").desc, col("cid")), poolM, rankCol = "pr")
+          .select("qid", "cid")
         val wr = Window.partitionBy("qid")
           .orderBy(col("score").desc, col("cid"))
         val srv0 = broadcast(pool)
@@ -1137,7 +1134,6 @@ object Round14 {
     // the replicated fixture and emptied the admissible set.
     "q356_llm_maxsim_unified_advisor" -> QueryDef(
       (s, dir) => {
-        import graft.operators.Similarity
         import graft.util.FixtureArtifact
         val (tok, cents, ca, codes, ctok, nlist, np) =
           Round13.mvAdvisedSetup(s, dir)
@@ -1191,25 +1187,17 @@ object Round14 {
               round(col("dot").cast("double") /
                 (sqrt(col("qn2").cast("double"))
                   * sqrt(col("cn2").cast("double"))), 6).as("pcos"))
-          val wpp = Window.partitionBy("qd")
-            .orderBy(col("pcos").desc, col("cd"))
-          val pool = pcos.withColumn("pr", row_number().over(wpp))
-            .filter(col("pr") <= mPool).select("qd", "cd")
+          val pool = TopK.perGroup(pcos, Seq("qd"),
+            Seq(col("pcos").desc, col("cd")), mPool.toInt, rankCol = "pr")
+            .select("qd", "cd")
           // bounded exact-maxsim rerank of the pool — the only place
           // full-precision token vectors are touched (the maxsimExact
           // recipe restricted to pool pairs)
-          val q = qtok.withColumn("qn", expr("sqrt(vec_dot(qe, qe))"))
-          val c = corpusTok.withColumn("cn", expr("sqrt(vec_dot(ce, ce))"))
-          val wr = Window.partitionBy("qd")
-            .orderBy(col("score").desc, col("cd"))
-          pool.join(broadcast(q), Seq("qd")).join(c, Seq("cd"))
-            .select(col("qd"), col("cd"), col("qt"),
-              round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn"))
-                * lit(1000000.0)).cast("long").as("mc"))
-            .groupBy("qd", "cd", "qt").agg(max("mc").as("mx"))
-            .groupBy("qd", "cd").agg(sum("mx").as("score"))
-            .withColumn("rnk", row_number().over(wr))
-            .filter(col("rnk") <= 5).select("qd", "cd")
+          val q = qtok.withColumn("qn", Similarity.norm("qe"))
+          val c = corpusTok.withColumn("cn", Similarity.norm("ce"))
+          Similarity.topKByMaxsim(Similarity.maxsim(
+              pool.join(broadcast(q), Seq("qd")).join(c, Seq("cd"))), 5)
+            .select("qd", "cd")
         }
         // measured serves as fixture artifacts (the q315/q328 rule)
         val tokenArt = FixtureArtifact.parquet(s, dir, "embeddings.parquet",
@@ -1370,7 +1358,6 @@ object Round14 {
     "q353_llm_maxsim_drift_response" -> QueryDef(
       (s, dir) => Jobs.scope(s) { j =>
         graft.plans.NativeExpressions.register(s)
-        import graft.operators.Similarity
         import graft.util.FixtureArtifact
         val (tok, cents, ca, _, _, nlist, np) = Round13.mvAdvisedSetup(s, dir)
         def truncOf(c: String) = expr(s"transform(sequence(1, 64), " +
@@ -1414,19 +1401,12 @@ object Round14 {
         def exactArt(w: DataFrame, label: String): DataFrame =
           FixtureArtifact.parquet(s, dir, "embeddings.parquet",
             s"mvdrift_ex5_$label") {
-            val q = qtokOf(w).withColumn("qn", expr("sqrt(vec_dot(qe, qe))"))
+            val q = qtokOf(w).withColumn("qn", Similarity.norm("qe"))
             val c = w.select(col("doc").as("cd"), col("e").as("ce"))
-              .withColumn("cn", expr("sqrt(vec_dot(ce, ce))"))
-            val ms = c.join(broadcast(q), col("cd") =!= col("qd"))
-              .select(col("qd"), col("cd"), col("qt"),
-                round(expr("vec_dot(qe, ce)") / (col("qn") * col("cn"))
-                  * lit(1000000.0)).cast("long").as("mc"))
-              .groupBy("qd", "cd", "qt").agg(max("mc").as("mx"))
-              .groupBy("qd", "cd").agg(sum("mx").as("score"))
-            val wx = org.apache.spark.sql.expressions.Window
-              .partitionBy("qd").orderBy(col("score").desc, col("cd"))
-            ms.withColumn("rnk", row_number().over(wx))
-              .filter(col("rnk") <= 5).select("qd", "cd")
+              .withColumn("cn", Similarity.norm("ce"))
+            Similarity.topKByMaxsim(Similarity.maxsim(
+                c.join(broadcast(q), col("cd") =!= col("qd"))), 5)
+              .select("qd", "cd")
           }
         val exIso = exactArt(toki, "gwi")
         val exTr = exactArt(tokt, "gwt")

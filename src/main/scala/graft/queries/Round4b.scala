@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.QueryDef
-import graft.operators.Graph
+import graft.operators.{Graph, Similarity}
 import graft.sources.Tables
 import graft.util.Slots
 
@@ -980,10 +980,7 @@ object Round4b {
           .select(col("vec_id").as("qid"), col("label").as("qlabel"),
             col("embedding").as("qe"))
         val pairs = emb.join(broadcast(anchors), col("label") =!= col("qlabel"))
-          .withColumn("cos", round(
-            expr("vec_dot(qe, embedding)") /
-              (sqrt(expr("vec_dot(qe, qe)")) *
-                sqrt(expr("vec_dot(embedding, embedding)"))), 6))
+          .withColumn("cos", Similarity.cos("qe", "embedding"))
         pairs
           .withColumn("rnk", row_number().over(Window.partitionBy("qid")
             .orderBy(col("cos").desc, col("vec_id"))))

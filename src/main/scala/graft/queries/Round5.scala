@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.QueryDef
-import graft.operators.Dedup
+import graft.operators.{Dedup, Similarity}
 import graft.sources.Tables
 import graft.util.Det
 import graft.util.Slots
@@ -1049,18 +1049,11 @@ object Round5 {
           .select(col("vec_id").as("qid"), col("embedding").as("qe"))
         val corpus = emb.filter(col("vec_id") >= 3)
           .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+        graft.plans.NativeExpressions.register(s)
         val pairs = corpus.crossJoin(broadcast(qs))
-          .withColumn("dot", expr(
-            """aggregate(zip_with(qe, ce, (a, b) ->
-               CAST(a AS DOUBLE) * CAST(b AS DOUBLE)), 0.0D, (s, x) -> s + x)"""))
-          .withColumn("qq", expr(
-            """aggregate(transform(qe, a -> CAST(a AS DOUBLE) * CAST(a AS DOUBLE)),
-               0.0D, (s, x) -> s + x)"""))
-          .withColumn("cc", expr(
-            """aggregate(transform(ce, a -> CAST(a AS DOUBLE) * CAST(a AS DOUBLE)),
-               0.0D, (s, x) -> s + x)"""))
-          .withColumn("cos", expr("round(dot / (sqrt(qq) * sqrt(cc)), 6)"))
-          .withColumn("l2", expr("round(qq + cc - 2 * dot, 6)"))
+          .withColumn("cos", Similarity.cos("qe", "ce"))
+          .withColumn("l2", expr(
+            "round(vec_dot(qe, qe) + vec_dot(ce, ce) - 2 * vec_dot(qe, ce), 6)"))
         val wc = Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))
         val wl = Window.partitionBy("qid").orderBy(col("l2"), col("cid"))
         val ranked = pairs

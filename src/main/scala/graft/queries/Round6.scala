@@ -30,14 +30,6 @@ object Round6 {
          THEN 1 ELSE 0 END) * ${1 << i}"""
     }.mkString(" + ")
 
-  /** DuckDB twin of the rounded-cosine score between embeddings rows
-    * aliased `$x` (query side) and `$y` (candidate side); requires the
-    * per-dimension unnest alias `i` in scope (q46/q47 recipe). */
-  private def cosSql(x: String, y: String): String =
-    s"""round(SUM(CAST($x.embedding[i.i] AS DOUBLE) * CAST($y.embedding[i.i] AS DOUBLE)) /
-      (sqrt(SUM(CAST($x.embedding[i.i] AS DOUBLE) * CAST($x.embedding[i.i] AS DOUBLE))) *
-       sqrt(SUM(CAST($y.embedding[i.i] AS DOUBLE) * CAST($y.embedding[i.i] AS DOUBLE)))), 6)"""
-
   val defs: Map[String, QueryDef] = Map(
 
     // ---- keyless interval join, density-capped -------------------------
@@ -194,7 +186,7 @@ object Round6 {
   private lazy val beamOracle: String =
     s"""WITH ${Round8.stitchedEdgesSql(d = 4, nPlanes = 6, nTables = 1)},
       qs AS MATERIALIZED (SELECT vec_id AS qid FROM embeddings WHERE vec_id < 10),
-      bsc AS MATERIALIZED (SELECT qs.qid, y.vec_id AS cid, ${cosSql("x", "y")} AS cos
+      bsc AS MATERIALIZED (SELECT qs.qid, y.vec_id AS cid, ${Round6c.cosSql("x", "y")} AS cos
         FROM qs JOIN embeddings x ON qs.qid = x.vec_id
         JOIN embeddings y ON y.vec_id <> qs.qid
         CROSS JOIN (SELECT unnest(range(1, 65)) AS i) i

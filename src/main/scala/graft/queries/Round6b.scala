@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.QueryDef
+import graft.operators.Similarity
 import graft.sources.Tables
 import graft.util.Det
 import graft.util.Slots
@@ -28,14 +29,6 @@ object Round6b {
     * independent hash functions can be drawn. */
   private def lehmer(key: String, mult: Long): String =
     s"($key % 2147483647) * $mult % 2147483647"
-
-  /** Rounded-cosine DuckDB fragment between embeddings aliases (q46
-    * recipe — +,*,/ and sqrt are IEEE-exact in both engines; requires
-    * the dimension unnest alias `i` in scope). */
-  private def cosSql(x: String, y: String): String =
-    s"""round(SUM(CAST($x.embedding[i.i] AS DOUBLE) * CAST($y.embedding[i.i] AS DOUBLE)) /
-      (sqrt(SUM(CAST($x.embedding[i.i] AS DOUBLE) * CAST($x.embedding[i.i] AS DOUBLE))) *
-       sqrt(SUM(CAST($y.embedding[i.i] AS DOUBLE) * CAST($y.embedding[i.i] AS DOUBLE)))), 6)"""
 
   private val D9 = DecimalType(18, 9)
 
@@ -300,6 +293,7 @@ object Round6b {
     // cosine.
     "q264_llm_semdedup" -> QueryDef(
       (s, dir) => {
+        graft.plans.NativeExpressions.register(s)
         val emb = t(s, dir, "embeddings")
         val e = emb.select(col("vec_id"), posexplode(col("embedding")))
           .select(col("vec_id"), (col("pos") + 1).as("i"),
@@ -321,35 +315,13 @@ object Round6b {
           col("embedding").as("eb"))
         val cos = a.join(b, Seq("cid")).filter(col("va") < col("vb"))
           .select(col("va"), col("vb"),
-            round(
-              expr("""aggregate(zip_with(ea, eb, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)""") /
-              (sqrt(expr("""aggregate(transform(ea, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)""")) *
-               sqrt(expr("""aggregate(transform(eb, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"""))), 6)
-              .as("cos"))
+            Similarity.cos("ea", "eb").as("cos"))
         cos.filter(col("cos") >= 0.35)
           .groupBy(col("vb").as("vec_id"))
           .agg(min("va").as("keeper"), max("cos").as("best_cos"))
           .orderBy("vec_id")
       },
-      Some(s"""WITH e AS (SELECT vec_id, i.i AS i,
-          CAST(FLOOR(CAST(embedding[i.i] AS DOUBLE) * 1000000) AS BIGINT) AS x
-        FROM embeddings, (SELECT unnest(range(1, 65)) AS i) i),
-      c0 AS (SELECT vec_id AS cid, i, x AS c FROM e WHERE vec_id < 32),
-      d1 AS (SELECT e.vec_id, c0.cid, SUM((x - c) * (x - c)) AS dist
-        FROM e JOIN c0 USING (i) GROUP BY 1, 2),
-      asg AS (SELECT vec_id, cid FROM (SELECT vec_id, cid,
-          row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-        FROM d1) WHERE rn = 1),
-      prs AS (SELECT a.vec_id AS va, b.vec_id AS vb
-        FROM asg a JOIN asg b ON a.cid = b.cid AND a.vec_id < b.vec_id),
-      cs AS (SELECT prs.va, prs.vb, ${cosSql("x", "y")} AS cos
-        FROM prs JOIN embeddings x ON prs.va = x.vec_id
-        JOIN embeddings y ON prs.vb = y.vec_id
-        CROSS JOIN (SELECT unnest(range(1, 65)) AS i) i
-        GROUP BY 1, 2)
-      SELECT vb AS vec_id, MIN(va) AS keeper, MAX(cos) AS best_cos
-      FROM cs WHERE cos >= 0.35
-      GROUP BY vb ORDER BY vec_id""".stripMargin)),
+      Some(Round6c.semDedupOracleSql)),
 
     // ---- streaming near-dup detection (stream-static, q210's twin) -----
     // The PRODUCTION ingest-time shape of q210: new documents arrive as

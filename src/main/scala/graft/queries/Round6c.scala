@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.QueryDef
+import graft.operators.Similarity
 import graft.sources.Tables
 
 /** Round-6 third batch: diversity-aware re-ranking (MMR — the RAG
@@ -21,20 +22,36 @@ object Round6c {
   private def t(s: SparkSession, dir: String, n: String) =
     Tables.load(s, dir, n)
 
-  /** Rounded cosine between two Array[Float] embedding columns (q46/q264
-    * recipe: +,*,/,sqrt are IEEE-exact; round(...,6) is the cross-engine
-    * equality surface). */
-  private def cosCol(x: String, y: String): Column = round(
-    expr(s"""aggregate(zip_with($x, $y, (a, b) -> CAST(a AS DOUBLE) * CAST(b AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)""") /
-      (sqrt(expr(s"""aggregate(transform($x, a -> CAST(a AS DOUBLE) * CAST(a AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)""")) *
-        sqrt(expr(s"""aggregate(transform($y, a -> CAST(a AS DOUBLE) * CAST(a AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"""))), 6)
-
   /** DuckDB rounded-cosine fragment between embedding aliases (requires
     * the dimension unnest alias `i` in scope; embeddings are 64-dim). */
   private[queries] def cosSql(x: String, y: String): String =
     s"""round(SUM(CAST($x.embedding[i.i] AS DOUBLE) * CAST($y.embedding[i.i] AS DOUBLE)) /
       (sqrt(SUM(CAST($x.embedding[i.i] AS DOUBLE) * CAST($x.embedding[i.i] AS DOUBLE))) *
        sqrt(SUM(CAST($y.embedding[i.i] AS DOUBLE) * CAST($y.embedding[i.i] AS DOUBLE)))), 6)"""
+
+  /** Oracle of q264 and of its dedup-first twin q272 (the same rows):
+    * rank-1 q225 cells over 32 seeds, same-cell pairs at cos >= 0.35,
+    * per member its smallest keeper and best cosine. */
+  private[queries] lazy val semDedupOracleSql: String =
+    s"""WITH e AS (SELECT vec_id, i.i AS i,
+          CAST(FLOOR(CAST(embedding[i.i] AS DOUBLE) * 1000000) AS BIGINT) AS x
+        FROM embeddings, (SELECT unnest(range(1, 65)) AS i) i),
+      c0 AS (SELECT vec_id AS cid, i, x AS c FROM e WHERE vec_id < 32),
+      d1 AS (SELECT e.vec_id, c0.cid, SUM((x - c) * (x - c)) AS dist
+        FROM e JOIN c0 USING (i) GROUP BY 1, 2),
+      asg AS (SELECT vec_id, cid FROM (SELECT vec_id, cid,
+          row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
+        FROM d1) WHERE rn = 1),
+      prs AS (SELECT a.vec_id AS va, b.vec_id AS vb
+        FROM asg a JOIN asg b ON a.cid = b.cid AND a.vec_id < b.vec_id),
+      cs AS (SELECT prs.va, prs.vb, ${cosSql("x", "y")} AS cos
+        FROM prs JOIN embeddings x ON prs.va = x.vec_id
+        JOIN embeddings y ON prs.vb = y.vec_id
+        CROSS JOIN (SELECT unnest(range(1, 65)) AS i) i
+        GROUP BY 1, 2)
+      SELECT vb AS vec_id, MIN(va) AS keeper, MAX(cos) AS best_cos
+      FROM cs WHERE cos >= 0.35
+      GROUP BY vb ORDER BY vec_id""".stripMargin
 
   /** The exact brute-force top-5 table for the 50-query harness sample
     * — built ONCE per (fixture dir, content fingerprint) per JVM and
@@ -62,7 +79,7 @@ object Round6c {
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
       val corpus = emb
         .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-      graft.operators.Similarity.cosineTopK(qs, corpus, k = 5)
+      Similarity.cosineTopK(qs, corpus, k = 5)
         .select(col("qid"), col("cid"), col("rnk"))
     }
 
@@ -180,13 +197,14 @@ object Round6c {
     // top of any of the ANN families (q46/q47/q77/q222/q255).
     "q269_llm_mmr_rerank" -> QueryDef(
       (s, dir) => {
+        graft.plans.NativeExpressions.register(s)
         val emb = t(s, dir, "embeddings")
         val qv = emb.filter(col("vec_id") === 0)
           .select(col("embedding").as("eq")).withColumn("one", lit(1))
         val cand = emb.filter(col("vec_id") =!= 0).withColumn("one", lit(1))
           .join(broadcast(qv), Seq("one"))
           .select(col("vec_id"), col("embedding"),
-            cosCol("embedding", "eq").as("rel"))
+            Similarity.cos("embedding", "eq").as("rel"))
           .orderBy(col("rel").desc, col("vec_id")).limit(12)
           .persist()
         val a = cand.select(col("vec_id").as("va"), col("embedding").as("ea"))
@@ -195,7 +213,7 @@ object Round6c {
           .withColumn("one", lit(1))
         val sims = a.join(broadcast(b), Seq("one"))
           .filter(col("va") =!= col("vb"))
-          .select(col("va"), col("vb"), cosCol("ea", "eb").as("sim"))
+          .select(col("va"), col("vb"), Similarity.cos("ea", "eb").as("sim"))
           .persist()
         // Each round references the previous selection twice (anti-join +
         // penalty); persisting the tiny (<=5-row) frame per round cuts the
@@ -386,6 +404,7 @@ object Round6c {
     // linear in output.
     "q272_llm_semdedup_dedup" -> QueryDef(
       (s, dir) => {
+        graft.plans.NativeExpressions.register(s)
         val emb = t(s, dir, "embeddings")
         val g = emb.groupBy(col("embedding"))
           .agg(min("vec_id").as("rep"),
@@ -410,7 +429,7 @@ object Round6c {
         val b = mem.select(col("cid"), col("rep").as("gb"),
           col("embedding").as("eb"), col("ids").as("idsb"))
         val cross = a.join(b, Seq("cid")).filter(col("ga") =!= col("gb"))
-          .select(col("idsa"), col("idsb"), cosCol("ea", "eb").as("cos"))
+          .select(col("idsa"), col("idsb"), Similarity.cos("ea", "eb").as("cos"))
           .filter(col("cos") >= 0.35)
         // the threshold must apply to the self frame too: cos(e,e) of an
         // all-zero vector is NaN, which q264's pairwise form drops
@@ -418,7 +437,7 @@ object Round6c {
         // rounded self-cos is 1.0 (ADVICE r6)
         val self = mem.filter(size(col("ids")) > 1)
           .select(col("ids").as("idsa"), col("ids").as("idsb"),
-            cosCol("embedding", "embedding").as("cos"))
+            Similarity.cos("embedding", "embedding").as("cos"))
           .filter(col("cos") >= 0.35)
         cross.unionByName(self)
           .select(element_at(col("idsa"), 1).as("min_a"),
@@ -428,7 +447,7 @@ object Round6c {
           .agg(min("min_a").as("keeper"), max("cos").as("best_cos"))
           .orderBy("vec_id")
       },
-      Round6b.defs("q264_llm_semdedup").oracle),
+      Some(semDedupOracleSql)),
 
     // ---- incremental aggregate maintenance (the IVM / merge pattern) ---
     // The production incremental-ETL shape: a standing per-month

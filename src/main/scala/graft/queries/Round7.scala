@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.QueryDef
-import graft.operators.Ranks
+import graft.operators.{Ranks, Similarity}
 import graft.sources.Tables
 import graft.util.Slots
 
@@ -541,11 +541,11 @@ object Round7 {
         // the same expression every IVF/semdedup caller and the oracles
         // replay — value-determinism depends on there being ONE copy
         def assign(df: DataFrame, id: String, vec: String): DataFrame =
-          graft.operators.Similarity.assignToCentroids(df, id, vec, cents)
+          Similarity.assignToCentroids(df, id, vec, cents)
         graft.plans.NativeExpressions.register(s)
         val corpus = assign(emb.filter(Slots.Probe.out)
             .select(col("vec_id").as("db"), col("embedding").as("eb")), "db", "eb")
-          .withColumn("nb", expr("sqrt(vec_dot(eb, eb))"))
+          .withColumn("nb", Similarity.norm("eb"))
           .persist()
         s.conf.set("spark.sql.catalog.graftmem", "graft.sources.MemCatalog")
         s.sql("DROP TABLE IF EXISTS graftmem.semdedup_alerts")
@@ -558,10 +558,10 @@ object Round7 {
           probe.writeStream.foreachBatch {
             (batch: DataFrame, _: Long) =>
               assign(batch, "da", "ea")
-                .withColumn("na", expr("sqrt(vec_dot(ea, ea))"))
+                .withColumn("na", Similarity.norm("ea"))
                 .join(corpus, Seq("centroid_id"))
                 .select(col("da"), col("db"),
-                  round(expr("vec_dot(ea, eb)") / (col("na") * col("nb")), 6).as("cos"))
+                  Similarity.cos("ea", "eb", col("na"), col("nb")).as("cos"))
                 .filter(col("cos") >= 0.35)
                 .createOrReplaceTempView("q291_batch")
               batch.sparkSession.sql(

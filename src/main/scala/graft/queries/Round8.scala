@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.QueryDef
-import graft.operators.{IndexAdvisor, Similarity, TopK}
+import graft.operators.{IndexAdvisor, Similarity}
 import graft.sources.Tables
 import graft.util.{Jobs, Slots}
 
@@ -74,10 +74,10 @@ object Round8 {
       .agg(min("da").as("rep"), collect_list("da").as("ids"))
     val reps = g.select(col("rep").as("pa"), col("ea"))
     val assigned = Similarity.assignToCentroids(reps, "pa", "ea", cents)
-      .withColumn("na", expr("sqrt(vec_dot(ea, ea))"))
+      .withColumn("na", Similarity.norm("ea"))
     val repPairs = assigned.join(corpusReps, Seq("centroid_id"))
       .select(col("pa"), col("pb"),
-        round(expr("vec_dot(ea, eb)") / (col("na") * col("nb")), 6).as("cos"))
+        Similarity.cos("ea", "eb", col("na"), col("nb")).as("cos"))
       .filter(col("cos") >= 0.35)
     val pmem = g.select(col("rep").as("pa"), explode(col("ids")).as("da"))
     repPairs.join(pmem, Seq("pa")).join(cmem, Seq("pb"))
@@ -180,9 +180,8 @@ object Round8 {
             .groupBy("qid", "rep").agg(max("cos").as("cos"))
           val members = corpus.join(grp, Seq("ce"))
             .select(col("rep"), col("cid"))
-          TopK.perGroup(cands.join(members, Seq("rep"))
-              .filter(col("cid") =!= col("qid")),
-            Seq("qid"), Seq(col("cos").desc, col("cid")), 5)
+          Similarity.topKByCos(cands.join(members, Seq("rep"))
+              .filter(col("cid") =!= col("qid")), 5)
             .select("qid", "cid")
         }
       }),
@@ -273,13 +272,7 @@ object Round8 {
             corpus.select(col("cid"), expr("slice(ce, 1, 32)").as("ce")),
             k = m)
           .select("qid", "cid")
-        graft.plans.NativeExpressions.register(s)
-        val re = pool.join(qs, Seq("qid")).join(corpus, Seq("cid"))
-          .select(col("qid"), col("cid"),
-            round(expr("vec_dot(qe, ce)") /
-              (expr("sqrt(vec_dot(qe, qe))") *
-                expr("sqrt(vec_dot(ce, ce))")), 6).as("cos"))
-        TopK.perGroup(re, Seq("qid"), Seq(col("cos").desc, col("cid")), 5)
+        Similarity.topKByCos(Similarity.exactCos(pool, qs, corpus), 5)
           .select("qid", "cid")
       }),
       Some(s"""${Round6c.exactRecallCte},
@@ -441,7 +434,7 @@ object Round8 {
           .persist() // two lineage paths: rep cells + member expansion
         val repsAssigned = Similarity.assignToCentroids(
             cgrp.select(col("rep").as("pb"), col("eb")), "pb", "eb", cents)
-          .withColumn("nb", expr("sqrt(vec_dot(eb, eb))"))
+          .withColumn("nb", Similarity.norm("eb"))
           .persist()
         val cmem = cgrp.select(col("rep").as("pb"), explode(col("ids")).as("db"))
         s.conf.set("spark.sql.catalog.graftmem", "graft.sources.MemCatalog")
@@ -524,7 +517,7 @@ object Round8 {
             base, "doc_id", "embedding", cents)
           .select(col("doc_id"), col("centroid_id"),
             col("embedding").as("e"),
-            expr("sqrt(vec_dot(embedding, embedding))").as("nm"))
+            Similarity.norm("embedding").as("nm"))
           .persist()
         val a = assigned.select(col("centroid_id"), col("doc_id").as("da"),
           col("e").as("ea"), col("nm").as("na"))
@@ -532,8 +525,7 @@ object Round8 {
           col("e").as("eb"), col("nm").as("nb"))
         val dropped = a.join(b, Seq("centroid_id"))
           .filter(col("da") < col("db"))
-          .filter(round(expr("vec_dot(ea, eb)") /
-            (col("na") * col("nb")), 6) >= 0.35)
+          .filter(Similarity.cos("ea", "eb", col("na"), col("nb")) >= 0.35)
           .select(col("db").as("doc_id")).distinct()
         val kept =
           if (!adv.dedupFirst) corpus
@@ -622,13 +614,7 @@ object Round8 {
             corpus.select(col("cid"), expr("slice(ce, 1, 32)").as("ce")),
             k = m, nlist = 16, nprobe = 10)
           .select("qid", "cid")
-        graft.plans.NativeExpressions.register(s)
-        val re = pool.join(qs, Seq("qid")).join(corpus, Seq("cid"))
-          .select(col("qid"), col("cid"),
-            round(expr("vec_dot(qe, ce)") /
-              (expr("sqrt(vec_dot(qe, qe))") *
-                expr("sqrt(vec_dot(ce, ce))")), 6).as("cos"))
-        TopK.perGroup(re, Seq("qid"), Seq(col("cos").desc, col("cid")), 5)
+        Similarity.topKByCos(Similarity.exactCos(pool, qs, corpus), 5)
           .select("qid", "cid")
       }),
       Some(s"""${Round6c.exactRecallCte},

@@ -315,7 +315,7 @@ object Round9 {
           .persist() // two lineage paths: rep cells + member expansion
         val repsAssigned = Similarity.assignToCentroids(
             cgrp.select(col("rep").as("pb"), col("eb")), "pb", "eb", cents)
-          .withColumn("nb", expr("sqrt(vec_dot(eb, eb))"))
+          .withColumn("nb", Similarity.norm("eb"))
           .persist()
         val cmem = cgrp.select(col("rep").as("pb"), explode(col("ids")).as("db"))
         s.conf.set("spark.sql.catalog.graftmem", "graft.sources.MemCatalog")

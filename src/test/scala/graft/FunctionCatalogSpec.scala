@@ -104,6 +104,23 @@ class FunctionCatalogSpec extends SparkTestBase {
       s"overlap goes through Jobs.scope, cuts through Jobs.cut: $overlapHomes")
   }
 
+  test("src/main: one home for the exact vector score") {
+    // the norm, the rounded cosine and the dot-over-norms quotient, each
+    // spelled by hand — only Similarity.norm / cos / maxsim may do so
+    val spellings = Seq("""sqrt\(vec_dot\(""", """round\(expr\("vec_dot\(""",
+      """vec_dot\([^)]*\)"\)\s*/""").map(_.r)
+    val home = "src/main/scala/graft/operators/Similarity.scala"
+    val stray = for {
+      (f, text) <- sources
+      path = f.getPath.replace(java.io.File.separatorChar, '/')
+      re <- spellings
+      n = re.findAllMatchIn(text).size
+      if n > 0 && (path != home || n > 1)
+    } yield s"$path: ${re.regex} x$n"
+    assert(stray.isEmpty,
+      s"score pairs through Similarity.norm/cos/exactCos/maxsim: $stray")
+  }
+
   test("catalog aggregate function is exact and partitioning-independent") {
     init()
     val vals = (1 to 1000).map(i => (i % 7, i * 0.1 + 0.05))

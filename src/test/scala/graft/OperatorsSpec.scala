@@ -164,6 +164,55 @@ class OperatorsSpec extends SparkTestBase {
     assert(top(1).getLong(0) == 3L)
   }
 
+  test("exactCos and maxsim match a JVM reference; a tie ranks the lower cid first") {
+    graft.plans.NativeExpressions.register(spark)
+    val rnd = new scala.util.Random(7)
+    val base = Vector.tabulate(50)(_ => Vector.fill(8)(rnd.nextGaussian().toFloat))
+    // planted exact tie: cids 50 and 51 are the same vector, twice qid 0's
+    val vecs = base ++ Seq.fill(2)(base(0).map(_ * 2.0f))
+    // the reference arithmetic: doubles summed in ascending index order,
+    // math.sqrt norms, and Spark's round (BigDecimal HALF_UP)
+    def dot(a: Seq[Float], b: Seq[Float]): Double =
+      a.indices.foldLeft(0.0)((acc, i) => acc + a(i).toDouble * b(i).toDouble)
+    def quot(a: Seq[Float], b: Seq[Float]): Double =
+      dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b)))
+    def half(x: Double, scale: Int): BigDecimal =
+      BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP)
+
+    val queries = vecs.take(5).zipWithIndex
+      .map { case (v, i) => (i.toLong, v: Seq[Float]) }.toDF("qid", "qe")
+    val corpus = vecs.zipWithIndex
+      .map { case (v, i) => (i.toLong, v: Seq[Float]) }.toDF("cid", "ce")
+    val pairs = queries.select("qid").crossJoin(corpus.select("cid"))
+    val scored = Similarity.exactCos(pairs, queries, corpus)
+    val got = scored.collect()
+      .map(r => (r.getLong(0).toInt, r.getLong(1).toInt) -> r.getDouble(2)).toMap
+    val want = (for (q <- 0 until 5; c <- vecs.indices)
+      yield (q, c) -> half(quot(vecs(q), vecs(c)), 6).toDouble).toMap
+    assert(got == want)
+    assert(want((0, 0)) == want((0, 50)) && want((0, 50)) == want((0, 51)))
+
+    val top = Similarity.topKByCos(scored, 3).filter(col("qid") === 0L)
+      .orderBy("rnk").select("cid").as[Long].collect().toSeq
+    assert(top == Seq(0L, 50L, 51L))
+
+    // maxsim: docs of 4 tokens (doc = id div 4); query docs 0 and 1
+    val tok = vecs.zipWithIndex.map { case (v, i) => (i / 4, i, v) }
+    val qtok = tok.filter(_._1 < 2).map { case (d, t, v) => (d.toLong, t.toLong, v: Seq[Float]) }
+      .toDF("qd", "qt", "qe").withColumn("qn", Similarity.norm("qe"))
+    val ctok = tok.map { case (d, _, v) => (d.toLong, v: Seq[Float]) }
+      .toDF("cd", "ce").withColumn("cn", Similarity.norm("ce"))
+    val ms = Similarity.maxsim(qtok.crossJoin(ctok)).collect()
+      .map(r => (r.getLong(0).toInt, r.getLong(1).toInt) -> r.getLong(2)).toMap
+    val wantMs = (for (qd <- 0 until 2; cd <- tok.map(_._1).distinct) yield {
+      val score = tok.filter(_._1 == qd).map { case (_, _, qv) =>
+        tok.filter(_._1 == cd).map { case (_, _, cv) =>
+          half(quot(qv, cv) * 1000000.0, 0).toLong }.max }.sum
+      (qd, cd) -> score
+    }).toMap
+    assert(ms == wantMs)
+  }
+
   test("TopK.perGroup keeps k best rows per group, deterministically") {
     val df = Seq(("a", 3L), ("a", 1L), ("a", 2L), ("b", 9L)).toDF("g", "v")
     val top = TopK.perGroup(df, Seq("g"), Seq(col("v").desc), 2)
