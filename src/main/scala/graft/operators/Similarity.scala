@@ -94,6 +94,27 @@ object Similarity {
   def topKByMaxsim(scored: DataFrame, k: Int): DataFrame =
     TopK.perGroup(scored, Seq("qd"), Seq(col("score").desc, col("cd")), k)
 
+  // ---- the SQ8 approximate key ----------------------------------------
+  // An SQ8 shortlist ranks a pair by the pure-int64 key of [[sq8Codes]];
+  // the oracles replay that pool exactly, so the key has one spelling.
+  // The callers must have registered `vec_dotl` (NativeExpressions).
+
+  /** The SQ8 rank key `intdot(q, c) · rc`: the int64 dot of the code
+    * columns named `q` and `c`, times the `rc` rescale of the `c`
+    * side. */
+  def sq8Key(q: String, c: String): Column =
+    expr(s"vec_dotl($q, $c)") * col("rc")
+
+  /** The SQ8 approximate maxsim over already-joined token pairs (qd, cd,
+    * qt, qq, cc, rc): [[sq8Key]] per token pair, its max over the
+    * candidate doc's tokens per query token, summed per (qd, cd) as the
+    * int64 `ascore` a shortlist ranks on. */
+  def sq8Maxsim(pairs: DataFrame): DataFrame =
+    pairs.select(col("qd"), col("cd"), col("qt"),
+        sq8Key("qq", "cc").as("apair"))
+      .groupBy("qd", "cd", "qt").agg(max("apair").as("amx"))
+      .groupBy("qd", "cd").agg(sum("amx").as("ascore"))
+
   /** Exact cosine top-k of `corpus` rows for each row of `queries`.
     * Scores are rounded to 6 digits *before* ranking so ordering is
     * reproducible across engines and partitionings; ties break on id.
@@ -1475,9 +1496,7 @@ object Similarity {
       .join(broadcast(bq), "pa")
       .join(codes.select(col("id").as("pb"), col("qc").as("cq"),
         col("rc")), "pb")
-      .select(col("pa"), col("pb"),
-        (expr("vec_dotl(bq, cq)")
-          * col("rc")).as("akey"))
+      .select(col("pa"), col("pb"), sq8Key("bq", "cq").as("akey"))
     val pool = TopK.perGroup(ranked, Seq("pa"), Seq(col("akey").desc, col("pb")),
       m, rankCol = "rn").select("pa", "pb")
     val corpusReps = grp.select(col("rep").as("pb"), col("ce").as("eb"))
@@ -1556,13 +1575,7 @@ object Similarity {
     val ctok = ctokCodes.getOrElse(corpusTok.select(col("cd"), col("ct"))
       .join(codes.select(col("id").as("ct"), col("qc").as("cc"),
         col("rc")), Seq("ct")))
-    val apx = cdocs.join(qcodes, Seq("qd"))
-      .join(ctok, Seq("cd"))
-      .select(col("qd"), col("cd"), col("qt"),
-        (expr("vec_dotl(qq, cc)")
-          * col("rc")).as("apair"))
-      .groupBy("qd", "cd", "qt").agg(max("apair").as("amx"))
-      .groupBy("qd", "cd").agg(sum("amx").as("ascore"))
+    val apx = sq8Maxsim(cdocs.join(qcodes, Seq("qd")).join(ctok, Seq("cd")))
     val pool = TopK.perGroup(apx, Seq("qd"),
       Seq(col("ascore").desc, col("cd")), m, rankCol = "pr").select("qd", "cd")
     val qv = broadcast(rbatch.withColumn("qn", norm("qe")))
@@ -1641,13 +1654,7 @@ object Similarity {
     val ctok = ctokCodes.getOrElse(corpusTok.select(col("cd"), col("ct"))
       .join(codes.select(col("id").as("ct"), col("qc").as("cc"),
         col("rc")), Seq("ct")))
-    val apx = cdocs.join(qcodes, Seq("qd"))
-      .join(ctok, Seq("cd"))
-      .select(col("qd"), col("cd"), col("qt"),
-        (expr("vec_dotl(qq, cc)")
-          * col("rc")).as("apair"))
-      .groupBy("qd", "cd", "qt").agg(max("apair").as("amx"))
-      .groupBy("qd", "cd").agg(sum("amx").as("ascore"))
+    val apx = sq8Maxsim(cdocs.join(qcodes, Seq("qd")).join(ctok, Seq("cd")))
     val pool = TopK.perGroup(apx, Seq("qd"),
       Seq(col("ascore").desc, col("cd")), m, rankCol = "pr").select("qd", "cd")
     val qv = broadcast(qtok.withColumn("qn", norm("qe")))
@@ -1705,6 +1712,34 @@ object Similarity {
       packed(slice(col(vecCol), 33, 32)).as("h2"))
   }
 
+  /** The standing cell layer of an IVF serve over `corpus` (cid, ce):
+    * the first `nlist` rows by cid as centroids (broadcast), and each
+    * row's nearest cell (cid, centroid_id) — the artifact
+    * `<label>_ca_n<nlist>` when `artifact` = (fixture dir, file,
+    * label) is given. [[ivfBqTopK]], [[ivfSq8TopK]] and q341's drift
+    * monitor read the same cells. */
+  def ivfCells(corpus: DataFrame, nlist: Int,
+      artifact: Option[(String, String, String)]): (DataFrame, DataFrame) = {
+    val cents = broadcast(corpus.orderBy("cid").limit(nlist)
+      .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
+    (cents, ivfPiece(corpus, nlist, artifact, "ca")(
+      assignToCentroids(corpus, "cid", "ce", cents, nKeep = 1)
+        .select(col("cid"), col("centroid_id"))))
+  }
+
+  /** One standing piece `name` of an IVF serve over `corpus`: the
+    * fixture artifact `<label>_<name>_n<nlist>` when `artifact` is
+    * given, else the build itself. */
+  private def ivfPiece(corpus: DataFrame, nlist: Int,
+      artifact: Option[(String, String, String)], name: String)(
+      build: => DataFrame): DataFrame =
+    artifact match {
+      case Some((fd, ff, label)) => graft.util.FixtureArtifact.parquet(
+        corpus.sparkSession, fd, ff, s"${label}_${name}_n$nlist",
+        params = Map("nlist" -> nlist.toLong))(build)
+      case None => build
+    }
+
   /** IVF-BQ top-k serving — the 1-bit rung completing the measured
     * compression ladder (raw 256 B / SQ8 72 B / PQ ~16 B / BQ 16 B
     * per vector resident, at dim 64 with cell id + stored norm... the
@@ -1739,19 +1774,9 @@ object Similarity {
       artifact: Option[(String, String, String)] = None): DataFrame = {
     val spark = queries.sparkSession
     NativeExpressions.register(spark)
-    def piece(name: String)(build: => DataFrame): DataFrame =
-      artifact match {
-        case Some((fd, ff, label)) => graft.util.FixtureArtifact.parquet(
-          spark, fd, ff, s"${label}_${name}_n$nlist",
-          params = Map("nlist" -> nlist.toLong))(build)
-        case None => build
-      }
-    val cents = broadcast(corpus.orderBy("cid").limit(nlist)
-      .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
-    val ca = piece("ca")(
-      assignToCentroids(corpus, "cid", "ce", cents, nKeep = 1)
-        .select(col("cid"), col("centroid_id")))
-    val codes = piece("bq")(bqCodes(corpus, "cid", "ce"))
+    val (cents, ca) = ivfCells(corpus, nlist, artifact)
+    val codes = ivfPiece(corpus, nlist, artifact, "bq")(
+      bqCodes(corpus, "cid", "ce"))
     val qa = assignToCentroids(queries, "qid", "qe", cents, nKeep = nprobe)
       .select(col("qid"), col("centroid_id"))
     val qcodes = broadcast(sq8Codes(queries, "qid", "qe")
@@ -1811,21 +1836,11 @@ object Similarity {
       keep: Option[DataFrame] = None): DataFrame = {
     val spark = queries.sparkSession
     NativeExpressions.register(spark)
-    def piece(name: String)(build: => DataFrame): DataFrame =
-      artifact match {
-        case Some((fd, ff, label)) => graft.util.FixtureArtifact.parquet(
-          spark, fd, ff, s"${label}_${name}_n$nlist",
-          params = Map("nlist" -> nlist.toLong))(build)
-        case None => build
-      }
-    val cents = broadcast(corpus.orderBy("cid").limit(nlist)
-      .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
-    val ca0 = piece("ca")(
-      assignToCentroids(corpus, "cid", "ce", cents, nKeep = 1)
-        .select(col("cid"), col("centroid_id")))
+    val (cents, ca0) = ivfCells(corpus, nlist, artifact)
     val ca = keep.foldLeft(ca0) { (c, kset) =>
       c.join(kset.select("cid"), Seq("cid"), "left_semi") }
-    val codes = piece("sq8")(sq8Codes(corpus, "cid", "ce"))
+    val codes = ivfPiece(corpus, nlist, artifact, "sq8")(
+      sq8Codes(corpus, "cid", "ce"))
     val qa = assignToCentroids(queries, "qid", "qe", cents, nKeep = nprobe)
       .select(col("qid"), col("centroid_id"))
     val qcodes = broadcast(sq8Codes(queries, "qid", "qe")
@@ -1834,9 +1849,7 @@ object Similarity {
       .filter(col("qid") =!= col("cid"))
       .join(qcodes, Seq("qid"))
       .join(codes.select(col("id").as("cid"), col("qc"), col("rc")), "cid")
-      .select(col("qid"), col("cid"),
-        (expr("vec_dotl(qq, qc)")
-          * col("rc")).as("akey"))
+      .select(col("qid"), col("cid"), sq8Key("qq", "qc").as("akey"))
     val pool = TopK.perGroup(cand, Seq("qid"), Seq(col("akey").desc, col("cid")),
       m, rankCol = "pr").select("qid", "cid")
     topKByCos(exactCos(pool, queries, corpus), k).select("qid", "cid")

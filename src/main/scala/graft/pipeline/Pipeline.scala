@@ -188,18 +188,33 @@ class PipelineRunner(spark: SparkSession, root: String) {
     jobs.map(j => j.target -> j).toMap
   }
 
+  /** Each job's in-degree: its DISTINCT deps that some job produces —
+    * a dep named twice is one edge, released once. */
+  private def inDegrees(jobs: Seq[PipelineJob],
+      byTarget: Map[String, PipelineJob]): collection.mutable.Map[String, Int] =
+    collection.mutable.Map(jobs.map(j =>
+      j.target -> j.deps.distinct.count(byTarget.contains)): _*)
+
+  /** Target → the jobs that consume it, each once, in `jobs` order —
+    * built once per graph, so a completion releases its consumers
+    * without rescanning every job. */
+  private def consumersOf(
+      jobs: Seq[PipelineJob]): Map[String, Seq[PipelineJob]] =
+    jobs.flatMap(j => j.deps.distinct.map(_ -> j))
+      .groupBy(_._1).map { case (t, cs) => t -> cs.map(_._2) }
+
   /** Topological order via Kahn's algorithm; cycles are an error. */
   def topoSort(jobs: Seq[PipelineJob]): Seq[PipelineJob] = {
     val byTarget = indexByTarget(jobs)
-    val indeg = collection.mutable.Map(jobs.map(j =>
-      j.target -> j.deps.count(byTarget.contains)): _*)
+    val consumers = consumersOf(jobs)
+    val indeg = inDegrees(jobs, byTarget)
     val ready = collection.mutable.Queue(
       jobs.filter(j => indeg(j.target) == 0).map(_.target).sorted: _*)
     val out = collection.mutable.ArrayBuffer[PipelineJob]()
     while (ready.nonEmpty) {
       val t = ready.dequeue()
       out += byTarget(t)
-      jobs.filter(_.deps.contains(t)).foreach { d =>
+      consumers.getOrElse(t, Nil).foreach { d =>
         indeg(d.target) -= 1
         if (indeg(d.target) == 0) ready.enqueue(d.target)
       }
@@ -239,16 +254,24 @@ class PipelineRunner(spark: SparkSession, root: String) {
     }
   }
 
+  /** The one run decision of [[runForced]] and [[runParallel]]: run iff
+    * the target is in the forced `dirty` set, is stale ([[isStale]]),
+    * or a dep target ran earlier in this build. */
+  private def mustRun(job: PipelineJob, now: Long, dirty: Set[String],
+      ranTargets: collection.Set[String]): Boolean =
+    dirty(job.target) || isStale(job, now) ||
+      job.deps.exists(ranTargets.contains)
+
   /** Builder's ExecutionManager run loop (SURVEY.md §2.1 B8):
     * event-driven parallel execution — every job whose parents are done
     * runs concurrently on a bounded pool, completion releases
     * downstream jobs, and failures retry up to `maxRetries` before
     * aborting the build. Spark sessions are thread-safe; concurrent
     * jobs become concurrent Spark jobs sharing the cluster (use
-    * scheduler pools for fairness at scale). Staleness/skip semantics
-    * identical to [[run]]. An aborted build drains: no further job
-    * starts, the running ones finish writing their targets, and then
-    * the first failure is rethrown.
+    * scheduler pools for fairness at scale). Runs and skips by
+    * [[mustRun]] with no forced set, as [[run]] does. An aborted build
+    * drains: no further job starts, the running ones finish writing
+    * their targets, and then the first failure is rethrown.
     */
   def runParallel(
       jobs: Seq[PipelineJob],
@@ -256,9 +279,8 @@ class PipelineRunner(spark: SparkSession, root: String) {
       maxRetries: Int = 0): PipelineResult = {
     topoSort(jobs) // validates the DAG up front
     val now = System.currentTimeMillis()
-    val byTarget = indexByTarget(jobs)
-    val indeg = collection.mutable.Map(jobs.map(j =>
-      j.target -> j.deps.count(byTarget.contains)): _*)
+    val consumers = consumersOf(jobs)
+    val indeg = inDegrees(jobs, indexByTarget(jobs))
     val ran = collection.mutable.ArrayBuffer[String]()
     val ranTargets = collection.mutable.Set[String]()
     val skipped = collection.mutable.ArrayBuffer[String]()
@@ -271,7 +293,7 @@ class PipelineRunner(spark: SparkSession, root: String) {
     try {
       def submit(job: PipelineJob): Unit = {
         // decision made after all parents completed -> ranTargets stable
-        val stale = isStale(job, now) || job.deps.exists(ranTargets.contains)
+        val stale = mustRun(job, now, Set.empty, ranTargets)
         inFlight += 1
         done.submit(() => {
           if (stale) {
@@ -299,7 +321,7 @@ class PipelineRunner(spark: SparkSession, root: String) {
           if (wasStale) { ran += job.name; ranTargets += job.target }
           else skipped += job.name
           if (failure.isEmpty)
-            jobs.filter(_.deps.contains(job.target)).foreach { d =>
+            consumers.getOrElse(job.target, Nil).foreach { d =>
               indeg(d.target) -= 1
               if (indeg(d.target) == 0) submit(d)
             }
@@ -382,8 +404,7 @@ class PipelineRunner(spark: SparkSession, root: String) {
     val ranTargets = collection.mutable.Set[String]()
     val skipped = collection.mutable.ArrayBuffer[String]()
     topoSort(jobs).foreach { job =>
-      if (dirty(job.target) || isStale(job, now) ||
-          job.deps.exists(ranTargets.contains)) {
+      if (mustRun(job, now, dirty, ranTargets)) {
         execute(job)
         ran += job.name
         ranTargets += job.target

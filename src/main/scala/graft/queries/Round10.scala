@@ -397,19 +397,55 @@ object Round10 {
         .select(col("qid"), col("cid")))
   }
 
-  /** The standing probe workload's scored walk as a fixture artifact —
-    * shared by q313 (gates it at a cosine threshold) and q317 (takes
-    * each rep's top-dOut rows as insert edges): the walk over the
-    * standing graph index is the IDENTICAL sub-pipeline of both
-    * queries, so ONE build serves both (the q315/q328 rule). Label and
-    * params carry every walk dial; the probe workload (ingest slot 0)
-    * and the standing corpus (slot ≠ 0) are fixture-determined, and
-    * per-JVM scratch lifecycle means every cold run rebuilds it. */
-  private def ingestWalkScoredArtifact(s: SparkSession, dir: String,
-      corpus0: DataFrame, edges: DataFrame, codes: DataFrame,
-      cents: DataFrame, adv: graft.operators.IndexAdvisor.Advice,
-      cnorms: DataFrame, cbArt: DataFrame): DataFrame = {
+  /** The standing probe workload's scored walk over the q313/q317
+    * standing graph index, as a fixture artifact. The standing index is
+    * the q312 DiskANN layout over the slot ≠ 0 corpus: the advisor's
+    * graph-pq branch (asserted), the "_slotc" refined graph, PQ codes,
+    * the 16 entry centroids, norms and codebook — each a fixture
+    * artifact declared here only. The walk over it is the IDENTICAL
+    * sub-pipeline of q313 (gates it at a cosine threshold) and q317
+    * (takes each rep's top-dOut rows as insert edges), so ONE build
+    * serves both (the q315/q328 rule). Label and params carry every
+    * walk dial; the probe workload (ingest slot 0) and the standing
+    * corpus (slot ≠ 0) are fixture-determined, and per-JVM scratch
+    * lifecycle means every cold run rebuilds it. */
+  private def slotcScoredWalk(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
+    val corpus0 = emb.filter(Slots.Probe.out)
+      .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+    val st = Round6c.statsArtifact(s, dir, "embeddings.parquet",
+      "stats_nnu_slotc")(corpus0.agg(count(lit(1)).as("n"),
+      countDistinct(col("ce")).as("nu")))
+    val n = st.getLong(0); val nu = st.getLong(1)
+    // the graph-branch operating point: memory provisioned at
+    // 224 B/vector (between the 204 B graph index and 256 B raw
+    // floats) with a 200-candidate budget — full precision can't
+    // fit, IVFPQ's nu·nprobe/nlist scan can't meet the budget,
+    // the graph index can do both (exact-Long replay: 224·nu)
+    val adv = IndexAdvisor.adviseServing(n, dim = 64,
+      dupRate = if (n == 0L) 0.0 else 1.0 - nu.toDouble / n,
+      targetRecall = 0.8, candidateBudget = 200L,
+      memoryBudgetBytes = 224L * nu)
+    require(adv.family == "graph-pq",
+      s"the 224 B/vector budget must force the graph index: $adv")
+    val edges = Round9.refinedGraphArtifact(s, dir, corpus0, "_slotc",
+      adv.params("d").toInt)
+    val codes = graft.util.FixtureArtifact.parquet(s, dir,
+      "embeddings.parquet", "pqcodes_s16_c16_slotc")(
+      Similarity.pqCodes(corpus0, nSub = adv.params("nSub").toInt,
+        nCodes = adv.params("nCodes").toInt, dim = 64))
+    val cents = broadcast(corpus0.orderBy("cid").limit(16)
+      .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
+    // standing-index metadata as artifacts (guide §2.4): norms were
+    // re-derived by every walk round of every micro-batch, the
+    // codebook once per micro-batch
+    val cnorms = graft.util.FixtureArtifact.parquet(s, dir,
+      "embeddings.parquet", "cnorms_slotc")(
+      Similarity.cosNormsDF(corpus0))
+    val cbArt = graft.util.FixtureArtifact.parquet(s, dir,
+      "embeddings.parquet", "pqcb_c16_slotc",
+      params = Map("nCodes" -> 16L))(
+      Similarity.pqCodebookDF(corpus0, nCodes = 16))
     val probesAll = emb.filter(
         Slots.Probe.in)
       .select(col("vec_id").as("da"), col("embedding").as("ea"))
@@ -463,7 +499,7 @@ object Round10 {
         val cents = broadcast(corpus.orderBy("cid").limit(16)
           .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
         val entries = Similarity.centroidEntries(qs, cents)
-        val refined = Round9.refinedGraphArtifact(s, dir, corpus)
+        val refined = Round9.refinedGraphArtifact(s, dir, corpus, "", Round9.NnDegree)
         val codes = Round9.pqCodesArtifact(s, dir, corpus)
         // standing-index metadata as artifacts (guide §2.4): the norm
         // table was re-derived (full-vector scan + vec_dot) by every
@@ -510,57 +546,13 @@ object Round10 {
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
         graft.plans.NativeExpressions.register(s)
-        val corpus0 = emb.filter(Slots.Probe.out)
-          .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-        val st = Round6c.statsArtifact(s, dir, "embeddings.parquet",
-          "stats_nnu_slotc")(corpus0.agg(count(lit(1)).as("n"),
-          countDistinct(col("ce")).as("nu")))
-        val n = st.getLong(0); val nu = st.getLong(1)
-        // the graph-branch operating point: memory provisioned at
-        // 224 B/vector (between the 204 B graph index and 256 B raw
-        // floats) with a 200-candidate budget — full precision can't
-        // fit, IVFPQ's nu·nprobe/nlist scan can't meet the budget,
-        // the graph index can do both (exact-Long replay: 224·nu)
-        val adv = IndexAdvisor.adviseServing(n, dim = 64,
-          dupRate = if (n == 0L) 0.0 else 1.0 - nu.toDouble / n,
-          targetRecall = 0.8, candidateBudget = 200L,
-          memoryBudgetBytes = 224L * nu)
-        require(adv.family == "graph-pq",
-          s"the 224 B/vector budget must force the graph index: $adv")
-        val edges = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet",
-          s"nnd_d${adv.params("d")}_r${Round9.NnRounds}_stitched_d4_p6_t4_slotc") {
-          val stitched = graft.util.FixtureArtifact.parquet(s, dir,
-            "embeddings.parquet", "stitched_d4_p6_t4_slotc")(
-            Similarity.lshKnnEdgesMultiTable(corpus0, d = 4,
-              nPlanes = 6, dim = 64, nTables = 4))
-          Similarity.nnDescentEdges(stitched, corpus0,
-            d = adv.params("d").toInt, rounds = Round9.NnRounds)
-        }
-        val codes = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet", "pqcodes_s16_c16_slotc")(
-          Similarity.pqCodes(corpus0, nSub = adv.params("nSub").toInt,
-            nCodes = adv.params("nCodes").toInt, dim = 64))
-        val cents = broadcast(corpus0.orderBy("cid").limit(16)
-          .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
-        // standing-index metadata as artifacts (guide §2.4): norms were
-        // re-derived by every walk round of every micro-batch, the
-        // codebook once per micro-batch
-        val cnorms = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet", "cnorms_slotc")(
-          Similarity.cosNormsDF(corpus0))
-        val cbArt = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet", "pqcb_c16_slotc",
-          params = Map("nCodes" -> 16L))(
-          Similarity.pqCodebookDF(corpus0, nCodes = 16))
         // the scored walk of the standing probe workload — the
         // IDENTICAL sub-pipeline of q313 (threshold alerts) and q317
         // (insert-edge selection): one build serves both queries (the
         // q315/q328 shared-measurement rule); per-batch serving is a
         // semi-join on the batch's probe ids, value-identical to
         // walking the batch alone (payload-deterministic; spec-tested)
-        val walkArt = ingestWalkScoredArtifact(s, dir, corpus0, edges,
-          codes, cents, adv, cnorms, cbArt)
+        val walkArt = slotcScoredWalk(s, dir)
         s.conf.set("spark.sql.catalog.graftmem", "graft.sources.MemCatalog")
         s.sql("DROP TABLE IF EXISTS graftmem.semdedup_alerts_graph")
         s.sql("""CREATE TABLE graftmem.semdedup_alerts_graph
@@ -612,11 +604,7 @@ object Round10 {
     // corpus through the unchanged harness; both branches live.
     "q314_llm_ann_calibrated_sampled" -> QueryDef(
       (s, dir) => Round6c.recallHarness(s, dir, (qs, corpus) => {
-        val st = Round6c.statsArtifact(s, dir, "embeddings.parquet",
-          "stats_nnu_full")(corpus.agg(count(lit(1)).as("n"),
-          countDistinct(col("ce")).as("nu")))
-        val n = st.getLong(0)
-        val nu = st.getLong(1)
+        val (n, nu) = Round6c.nnuFull(s, dir)
         val dupRate = if (n == 0L) 0.0 else 1.0 - nu.toDouble / n
         val sample = corpus.orderBy(
             Slots.of(col("cid"), 1000003L), col("cid"))
@@ -728,11 +716,7 @@ object Round10 {
     // branches gated by the SQL-computed family.
     "q315_llm_ann_calibrated_memory" -> QueryDef(
       (s, dir) => Round6c.recallHarness(s, dir, (qs, corpus) => {
-        val st = Round6c.statsArtifact(s, dir, "embeddings.parquet",
-          "stats_nnu_full")(corpus.agg(count(lit(1)).as("n"),
-          countDistinct(col("ce")).as("nu")))
-        val n = st.getLong(0)
-        val nu = st.getLong(1)
+        val (n, nu) = Round6c.nnuFull(s, dir)
         val dupRate = if (n == 0L) 0.0 else 1.0 - nu.toDouble / n
         val exact = Round6c.exactTop5(s, dir).select(col("qid"), col("cid"))
         // the two measured serves are fixture artifacts read warm (the
@@ -989,48 +973,10 @@ object Round10 {
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
         graft.plans.NativeExpressions.register(s)
-        val corpus0 = emb.filter(Slots.Probe.out)
-          .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-        val st = Round6c.statsArtifact(s, dir, "embeddings.parquet",
-          "stats_nnu_slotc")(corpus0.agg(count(lit(1)).as("n"),
-          countDistinct(col("ce")).as("nu")))
-        val n = st.getLong(0); val nu = st.getLong(1)
-        val adv = IndexAdvisor.adviseServing(n, dim = 64,
-          dupRate = if (n == 0L) 0.0 else 1.0 - nu.toDouble / n,
-          targetRecall = 0.8, candidateBudget = 200L,
-          memoryBudgetBytes = 224L * nu)
-        require(adv.family == "graph-pq",
-          s"the 224 B/vector budget must force the graph index: $adv")
-        val edges = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet",
-          s"nnd_d${adv.params("d")}_r${Round9.NnRounds}_stitched_d4_p6_t4_slotc") {
-          val stitched = graft.util.FixtureArtifact.parquet(s, dir,
-            "embeddings.parquet", "stitched_d4_p6_t4_slotc")(
-            Similarity.lshKnnEdgesMultiTable(corpus0, d = 4,
-              nPlanes = 6, dim = 64, nTables = 4))
-          Similarity.nnDescentEdges(stitched, corpus0,
-            d = adv.params("d").toInt, rounds = Round9.NnRounds)
-        }
-        val codes = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet", "pqcodes_s16_c16_slotc")(
-          Similarity.pqCodes(corpus0, nSub = adv.params("nSub").toInt,
-            nCodes = adv.params("nCodes").toInt, dim = 64))
-        val cents = broadcast(corpus0.orderBy("cid").limit(16)
-          .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
-        // standing-index metadata artifacts — IDENTICAL labels to
-        // q313's (same standing corpus): one build serves both queries
-        val cnorms = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet", "cnorms_slotc")(
-          Similarity.cosNormsDF(corpus0))
-        val cbArt = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet", "pqcb_c16_slotc",
-          params = Map("nCodes" -> 16L))(
-          Similarity.pqCodebookDF(corpus0, nCodes = 16))
-        // IDENTICAL label to q313's scored-walk artifact (same standing
+        // the same scored-walk artifact as q313's (same standing
         // index, same probe workload, same dials): one walk serves the
         // alerting query AND this insert query (the q315/q328 rule)
-        val walkArt = ingestWalkScoredArtifact(s, dir, corpus0, edges,
-          codes, cents, adv, cnorms, cbArt)
+        val walkArt = slotcScoredWalk(s, dir)
         s.conf.set("spark.sql.catalog.graftmem", "graft.sources.MemCatalog")
         s.sql("DROP TABLE IF EXISTS graftmem.graph_inserts")
         s.sql("""CREATE TABLE graftmem.graph_inserts

@@ -253,6 +253,77 @@ object Round11 {
         "nSub" -> 16L, "nCodes" -> 16L, "d" -> Round9.NnDegree.toLong,
         "nnr" -> Round9.NnRounds.toLong))(build)
 
+  /** The re-derived-nlist standing IVF index over the full corpus
+    * (q320/q323's ivf-filtered tier): its centroids and the
+    * `ivf_assign_nl<nlist>` cell assignment as a build-once artifact
+    * (nu × nlist assignment dots — nlist grows with sqrt(nu), so an
+    * inline rebuild per serve would be the superlinear term at the
+    * probe scales). */
+  private def ivfAssignArtifact(s: SparkSession, dir: String,
+      corpus: DataFrame, nlist: Int): (DataFrame, DataFrame) = {
+    val cents = Similarity.ivfCentroids(corpus, nlist)
+    (cents, graft.util.FixtureArtifact.parquet(s, dir, "embeddings.parquet",
+      s"ivf_assign_nl$nlist", params = Map("nlist" -> nlist.toLong))(
+      Similarity.ivfAssignIndex(corpus, cents)))
+  }
+
+  /** The exact-reranked visited pool of the `beam`/`rounds` ADC walk
+    * over the full standing graph after the tomb3 takedown (the
+    * Slots.Tomb slot), entries re-seeded from the first 16 survivors.
+    * `graph` names the maintained edge set: "pruned" drops every edge
+    * with a tombstoned endpoint; "compact1" is the pruned graph after
+    * ONE NN-Descent compaction round over the survivors — an
+    * index-maintenance artifact, run once per takedown batch and
+    * served by every later query. q321 serves both at b24r4, q325 the
+    * compacted graph at b24r4 (q321's build) and b32r5; the standing
+    * PQ codes are untouched (codes of deleted nodes go cold). */
+  private def tomb3Pool(s: SparkSession, dir: String, qs: DataFrame,
+      corpus: DataFrame, graph: String, beam: Int, rounds: Int): DataFrame = {
+    val tomb = corpus.filter(Slots.Tomb.in(col("cid"))).select("cid")
+    val refined = Round9.refinedGraphArtifact(s, dir, corpus, "", Round9.NnDegree)
+    val codes = Round9.pqCodesArtifact(s, dir, corpus)
+    val edges = graph match {
+      case "pruned" => refined
+        .join(tomb.select(col("cid").as("u")), Seq("u"), "left_anti")
+        .join(tomb.select(col("cid").as("v")), Seq("v"), "left_anti")
+      case "compact1" => graft.util.FixtureArtifact.parquet(s, dir,
+        "embeddings.parquet",
+        s"compact_tomb3_d${Round9.NnDegree}_r1_nnd_d${Round9.NnDegree}_r${Round9.NnRounds}",
+        params = Map("d" -> Round9.NnDegree.toLong, "rounds" -> 1L))(
+        Similarity.graphDeleteCompact(refined, corpus, tomb,
+          d = Round9.NnDegree, rounds = 1))
+    }
+    val survivors = corpus.join(tomb, Seq("cid"), "left_anti")
+    val cents = broadcast(survivors.orderBy("cid").limit(16)
+      .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
+    val entries = Similarity.centroidEntries(qs, cents)
+    visitedPoolArtifact(s, dir, s"tomb3_${graph}_b${beam}_r$rounds",
+      beam, rounds) {
+      Similarity.beamPqVisited(qs, corpus, edges, codes, entries,
+        beam = beam, rounds = rounds, nSub = 16, nCodes = 16, dim = 64)
+    }
+  }
+
+  /** The exact-reranked visited pool of the `beam`/`rounds` ADC walk
+    * over the full standing graph (the refined graph + 16×16 PQ codes,
+    * entries from the first 16 corpus rows) for the 50-query harness
+    * sample. One build per dial serves every reader: b24r4 is q319's
+    * naive dial and q322's measurement + serve, b32r5 q319's boosted
+    * dial, b9r4 q323's graph measurement AND its graph-tier serve (the
+    * q322 measured-pipeline-is-the-serve rule). */
+  private def graphVisitedPool(s: SparkSession, dir: String,
+      qs: DataFrame, corpus: DataFrame, beam: Int, rounds: Int): DataFrame = {
+    val refined = Round9.refinedGraphArtifact(s, dir, corpus, "", Round9.NnDegree)
+    val codes = Round9.pqCodesArtifact(s, dir, corpus)
+    val cents = broadcast(corpus.orderBy("cid").limit(16)
+      .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
+    val entries = Similarity.centroidEntries(qs, cents)
+    visitedPoolArtifact(s, dir, s"b${beam}_r$rounds", beam, rounds) {
+      Similarity.beamPqVisited(qs, corpus, refined, codes, entries,
+        beam = beam, rounds = rounds, nSub = 16, nCodes = 16, dim = 64)
+    }
+  }
+
   /** Per-query top-5 by (cos DESC, cid) — the harness rank. */
   private[queries] def top5(df: DataFrame): DataFrame =
     Similarity.topKByCos(df, 5).select("qid", "cid")
@@ -358,11 +429,6 @@ object Round11 {
           .select(col("vec_id").as("qid"), col("embedding").as("qe"))
         val corpus = emb
           .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-        val cents = broadcast(corpus.orderBy("cid").limit(16)
-          .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
-        val entries = Similarity.centroidEntries(qs, cents)
-        val refined = Round9.refinedGraphArtifact(s, dir, corpus)
-        val codes = Round9.pqCodesArtifact(s, dir, corpus)
         val keeps = Seq("f50", "f05").map(tag => (tag, keepOf(emb, tag),
           exactTop5Filtered(s, dir, tag, qs, corpus, keepOf(emb, tag))
             .select("qid", "cid")))
@@ -376,12 +442,7 @@ object Round11 {
         val parts = for ((dial, beam, rounds) <- Seq(
             ("naive", GraphNaiveBeam, GraphNaiveRounds),
             ("boosted", GraphBoostBeam, GraphBoostRounds))) yield {
-          val vis = visitedPoolArtifact(s, dir, s"b${beam}_r$rounds",
-            beam, rounds) {
-            Similarity.beamPqVisited(qs, corpus, refined, codes,
-              entries, beam = beam, rounds = rounds, nSub = 16,
-              nCodes = 16, dim = 64)
-          }
+          val vis = graphVisitedPool(s, dir, qs, corpus, beam, rounds)
           keeps.map { case (tag, keep, exf) =>
             taggedRecall(tag, dial, exf,
               top5(vis.join(keep, Seq("cid"), "left_semi")))
@@ -479,16 +540,8 @@ object Round11 {
           case "brute-filtered" => Similarity.cosineTopK(qs,
             corpus.join(keepB, Seq("cid"), "left_semi"), k = 5)
           case "ivf-filtered" =>
-            // the re-derived-nlist standing index is a build-once
-            // artifact (nu x nlist assignment dots — nlist grows with
-            // sqrt(nu), so an inline rebuild per serve would be the
-            // superlinear term at the probe scales)
-            val nlist = advB.params("nlist").toInt
-            val cents = Similarity.ivfCentroids(corpus, nlist)
-            val cb = graft.util.FixtureArtifact.parquet(s, dir,
-              "embeddings.parquet", s"ivf_assign_nl$nlist",
-              params = Map("nlist" -> nlist.toLong))(
-              Similarity.ivfAssignIndex(corpus, cents))
+            val (cents, cb) = ivfAssignArtifact(s, dir, corpus,
+              advB.params("nlist").toInt)
             Similarity.ivfTopKProbeWhereIndexed(qs, cents, cb, keepB,
               k = 5, nprobe = advB.params("nprobe").toInt)
           case other => sys.error(
@@ -564,47 +617,17 @@ object Round11 {
           .select(col("vec_id").as("qid"), col("embedding").as("qe"))
         val corpus = emb
           .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-        val tomb = emb.filter(
-            Slots.Tomb.in)
-          .select(col("vec_id").as("cid"))
         val keepSurv = emb.filter(
             Slots.Tomb.out)
           .select(col("vec_id").as("cid"))
-        val refined = Round9.refinedGraphArtifact(s, dir, corpus)
-        val codes = Round9.pqCodesArtifact(s, dir, corpus)
-        val pruned = refined
-          .join(tomb.select(col("cid").as("u")), Seq("u"), "left_anti")
-          .join(tomb.select(col("cid").as("v")), Seq("v"), "left_anti")
-        // the compaction pass is an index-maintenance artifact (run
-        // once per takedown batch, served by every later query)
-        val compacted = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet",
-          s"compact_tomb3_d${Round9.NnDegree}_r1_nnd_d${Round9.NnDegree}_r${Round9.NnRounds}",
-          params = Map("d" -> Round9.NnDegree.toLong, "rounds" -> 1L))(
-          Similarity.graphDeleteCompact(refined, corpus, tomb,
-            d = Round9.NnDegree, rounds = 1))
-        val survivors = corpus.join(tomb, Seq("cid"), "left_anti")
-        val cents = broadcast(survivors.orderBy("cid").limit(16)
-          .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
-        val entries = Similarity.centroidEntries(qs, cents)
         val exf = exactTop5Filtered(s, dir, "surv3", qs, corpus, keepSurv)
           .select("qid", "cid")
         // both serves' visited pools are fixture+tombstone-dial-keyed
         // measurement intermediates (see visitedPoolArtifact)
-        val poolPruned = visitedPoolArtifact(s, dir,
-          s"tomb3_pruned_b${Round9.BeamWidth}_r${Round9.BeamRounds}",
-          Round9.BeamWidth, Round9.BeamRounds) {
-          Similarity.beamPqVisited(qs, corpus, pruned, codes, entries,
-            beam = Round9.BeamWidth, rounds = Round9.BeamRounds,
-            nSub = 16, nCodes = 16, dim = 64)
-        }
-        val poolCompact = visitedPoolArtifact(s, dir,
-          s"tomb3_compact1_b${Round9.BeamWidth}_r${Round9.BeamRounds}",
-          Round9.BeamWidth, Round9.BeamRounds) {
-          Similarity.beamPqVisited(qs, corpus, compacted, codes, entries,
-            beam = Round9.BeamWidth, rounds = Round9.BeamRounds,
-            nSub = 16, nCodes = 16, dim = 64)
-        }
+        val poolPruned = tomb3Pool(s, dir, qs, corpus, "pruned",
+          Round9.BeamWidth, Round9.BeamRounds)
+        val poolCompact = tomb3Pool(s, dir, qs, corpus, "compact1",
+          Round9.BeamWidth, Round9.BeamRounds)
         taggedRecall("surv", "pruned", exf, top5(poolPruned))
           .unionByName(taggedRecall("surv", "compacted", exf,
             top5(poolCompact)))
@@ -660,26 +683,13 @@ object Round11 {
     // the q312 walk chain + recall tail.
     "q322_llm_ann_calibrated_graphpq" -> QueryDef(
       (s, dir) => Round6c.recallHarness(s, dir, (qs, corpus) => {
-        val st = Round6c.statsArtifact(s, dir, "embeddings.parquet",
-          "stats_nnu_full")(corpus.agg(count(lit(1)).as("n"),
-          countDistinct(col("ce")).as("nu")))
-        val n = st.getLong(0); val nu = st.getLong(1)
+        val (n, nu) = Round6c.nnuFull(s, dir)
         val dupRate = if (n == 0L) 0.0 else 1.0 - nu.toDouble / n
-        val cents = broadcast(corpus.orderBy("cid").limit(16)
-          .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
-        val entries = Similarity.centroidEntries(qs, cents)
-        val refined = Round9.refinedGraphArtifact(s, dir, corpus)
-        val codes = Round9.pqCodesArtifact(s, dir, corpus)
         // the b24r4 full-corpus pool — the SAME artifact q319's naive
         // dial reads (one walk serves the dial grid AND this
         // measurement; q312 prices the live walk)
-        val pool = visitedPoolArtifact(s, dir,
-          s"b${Round9.BeamWidth}_r${Round9.BeamRounds}",
-          Round9.BeamWidth, Round9.BeamRounds) {
-          Similarity.beamPqVisited(qs, corpus, refined, codes, entries,
-            beam = Round9.BeamWidth, rounds = Round9.BeamRounds,
-            nSub = 16, nCodes = 16, dim = 64)
-        }
+        val pool = graphVisitedPool(s, dir, qs, corpus, Round9.BeamWidth,
+          Round9.BeamRounds)
         val ann = top5(pool)
         val exact = Round6c.exactTop5(s, dir).select(col("qid"), col("cid"))
         val nq = exact.select("qid").distinct().count()
@@ -809,7 +819,8 @@ object Round11 {
             // (b) graph measurement at the budget's leanest dials —
             // the b9r4 pool is the serve's own artifact
             val gm = {
-              val pool = sloGraphPool(s, dir, qs, corpus)
+              val pool = graphVisitedPool(s, dir, qs, corpus,
+                SloBeam.toInt, SloRounds.toInt)
               val ann = top5(pool.join(keepB, Seq("cid"), "left_semi"))
               val nq = exfB.select("qid").distinct().count()
               exfB.join(ann, Seq("qid", "cid")).count()
@@ -840,16 +851,12 @@ object Round11 {
           case "brute-filtered" => Similarity.cosineTopK(qs,
             corpus.join(keepB, Seq("cid"), "left_semi"), k = 5)
           case "ivf-filtered" =>
-            val cents = Similarity.ivfCentroids(corpus, nlist.toInt)
-            val cb = graft.util.FixtureArtifact.parquet(s, dir,
-              "embeddings.parquet", s"ivf_assign_nl$nlist",
-              params = Map("nlist" -> nlist))(
-              Similarity.ivfAssignIndex(corpus, cents))
+            val (cents, cb) = ivfAssignArtifact(s, dir, corpus, nlist.toInt)
             Similarity.ivfTopKProbeWhereIndexed(qs, cents, cb, keepB,
               k = 5, nprobe = advB.params("nprobe").toInt)
           case "graph-filtered" =>
-            top5(sloGraphPool(s, dir, qs, corpus)
-              .join(keepB, Seq("cid"), "left_semi"))
+            top5(graphVisitedPool(s, dir, qs, corpus, SloBeam.toInt,
+                SloRounds.toInt).join(keepB, Seq("cid"), "left_semi"))
           case other => sys.error(
             s"SLO filtered advisor picked unreachable family $other")
         }
@@ -1013,35 +1020,15 @@ object Round11 {
           .select(col("vec_id").as("qid"), col("embedding").as("qe"))
         val corpus = emb
           .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-        val tomb = emb.filter(
-            Slots.Tomb.in)
-          .select(col("vec_id").as("cid"))
         val keep = emb.filter(
             Slots.Tomb.out &&
               col("label") < 5)
           .select(col("vec_id").as("cid"))
-        val refined = Round9.refinedGraphArtifact(s, dir, corpus)
-        val codes = Round9.pqCodesArtifact(s, dir, corpus)
-        val compacted = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet",
-          s"compact_tomb3_d${Round9.NnDegree}_r1_nnd_d${Round9.NnDegree}_r${Round9.NnRounds}",
-          params = Map("d" -> Round9.NnDegree.toLong, "rounds" -> 1L))(
-          Similarity.graphDeleteCompact(refined, corpus, tomb,
-            d = Round9.NnDegree, rounds = 1))
-        val survivors = corpus.join(tomb, Seq("cid"), "left_anti")
-        val cents = broadcast(survivors.orderBy("cid").limit(16)
-          .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
-        val entries = Similarity.centroidEntries(qs, cents)
         val exf = exactTop5Filtered(s, dir, "surv3f50", qs, corpus, keep)
           .select("qid", "cid")
         val parts = Seq((Round9.BeamWidth, Round9.BeamRounds),
             (GraphBoostBeam, GraphBoostRounds)).map { case (b, r) =>
-          val pool = visitedPoolArtifact(s, dir,
-            s"tomb3_compact1_b${b}_r$r", b, r) {
-            Similarity.beamPqVisited(qs, corpus, compacted, codes,
-              entries, beam = b, rounds = r, nSub = 16, nCodes = 16,
-              dim = 64)
-          }
+          val pool = tomb3Pool(s, dir, qs, corpus, "compact1", b, r)
           taggedRecall("sf50", s"b${b}r$r", exf,
             top5(pool.join(keep, Seq("cid"), "left_semi")))
         }
@@ -1075,21 +1062,5 @@ object Round11 {
       ORDER BY dial, qid"""))
   )
 
-  /** The b9r4 visited pool over the full standing graph — q323's graph
-    * measurement AND its graph-tier serve (one artifact, the q322
-    * measured-pipeline-is-the-serve rule). */
-  private def sloGraphPool(s: SparkSession, dir: String,
-      qs: DataFrame, corpus: DataFrame): DataFrame = {
-    val refined = Round9.refinedGraphArtifact(s, dir, corpus)
-    val codes = Round9.pqCodesArtifact(s, dir, corpus)
-    val cents = broadcast(corpus.orderBy("cid").limit(16)
-      .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
-    val entries = Similarity.centroidEntries(qs, cents)
-    visitedPoolArtifact(s, dir, s"b${SloBeam}_r$SloRounds",
-      SloBeam.toInt, SloRounds.toInt) {
-      Similarity.beamPqVisited(qs, corpus, refined, codes, entries,
-        beam = SloBeam.toInt, rounds = SloRounds.toInt,
-        nSub = 16, nCodes = 16, dim = 64)
-    }
-  }
+
 }

@@ -112,10 +112,47 @@ object Round11b {
   /** Multi-vector view of the embeddings fixture: doc = vec_id div 4,
     * four token vectors per document (the ColBERT layout at fixture
     * scale; production token counts just widen the per-doc group). */
-  private def mvTok(s: SparkSession, dir: String): DataFrame =
+  private[queries] def mvTok(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "embeddings").select(
       expr("vec_id div 4").as("doc"), col("vec_id").as("tid"),
       col("embedding").as("e"))
+
+  /** Distinct token vectors of the [[mvTok]] view — the token-index
+    * advisor's corpus statistic (q346/q347/q356) — as the one
+    * `stats_ntok_mv` artifact. */
+  private[queries] def mvNTok(s: SparkSession, dir: String): Long =
+    Round6c.statsArtifact(s, dir, "embeddings.parquet", "stats_ntok_mv")(
+      mvTok(s, dir).agg(countDistinct(col("e")))).getLong(0)
+
+  /** The standing SQ8 token index over a (doc, tid, e) token view:
+    * the first `nlist` tokens by tid as centroids (broadcast), and as
+    * fixture artifacts each token's nearest cell `<prefix>_ca_n<nlist>`
+    * (tid, centroid_id), the token SQ8 codes `<prefix>_sq8` (id, qc,
+    * rc) and the standing (cd, ct, cc, rc) token→doc + code table
+    * `<prefix>_ctok_sq8` that every serve scans flat (guide §2.4).
+    * `prefix` names the view: "maxsim" is [[mvTok]] (q334, q346, q347,
+    * q356), "mving" its slot ≠ 0 standing documents (q343, q348). */
+  private[queries] def sq8TokenIndex(s: SparkSession, dir: String,
+      tok: DataFrame, prefix: String, nlist: Long)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val cents = broadcast(tok.orderBy("tid").limit(nlist.toInt)
+      .select(col("tid").as("centroid_id"), col("e").as("centroid")))
+    val ca = graft.util.FixtureArtifact.parquet(s, dir,
+      "embeddings.parquet", s"${prefix}_ca_n$nlist",
+      params = Map("nlist" -> nlist))(
+      Similarity.assignToCentroids(tok.select(col("tid"), col("e")),
+          "tid", "e", cents, nKeep = 1)
+        .select(col("tid"), col("centroid_id")))
+    val codes = graft.util.FixtureArtifact.parquet(s, dir,
+      "embeddings.parquet", s"${prefix}_sq8")(
+      Similarity.sq8Codes(tok.select(col("tid"), col("e")), "tid", "e"))
+    val ctok = graft.util.FixtureArtifact.parquet(s, dir,
+      "embeddings.parquet", s"${prefix}_ctok_sq8")(
+      tok.select(col("doc").as("cd"), col("tid").as("ct"))
+        .join(codes.select(col("id").as("ct"), col("qc").as("cc"),
+          col("rc")), Seq("ct")))
+    (cents, ca, codes, ctok)
+  }
 
   /** Exact MaxSim score table over all (query doc, corpus doc) pairs,
     * micro-cos BIGINT: mc = round(cos·10⁶) per token pair (round ties
@@ -230,11 +267,7 @@ object Round11b {
     // costs in //, family tie-break ASC ('ivf-sq8' < 'ivfpq').
     "q328_llm_ann_calibrated_sq8" -> QueryDef(
       (s, dir) => Round6c.recallHarness(s, dir, (qs, corpus) => {
-        val st = Round6c.statsArtifact(s, dir, "embeddings.parquet",
-          "stats_nnu_full")(corpus.agg(count(lit(1)).as("n"),
-          countDistinct(col("ce")).as("nu")))
-        val n = st.getLong(0)
-        val nu = st.getLong(1)
+        val (n, nu) = Round6c.nnuFull(s, dir)
         val dupRate = if (n == 0L) 0.0 else 1.0 - nu.toDouble / n
         require(nu * 256L > Sq8MemBudget,
           s"raw vectors fit the $Sq8MemBudget B budget at nu=$nu — " +
@@ -690,17 +723,8 @@ object Round11b {
       (s, dir) => {
         graft.plans.NativeExpressions.register(s)
         val tok = mvTok(s, dir)
-        val cents = broadcast(tok.orderBy("tid").limit(16)
-          .select(col("tid").as("centroid_id"), col("e").as("centroid")))
-        val ca = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet", "maxsim_ca_n16",
-          params = Map("nlist" -> 16L))(
-          Similarity.assignToCentroids(tok.select(col("tid"), col("e")),
-              "tid", "e", cents, nKeep = 1)
-            .select(col("tid"), col("centroid_id")))
-        val codes = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet", "maxsim_sq8")(
-          Similarity.sq8Codes(tok.select(col("tid"), col("e")), "tid", "e"))
+        val (cents, ca, codes, ctok) =
+          sq8TokenIndex(s, dir, tok, "maxsim", nlist = 16L)
         val qtok = tok.filter(col("doc") < 10)
           .select(col("doc").as("qd"), col("tid").as("qt"), col("e").as("qe"))
         val qa = Similarity.assignToCentroids(
@@ -714,14 +738,8 @@ object Round11b {
         val qcodes = broadcast(codes
           .join(qtok.select(col("qt").as("id"), col("qd")), Seq("id"))
           .select(col("qd"), col("id").as("qt"), col("qc").as("qq")))
-        val capx = cdocs.join(qcodes, Seq("qd"))
-          .join(codes.select(expr("id div 4").as("cd"), col("id").as("ct"),
-            col("qc").as("cc"), col("rc")), Seq("cd"))
-          .select(col("qd"), col("cd"), col("qt"),
-            (expr("vec_dotl(qq, cc)")
-              * col("rc")).as("apair"))
-          .groupBy("qd", "cd", "qt").agg(max("apair").as("amx"))
-          .groupBy("qd", "cd").agg(sum("amx").as("ascore"))
+        val capx = Similarity.sq8Maxsim(
+          cdocs.join(qcodes, Seq("qd")).join(ctok, Seq("cd")))
         val pool = TopK.perGroup(capx, Seq("qd"),
           Seq(col("ascore").desc, col("cd")), 10, rankCol = "pr")
           .select("qd", "cd")

@@ -372,9 +372,7 @@ object Round12 {
       .filter(col("qid") =!= col("cid"))
       .join(qcodes, Seq("qid"))
       .join(codes.select(col("id").as("cid"), col("qc"), col("rc")), "cid")
-      .select(col("qid"), col("cid"),
-        (expr("vec_dotl(qq, qc)")
-          * col("rc")).as("akey"))
+      .select(col("qid"), col("cid"), Similarity.sq8Key("qq", "qc").as("akey"))
     val pool = TopK.perGroup(cand, Seq("qid"), Seq(col("akey").desc, col("cid")),
       m, rankCol = "pr").select("qid", "cid")
     Similarity.topKByCos(Similarity.exactCos(pool, qs, corpus), 5)
@@ -837,10 +835,7 @@ object Round12 {
           .select(col("vec_id").as("qid"), col("embedding").as("qe"))
         val corpus = emb
           .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-        val st = Round6c.statsArtifact(s, dir, "embeddings.parquet",
-          "stats_nnu_full")(corpus.agg(count(lit(1)).as("n"),
-          countDistinct(col("ce")).as("nu")))
-        val n = st.getLong(0); val nu = st.getLong(1)
+        val (n, nu) = Round6c.nnuFull(s, dir)
         require(nu * 256L > F50MemBudget,
           s"raw vectors fit the $F50MemBudget B budget at nu=$nu — " +
             "the ivf-filtered row would need measuring (q320 scores " +
@@ -1074,16 +1069,10 @@ object Round12 {
           s"cell-occupancy PSI product term exceeds int64 past 5e5 " +
             s"vectors (2n^2*ln(n*1e6)*1e6 vs 9.2e18) at n=$n — shard " +
             "the PSI by stratum")
-        val cents = broadcast(corpus.orderBy("cid").limit(16)
-          .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
+        // the STANDING cells — the q326/q337/q340 IVF-SQ8 artifact
+        val (cents, zca) = Similarity.ivfCells(corpus, 16,
+          Some((dir, "embeddings.parquet", "ivfsq8")))
         val cells = cents.select(col("centroid_id").as("cell"))
-        // the STANDING assignment — the q326/q337/q340 artifact, same
-        // label+params (FixtureArtifact's dial guard enforces identity)
-        val zca = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet", "ivfsq8_ca_n16",
-          params = Map("nlist" -> 16L))(
-          Similarity.assignToCentroids(corpus, "cid", "ce", cents,
-            nKeep = 1).select(col("cid"), col("centroid_id")))
         val zOld = zca.select(col("cid"), col("centroid_id").as("old"))
         // ---- scenario 1: takedown (null) ----
         val keep = emb.filter(
@@ -1312,27 +1301,11 @@ object Round12 {
         val stok = emb.filter(Slots.Probe.out(expr("vec_id div 4")))
           .select(expr("vec_id div 4").as("cd"), col("vec_id").as("ct"),
             col("embedding").as("ce"))
-        val cents = broadcast(stok.orderBy("ct").limit(16)
-          .select(col("ct").as("centroid_id"), col("ce").as("centroid")))
-        val ca = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet", "mving_ca_n16",
-          params = Map("nlist" -> 16L))(
-          Similarity.assignToCentroids(
-              stok.select(col("ct").as("tid"), col("ce").as("e")),
-              "tid", "e", cents, nKeep = 1)
-            .select(col("tid"), col("centroid_id")))
-        val codes = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet", "mving_sq8")(
-          Similarity.sq8Codes(stok.select(col("ct"), col("ce")),
-            "ct", "ce"))
-        // the standing (doc, token, code) table as ONE artifact — the
-        // per-batch corpusTok ⋈ codes join collapses to a flat scan
-        // (guide §2.4); label shared by q343/q348 (same standing corpus)
-        val ctokArt = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet", "mving_ctok_sq8")(
-          stok.select(col("cd"), col("ct"))
-            .join(codes.select(col("id").as("ct"), col("qc").as("cc"),
-              col("rc")), Seq("ct")))
+        // the standing token index (cells, codes and the flat
+        // (cd, ct, cc, rc) table), shared with q348 at nlist 16
+        val (cents, ca, codes, ctokArt) = Round11b.sq8TokenIndex(s, dir,
+          stok.select(col("cd").as("doc"), col("ct").as("tid"),
+            col("ce").as("e")), "mving", nlist = 16L)
         s.conf.set("spark.sql.catalog.graftmem", "graft.sources.MemCatalog")
         s.sql("DROP TABLE IF EXISTS graftmem.maxsim_alerts_mv")
         s.sql("""CREATE TABLE graftmem.maxsim_alerts_mv
@@ -1405,10 +1378,7 @@ object Round12 {
         // the exact vector-truth ranks are a pure function of the
         // fixture — a build-once artifact (the exact_top5 precedent
         // at k=20 over the 20-doc hybrid query sample)
-        val vx = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet", "exact_top20_hyb")(
-          Similarity.cosineTopK(qs20, corpus, k = 20)
-            .select(col("qid"), col("cid"), col("rnk").as("rv")))
+        val vx = Round6c.exactTop20Hyb(s, dir)
         val pool = Similarity.ivfSq8TopK(qs20, corpus, k = 20, nlist = 16,
           nprobe = 10, m = 24,
           artifact = Some((dir, "embeddings.parquet", "ivfsq8")))

@@ -553,32 +553,11 @@ object Round13 {
   private[queries] def mvAdvisedSetup(s: SparkSession, dir: String):
       (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame, Long, Long) = {
     graft.plans.NativeExpressions.register(s)
-    val tok = t(s, dir, "embeddings").select(
-      expr("vec_id div 4").as("doc"), col("vec_id").as("tid"),
-      col("embedding").as("e"))
-    val nTok = Round6c.statsArtifact(s, dir, "embeddings.parquet",
-      "stats_ntok_mv")(tok.agg(countDistinct(col("e")))).getLong(0)
-    val (nlist, np) = IndexAdvisor.adviseTokenIndex(nTok,
+    val tok = Round11b.mvTok(s, dir)
+    val (nlist, np) = IndexAdvisor.adviseTokenIndex(Round11b.mvNTok(s, dir),
       measuredNlist = 16L, measuredNprobe = 2L)
-    val cents = broadcast(tok.orderBy("tid").limit(nlist.toInt)
-      .select(col("tid").as("centroid_id"), col("e").as("centroid")))
-    val ca = graft.util.FixtureArtifact.parquet(s, dir,
-      "embeddings.parquet", s"maxsim_ca_n$nlist",
-      params = Map("nlist" -> nlist))(
-      Similarity.assignToCentroids(tok.select(col("tid"), col("e")),
-          "tid", "e", cents, nKeep = 1)
-        .select(col("tid"), col("centroid_id")))
-    val codes = graft.util.FixtureArtifact.parquet(s, dir,
-      "embeddings.parquet", "maxsim_sq8")(
-      Similarity.sq8Codes(tok.select(col("tid"), col("e")), "tid", "e"))
-    // the standing (cd, ct, cc, rc) table as ONE artifact — every
-    // serve's per-call corpusTok ⋈ codes join collapses to a flat scan
-    // (guide §2.4); values identical by construction
-    val ctok = graft.util.FixtureArtifact.parquet(s, dir,
-      "embeddings.parquet", "maxsim_ctok_sq8")(
-      tok.select(col("doc").as("cd"), col("tid").as("ct"))
-        .join(codes.select(col("id").as("ct"), col("qc").as("cc"),
-          col("rc")), Seq("ct")))
+    val (cents, ca, codes, ctok) =
+      Round11b.sq8TokenIndex(s, dir, tok, "maxsim", nlist)
     (tok, cents, ca, codes, ctok, nlist, np)
   }
 
@@ -695,27 +674,10 @@ object Round13 {
           "stats_ntok_sving")(stok.agg(countDistinct(col("ce")))).getLong(0)
         val (nlist, np) = IndexAdvisor.adviseTokenIndex(nTok,
           measuredNlist = 16L, measuredNprobe = 4L)
-        val cents = broadcast(stok.orderBy("ct").limit(nlist.toInt)
-          .select(col("ct").as("centroid_id"), col("ce").as("centroid")))
-        val ca = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet", s"mving_ca_n$nlist",
-          params = Map("nlist" -> nlist))(
-          Similarity.assignToCentroids(
-              stok.select(col("ct").as("tid"), col("ce").as("e")),
-              "tid", "e", cents, nKeep = 1)
-            .select(col("tid"), col("centroid_id")))
-        val codes = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet", "mving_sq8")(
-          Similarity.sq8Codes(stok.select(col("ct"), col("ce")),
-            "ct", "ce"))
-        // the standing (doc, token, code) table as ONE artifact — the
-        // per-batch corpusTok ⋈ codes join collapses to a flat scan
-        // (guide §2.4); label shared by q343/q348 (same standing corpus)
-        val ctokArt = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet", "mving_ctok_sq8")(
-          stok.select(col("cd"), col("ct"))
-            .join(codes.select(col("id").as("ct"), col("qc").as("cc"),
-              col("rc")), Seq("ct")))
+        // the standing index q343 serves, at the advised nlist
+        val (cents, ca, codes, ctokArt) = Round11b.sq8TokenIndex(s, dir,
+          stok.select(col("cd").as("doc"), col("ct").as("tid"),
+            col("ce").as("e")), "mving", nlist)
         s.conf.set("spark.sql.catalog.graftmem", "graft.sources.MemCatalog")
         s.sql("DROP TABLE IF EXISTS graftmem.maxsim_alerts_mvadv")
         s.sql("""CREATE TABLE graftmem.maxsim_alerts_mvadv
@@ -810,18 +772,8 @@ object Round13 {
           .select("cid", "ce"), "q349_corpus")
         val qs = emb.filter(col("vec_id") < 50)
           .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-        val e = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet",
-          s"nnd_d${Round9.NnDegree}_r${Round9.NnRounds}_stitched_d4_p6_t4_reps",
-          params = Map("d" -> Round9.NnDegree.toLong,
-            "rounds" -> Round9.NnRounds.toLong)) {
-          val stitched = graft.util.FixtureArtifact.parquet(s, dir,
-            "embeddings.parquet", "stitched_d4_p6_t4_reps")(
-            Similarity.lshKnnEdgesMultiTable(corpus, d = 4, nPlanes = 6,
-              dim = 64, nTables = 4))
-          Similarity.nnDescentEdges(stitched, corpus,
-            d = Round9.NnDegree, rounds = Round9.NnRounds)
-        }
+        val e = Round9.refinedGraphArtifact(s, dir, corpus, "_reps",
+          Round9.NnDegree)
         val nE = e.count()
         def truncOf(c: String) = expr(
           s"transform(sequence(1, 64), i -> IF(i <= 32, element_at($c, i), CAST(0.0 AS FLOAT)))")
@@ -885,17 +837,8 @@ object Round13 {
             "rounds" -> Round9.NnRounds.toLong))(
           Similarity.nnDescentEdges(e, trunc, d = Round9.NnDegree,
             rounds = Round9.NnRounds))
-        val rebuiltE = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet", s"nnd_d${Round9.NnDegree}_r${Round9.NnRounds}_stitched_gwt_reps",
-          params = Map("d" -> Round9.NnDegree.toLong,
-            "rounds" -> Round9.NnRounds.toLong)) {
-          val stitched = graft.util.FixtureArtifact.parquet(s, dir,
-            "embeddings.parquet", "stitched_d4_p6_t4_gwt_reps")(
-            Similarity.lshKnnEdgesMultiTable(trunc, d = 4, nPlanes = 6,
-              dim = 64, nTables = 4))
-          Similarity.nnDescentEdges(stitched, trunc, d = Round9.NnDegree,
-            rounds = Round9.NnRounds)
-        }
+        val rebuiltE = Round9.refinedGraphArtifact(s, dir, trunc,
+          "_gwt_reps", Round9.NnDegree)
         // the two LIVE walks are independent multi-job loops — parts
         // running concurrently with each other AND with the churn
         // counts: each walk's round tail leaves most cores idle, the
@@ -1089,18 +1032,12 @@ object Round13 {
           .select(col("vec_id").as("qid"), col("embedding").as("qe"))
         val corpus = emb
           .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-        val st = Round6c.statsArtifact(s, dir, "embeddings.parquet",
-          "stats_nnu_full")(corpus.agg(count(lit(1)).as("n"),
-          countDistinct(col("ce")).as("nu")))
-        val n = st.getLong(0); val nu = st.getLong(1)
+        val (n, nu) = Round6c.nnuFull(s, dir)
         val dupRate = if (n == 0L) 0.0 else 1.0 - nu.toDouble / n
         require(nu * 256L > HybMemBudget,
           s"raw vectors fit the $HybMemBudget B budget at nu=$nu — " +
             "the full-precision arm would need measuring")
-        val vx = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet", "exact_top20_hyb")(
-          Similarity.cosineTopK(qs20, corpus, k = 20)
-            .select(col("qid"), col("cid"), col("rnk").as("rv")))
+        val vx = Round6c.exactTop20Hyb(s, dir)
         val nq = vx.select("qid").distinct().count()
         def rec20(rv: DataFrame): Double =
           vx.select("qid", "cid").join(rv.select("qid", "cid"),

@@ -926,15 +926,7 @@ object Round14 {
         val nQ = 20
         val poolM = 200
         graft.plans.NativeExpressions.register(s)
-        val emb = t(s, dir, "embeddings")
-        val qs20 = emb.filter(col("vec_id") < nQ)
-          .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-        val vcorpus = emb
-          .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-        val vx = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet", "exact_top20_hyb")(
-          Similarity.cosineTopK(qs20, vcorpus, k = 20)
-            .select(col("qid"), col("cid"), col("rnk").as("rv")))
+        val vx = Round6c.exactTop20Hyb(s, dir)
         val lrank = Round12.bm25Lrank20(s, dir)
         // the standing impact index: per-posting BM25 contribution —
         // query-independent (df, dl and the corpus stats are global),
@@ -1148,9 +1140,7 @@ object Round14 {
         // vectors (duplicate docs pool identically), and tokens/doc
         // from the id-level ratio (4 at every replication factor)
         val (nTok, cnt) = Jobs.scope(s) { j =>
-          val nTok = j.part("q356_ntok")(Round6c.statsArtifact(s, dir,
-            "embeddings.parquet", "stats_ntok_mv")(
-            tok.agg(countDistinct(col("e")))).getLong(0))
+          val nTok = j.part("q356_ntok")(Round11b.mvNTok(s, dir))
           val cnt = j.part("q356_cnt")(Round6c.statsArtifact(s, dir,
             "embeddings.parquet", "stats_ct_docs_mv")(
             tok.agg(count(lit(1)), countDistinct(col("doc")))))

@@ -106,6 +106,32 @@ object Round6c {
       build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.Row =
     graft.util.FixtureArtifact.parquet(s, dir, file, label)(build).head()
 
+  /** The full corpus's (n, nu) — row count and distinct vectors, the
+    * calibrated advisors' corpus statistic — as the one
+    * `stats_nnu_full` artifact, aggregated over its own corpus view. */
+  private[queries] def nnuFull(s: SparkSession, dir: String): (Long, Long) = {
+    val st = statsArtifact(s, dir, "embeddings.parquet", "stats_nnu_full")(
+      t(s, dir, "embeddings").agg(count(lit(1)).as("n"),
+        countDistinct(col("embedding")).as("nu")))
+    (st.getLong(0), st.getLong(1))
+  }
+
+  /** The exact top-20 vector ranks (qid, cid, rv) of the 20-query
+    * hybrid-retrieval sample (vec_id < 20) over the full corpus — the
+    * vector truth of q344/q351/q355 — as a build-once artifact (the
+    * [[exactTop5]] precedent at k = 20). */
+  private[queries] def exactTop20Hyb(s: SparkSession, dir: String): DataFrame =
+    graft.util.FixtureArtifact.parquet(s, dir, "embeddings.parquet",
+      "exact_top20_hyb") {
+      val emb = t(s, dir, "embeddings")
+      val qs20 = emb.filter(col("vec_id") < 20)
+        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+      val corpus = emb
+        .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+      Similarity.cosineTopK(qs20, corpus, k = 20)
+        .select(col("qid"), col("cid"), col("rnk").as("rv"))
+    }
+
   private[queries] def recallHarness(s: SparkSession, dir: String,
       ann: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val emb = t(s, dir, "embeddings")

@@ -694,11 +694,8 @@ object Round8 {
         // the graph build is a fixture-keyed artifact (built once per
         // harness run, label pins the dials) — each beam round then
         // plans against a flat parquet scan, never the build tree
-        val d = adv.params("d").toInt
-        val edges = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet", s"lshknn_d${d}_p6")(
-          Similarity.lshKnnEdgesDeduped(corpus, d = d, nPlanes = 6,
-            dim = 64))
+        val edges = Round9.lshKnnArtifact(s, dir, corpus,
+          adv.params("d").toInt)
         Similarity.beamTopK(qs, corpus, edges, k = 5,
           beam = adv.params("beam").toInt,
           rounds = adv.params("rounds").toInt)
@@ -733,10 +730,7 @@ object Round8 {
         val cents = broadcast(corpus.orderBy("cid").limit(16)
           .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
         val entries = Similarity.centroidEntries(qs, cents)
-        val edges = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet", "lshknn_d4_p6")(
-          Similarity.lshKnnEdgesDeduped(corpus, d = 4, nPlanes = 6,
-            dim = 64))
+        val edges = Round9.lshKnnArtifact(s, dir, corpus, 4)
         Similarity.beamTopKFrom(qs, corpus, edges, entries, k = 5,
           beam = 8, rounds = 3)
       }),
@@ -770,10 +764,7 @@ object Round8 {
         val cents = broadcast(corpus.orderBy("cid").limit(16)
           .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
         val entries = Similarity.centroidEntries(qs, cents)
-        val edges = graft.util.FixtureArtifact.parquet(s, dir,
-          "embeddings.parquet", "stitched_d4_p6_t4")(
-          Similarity.lshKnnEdgesMultiTable(corpus, d = 4,
-            nPlanes = 6, dim = 64, nTables = 4))
+        val edges = Round9.stitchedArtifact(s, dir, corpus, "")
         Similarity.beamTopKFrom(qs, corpus, edges, entries, k = 5,
           beam = 8, rounds = 3)
       }),

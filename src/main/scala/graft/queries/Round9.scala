@@ -78,24 +78,45 @@ object Round9 {
   private[queries] val BeamWidth = 24
   private[queries] val BeamRounds = 4
 
-  /** The NN-Descent-refined graph as a fixture-keyed artifact (built
-    * once per harness run; labels pin the dials) — THE resident graph
-    * every graph-serving row walks: q304 (full-precision beam) and
-    * q312 (DiskANN — ADC-ranked beam over PQ codes) serve literally
-    * the same build. The stitched input is its own shared artifact
-    * (q303 reads it too); nnDescentEdges additionally materializes
-    * every refinement round internally (the lineage hard-cut). */
-  private[queries] def refinedGraphArtifact(s: SparkSession, dir: String,
-      corpus: DataFrame): DataFrame =
+  /** The single-table, duplicate-grouped LSH-kNN graph (degree `d`, 6
+    * planes) over the full corpus as a fixture-keyed artifact — q301's
+    * advised graph (d = 4 at the fixture scales) and q302's seeded
+    * one. */
+  private[queries] def lshKnnArtifact(s: SparkSession, dir: String,
+      corpus: DataFrame, d: Int): DataFrame =
     graft.util.FixtureArtifact.parquet(s, dir, "embeddings.parquet",
-      s"nnd_d${NnDegree}_r${NnRounds}_stitched_d4_p6_t4") {
-      val stitched = graft.util.FixtureArtifact.parquet(s, dir,
-        "embeddings.parquet", "stitched_d4_p6_t4")(
-        Similarity.lshKnnEdgesMultiTable(corpus, d = 4,
-          nPlanes = 6, dim = 64, nTables = 4))
-      Similarity.nnDescentEdges(stitched, corpus,
-        d = NnDegree, rounds = NnRounds)
-    }
+      s"lshknn_d${d}_p6", params = Map("d" -> d.toLong))(
+      Similarity.lshKnnEdgesDeduped(corpus, d = d, nPlanes = 6, dim = 64))
+
+  /** The 4-table LSH-stitched kNN graph (degree 4, 6 planes) over one
+    * corpus view as a fixture-keyed artifact — q303's graph and the
+    * input of every NN-Descent refinement. `view` is the corpus-view
+    * label suffix: "" (full corpus), "_slotc" (the slot ≠ 0 standing
+    * corpus), "_reps" / "_gwt_reps" (q349's rep corpus and its
+    * truncated world); one suffix names one corpus frame. */
+  private[queries] def stitchedArtifact(s: SparkSession, dir: String,
+      corpus: DataFrame, view: String): DataFrame =
+    graft.util.FixtureArtifact.parquet(s, dir, "embeddings.parquet",
+      s"stitched_d4_p6_t4$view")(
+      Similarity.lshKnnEdgesMultiTable(corpus, d = 4, nPlanes = 6,
+        dim = 64, nTables = 4))
+
+  /** The NN-Descent-refined graph (degree `d`, [[NnRounds]] rounds over
+    * [[stitchedArtifact]] of the same view) as a fixture-keyed artifact
+    * — THE resident graph every graph-serving row walks: q304
+    * (full-precision beam), q312/q319/q321–q325 (ADC-ranked beam over
+    * PQ codes) serve the full-corpus build, q313/q317 the "_slotc"
+    * one, q349 the "_reps"/"_gwt_reps" ones. The only home of the
+    * stitched → NN-Descent build; nnDescentEdges additionally
+    * materializes every refinement round internally (the lineage
+    * hard-cut). */
+  private[queries] def refinedGraphArtifact(s: SparkSession, dir: String,
+      corpus: DataFrame, view: String, d: Int): DataFrame =
+    graft.util.FixtureArtifact.parquet(s, dir, "embeddings.parquet",
+      s"nnd_d${d}_r${NnRounds}_stitched_d4_p6_t4$view",
+      params = Map("d" -> d.toLong, "rounds" -> NnRounds.toLong))(
+      Similarity.nnDescentEdges(stitchedArtifact(s, dir, corpus, view),
+        corpus, d = d, rounds = NnRounds))
 
   /** The full-corpus 16×16 PQ codes as a fixture-keyed artifact — THE
     * resident codes every full-corpus ADC walk reads (q312, q319,
@@ -257,7 +278,7 @@ object Round9 {
         val entries = Similarity.centroidEntries(qs, cents)
         // both build stages are fixture-keyed artifacts (built once
         // per harness run) — see refinedGraphArtifact
-        val refined = refinedGraphArtifact(s, dir, corpus)
+        val refined = refinedGraphArtifact(s, dir, corpus, "", NnDegree)
         Similarity.beamTopKFrom(qs, corpus, refined, entries, k = 5,
           beam = BeamWidth, rounds = BeamRounds)
       }),

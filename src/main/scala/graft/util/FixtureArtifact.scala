@@ -16,7 +16,12 @@ import java.util.concurrent.ConcurrentHashMap
   *
   * Keyed by (canonical fixture path, size, mtime, label) — the
   * PipelineRunner content-fingerprint rule — so two SFs never collide
-  * and a driver-regenerated fixture rebuilds. The label must encode
+  * and a regenerated fixture rebuilds. Nothing here checks that two
+  * callers passing one label pass the same build, so a label is
+  * declared by exactly one function that owns its label, params and
+  * build (the PipelineRunner one-rule-per-target rule;
+  * `FunctionCatalogSpec` fails on a label text at two call sites).
+  * The label must encode
   * every build dial (degree, planes, tables, rounds); two configs are
   * two artifacts, and a CHANGED dial is a changed label, hence a
   * rebuild, never a stale serve. Callers that want that contract

@@ -121,6 +121,82 @@ class FunctionCatalogSpec extends SparkTestBase {
       s"score pairs through Similarity.norm/cos/exactCos/maxsim: $stray")
   }
 
+  test("src/main: one home for the SQ8 approximate key") {
+    // intdot(q, c) · rc ranks every SQ8 shortlist and the oracles replay
+    // it — only Similarity.sq8Key may spell it
+    val homes = sources.flatMap { case (f, text) =>
+      val n = """vec_dotl\(""".r.findAllMatchIn(text).size
+      if (n > 0) Some(s"${f.getName} x$n") else None
+    }
+    assert(homes == Seq("Similarity.scala x1"),
+      s"SQ8 keys go through Similarity.sq8Key / sq8Maxsim: $homes")
+  }
+
+  /** The top-level argument texts of the parameter list that opens at
+    * `text(open)`: commas inside brackets, string literals and `${…}`
+    * interpolations do not split. */
+  private def callArgs(text: String, open: Int): Seq[String] = {
+    def skipString(j: Int): Int = // j at the opening quote
+      if (text.startsWith("\"\"\"", j)) text.indexOf("\"\"\"", j + 3) + 3
+      else {
+        var k = j + 1
+        while (text(k) != '"')
+          k = if (text(k) == '\\') k + 2
+            else if (text.startsWith("${", k)) skipBlock(k + 1)
+            else k + 1
+        k + 1
+      }
+    def skipBlock(j: Int): Int = { // j at '{'
+      var depth = 0
+      var k = j
+      do {
+        text(k) match {
+          case '{' => depth += 1; k += 1
+          case '}' => depth -= 1; k += 1
+          case '"' => k = skipString(k)
+          case _ => k += 1
+        }
+      } while (depth > 0)
+      k
+    }
+    val args = Seq.newBuilder[String]
+    var depth = 0
+    var start = open + 1
+    var k = open + 1
+    while (depth >= 0) {
+      text(k) match {
+        case '"' => k = skipString(k)
+        case '(' | '[' | '{' => depth += 1; k += 1
+        case ')' | ']' | '}' =>
+          depth -= 1
+          if (depth < 0) args += text.substring(start, k)
+          k += 1
+        case ',' if depth == 0 =>
+          args += text.substring(start, k); k += 1; start = k
+        case _ => k += 1
+      }
+    }
+    args.result().map(_.trim.split("\\s+").mkString(" "))
+  }
+
+  test("src/main: each artifact label is built at one call site") {
+    // FixtureArtifact keys on (fixture, label) alone: two sites passing
+    // one label would serve whichever build ran first — so every label
+    // text is declared by exactly one function
+    val calls = """(?<!def )\b(FixtureArtifact\.parquet|statsArtifact)\(""".r
+    val sites = for {
+      (f, text) <- sources
+      m <- calls.findAllMatchIn(text)
+    } yield (callArgs(text, m.end - 1)(3),
+      s"${f.getName}:${text.substring(0, m.start).count(_ == '\n') + 1}")
+    assert(sites.size > 50, s"too few artifact call sites found: ${sites.size}")
+    val shared = sites.groupBy(_._1).collect {
+      case (label, at) if at.size > 1 => s"$label at ${at.map(_._2).mkString(", ")}"
+    }
+    assert(shared.isEmpty,
+      s"artifact labels built at more than one call site: ${shared.mkString("; ")}")
+  }
+
   test("catalog aggregate function is exact and partitioning-independent") {
     init()
     val vals = (1 to 1000).map(i => (i % 7, i * 0.1 + 0.05))

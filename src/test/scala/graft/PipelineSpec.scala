@@ -324,6 +324,26 @@ class PipelineSpec extends SparkTestBase {
     intercept[IllegalArgumentException](runner.topoSort(Seq(a, b)))
   }
 
+  test("a job that names one dep twice is one edge, not a cycle") {
+    val src = PipelineJob("src", "src.parquet", Nil)(
+      (s, _) => Seq(1L, 2L).toDF("id"))
+    val twice = PipelineJob("twice", "twice.parquet",
+      Seq("src.parquet", "src.parquet"))(
+      (s, in) => in("src.parquet").select((col("id") * 2).as("id")))
+    val after = PipelineJob("after", "after.parquet", Seq("twice.parquet"))(
+      (s, in) => in("twice.parquet").groupBy().count())
+    val jobs = Seq(after, twice, src)
+    val topo = new PipelineRunner(spark, "/tmp/unused").topoSort(jobs)
+    assert(topo.map(_.name) == Seq("src", "twice", "after"))
+    val root = Files.createTempDirectory("graft_dupdep").toString
+    assert(new PipelineRunner(spark, root).run(jobs).ran ==
+      Seq("src", "twice", "after"))
+    assert(spark.read.parquet(s"$root/after.parquet").head().getLong(0) == 2L)
+    val rootP = Files.createTempDirectory("graft_dupdep_par").toString
+    assert(new PipelineRunner(spark, rootP).runParallel(jobs).ran ==
+      Seq("src", "twice", "after"))
+  }
+
   test("runForced: invalidation cascades to all transitive consumers") {
     val root = Files.createTempDirectory("graft_force").toString
     val runner = new PipelineRunner(spark, root)
