@@ -1,10 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.QueryDef
-import graft.sources.{Events, Tables}
+import graft.sources.Events
 import graft.util.Det
 import graft.util.Det.dsumSql
 
@@ -80,28 +79,19 @@ object EventTime {
       SELECT user_id, MIN(sec) AS session_start, COUNT(*) AS n_events
       FROM s GROUP BY user_id, sid ORDER BY user_id, session_start""")),
 
-    // True Structured Streaming (file source → AvailableNow → memory
-    // sink), scored against the same batch oracle as tumbling — stream
-    // and batch must agree on event-time semantics.
+    // True Structured Streaming (file source → AvailableNow → scratch
+    // parquet sink), scored against the same batch oracle as tumbling —
+    // stream and batch must agree on event-time semantics. Windows sit
+    // on whole seconds, so the stream's whole-second `tss` lands every
+    // event in the window its raw ts does.
     "q40_stream_tumbling" -> QueryDef(
       (s, dir) => {
-        Events.load(s, dir) // ensure the ns-read conf fallback has run
-        // file-stream source needs a directory basePath; glob-select the
-        // events table out of the fixture dir
-        val src = s.readStream.schema(
-            Tables.load(s, dir, "events").schema)
-          .option("pathGlobFilter", "events.parquet")
-          .parquet(dir)
-        val withSec = if (src.schema("ts").dataType ==
-            org.apache.spark.sql.types.LongType)
-          src.withColumn("tsx", timestamp_micros(expr("ts DIV 1000")))
-        else src.withColumn("tsx", col("ts"))
         val sink = withShufflePartitions(s, 8) {
-          graft.streaming.EventStreams.runToParquetComplete(
-            withSec
-              .groupBy(window(col("tsx"), "1 hour").as("w"), col("event_type"))
+          graft.streaming.EventStreams.runToParquet(
+            graft.streaming.EventStreams.eventFileStream(s, dir)
+              .groupBy(window(col("tss"), "1 hour").as("w"), col("event_type"))
               .agg(count(lit(1)).as("n")),
-            "q40_stream_tumbling_sink")
+            "q40_stream_tumbling_sink", mode = "complete")
         }
         sink
           .select(unix_timestamp(col("w.start")).as("win_start"),
@@ -116,21 +106,12 @@ object EventTime {
     // oracle construction as the batch q38.
     "q70_stream_sliding" -> QueryDef(
       (s, dir) => {
-        Events.load(s, dir) // ns-read conf fallback
-        val src = s.readStream.schema(
-            Tables.load(s, dir, "events").schema)
-          .option("pathGlobFilter", "events.parquet")
-          .parquet(dir)
-        val withTs = if (src.schema("ts").dataType ==
-            org.apache.spark.sql.types.LongType)
-          src.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-        else src
-        val agg = withTs
-          .groupBy(window(col("ts"), "1 hour", "15 minutes").as("w"))
+        val agg = graft.streaming.EventStreams.eventFileStream(s, dir)
+          .groupBy(window(col("tss"), "1 hour", "15 minutes").as("w"))
           .agg(count(lit(1)).as("n"))
         val out = withShufflePartitions(s, 8) {
-          graft.streaming.EventStreams.runToMemory(
-            agg, "q70_stream_sliding_sink")
+          graft.streaming.EventStreams.runToParquet(
+            agg, "q70_stream_sliding_sink", mode = "complete")
         }
         out.select(unix_timestamp(col("w.start")).as("win_start"), col("n"))
           .orderBy("win_start")

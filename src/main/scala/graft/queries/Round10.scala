@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.QueryDef
 import graft.operators.{IndexAdvisor, Similarity}
-import graft.sources.Tables
+import graft.sources.{MemCatalog, Tables}
+import graft.streaming.EventStreams
 import graft.util.{Jobs, Slots}
 
 /** Round-10 batch: composing the last ANN family member — DiskANN-
@@ -544,7 +545,6 @@ object Round10 {
     // same Round11.beamAdcP walk as q312, exact re-rank, 0.35 gate.
     "q313_stream_semdedup_graphidx" -> QueryDef(
       (s, dir) => {
-        val emb = t(s, dir, "embeddings")
         graft.plans.NativeExpressions.register(s)
         // the scored walk of the standing probe workload — the
         // IDENTICAL sub-pipeline of q313 (threshold alerts) and q317
@@ -553,32 +553,19 @@ object Round10 {
         // semi-join on the batch's probe ids, value-identical to
         // walking the batch alone (payload-deterministic; spec-tested)
         val walkArt = slotcScoredWalk(s, dir)
-        s.conf.set("spark.sql.catalog.graftmem", "graft.sources.MemCatalog")
-        s.sql("DROP TABLE IF EXISTS graftmem.semdedup_alerts_graph")
-        s.sql("""CREATE TABLE graftmem.semdedup_alerts_graph
-          (da BIGINT, db BIGINT, cos DOUBLE)""")
-        val src = s.readStream.schema(emb.schema)
-          .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
-        val probe = src.filter(
-            Slots.Probe.in)
+        MemCatalog.recreate(s, "semdedup_alerts_graph",
+          "(da BIGINT, db BIGINT, cos DOUBLE)")
+        val probe = EventStreams.fixtureStream(s, dir, "embeddings")
+          .filter(Slots.Probe.in)
           .select(col("vec_id").as("da"), col("embedding").as("ea"))
-        val q = EventTime.withShufflePartitions(s, 8) {
-          probe.writeStream.foreachBatch {
-            (batch: DataFrame, _: Long) =>
-              val alerts = Similarity.beamPqSemDedupBatch(batch, walkArt,
-                threshold = 0.35)
-              // the artifact-served result is rooted in the OUTER
-              // session — register the view and run the MERGE there
-              alerts.createOrReplaceTempView("q313_batch")
-              alerts.sparkSession.sql(
-                """MERGE INTO graftmem.semdedup_alerts_graph t USING q313_batch b
-                  ON t.da = b.da AND t.db = b.db
-                  WHEN NOT MATCHED THEN INSERT (da, db, cos)
-                    VALUES (b.da, b.db, b.cos)""")
-              ()
-          }.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        // no 8-partition scope: the stream itself never shuffles, and the
+        // per-batch work is served from the outer-session artifact, so it
+        // plans at the session's own partition count
+        EventStreams.drain(probe) { (batch, _) =>
+          EventStreams.insertNew(Similarity.beamPqSemDedupBatch(batch, walkArt,
+              threshold = 0.35),
+            "semdedup_alerts_graph", "da", "db")
         }
-        q.awaitTermination()
         s.sql("""SELECT da, db, cos FROM graftmem.semdedup_alerts_graph
           ORDER BY da, db""")
       },
@@ -971,37 +958,21 @@ object Round10 {
     // with the same slot-gated window.
     "q317_stream_graph_insert" -> QueryDef(
       (s, dir) => {
-        val emb = t(s, dir, "embeddings")
         graft.plans.NativeExpressions.register(s)
         // the same scored-walk artifact as q313's (same standing
         // index, same probe workload, same dials): one walk serves the
         // alerting query AND this insert query (the q315/q328 rule)
         val walkArt = slotcScoredWalk(s, dir)
-        s.conf.set("spark.sql.catalog.graftmem", "graft.sources.MemCatalog")
-        s.sql("DROP TABLE IF EXISTS graftmem.graph_inserts")
-        s.sql("""CREATE TABLE graftmem.graph_inserts
-          (u BIGINT, v BIGINT, cos DOUBLE)""")
-        val src = s.readStream.schema(emb.schema)
-          .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
-        val probe = src.filter(
-            Slots.Probe.in)
+        MemCatalog.recreate(s, "graph_inserts", "(u BIGINT, v BIGINT, cos DOUBLE)")
+        val probe = EventStreams.fixtureStream(s, dir, "embeddings")
+          .filter(Slots.Probe.in)
           .select(col("vec_id").as("da"), col("embedding").as("ea"))
-        val q = EventTime.withShufflePartitions(s, 8) {
-          probe.writeStream.foreachBatch {
-            (batch: DataFrame, _: Long) =>
-              val ins = Similarity.graphInsertBatch(batch, walkArt, dOut = 8)
-              // the artifact-served result is rooted in the OUTER
-              // session — register the view and run the MERGE there
-              ins.createOrReplaceTempView("q317_batch")
-              ins.sparkSession.sql(
-                """MERGE INTO graftmem.graph_inserts t USING q317_batch b
-                  ON t.u = b.u AND t.v = b.v
-                  WHEN NOT MATCHED THEN INSERT (u, v, cos)
-                    VALUES (b.u, b.v, b.cos)""")
-              ()
-          }.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        // no 8-partition scope, as in q313
+        EventStreams.drain(probe) { (batch, _) =>
+          EventStreams.insertNew(
+            Similarity.graphInsertBatch(batch, walkArt, dOut = 8),
+            "graph_inserts", "u", "v")
         }
-        q.awaitTermination()
         // the read-time reverse cap: forward rows (u = inserted rep,
         // slot 0) pass through — already <= dOut per rep by
         // construction; standing nodes keep their top-8 accumulated

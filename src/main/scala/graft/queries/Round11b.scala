@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.operators.{FixedPoint, IndexAdvisor, Ranks, Similarity, TopK}
-import graft.sources.Tables
+import graft.sources.{MemCatalog, Tables}
+import graft.streaming.EventStreams
 import graft.util.{Jobs, Slots}
 
 /** Round-11 second batch: the SQ8 compression point on the ANN
@@ -487,30 +488,18 @@ object Round11b {
           "embeddings.parquet", "sq8ing_codes")(
           Similarity.sq8Codes(grp.select(col("rep"), col("ce")),
             "rep", "ce"))
-        s.conf.set("spark.sql.catalog.graftmem", "graft.sources.MemCatalog")
-        s.sql("DROP TABLE IF EXISTS graftmem.semdedup_alerts_sq8")
-        s.sql("""CREATE TABLE graftmem.semdedup_alerts_sq8
-          (da BIGINT, db BIGINT, cos DOUBLE)""")
-        val src = s.readStream.schema(emb.schema)
-          .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
-        val probe = src.filter(
-            Slots.Probe.in)
+        MemCatalog.recreate(s, "semdedup_alerts_sq8",
+          "(da BIGINT, db BIGINT, cos DOUBLE)")
+        val probe = EventStreams.fixtureStream(s, dir, "embeddings")
+          .filter(Slots.Probe.in)
           .select(col("vec_id").as("da"), col("embedding").as("ea"))
-        val q = EventTime.withShufflePartitions(s, 8) {
-          probe.writeStream.foreachBatch {
-            (batch: DataFrame, _: Long) =>
-              Similarity.sq8SemDedupBatch(batch, grp, ra, codes, cents,
-                  m = 8, threshold = 0.35)
-                .createOrReplaceTempView("q329_batch")
-              batch.sparkSession.sql(
-                """MERGE INTO graftmem.semdedup_alerts_sq8 t USING q329_batch b
-                  ON t.da = b.da AND t.db = b.db
-                  WHEN NOT MATCHED THEN INSERT (da, db, cos)
-                    VALUES (b.da, b.db, b.cos)""")
-              ()
-          }.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        EventTime.withShufflePartitions(s, 8) {
+          EventStreams.drain(probe) { (batch, _) =>
+            EventStreams.insertNew(Similarity.sq8SemDedupBatch(batch, grp, ra,
+                codes, cents, m = 8, threshold = 0.35),
+              "semdedup_alerts_sq8", "da", "db")
+          }
         }
-        q.awaitTermination()
         s.sql("""SELECT da, db, cos FROM graftmem.semdedup_alerts_sq8
           ORDER BY da, db""")
       },

@@ -1,11 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.operators.{IndexAdvisor, Similarity, TopK}
-import graft.sources.Tables
+import graft.sources.{MemCatalog, Tables}
+import graft.streaming.EventStreams
 import graft.util.{Jobs, Slots}
 
 /** Round-12 batch: the two round-11 axes composed — attribute-FILTERED
@@ -1306,32 +1307,20 @@ object Round12 {
         val (cents, ca, codes, ctokArt) = Round11b.sq8TokenIndex(s, dir,
           stok.select(col("cd").as("doc"), col("ct").as("tid"),
             col("ce").as("e")), "mving", nlist = 16L)
-        s.conf.set("spark.sql.catalog.graftmem", "graft.sources.MemCatalog")
-        s.sql("DROP TABLE IF EXISTS graftmem.maxsim_alerts_mv")
-        s.sql("""CREATE TABLE graftmem.maxsim_alerts_mv
-          (da BIGINT, db BIGINT, score BIGINT)""")
-        val src = s.readStream.schema(emb.schema)
-          .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
-        val probe = src.filter(
-            Slots.Probe.in(expr("vec_id div 4")))
+        MemCatalog.recreate(s, "maxsim_alerts_mv",
+          "(da BIGINT, db BIGINT, score BIGINT)")
+        val probe = EventStreams.fixtureStream(s, dir, "embeddings")
+          .filter(Slots.Probe.in(expr("vec_id div 4")))
           .select(expr("vec_id div 4").as("qd"), col("vec_id").as("qt"),
             col("embedding").as("qe"))
-        val q = EventTime.withShufflePartitions(s, 8) {
-          probe.writeStream.foreachBatch {
-            (batch: DataFrame, _: Long) =>
-              Similarity.maxsimSemDedupBatch(batch, stok, ca, codes,
-                  cents, np = 4, m = 40, minScore = 900000L,
-                  ctokCodes = Some(ctokArt))
-                .createOrReplaceTempView("q343_batch")
-              batch.sparkSession.sql(
-                """MERGE INTO graftmem.maxsim_alerts_mv t USING q343_batch b
-                  ON t.da = b.qd AND t.db = b.cd
-                  WHEN NOT MATCHED THEN INSERT (da, db, score)
-                    VALUES (b.qd, b.cd, b.score)""")
-              ()
-          }.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        EventTime.withShufflePartitions(s, 8) {
+          EventStreams.drain(probe) { (batch, _) =>
+            EventStreams.insertNew(Similarity.maxsimSemDedupBatch(batch, stok,
+                ca, codes, cents, np = 4, m = 40, minScore = 900000L,
+                ctokCodes = Some(ctokArt)).toDF("da", "db", "score"),
+              "maxsim_alerts_mv", "da", "db")
+          }
         }
-        q.awaitTermination()
         s.sql("""SELECT da, db, score FROM graftmem.maxsim_alerts_mv
           ORDER BY da, db""")
       },

@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.operators.{IndexAdvisor, Similarity}
-import graft.sources.Tables
+import graft.sources.{MemCatalog, Tables}
+import graft.streaming.EventStreams
 import graft.util.{Jobs, Slots}
 
 /** Round-13 batch: the advisor/maintenance machinery extended to the
@@ -678,32 +679,20 @@ object Round13 {
         val (cents, ca, codes, ctokArt) = Round11b.sq8TokenIndex(s, dir,
           stok.select(col("cd").as("doc"), col("ct").as("tid"),
             col("ce").as("e")), "mving", nlist)
-        s.conf.set("spark.sql.catalog.graftmem", "graft.sources.MemCatalog")
-        s.sql("DROP TABLE IF EXISTS graftmem.maxsim_alerts_mvadv")
-        s.sql("""CREATE TABLE graftmem.maxsim_alerts_mvadv
-          (da BIGINT, db BIGINT, score BIGINT)""")
-        val src = s.readStream.schema(emb.schema)
-          .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
-        val probe = src.filter(
-            Slots.Probe.in(expr("vec_id div 4")))
+        MemCatalog.recreate(s, "maxsim_alerts_mvadv",
+          "(da BIGINT, db BIGINT, score BIGINT)")
+        val probe = EventStreams.fixtureStream(s, dir, "embeddings")
+          .filter(Slots.Probe.in(expr("vec_id div 4")))
           .select(expr("vec_id div 4").as("qd"), col("vec_id").as("qt"),
             col("embedding").as("qe"))
-        val q = EventTime.withShufflePartitions(s, 8) {
-          probe.writeStream.foreachBatch {
-            (batch: DataFrame, _: Long) =>
-              Similarity.maxsimSemDedupBatch(batch, stok, ca, codes,
-                  cents, np = np.toInt, m = 40, minScore = 900000L,
-                  ctokCodes = Some(ctokArt))
-                .createOrReplaceTempView("q348_batch")
-              batch.sparkSession.sql(
-                """MERGE INTO graftmem.maxsim_alerts_mvadv t USING q348_batch b
-                  ON t.da = b.qd AND t.db = b.cd
-                  WHEN NOT MATCHED THEN INSERT (da, db, score)
-                    VALUES (b.qd, b.cd, b.score)""")
-              ()
-          }.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        EventTime.withShufflePartitions(s, 8) {
+          EventStreams.drain(probe) { (batch, _) =>
+            EventStreams.insertNew(Similarity.maxsimSemDedupBatch(batch, stok,
+                ca, codes, cents, np = np.toInt, m = 40, minScore = 900000L,
+                ctokCodes = Some(ctokArt)).toDF("da", "db", "score"),
+              "maxsim_alerts_mvadv", "da", "db")
+          }
         }
-        q.awaitTermination()
         s.sql("""SELECT da, db, score FROM graftmem.maxsim_alerts_mvadv
           ORDER BY da, db""")
       },
@@ -959,32 +948,20 @@ object Round13 {
         val baseTot = packBase.agg(coalesce(sum("tok"), lit(0L)))
           .head().getLong(0)
         val seqBase = (baseTot + 2047L) / 2048L * 2048L
-        s.conf.set("spark.sql.catalog.graftmem", "graft.sources.MemCatalog")
-        s.sql("DROP TABLE IF EXISTS graftmem.pipe_ingest_sel")
-        s.sql("""CREATE TABLE graftmem.pipe_ingest_sel
-          (doc_id BIGINT, lang STRING, tok BIGINT, hsh BIGINT)""")
-        val docsSchema = t(s, dir, "documents").schema
-        val src = s.readStream.schema(docsSchema)
-          .option("pathGlobFilter", "documents.parquet").parquet(dir)
-        val probe = src.filter(expr(PipeStreamPred))
-        val q = EventTime.withShufflePartitions(s, 8) {
-          probe.writeStream.foreachBatch {
-            (batch: DataFrame, _: Long) =>
-              val b = batch.select(col("doc_id"), col("lang"), col("text"))
-              val scored = dsirScore(pipeFeats(b), wt, kk)
-                .filter(col("w_fx") > lit(theta))
-              pipeTokHsh(b)
-                .join(scored.select("doc_id"), Seq("doc_id"), "left_semi")
-                .createOrReplaceTempView("q350_batch")
-              batch.sparkSession.sql(
-                """MERGE INTO graftmem.pipe_ingest_sel t USING q350_batch b
-                  ON t.doc_id = b.doc_id
-                  WHEN NOT MATCHED THEN INSERT (doc_id, lang, tok, hsh)
-                    VALUES (b.doc_id, b.lang, b.tok, b.hsh)""")
-              ()
-          }.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        MemCatalog.recreate(s, "pipe_ingest_sel",
+          "(doc_id BIGINT, lang STRING, tok BIGINT, hsh BIGINT)")
+        val probe = EventStreams.fixtureStream(s, dir, "documents")
+          .filter(expr(PipeStreamPred))
+        EventTime.withShufflePartitions(s, 8) {
+          EventStreams.drain(probe) { (batch, _) =>
+            val b = batch.select(col("doc_id"), col("lang"), col("text"))
+            val scored = dsirScore(pipeFeats(b), wt, kk)
+              .filter(col("w_fx") > lit(theta))
+            EventStreams.insertNew(pipeTokHsh(b)
+                .join(scored.select("doc_id"), Seq("doc_id"), "left_semi"),
+              "pipe_ingest_sel", "doc_id")
+          }
         }
-        q.awaitTermination()
         val app = s.sql(
           "SELECT doc_id, lang, tok, hsh FROM graftmem.pipe_ingest_sel")
         require(app.count() > 0,

@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.operators.{IndexAdvisor, Similarity, TopK}
-import graft.sources.Tables
+import graft.sources.{MemCatalog, Tables}
+import graft.streaming.EventStreams
 import graft.util.{Jobs, Slots}
 
 /** Round-14 batch: the monitoring→maintenance doctrine closed on the
@@ -737,54 +738,33 @@ object Round14 {
         val theta = selB.agg(min("w_fx")).head().getLong(0)
         val bend = packBase.agg(coalesce(sum("tok"), lit(0L)))
           .head().getLong(0)
-        s.conf.set("spark.sql.catalog.graftmem", "graft.sources.MemCatalog")
-        s.sql("DROP TABLE IF EXISTS graftmem.pipe_maint_sel")
-        s.sql("""CREATE TABLE graftmem.pipe_maint_sel
-          (doc_id BIGINT, lang STRING, tok BIGINT, hsh BIGINT, cyc BIGINT)""")
-        s.sql("DROP TABLE IF EXISTS graftmem.pipe_maint_churn")
-        s.sql("""CREATE TABLE graftmem.pipe_maint_churn
-          (cyc BIGINT, bid BIGINT, unseen BIGINT, total BIGINT)""")
-        val docsSchema = t(s, dir, "documents").schema
+        MemCatalog.recreate(s, "pipe_maint_sel",
+          "(doc_id BIGINT, lang STRING, tok BIGINT, hsh BIGINT, cyc BIGINT)")
+        MemCatalog.recreate(s, "pipe_maint_churn",
+          "(cyc BIGINT, bid BIGINT, unseen BIGINT, total BIGINT)")
         (0 to 2).foreach { c =>
-          val src = s.readStream.schema(docsSchema)
-            .option("pathGlobFilter", "documents.parquet").parquet(dir)
-          val probe = src.filter(expr(Round13.PipeStreamPred))
+          val probe = EventStreams.fixtureStream(s, dir, "documents")
+            .filter(expr(Round13.PipeStreamPred))
             .filter(pmod(Slots.of(col("doc_id"), 1000003L), lit(3L)) === c)
-          val q = EventTime.withShufflePartitions(s, 8) {
-            probe.writeStream.foreachBatch {
-              (batch: DataFrame, bid: Long) =>
-                val b = batch.select(col("doc_id"), col("lang"),
-                  col("text"))
-                val feats = Round13.pipeFeats(b)
-                feats.join(broadcast(wt.select(col("f"),
+          EventTime.withShufflePartitions(s, 8) {
+            EventStreams.drain(probe) { (batch, bid) =>
+              val b = batch.select(col("doc_id"), col("lang"), col("text"))
+              val feats = Round13.pipeFeats(b)
+              EventStreams.insertNew(feats.join(broadcast(wt.select(col("f"),
                     lit(1).as("seen"))), Seq("f"), "left")
                   .agg(sum(when(col("seen").isNull, 1L).otherwise(0L))
                     .as("unseen"), count(lit(1)).as("total"))
                   .select(lit(c.toLong).as("cyc"), lit(bid).as("bid"),
-                    col("unseen"), col("total"))
-                  .createOrReplaceTempView("q357_churn_batch")
-                batch.sparkSession.sql(
-                  """MERGE INTO graftmem.pipe_maint_churn t
-                    USING q357_churn_batch b
-                    ON t.cyc = b.cyc AND t.bid = b.bid
-                    WHEN NOT MATCHED THEN INSERT (cyc, bid, unseen, total)
-                      VALUES (b.cyc, b.bid, b.unseen, b.total)""")
-                val scored = Round13.dsirScore(feats, wt, kk)
-                  .filter(col("w_fx") > lit(theta))
-                Round13.pipeTokHsh(b)
+                    col("unseen"), col("total")),
+                "pipe_maint_churn", "cyc", "bid")
+              val scored = Round13.dsirScore(feats, wt, kk)
+                .filter(col("w_fx") > lit(theta))
+              EventStreams.insertNew(Round13.pipeTokHsh(b)
                   .join(scored.select("doc_id"), Seq("doc_id"), "left_semi")
-                  .withColumn("cyc", lit(c.toLong))
-                  .createOrReplaceTempView("q357_batch")
-                batch.sparkSession.sql(
-                  """MERGE INTO graftmem.pipe_maint_sel t USING q357_batch b
-                    ON t.doc_id = b.doc_id
-                    WHEN NOT MATCHED THEN INSERT (doc_id, lang, tok, hsh, cyc)
-                      VALUES (b.doc_id, b.lang, b.tok, b.hsh, b.cyc)""")
-                ()
-            }.trigger(
-              org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+                  .withColumn("cyc", lit(c.toLong)),
+                "pipe_maint_sel", "doc_id")
+            }
           }
-          q.awaitTermination()
         }
         val selAll = s.sql(
           "SELECT doc_id, lang, tok, hsh, cyc FROM graftmem.pipe_maint_sel")

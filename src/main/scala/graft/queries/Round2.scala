@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.operators.Skew
-import graft.sources.{Events, Tables}
+import graft.sources.Tables
 import graft.util.Det
 import graft.util.Det.{davgSql, dsumSql}
 import graft.util.Slots
@@ -294,26 +294,17 @@ object Round2 {
     // ---- streaming session windows (stream/batch unification) ----------
     // Same semantics and oracle as the batch q39: sessionize on
     // whole-second event time with a 30-min gap, via a true file-source
-    // stream drained with AvailableNow into a complete-mode memory sink.
+    // stream drained with AvailableNow into a complete-mode scratch sink.
     "q88_stream_session" -> QueryDef(
       (s, dir) => {
-        Events.load(s, dir) // ns-read conf fallback
-        val src = s.readStream.schema(Tables.load(s, dir, "events").schema)
-          .option("pathGlobFilter", "events.parquet")
-          .parquet(dir)
-        val withTs = (if (src.schema("ts").dataType ==
-            org.apache.spark.sql.types.LongType)
-          src.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-        else src)
-          .select(col("user_id"), timestamp_seconds(unix_timestamp(col("ts"))).as("tss"))
-        val agg = withTs
+        val agg = graft.streaming.EventStreams.eventFileStream(s, dir)
           .groupBy(col("user_id"), session_window(col("tss"), "30 minutes").as("sw"))
           .agg(count(lit(1)).as("n_events"))
         // session state at 8 partitions, like q40/q70 (stores instantiate
         // per shuffle partition; results are partitioning-independent)
         val out = EventTime.withShufflePartitions(s, 8) {
-          graft.streaming.EventStreams.runToMemory(
-            agg, "q88_stream_session_sink")
+          graft.streaming.EventStreams.runToParquet(
+            agg, "q88_stream_session_sink", mode = "complete")
         }
         out.select(col("user_id"), unix_timestamp(col("sw.start")).as("session_start"),
             col("n_events"))

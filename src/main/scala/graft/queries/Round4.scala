@@ -3,9 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.QueryDef
-import graft.sources.{Events, Tables}
+import graft.sources.{MemCatalog, Tables}
 import graft.util.Slots
 
 /** Round-4 additions: the Avro ingest roundtrip (the one mainstream
@@ -93,10 +92,7 @@ object Round4 {
     // state relationally (kept ∪ updated ∪ inserted).
     "q153_sql_merge_into" -> QueryDef(
       (s, dir) => {
-        s.conf.set("spark.sql.catalog.graftmem",
-          "graft.sources.MemCatalog")
-        s.sql("DROP TABLE IF EXISTS graftmem.tgt")
-        s.sql("CREATE TABLE graftmem.tgt (c_custkey BIGINT, bal DOUBLE, seg STRING)")
+        MemCatalog.recreate(s, "tgt", "(c_custkey BIGINT, bal DOUBLE, seg STRING)")
         t(s, dir, "customer")
           .filter(pmod(col("c_custkey"), lit(3)) =!= 0)
           .select(col("c_custkey").cast("long").as("c_custkey"),
@@ -149,10 +145,7 @@ object Round4 {
     // scale, so values stay bit-identical to the oracle's CASE form.
     "q154_sql_update_delete" -> QueryDef(
       (s, dir) => {
-        s.conf.set("spark.sql.catalog.graftmem",
-          "graft.sources.MemCatalog")
-        s.sql("DROP TABLE IF EXISTS graftmem.ord")
-        s.sql("CREATE TABLE graftmem.ord (o_orderkey BIGINT, status STRING, price DOUBLE)")
+        MemCatalog.recreate(s, "ord", "(o_orderkey BIGINT, status STRING, price DOUBLE)")
         t(s, dir, "orders").filter(col("o_orderkey") < 2000)
           .select(col("o_orderkey").cast("long").as("o_orderkey"),
             col("o_orderstatus").as("status"),
@@ -251,10 +244,7 @@ object Round4 {
     // All arithmetic (×1.5, +100, subtraction) is IEEE-exact.
     "q157_sql_time_travel" -> QueryDef(
       (s, dir) => {
-        s.conf.set("spark.sql.catalog.graftmem",
-          "graft.sources.MemCatalog")
-        s.sql("DROP TABLE IF EXISTS graftmem.tt")
-        s.sql("CREATE TABLE graftmem.tt (k BIGINT, v DOUBLE)")
+        MemCatalog.recreate(s, "tt", "(k BIGINT, v DOUBLE)")
         t(s, dir, "nation")
           .select(col("n_nationkey").cast("long").as("k"),
             (col("n_nationkey").cast("double") * lit(1.5)).as("v"))
@@ -375,15 +365,11 @@ object Round4 {
     // tables, then join storage-partitioned.
     "q163_join_storage_partitioned" -> QueryDef(
       (s, dir) => {
-        s.conf.set("spark.sql.catalog.graftmem",
-          "graft.sources.MemCatalog")
         s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-        s.sql("DROP TABLE IF EXISTS graftmem.cnat")
-        s.sql("DROP TABLE IF EXISTS graftmem.snat")
-        s.sql("""CREATE TABLE graftmem.cnat (nkey BIGINT, ncust BIGINT,
-          cbal DOUBLE) PARTITIONED BY (nkey)""")
-        s.sql("""CREATE TABLE graftmem.snat (nkey BIGINT, nsupp BIGINT,
-          sbal DOUBLE) PARTITIONED BY (nkey)""")
+        MemCatalog.recreate(s, "cnat",
+          "(nkey BIGINT, ncust BIGINT, cbal DOUBLE) PARTITIONED BY (nkey)")
+        MemCatalog.recreate(s, "snat",
+          "(nkey BIGINT, nsupp BIGINT, sbal DOUBLE) PARTITIONED BY (nkey)")
         t(s, dir, "customer")
           .groupBy(col("c_nationkey").cast("long").as("nkey"))
           .agg(count(lit(1)).as("ncust"),
@@ -497,8 +483,7 @@ object Round4 {
     // the oracle reproduces it arithmetically.
     "q167_fn_catalog_scalar" -> QueryDef(
       (s, dir) => {
-        s.conf.set("spark.sql.catalog.graftmem",
-          "graft.sources.MemCatalog")
+        MemCatalog.register(s)
         t(s, dir, "customer").createOrReplaceTempView("q167_customer")
         s.sql("""SELECT b AS bucket, COUNT(*) AS n, MIN(k) AS min_key
           FROM (SELECT CAST(c_custkey AS BIGINT) AS k,
@@ -521,8 +506,7 @@ object Round4 {
     // oracle harness depends on, packaged as a reusable engine function.
     "q168_fn_catalog_agg" -> QueryDef(
       (s, dir) => {
-        s.conf.set("spark.sql.catalog.graftmem",
-          "graft.sources.MemCatalog")
+        MemCatalog.register(s)
         t(s, dir, "customer").createOrReplaceTempView("q168_customer")
         s.sql("""SELECT c_mktsegment AS seg,
             graftmem.dsum(CAST(c_acctbal AS DOUBLE)) AS bal

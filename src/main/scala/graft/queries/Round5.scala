@@ -28,7 +28,7 @@ object Round5 {
     // ValueState in the RocksDB state store (column families required;
     // the provider is also the 100 TB choice — state spills to disk
     // instead of living on the JVM heap). The file stream drains under
-    // Trigger.AvailableNow into a memory sink (q148/q152 recipe); the
+    // Trigger.AvailableNow into a scratch parquet sink (q148/q152); the
     // final state per user — max of the monotone running count, min/max
     // of the cumulative bounds — is scored against the batch aggregate.
     // State is keyed per user, so store size scales with |users|, not
@@ -42,7 +42,7 @@ object Round5 {
         val sink = try {
           val src = graft.streaming.EventStreams.eventFileStream(s, dir)
             .select(col("user_id"), col("tss").as("ts"))
-          graft.streaming.EventStreams.runToMemory(
+          graft.streaming.EventStreams.runToParquet(
             graft.streaming.EventStreams.runningUserCountsTws(src).toDF(),
             "q208_stream_stateful_sink", mode = "update")
         } finally old match {
@@ -323,8 +323,9 @@ object Round5 {
         val ckpt = graft.util.Scratch.dir("q216_ckpt")
         val src = graft.streaming.EventStreams.eventFileStream(s, dir)
         val agg = src.groupBy(col("user_id")).agg(count(lit(1)).as("n"))
-        graft.streaming.EventStreams.runToMemoryCheckpointed(
-          agg, "q216_stream_state_reader_sink", ckpt, mode = "update")
+        graft.streaming.EventStreams.runToParquet(agg,
+          "q216_stream_state_reader_sink", mode = "update",
+          checkpoint = Some(ckpt))
         s.read.format("statestore").option("path", ckpt).load()
           .selectExpr("key.user_id", "value.*")
           .toDF("user_id", "n_events")
@@ -349,7 +350,7 @@ object Round5 {
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
         val sink = try {
           val src = graft.streaming.EventStreams.eventFileStream(s, dir)
-          graft.streaming.EventStreams.runToMemory(
+          graft.streaming.EventStreams.runToParquet(
             graft.streaming.EventStreams.typedUserStats(src).toDF(),
             "q217_stream_composite_state_sink", mode = "update")
         } finally old match {
@@ -653,10 +654,8 @@ object Round5 {
     // q221's source and q153's MERGE machinery into one path.
     "q223_stream_merge_upsert" -> QueryDef(
       (s, dir) => {
-        s.conf.set("spark.sql.catalog.graftmem", "graft.sources.MemCatalog")
-        s.sql("DROP TABLE IF EXISTS graftmem.user_latest")
-        s.sql("""CREATE TABLE graftmem.user_latest
-          (user_id BIGINT, last_off BIGINT, last_sec BIGINT, last_type STRING)""")
+        graft.sources.MemCatalog.recreate(s, "user_latest",
+          "(user_id BIGINT, last_off BIGINT, last_sec BIGINT, last_type STRING)")
         val log = graft.util.Scratch.dir("q223_log")
         graft.sources.LogSource.writeLog(s, dir, log, nParts = 8)
         val total = graft.sources.Events.load(s, dir).count()
@@ -664,22 +663,20 @@ object Round5 {
           .option("path", log)
           .option("maxRecordsPerBatch", math.max(1000L, total / 4))
           .load()
-        val q = src.writeStream.foreachBatch {
-          (df: org.apache.spark.sql.DataFrame, _: Long) =>
-            val w = Window.partitionBy("user_id").orderBy(col("log_off").desc)
-            df.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-              .select("user_id", "log_off", "sec", "event_type")
-              .createOrReplaceTempView("q223_batch")
-            df.sparkSession.sql(
-              """MERGE INTO graftmem.user_latest t USING q223_batch b
-                ON t.user_id = b.user_id
-                WHEN MATCHED AND b.log_off > t.last_off THEN UPDATE SET
-                  last_off = b.log_off, last_sec = b.sec, last_type = b.event_type
-                WHEN NOT MATCHED THEN INSERT (user_id, last_off, last_sec, last_type)
-                  VALUES (b.user_id, b.log_off, b.sec, b.event_type)""")
-            ()
-        }.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination()
+        graft.streaming.EventStreams.drain(src) { (df, _) =>
+          val w = Window.partitionBy("user_id").orderBy(col("log_off").desc)
+          df.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+            .select("user_id", "log_off", "sec", "event_type")
+            .createOrReplaceTempView("q223_batch")
+          df.sparkSession.sql(
+            """MERGE INTO graftmem.user_latest t USING q223_batch b
+              ON t.user_id = b.user_id
+              WHEN MATCHED AND b.log_off > t.last_off THEN UPDATE SET
+                last_off = b.log_off, last_sec = b.sec, last_type = b.event_type
+              WHEN NOT MATCHED THEN INSERT (user_id, last_off, last_sec, last_type)
+                VALUES (b.user_id, b.log_off, b.sec, b.event_type)""")
+          ()
+        }
         s.sql("""SELECT user_id, last_sec, last_type
           FROM graftmem.user_latest ORDER BY user_id""")
       },

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.QueryDef
 import graft.operators.Similarity
-import graft.sources.Tables
+import graft.sources.{MemCatalog, Tables}
+import graft.streaming.EventStreams
 import graft.util.Det
 import graft.util.Slots
 
@@ -348,7 +349,6 @@ object Round6b {
     // dedup family).
     "q265_stream_neardup" -> QueryDef(
       (s, dir) => {
-        val docsSchema = t(s, dir, "documents").schema
         // The standing corpus shingle index is an INDEX-BUILD artifact
         // (built once, served by every batch) — the same contract as
         // q313's standing graph/codes and q297's rep index; only the
@@ -362,34 +362,24 @@ object Round6b {
           Round6b.shingledDocs(t(s, dir, "documents")
             .filter(Slots.Probe.out(col("doc_id"))),
             "db", "nb"))
-        s.conf.set("spark.sql.catalog.graftmem", "graft.sources.MemCatalog")
-        s.sql("DROP TABLE IF EXISTS graftmem.neardup_alerts")
-        s.sql("CREATE TABLE graftmem.neardup_alerts (da BIGINT, db BIGINT, jaccard DOUBLE)")
-        val src = s.readStream.schema(docsSchema)
-          .option("pathGlobFilter", "documents.parquet").parquet(dir)
+        MemCatalog.recreate(s, "neardup_alerts",
+          "(da BIGINT, db BIGINT, jaccard DOUBLE)")
         // repartition BEFORE the explode: a micro-batch's map parallelism
         // is otherwise bounded by its input FILE partitions (the 100×
         // probe caught one 50 MB file funneling the whole shingle
         // explode + join map side through a single task). Shuffling the
         // narrow raw-doc rows is cheap; the heavy row-local shingling
         // then spreads across the session's shuffle partitions.
-        val probe = Round6b.shingledDocs(src
-          .filter(Slots.Probe.in(col("doc_id")))
-          .repartition(col("doc_id")), "da", "na")
-        val q = EventTime.withShufflePartitions(s, 8) {
-          probe.writeStream.foreachBatch {
-            (batch: DataFrame, _: Long) =>
-              Round6b.scoreNearDupBatch(batch, idx)
-                .createOrReplaceTempView("q265_batch")
-              batch.sparkSession.sql(
-                """MERGE INTO graftmem.neardup_alerts t USING q265_batch b
-                  ON t.da = b.da AND t.db = b.db
-                  WHEN NOT MATCHED THEN INSERT (da, db, jaccard)
-                    VALUES (b.da, b.db, b.jaccard)""")
-              ()
-          }.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        val probe = Round6b.shingledDocs(
+          EventStreams.fixtureStream(s, dir, "documents")
+            .filter(Slots.Probe.in(col("doc_id")))
+            .repartition(col("doc_id")), "da", "na")
+        EventTime.withShufflePartitions(s, 8) {
+          EventStreams.drain(probe) { (batch, _) =>
+            EventStreams.insertNew(Round6b.scoreNearDupBatch(batch, idx),
+              "neardup_alerts", "da", "db")
+          }
         }
-        q.awaitTermination()
         s.sql("SELECT da, db, jaccard FROM graftmem.neardup_alerts ORDER BY da, db")
       },
       Some(s"""WITH s AS (SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents),

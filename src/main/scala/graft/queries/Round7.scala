@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.operators.{Ranks, Similarity}
-import graft.sources.Tables
+import graft.sources.{MemCatalog, Tables}
+import graft.streaming.EventStreams
 import graft.util.Slots
 
 /** Round-7 batch: closing the ANN recall gap the round-6 harness
@@ -377,10 +378,8 @@ object Round7 {
         val root = graft.util.Scratch.dir("q284")
         val ingest = new java.io.File(root, "ingest")
         ingest.mkdirs()
-        s.conf.set("spark.sql.catalog.graftmem", "graft.sources.MemCatalog")
-        s.sql("DROP TABLE IF EXISTS graftmem.user_latest_inc")
-        s.sql("""CREATE TABLE graftmem.user_latest_inc
-          (user_id BIGINT, last_sec BIGINT, last_eid BIGINT, last_type STRING)""")
+        MemCatalog.recreate(s, "user_latest_inc",
+          "(user_id BIGINT, last_sec BIGINT, last_eid BIGINT, last_type STRING)")
         val ev = graft.sources.Events.load(s, dir)
           .select(col("event_id"), col("user_id"), col("event_type"), col("sec"))
         // append-mode writes keep ingest/_SUCCESS present (the commit
@@ -395,8 +394,8 @@ object Round7 {
         var lastSyncRows = -1L
         def sync(ss: SparkSession): Unit = {
           val src = ss.readStream.schema(ev.schema).parquet(ingest.toString)
-          val q = src.writeStream.foreachBatch {
-            (b: DataFrame, _: Long) =>
+          val q = EventStreams.drain(src, checkpoint = Some(s"$root/cp")) {
+            (b, _) =>
               val w = Window.partitionBy("user_id")
                 .orderBy(col("sec").desc, col("event_id").desc)
               b.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
@@ -411,9 +410,7 @@ object Round7 {
                   WHEN NOT MATCHED THEN INSERT (user_id, last_sec, last_eid, last_type)
                     VALUES (b.user_id, b.sec, b.event_id, b.event_type)""")
               ()
-          }.option("checkpointLocation", s"$root/cp")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-          q.awaitTermination()
+          }
           lastSyncRows = q.recentProgress.map(_.numInputRows).sum
         }
         val jobs = Seq(
@@ -547,32 +544,21 @@ object Round7 {
             .select(col("vec_id").as("db"), col("embedding").as("eb")), "db", "eb")
           .withColumn("nb", Similarity.norm("eb"))
           .persist()
-        s.conf.set("spark.sql.catalog.graftmem", "graft.sources.MemCatalog")
-        s.sql("DROP TABLE IF EXISTS graftmem.semdedup_alerts")
-        s.sql("CREATE TABLE graftmem.semdedup_alerts (da BIGINT, db BIGINT, cos DOUBLE)")
-        val src = s.readStream.schema(emb.schema)
-          .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
-        val probe = src.filter(Slots.Probe.in)
+        MemCatalog.recreate(s, "semdedup_alerts", "(da BIGINT, db BIGINT, cos DOUBLE)")
+        val probe = EventStreams.fixtureStream(s, dir, "embeddings")
+          .filter(Slots.Probe.in)
           .select(col("vec_id").as("da"), col("embedding").as("ea"))
-        val q = EventTime.withShufflePartitions(s, 8) {
-          probe.writeStream.foreachBatch {
-            (batch: DataFrame, _: Long) =>
-              assign(batch, "da", "ea")
+        EventTime.withShufflePartitions(s, 8) {
+          EventStreams.drain(probe) { (batch, _) =>
+            EventStreams.insertNew(assign(batch, "da", "ea")
                 .withColumn("na", Similarity.norm("ea"))
                 .join(corpus, Seq("centroid_id"))
                 .select(col("da"), col("db"),
                   Similarity.cos("ea", "eb", col("na"), col("nb")).as("cos"))
-                .filter(col("cos") >= 0.35)
-                .createOrReplaceTempView("q291_batch")
-              batch.sparkSession.sql(
-                """MERGE INTO graftmem.semdedup_alerts t USING q291_batch b
-                  ON t.da = b.da AND t.db = b.db
-                  WHEN NOT MATCHED THEN INSERT (da, db, cos)
-                    VALUES (b.da, b.db, b.cos)""")
-              ()
-          }.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+                .filter(col("cos") >= 0.35),
+              "semdedup_alerts", "da", "db")
+          }
         }
-        q.awaitTermination()
         corpus.unpersist()
         s.sql("SELECT da, db, cos FROM graftmem.semdedup_alerts ORDER BY da, db")
       },

@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.operators.{IndexAdvisor, Similarity}
-import graft.sources.Tables
+import graft.sources.{MemCatalog, Tables}
+import graft.streaming.EventStreams
 import graft.util.{Jobs, Slots}
 
 /** Round-8 batch: making the round-7 documentation-only claims
@@ -312,7 +313,6 @@ object Round8 {
     "q296_etl_version_diff" -> QueryDef(
       (s, dir) => {
         val d = t(s, dir, "documents")
-        s.conf.set("spark.sql.catalog.graftmem", "graft.sources.MemCatalog")
         // Side effects are NAMESPACED PER INVOCATION (table + seed view
         // carry a process-unique suffix): the DML sequence runs eagerly
         // at call time, so two interleaved invocations sharing one name
@@ -323,9 +323,8 @@ object Round8 {
         val inv = q296Invocations.incrementAndGet()
         val tbl = s"graftmem.doc_versions_$inv"
         val seed = s"q296_seed_$inv"
-        s.sql(s"DROP TABLE IF EXISTS $tbl")
-        s.sql(s"""CREATE TABLE $tbl
-          (doc_id BIGINT, text STRING, lang STRING, n_chars BIGINT)""")
+        MemCatalog.recreate(s, s"doc_versions_$inv",
+          "(doc_id BIGINT, text STRING, lang STRING, n_chars BIGINT)")
         d.select(col("doc_id"), col("text"), col("lang"),
             col("n_chars").cast("long").as("n_chars"))
           .createOrReplaceTempView(seed)
@@ -377,7 +376,6 @@ object Round8 {
     // sized expansion does).
     "q297_stream_neardup_dedup" -> QueryDef(
       (s, dir) => {
-        val docsSchema = t(s, dir, "documents").schema
         val cgrp = t(s, dir, "documents").filter(Slots.Probe.out(col("doc_id")))
           .groupBy("lang", "text")
           .agg(min("doc_id").as("rep"), collect_list("doc_id").as("ids"))
@@ -386,27 +384,16 @@ object Round8 {
           cgrp.select(col("rep").as("doc_id"), col("lang"), col("text")),
           "pb", "nb").persist()
         val cmem = cgrp.select(col("rep").as("pb"), explode(col("ids")).as("db"))
-        s.conf.set("spark.sql.catalog.graftmem", "graft.sources.MemCatalog")
-        s.sql("DROP TABLE IF EXISTS graftmem.neardup_alerts_dd")
-        s.sql("""CREATE TABLE graftmem.neardup_alerts_dd
-          (da BIGINT, db BIGINT, jaccard DOUBLE)""")
-        val src = s.readStream.schema(docsSchema)
-          .option("pathGlobFilter", "documents.parquet").parquet(dir)
-        val probe = src.filter(Slots.Probe.in(col("doc_id")))
-        val q = EventTime.withShufflePartitions(s, 8) {
-          probe.writeStream.foreachBatch {
-            (batch: DataFrame, _: Long) =>
-              scoreNearDupBatchDeduped(batch, idx, cmem)
-                .createOrReplaceTempView("q297_batch")
-              batch.sparkSession.sql(
-                """MERGE INTO graftmem.neardup_alerts_dd t USING q297_batch b
-                  ON t.da = b.da AND t.db = b.db
-                  WHEN NOT MATCHED THEN INSERT (da, db, jaccard)
-                    VALUES (b.da, b.db, b.jaccard)""")
-              ()
-          }.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        MemCatalog.recreate(s, "neardup_alerts_dd",
+          "(da BIGINT, db BIGINT, jaccard DOUBLE)")
+        val probe = EventStreams.fixtureStream(s, dir, "documents")
+          .filter(Slots.Probe.in(col("doc_id")))
+        EventTime.withShufflePartitions(s, 8) {
+          EventStreams.drain(probe) { (batch, _) =>
+            EventStreams.insertNew(scoreNearDupBatchDeduped(batch, idx, cmem),
+              "neardup_alerts_dd", "da", "db")
+          }
         }
-        q.awaitTermination()
         idx.unpersist(); cgrp.unpersist()
         s.sql("SELECT da, db, jaccard FROM graftmem.neardup_alerts_dd ORDER BY da, db")
       },
@@ -437,28 +424,18 @@ object Round8 {
           .withColumn("nb", Similarity.norm("eb"))
           .persist()
         val cmem = cgrp.select(col("rep").as("pb"), explode(col("ids")).as("db"))
-        s.conf.set("spark.sql.catalog.graftmem", "graft.sources.MemCatalog")
-        s.sql("DROP TABLE IF EXISTS graftmem.semdedup_alerts_dd")
-        s.sql("""CREATE TABLE graftmem.semdedup_alerts_dd
-          (da BIGINT, db BIGINT, cos DOUBLE)""")
-        val src = s.readStream.schema(emb.schema)
-          .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
-        val probe = src.filter(Slots.Probe.in)
+        MemCatalog.recreate(s, "semdedup_alerts_dd",
+          "(da BIGINT, db BIGINT, cos DOUBLE)")
+        val probe = EventStreams.fixtureStream(s, dir, "embeddings")
+          .filter(Slots.Probe.in)
           .select(col("vec_id").as("da"), col("embedding").as("ea"))
-        val q = EventTime.withShufflePartitions(s, 8) {
-          probe.writeStream.foreachBatch {
-            (batch: DataFrame, _: Long) =>
-              scoreSemDedupBatchDeduped(batch, cents, repsAssigned, cmem)
-                .createOrReplaceTempView("q298_batch")
-              batch.sparkSession.sql(
-                """MERGE INTO graftmem.semdedup_alerts_dd t USING q298_batch b
-                  ON t.da = b.da AND t.db = b.db
-                  WHEN NOT MATCHED THEN INSERT (da, db, cos)
-                    VALUES (b.da, b.db, b.cos)""")
-              ()
-          }.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        EventTime.withShufflePartitions(s, 8) {
+          EventStreams.drain(probe) { (batch, _) =>
+            EventStreams.insertNew(
+              scoreSemDedupBatchDeduped(batch, cents, repsAssigned, cmem),
+              "semdedup_alerts_dd", "da", "db")
+          }
         }
-        q.awaitTermination()
         repsAssigned.unpersist(); cgrp.unpersist()
         s.sql("SELECT da, db, cos FROM graftmem.semdedup_alerts_dd ORDER BY da, db")
       },

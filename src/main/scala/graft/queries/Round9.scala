@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.operators.{IndexAdvisor, Similarity}
-import graft.sources.Tables
+import graft.sources.{MemCatalog, Tables}
+import graft.streaming.EventStreams
 import graft.util.{Jobs, Slots}
 
 /** Round-9 batch: completing the graph-ANN ladder. q301→q302→q303
@@ -339,29 +340,18 @@ object Round9 {
           .withColumn("nb", Similarity.norm("eb"))
           .persist()
         val cmem = cgrp.select(col("rep").as("pb"), explode(col("ids")).as("db"))
-        s.conf.set("spark.sql.catalog.graftmem", "graft.sources.MemCatalog")
-        s.sql("DROP TABLE IF EXISTS graftmem.semdedup_alerts_adv")
-        s.sql("""CREATE TABLE graftmem.semdedup_alerts_adv
-          (da BIGINT, db BIGINT, cos DOUBLE)""")
-        val src = s.readStream.schema(emb.schema)
-          .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
-        val probe = src.filter(
-            Slots.Probe.in)
+        MemCatalog.recreate(s, "semdedup_alerts_adv",
+          "(da BIGINT, db BIGINT, cos DOUBLE)")
+        val probe = EventStreams.fixtureStream(s, dir, "embeddings")
+          .filter(Slots.Probe.in)
           .select(col("vec_id").as("da"), col("embedding").as("ea"))
-        val q = EventTime.withShufflePartitions(s, 8) {
-          probe.writeStream.foreachBatch {
-            (batch: DataFrame, _: Long) =>
-              Round8.scoreSemDedupBatchDeduped(batch, cents, repsAssigned, cmem)
-                .createOrReplaceTempView("q305_batch")
-              batch.sparkSession.sql(
-                """MERGE INTO graftmem.semdedup_alerts_adv t USING q305_batch b
-                  ON t.da = b.da AND t.db = b.db
-                  WHEN NOT MATCHED THEN INSERT (da, db, cos)
-                    VALUES (b.da, b.db, b.cos)""")
-              ()
-          }.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        EventTime.withShufflePartitions(s, 8) {
+          EventStreams.drain(probe) { (batch, _) =>
+            EventStreams.insertNew(Round8.scoreSemDedupBatchDeduped(batch,
+                cents, repsAssigned, cmem),
+              "semdedup_alerts_adv", "da", "db")
+          }
         }
-        q.awaitTermination()
         repsAssigned.unpersist(); cgrp.unpersist()
         s.sql("""SELECT da, db, cos FROM graftmem.semdedup_alerts_adv
           ORDER BY da, db""")
@@ -809,30 +799,18 @@ object Round9 {
         val raP = idx.ra.persist(); val encP = idx.enc.persist()
         raP.count(); encP.count()
         val served = idx.copy(ra = raP, enc = encP)
-        s.conf.set("spark.sql.catalog.graftmem", "graft.sources.MemCatalog")
-        s.sql("DROP TABLE IF EXISTS graftmem.semdedup_alerts_pq")
-        s.sql("""CREATE TABLE graftmem.semdedup_alerts_pq
-          (da BIGINT, db BIGINT, cos DOUBLE)""")
-        val src = s.readStream.schema(emb.schema)
-          .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
-        val probe = src.filter(
-            Slots.Probe.in)
+        MemCatalog.recreate(s, "semdedup_alerts_pq",
+          "(da BIGINT, db BIGINT, cos DOUBLE)")
+        val probe = EventStreams.fixtureStream(s, dir, "embeddings")
+          .filter(Slots.Probe.in)
           .select(col("vec_id").as("da"), col("embedding").as("ea"))
-        val q = EventTime.withShufflePartitions(s, 8) {
-          probe.writeStream.foreachBatch {
-            (batch: DataFrame, _: Long) =>
-              Similarity.pqSemDedupBatch(batch, served, m = 32,
-                  threshold = 0.35)
-                .createOrReplaceTempView("q311_batch")
-              batch.sparkSession.sql(
-                """MERGE INTO graftmem.semdedup_alerts_pq t USING q311_batch b
-                  ON t.da = b.da AND t.db = b.db
-                  WHEN NOT MATCHED THEN INSERT (da, db, cos)
-                    VALUES (b.da, b.db, b.cos)""")
-              ()
-          }.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        EventTime.withShufflePartitions(s, 8) {
+          EventStreams.drain(probe) { (batch, _) =>
+            EventStreams.insertNew(Similarity.pqSemDedupBatch(batch, served,
+                m = 32, threshold = 0.35),
+              "semdedup_alerts_pq", "da", "db")
+          }
         }
-        q.awaitTermination()
         raP.unpersist(); encP.unpersist(); idx.grp.unpersist()
         s.sql("""SELECT da, db, cos FROM graftmem.semdedup_alerts_pq
           ORDER BY da, db""")

@@ -4,6 +4,7 @@ import java.util
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchFunctionException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog.{FunctionCatalog, Identifier, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableCatalog, TableChange}
@@ -141,6 +142,20 @@ object MemCatalog {
     def rows: Vector[InternalRow] = versions.last
   }
   private[sources] val store = TrieMap.empty[String, Entry]
+
+  /** Registers this catalog in `s` as `graftmem`. */
+  def register(s: SparkSession): Unit =
+    s.conf.set("spark.sql.catalog.graftmem", "graft.sources.MemCatalog")
+
+  /** Resets `graftmem.<table>` to an empty table of `ddl`'s columns (the
+    * text after the table name, e.g. `(k BIGINT, v DOUBLE)`), registering
+    * the catalog first. The one place a graftmem table is dropped.
+    */
+  def recreate(s: SparkSession, table: String, ddl: String): Unit = {
+    register(s)
+    s.sql(s"DROP TABLE IF EXISTS graftmem.$table")
+    s.sql(s"CREATE TABLE graftmem.$table $ddl")
+  }
 }
 
 private class MemTable(key: String, pinnedVersion: Option[Int] = None,

@@ -1,8 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+
+import graft.sources.{Events, Tables}
+import graft.util.Scratch
 
 /** Structured Streaming forms of the event-time operators (SURVEY.md
   * §2.2 streaming column): the same transformations as the batch-scored
@@ -205,6 +208,16 @@ object EventStreams {
         OutputMode.Append())
   }
 
+  /** A file stream over one driver fixture table: the schema comes from
+    * the batch `Tables.load` (a file stream needs it up front) and the
+    * table's file is glob-selected out of the fixture dir (a file source
+    * reads a directory). The one stream reader of a fixture table.
+    */
+  def fixtureStream(s: SparkSession, dir: String, table: String): DataFrame =
+    s.readStream.schema(Tables.load(s, dir, table).schema)
+      .option("pathGlobFilter", s"$table.parquet")
+      .parquet(dir)
+
   /** File-stream form of the events source: the same ns-vs-µs schema
     * fallback as the batch `sources.Events` loader (Spark 4 refuses
     * parquet timestamp[ns] unless the legacy conf is set), plus a
@@ -212,13 +225,9 @@ object EventStreams {
     * oracle-safe (SURVEY.md §1.2). The single place the ns hazard is
     * handled for streaming readers.
     */
-  def eventFileStream(s: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    graft.sources.Events.load(s, dir) // ensure the ns-read conf fallback ran
-    val src = s.readStream
-      .schema(graft.sources.Tables.load(s, dir, "events").schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
+  def eventFileStream(s: SparkSession, dir: String): DataFrame = {
+    Events.load(s, dir) // ensure the ns-read conf fallback ran
+    val src = fixtureStream(s, dir, "events")
     val sec = if (src.schema("ts").dataType ==
         org.apache.spark.sql.types.LongType)
       expr("ts DIV 1000000000")
@@ -267,81 +276,66 @@ object EventStreams {
       stream.join(org.apache.spark.sql.functions.broadcast(dim), key)
     else stream.join(dim, key)
 
-  /** Drain a stream and return its bounded result (test/dev helper —
-    * processes everything currently available, then stops). The sink is
-    * a SCRATCH PARQUET dir via foreachBatch, NOT the memory sink: the
-    * memory sink materializes every output row on the DRIVER heap (the
-    * r7 100× streaming probes needed a 20 GiB driver for the harness
-    * alone), and the sink CLASS is the scale contract even when today's
-    * output is a bounded aggregate. Semantics per output mode match the
-    * memory sink's: complete truncates and rewrites each micro-batch
-    * (last batch wins), append/update accumulate the emitted rows.
+  /** The one micro-batch drain: runs `df` under `Trigger.AvailableNow`
+    * (everything available now, then stop), calling `perBatch` with each
+    * micro-batch and its id, and returns the terminated query — its
+    * `recentProgress` holds one `StreamingQueryProgress` per batch. With
+    * a `checkpoint` the offsets and state persist there, so a later drain
+    * over the same checkpoint reads only what arrived since. A throw in
+    * `perBatch` stops the query and is rethrown here.
     */
-  def runToMemory(df: DataFrame, name: String,
-      mode: String = "complete"): DataFrame =
-    if (mode == "complete") runToParquetComplete(df, name)
-    else runToParquet(df, name, mode)
-
-  /** [[runToParquet]] for COMPLETE-mode aggregates: each micro-batch
-    * carries the full result, so the scratch dir is overwritten per
-    * batch and the final batch is the answer. */
-  def runToParquetComplete(df: DataFrame, name: String): DataFrame = {
-    val out = graft.util.Scratch.dir(name)
-    val q = df.writeStream.outputMode("complete").foreachBatch {
-      (b: DataFrame, _: Long) =>
-        b.write.mode("overwrite").parquet(out)
-        ()
-    }.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    df.sparkSession.read.schema(df.schema).parquet(out)
-  }
-
-  /** Like [[runToMemory]] for APPEND-mode streams, but the sink is an
-    * append-only parquet dir in scratch space via foreachBatch — the
-    * memory sink holds every output row on the DRIVER heap (the 100×
-    * streaming probes needed a 20 GiB driver for the harness, not the
-    * operator state); with this sink rows land on disk per micro-batch
-    * and the same queries probe at default heap. Returns the read-back
-    * result with the stream's schema (explicit, so a zero-row stream
-    * still reads).
-    */
-  def runToParquet(df: DataFrame, name: String,
-      mode: String = "append"): DataFrame = {
-    val out = graft.util.Scratch.dir(name)
-    val q = df.writeStream.outputMode(mode).foreachBatch {
-      (b: DataFrame, _: Long) =>
-        b.write.mode("append").parquet(out)
-        ()
-    }.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    df.sparkSession.read.schema(df.schema).parquet(out)
-  }
-
-  /** Like [[runToMemory]] but with an explicit checkpoint location, so
-    * the run leaves a durable state-store + offset log behind — the
-    * input to the `statestore` batch reader (state introspection) and
-    * to any restart-and-catch-up scenario. At cluster scale the
-    * checkpoint dir lives on shared storage; everything else is
-    * identical to the ephemeral form.
-    */
-  def runToMemoryCheckpointed(df: DataFrame, name: String, ckpt: String,
-      mode: String = "complete"): DataFrame = {
-    // the sink dir is derived FROM the checkpoint path (not a fresh
-    // scratch dir per call): a RESUMED run replays only the new
-    // batches, so a per-call directory would silently drop every row
-    // the first run emitted — the resumed query must append to the
-    // same data dir its checkpoint refers to. Lifecycle follows the
-    // checkpoint (caller-owned; tests put both under Scratch roots).
-    val out = ckpt.stripSuffix("/") + "-sink"
-    java.nio.file.Files.createDirectories(java.nio.file.Path.of(out))
-    val writeMode = if (mode == "complete") "overwrite" else "append"
-    val q = df.writeStream.outputMode(mode).foreachBatch {
-      (b: DataFrame, _: Long) =>
-        b.write.mode(writeMode).parquet(out)
-        ()
-    }.option("checkpointLocation", ckpt)
+  def drain(df: DataFrame, mode: String = "append",
+      checkpoint: Option[String] = None)(
+      perBatch: (DataFrame, Long) => Unit): StreamingQuery = {
+    val w = df.writeStream.outputMode(mode).foreachBatch(perBatch)
+    val q = checkpoint.fold(w)(w.option("checkpointLocation", _))
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
+    q
+  }
+
+  /** The one idempotent micro-batch sink: MERGEs `rows` into
+    * `graftmem.<table>`, inserting each row whose `keys` the table does
+    * not hold yet and leaving held keys untouched, so a replayed batch
+    * changes nothing. `rows` must carry exactly the table's columns, in
+    * order. The view and the MERGE live in `rows.sparkSession` — the
+    * stream's own session for a frame built from the batch, the outer
+    * one for a frame served from an outer-session artifact.
+    */
+  def insertNew(rows: DataFrame, table: String, keys: String*): Unit = {
+    val s = rows.sparkSession
+    val cols = rows.columns.toSeq
+    val tableCols = s.table(s"graftmem.$table").columns.toSeq
+    require(cols == tableCols, s"insertNew into graftmem.$table: rows " +
+      s"carry (${cols.mkString(", ")}), the table (${tableCols.mkString(", ")})")
+    rows.createOrReplaceTempView(s"${table}_batch")
+    s.sql(s"""MERGE INTO graftmem.$table t USING ${table}_batch b
+      ON ${keys.map(k => s"t.$k = b.$k").mkString(" AND ")}
+      WHEN NOT MATCHED THEN INSERT (${cols.mkString(", ")})
+        VALUES (${cols.map("b." + _).mkString(", ")})""")
+    ()
+  }
+
+  /** Drains a stream into a scratch parquet dir and returns the bounded
+    * result, read back with the stream's schema (explicit, so a zero-row
+    * stream still reads). The sink is parquet on disk, not the memory
+    * sink: that one holds every output row on the driver heap (the 100×
+    * streaming probes needed a 20 GiB driver for the harness alone).
+    * `complete` overwrites the dir each micro-batch (the last batch is
+    * the answer); `append` and `update` accumulate the emitted rows.
+    * The dir is `Scratch.dir(name)`; with a `checkpoint` it is
+    * `<checkpoint>-sink` instead, so a resumed drain (which replays only
+    * the new batches) appends to the rows its first run wrote.
+    */
+  def runToParquet(df: DataFrame, name: String, mode: String = "append",
+      checkpoint: Option[String] = None): DataFrame = {
+    val out = checkpoint.fold(Scratch.dir(name)) { c =>
+      val sink = c.stripSuffix("/") + "-sink"
+      java.nio.file.Files.createDirectories(java.nio.file.Path.of(sink))
+      sink
+    }
+    val writeMode = if (mode == "complete") "overwrite" else "append"
+    drain(df, mode, checkpoint) { (b, _) => b.write.mode(writeMode).parquet(out) }
     df.sparkSession.read.schema(df.schema).parquet(out)
   }
 

@@ -132,6 +132,22 @@ class FunctionCatalogSpec extends SparkTestBase {
       s"SQ8 keys go through Similarity.sq8Key / sq8Maxsim: $homes")
   }
 
+  test("src/main: one micro-batch drain, one graftmem table reset") {
+    // every AvailableNow loop goes through EventStreams.drain and every
+    // graftmem table reset through MemCatalog.recreate
+    def homes(needle: String): Seq[String] = sources.flatMap { case (f, text) =>
+      val n = text.split(java.util.regex.Pattern.quote(needle), -1).length - 1
+      if (n > 0) Some(s"${f.getPath.replace(java.io.File.separatorChar, '/')} x$n")
+      else None
+    }
+    assert(homes(".foreachBatch") ==
+      Seq("src/main/scala/graft/streaming/EventStreams.scala x1"),
+      "micro-batch loops go through EventStreams.drain")
+    assert(homes("DROP TABLE IF EXISTS graftmem.") ==
+      Seq("src/main/scala/graft/sources/MemCatalog.scala x1"),
+      "graftmem tables are reset through MemCatalog.recreate")
+  }
+
   /** The top-level argument texts of the parameter list that opens at
     * `text(open)`: commas inside brackets, string literals and `${…}`
     * interpolations do not split. */

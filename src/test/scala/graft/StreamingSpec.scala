@@ -31,8 +31,8 @@ class StreamingSpec extends SparkTestBase {
     Events.load(spark, sf).withColumn("ts", col("ts").cast("timestamp"))
 
   test("streaming tumbling counts == batch tumbling counts") {
-    val streamed = EventStreams.runToMemory(
-      EventStreams.tumblingCounts(streamEvents), "t_tumbling")
+    val streamed = EventStreams.runToParquet(
+      EventStreams.tumblingCounts(streamEvents), "t_tumbling", mode = "complete")
       .select(col("w.start").as("ws"), col("event_type"), col("n"))
       .orderBy("ws", "event_type").collect().map(_.toString)
     val batch = batchEvents
@@ -44,8 +44,8 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("streaming session counts == batch session counts") {
-    val streamed = EventStreams.runToMemory(
-      EventStreams.sessionCounts(streamEvents), "t_session")
+    val streamed = EventStreams.runToParquet(
+      EventStreams.sessionCounts(streamEvents), "t_session", mode = "complete")
       .select(col("user_id"), col("sw.start").as("ss"), col("n_events"))
       .orderBy("user_id", "ss").collect().map(_.toString)
     val batch = batchEvents
@@ -57,7 +57,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("flatMapGroupsWithState running counts: final state matches batch totals") {
-    val out = EventStreams.runToMemory(
+    val out = EventStreams.runToParquet(
       EventStreams.runningUserCounts(streamEvents).toDF(), "t_state",
       mode = "update")
     // last emitted row per user == total batch count for that user
@@ -78,7 +78,7 @@ class StreamingSpec extends SparkTestBase {
     val old = spark.conf.getOption(key)
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val out = try EventStreams.runToMemory(
+    val out = try EventStreams.runToParquet(
       EventStreams.runningUserCountsTws(streamEvents).toDF(), "t_tws",
       mode = "update")
     finally old match {
@@ -99,7 +99,7 @@ class StreamingSpec extends SparkTestBase {
   test("stream-stream interval join == batch interval join") {
     val clicks = streamEvents.filter(col("event_type") === "click")
     val views = streamEvents.filter(col("event_type") === "view")
-    val streamed = EventStreams.runToMemory(
+    val streamed = EventStreams.runToParquet(
       EventStreams.intervalJoin(clicks, views, intervalSeconds = 21600L),
       "t_ssjoin", mode = "append")
       .select("l_id", "r_id").collect().map(_.toString).sorted
@@ -120,7 +120,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("dropDuplicatesWithinWatermark emits one row per (user, type)") {
-    val out = EventStreams.runToMemory(
+    val out = EventStreams.runToParquet(
       EventStreams.dedupWithinWatermark(streamEvents), "t_dedup",
       mode = "append")
     val n = out.groupBy("user_id", "event_type").count()
@@ -132,7 +132,7 @@ class StreamingSpec extends SparkTestBase {
     val dim = Events.load(spark, sf)
       .select(col("user_id")).distinct()
       .withColumn("cohort", concat(lit("c"), pmod(col("user_id"), lit(5))))
-    val streamed = EventStreams.runToMemory(
+    val streamed = EventStreams.runToParquet(
       EventStreams.enrichWithStatic(
         streamEvents.select("event_id", "user_id"), dim, "user_id"),
       "t_enrich", mode = "append")
@@ -181,7 +181,7 @@ class StreamingSpec extends SparkTestBase {
     val gap = 1800L
     val src = streamEvents
       .select(col("user_id"), timestamp_seconds(unix_timestamp(col("ts"))).as("ts"))
-    val streamed = try EventStreams.runToMemory(
+    val streamed = try EventStreams.runToParquet(
       EventStreams.timerSessions(src, gap, "1 second").toDF(), "t_timer_sess",
       mode = "append")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
@@ -257,6 +257,48 @@ class StreamingSpec extends SparkTestBase {
     }
   }
 
+  test("drain + insertNew: replayed rows insert once, columns must match, a batch throw surfaces") {
+    // The one micro-batch home: the same rows arriving in a second batch
+    // (a resumed drain over one checkpoint) insert each composite key
+    // once; a frame whose columns are not the table's is refused; a
+    // throw in perBatch fails drain itself and leaves no stream running.
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
+    graft.sources.MemCatalog.recreate(spark, "t_insert_new",
+      "(a BIGINT, b BIGINT, v DOUBLE)")
+    val rows = Seq((1L, 1L, 0.5), (1L, 2L, 0.25), (2L, 1L, 0.125))
+    val ms = MemoryStream[(Long, Long, Double)]
+    val ckpt = graft.util.Scratch.dir("t_insert_new_ckpt")
+    def drainOnce(): Long = EventStreams.drain(ms.toDF().toDF("a", "b", "v"),
+        checkpoint = Some(ckpt)) { (batch, _) =>
+      EventStreams.insertNew(batch, "t_insert_new", "a", "b")
+    }.recentProgress.map(_.numInputRows).sum
+    ms.addData(rows)
+    assert(drainOnce() == 3L)
+    ms.addData(rows)
+    assert(drainOnce() == 3L, "the second batch must carry the same rows again")
+    val got = spark.sql("SELECT a, b, v FROM graftmem.t_insert_new")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(got.sorted == rows.sorted)
+
+    intercept[IllegalArgumentException] {
+      EventStreams.insertNew(Seq((1L, 0.5, 1L)).toDF("a", "v", "b"),
+        "t_insert_new", "a", "b")
+    }
+
+    val boom = MemoryStream[Long]
+    boom.addData(1L)
+    val err = intercept[Exception] {
+      EventStreams.drain(boom.toDF()) { (_, _) =>
+        throw new IllegalStateException("perBatch failed") }
+    }
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("perBatch failed")),
+      s"the perBatch throw must surface from drain: $err")
+    assert(spark.streams.active.isEmpty)
+  }
+
   test("statestore batch reader returns exactly the streaming agg's final state") {
     // Run a streaming per-user count into an explicit checkpoint, then
     // read the state store back with the batch `statestore` source —
@@ -264,8 +306,8 @@ class StreamingSpec extends SparkTestBase {
     // state IS the answer).
     val ckpt = graft.util.Scratch.dir("t_ss_reader_ckpt")
     val agg = streamEvents.groupBy(col("user_id")).agg(count(lit(1)).as("n"))
-    EventStreams.runToMemoryCheckpointed(agg, "t_ss_reader_sink", ckpt,
-      mode = "update")
+    EventStreams.runToParquet(agg, "t_ss_reader_sink", mode = "update",
+      checkpoint = Some(ckpt))
     val state = spark.read.format("statestore").option("path", ckpt).load()
       .selectExpr("key.user_id", "value.*").toDF("user_id", "n")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -280,7 +322,7 @@ class StreamingSpec extends SparkTestBase {
     val old = spark.conf.getOption(key)
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val sink = try EventStreams.runToMemory(
+    val sink = try EventStreams.runToParquet(
       EventStreams.typedUserStats(streamEvents).toDF(), "t_typed_stats",
       mode = "update")
     finally old match {
@@ -421,9 +463,9 @@ class StreamingSpec extends SparkTestBase {
     val kafkaCols = Seq("key", "value", "topic", "partition", "offset", "timestamp")
     ms.addData(payloads.take(100).toSeq)
     ms.addData(payloads.drop(100).toSeq)
-    val streamed = EventStreams.runToMemory(
+    val streamed = EventStreams.runToParquet(
       EventStreams.tumblingCounts(parse(ms.toDF().toDF(kafkaCols: _*))),
-      "t_kafka_shaped")
+      "t_kafka_shaped", mode = "complete")
       .select(col("w.start").as("ws"), col("event_type"), col("n"))
       .collect().map(_.toString).sorted
     val batch = parse(payloads.toSeq.toDF(kafkaCols: _*))
