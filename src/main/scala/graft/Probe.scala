@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** One-off diagnostics main (not part of the driver contract): warm
   * per-query timings and plan audits for the heaviest queries.

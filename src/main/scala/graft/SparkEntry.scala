@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.queries.{Composite, EventTime, Extra, Funcs, LlmOps, Relational, Round2, Round3, Round4, Round4b, Round5, Round6, Round6b, Round6c, Round7, Round8, Round9, Round10, Round11, Round11b, Round12, Round13, Round14}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.TextFunctions
 
 /** Deduplication operators for the LLM-data-pipeline surface: exact,
   * deterministic window-dedup, n-gram Jaccard near-dup, MinHash-LSH

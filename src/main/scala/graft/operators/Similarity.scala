@@ -214,61 +214,6 @@ object Similarity {
     cross.unionByName(intra)
   }
 
-  /** IVF-style approximate top-k: a coarse quantizer (here: the first
-    * `nlist` corpus vectors as centroids — deterministic; a production
-    * build would k-means them) assigns every vector to its nearest
-    * centroid; queries probe only their own centroid's bucket
-    * (`nprobe`=1 simplification). Bucket assignment broadcasts the
-    * centroid set and scans the corpus once; scoring then joins on the
-    * bucket key with bounded per-bucket work — the alternative
-    * scale path to [[lshTopK]].
-    */
-  def ivfTopK(
-      queries: DataFrame, // qid, qe
-      corpus: DataFrame, // cid, ce
-      k: Int,
-      nlist: Int): DataFrame = {
-    NativeExpressions.register(queries.sparkSession)
-    val centroids = broadcast(
-      corpus.orderBy("cid").limit(nlist)
-        .select(col("cid").as("centroid_id"), col("ce").as("centroid")))
-
-    def assign(df: DataFrame, vec: String): DataFrame = {
-      // assignment ranks on the ROUNDED dot product (the q46 recipe):
-      // raw doubles rank identically in practice, but rounding makes
-      // the near-tie boundary engine-portable, which is what lets q77
-      // carry an exact oracle
-      val scored = df.crossJoin(centroids)
-        .withColumn("__d", round(expr(s"vec_dot($vec, centroid)"), 6))
-      val w = Window.partitionBy(df.columns.head)
-        .orderBy(col("__d").desc, col("centroid_id"))
-      scored.withColumn("__r", row_number().over(w))
-        .filter(col("__r") === 1)
-        .drop("__d", "__r", "centroid")
-    }
-
-    val qb = assign(queries.withColumn("qn", norm("qe")), "qe")
-    val cb = assign(corpus.withColumn("cn", norm("ce")), "ce")
-    val scored = qb.join(cb, "centroid_id")
-      .filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
-        cos("qe", "ce", col("qn"), col("cn")).as("cos"))
-    topKByCos(scored, k)
-  }
-
-  /** IVF with multi-probe (`nprobe` > 1): identical index to [[ivfTopK]]
-    * — every corpus vector lives in exactly ONE bucket (its nearest
-    * centroid) — but each query probes its `nprobe` nearest centroids
-    * instead of only the first. This is THE standard recall knob for an
-    * IVF index (the q275-family harness measured nprobe=1 at 0.46
-    * average recall@5 — not production-usable): scanned-corpus fraction
-    * grows ~nprobe/nlist while the index build cost is unchanged, and
-    * because corpus buckets are disjoint and probe centroids are
-    * pairwise distinct, no (qid, cid) candidate is generated twice — no
-    * dedup pass. Ranking stays on the rounded dot (q46 recipe) so the
-    * probe-set boundary is engine-portable and the recall queries carry
-    * exact oracles.
-    */
   /** Rank-1..`nKeep` nearest-centroid assignment by ROUNDED (6dp) dot
     * product with centroid-id tie-break — the ONE expression the whole
     * IVF / streaming-semdedup / dedup-first family's value-determinism
@@ -313,6 +258,21 @@ object Similarity {
     }
   }
 
+  /** IVF top-k with multi-probe: a coarse quantizer (the first `nlist`
+    * corpus vectors as centroids — deterministic; a production build
+    * would k-means them) puts every corpus vector in exactly ONE bucket
+    * (its nearest centroid, [[assignToCentroids]] rank 1), and each
+    * query probes its `nprobe` nearest centroids (`nprobe` = 1 probes
+    * only its own bucket). This is THE standard recall knob for an
+    * IVF index (the q275-family harness measured nprobe=1 at 0.46
+    * average recall@5 — not production-usable): scanned-corpus fraction
+    * grows ~nprobe/nlist while the index build cost is unchanged, and
+    * because corpus buckets are disjoint and probe centroids are
+    * pairwise distinct, no (qid, cid) candidate is generated twice — no
+    * dedup pass. Ranking stays on the rounded dot (q46 recipe) so the
+    * probe-set boundary is engine-portable and the recall queries carry
+    * exact oracles.
+    */
   def ivfTopKProbe(
       queries: DataFrame, // qid, qe
       corpus: DataFrame, // cid, ce
@@ -411,6 +371,40 @@ object Similarity {
     topKByCos(scored, k)
   }
 
+  // ---- quantized L2 cells (the q225 kernel) ----------------------------
+  // Every Lloyd round, quantized-L2 cell assignment and PQ encode works
+  // on int64 coordinates with exact int64 squared distances and
+  // floor-mean updates, so cells are bit-portable cross-engine. These
+  // are the only Spark spellings of that kernel in `src/main`
+  // (`Round6c.quantSql` / `l2ScoreSql` / `l2RankSql` / `lloydSql` are
+  // the DuckDB twins).
+
+  /** The int64 coords of array column `vec`: one (`id`, i, x) row per
+    * dimension i (1-based), x = floor(v_i · 1e6). */
+  def quantCoords(df: DataFrame, id: String, vec: String): DataFrame = df
+    .select(col(id), posexplode(col(vec)))
+    .select(col(id), (col("pos") + 1).as("i"),
+      floor(col("col").cast("double") * lit(1000000L)).as("x"))
+
+  /** The `keep` nearest cells per `keys` over joined point coords `x`
+    * and cell coords `c`: grouped by `keys` + `cell`, dist = Σ(x − c)²
+    * (exact int64), ranked (dist ASC, `cell` ASC) as `rn`. Rows carry
+    * `keys`, `cell`, dist and rn. */
+  def l2Nearest(joined: DataFrame, keys: Seq[String], cell: String,
+      keep: Int): DataFrame =
+    TopK.perGroup(
+      joined.groupBy((keys :+ cell).map(col): _*)
+        .agg(sum((col("x") - col("c")) * (col("x") - col("c"))).as("dist")),
+      keys, Seq(col("dist"), col(cell)), keep, "rn")
+
+  /** The Lloyd update of assigned coords (`cell`, i, x): per (`cell`, i)
+    * the floor mean of x as `c`. The division runs in double (sums stay
+    * below 2^53) because DuckDB's `//` floors where Spark's DIV
+    * truncates — they disagree on negative sums. */
+  def lloydMean(assigned: DataFrame, cell: String): DataFrame =
+    assigned.groupBy(cell, "i")
+      .agg(floor(sum("x").cast("double") / count(lit(1))).as("c"))
+
   /** IVF with a Lloyd-REFINED coarse quantizer: seed centroids from the
     * first `nlist` corpus vectors, run `rounds` k-means iterations on
     * the int64-quantized embeddings (the q225 kernel — floor(x·1e6)
@@ -433,35 +427,21 @@ object Similarity {
       nprobe: Int,
       rounds: Int = 1): DataFrame = {
     NativeExpressions.register(queries.sparkSession)
-    def quant(df: DataFrame, id: String, vec: String): DataFrame = df
-      .select(col(id), posexplode(col(vec)))
-      .select(col(id), (col("pos") + 1).as("i"),
-        floor(col("col").cast("double") * lit(1000000L)).as("x"))
-    val e = quant(corpus, "cid", "ce")
+    val e = quantCoords(corpus, "cid", "ce")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val seeds = corpus.orderBy("cid").limit(nlist).select(col("cid"))
     var cents = e.join(broadcast(seeds), Seq("cid"))
       .select(col("cid").as("ccid"), col("i"), col("x").as("c"))
-    def assignAll(): DataFrame = e.join(broadcast(cents), Seq("i"))
-      .groupBy("cid", "ccid")
-      .agg(sum((col("x") - col("c")) * (col("x") - col("c"))).as("dist"))
-    for (_ <- 1 to rounds) {
-      val asg = assignAll().withColumn("rn", row_number().over(
-          Window.partitionBy("cid").orderBy(col("dist"), col("ccid"))))
-        .filter(col("rn") === 1).select(col("cid"), col("ccid"))
-      cents = e.join(asg, Seq("cid")).groupBy("ccid", "i")
-        .agg(floor(sum("x").cast("double") / count(lit(1))).as("c"))
-    }
+    def assignAll(): DataFrame = l2Nearest(
+      e.join(broadcast(cents), Seq("i")), Seq("cid"), "ccid", 1)
+      .select(col("cid"), col("ccid"))
+    for (_ <- 1 to rounds)
+      cents = lloydMean(e.join(assignAll(), Seq("cid")), "ccid")
     cents = cents.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ca = assignAll().withColumn("rn", row_number().over(
-        Window.partitionBy("cid").orderBy(col("dist"), col("ccid"))))
-      .filter(col("rn") === 1).select(col("cid"), col("ccid"))
-    val qa = quant(queries, "qid", "qe").join(broadcast(cents), Seq("i"))
-      .groupBy("qid", "ccid")
-      .agg(sum((col("x") - col("c")) * (col("x") - col("c"))).as("dist"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("qid").orderBy(col("dist"), col("ccid"))))
-      .filter(col("rn") <= nprobe).select(col("qid"), col("ccid"))
+    val ca = assignAll()
+    val qa = l2Nearest(
+      quantCoords(queries, "qid", "qe").join(broadcast(cents), Seq("i")),
+      Seq("qid"), "ccid", nprobe).select(col("qid"), col("ccid"))
     val cand = qa.join(ca, "ccid").filter(col("qid") =!= col("cid"))
     topKByCos(exactCos(cand, queries, corpus), k)
   }
@@ -881,13 +861,11 @@ object Similarity {
     val grp = corpus.groupBy("ce")
       .agg(min("cid").as("rep"), collect_list("cid").as("ids"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val encDist = quantCoords(grp.select("rep", "ce"), "rep", "ce")
-      .join(cb, Seq("i"))
-      .groupBy(col("rep"), expr(s"(i - 1) div $dsub").as("s"), col("code"))
-      .agg(sum((col("x") - col("cx")) * (col("x") - col("cx"))).as("dist"))
-    val enc = encDist.withColumn("rn", row_number().over(
-        Window.partitionBy("rep", "s").orderBy(col("dist"), col("code"))))
-      .filter(col("rn") === 1).select("rep", "s", "code")
+    val enc = l2Nearest(quantCoords(grp.select("rep", "ce"), "rep", "ce")
+        .join(cb, Seq("i"))
+        .select(col("rep"), expr(s"(i - 1) div $dsub").as("s"), col("code"),
+          col("x"), col("cx").as("c")),
+      Seq("rep", "s"), "code", 1).select("rep", "s", "code")
     val codes = grp.select(col("rep"), explode(col("ids")).as("cid"))
       .join(enc, "rep").select("cid", "s", "code")
     Jobs.cut(codes, "pq_codes", grp.unpersist())
@@ -967,12 +945,6 @@ object Similarity {
       nSub: Int,
       dim: Int)
 
-  private[operators] def quantCoords(df: DataFrame, id: String,
-      vec: String): DataFrame = df
-    .select(col(id), posexplode(col(vec)))
-    .select(col(id), (col("pos") + 1).as("i"),
-      floor(col("col").cast("double") * lit(1000000L)).as("x"))
-
   /** Build the IVFADC index over `corpus` (cid, ce) — shared by the
     * batch serve ([[ivfPqTopK]]) and the streaming standing index
     * (q311): rank-1 cell assignment and residual encoding at REP level
@@ -1043,12 +1015,10 @@ object Similarity {
       .select(col("cid").as("code"), col("rep"))
     val pqc = broadcast(rres.join(broadcast(seedReps), "rep")
       .select(col("i"), col("code"), col("rx").as("px")))
-    val enc = piece("enc")(rres.join(pqc, Seq("i"))
-      .groupBy(col("rep"), expr(s"(i - 1) div $dsub").as("s"), col("code"))
-      .agg(sum((col("rx") - col("px")) * (col("rx") - col("px"))).as("dist"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("rep", "s").orderBy(col("dist"), col("code"))))
-      .filter(col("rn") === 1).select("rep", "s", "code"))
+    val enc = piece("enc")(l2Nearest(rres.join(pqc, Seq("i"))
+        .select(col("rep"), expr(s"(i - 1) div $dsub").as("s"), col("code"),
+          col("rx").as("x"), col("px").as("c")),
+      Seq("rep", "s"), "code", 1).select("rep", "s", "code"))
     IvfPqIndex(cents, centq, pqc, ra, enc, grp, nSub, dim)
   }
 
@@ -1196,7 +1166,7 @@ object Similarity {
 
   /** Greedy beam search over a bounded-degree neighbor graph — the
     * HNSW/DiskANN-family QUERY pattern, completing the ANN set next to
-    * [[lshTopK]] (hash), [[ivfTopK]] (coarse quantizer), and PQ (code
+    * [[lshTopK]] (hash), [[ivfTopKProbe]] (coarse quantizer), and PQ (code
     * compression). All queries start at a fixed entry point (the
     * minimum corpus id — the deterministic stand-in for HNSW's top
     * layer entry); each of `rounds` unrolled steps expands the current

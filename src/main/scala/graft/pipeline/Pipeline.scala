@@ -269,9 +269,11 @@ class PipelineRunner(spark: SparkSession, root: String) {
     * aborting the build. Spark sessions are thread-safe; concurrent
     * jobs become concurrent Spark jobs sharing the cluster (use
     * scheduler pools for fairness at scale). Runs and skips by
-    * [[mustRun]] with no forced set, as [[run]] does. An aborted build
-    * drains: no further job starts, the running ones finish writing
-    * their targets, and then the first failure is rethrown.
+    * [[mustRun]] with no forced set, as [[run]] does. Ready jobs wait
+    * in the loop's own FIFO queue and are handed to the pool only while
+    * fewer than `parallelism` run, so an aborted build drains: no
+    * further job starts, the running ones finish writing their
+    * targets, and then the first failure is rethrown.
     */
   def runParallel(
       jobs: Seq[PipelineJob],
@@ -288,10 +290,11 @@ class PipelineRunner(spark: SparkSession, root: String) {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
     val done = new java.util.concurrent.ExecutorCompletionService[
       (PipelineJob, Boolean)](pool)
+    val ready = collection.mutable.Queue[PipelineJob]()
     var inFlight = 0
     var failure: Option[Throwable] = None
     try {
-      def submit(job: PipelineJob): Unit = {
+      def start(job: PipelineJob): Unit = {
         // decision made after all parents completed -> ranTargets stable
         val stale = mustRun(job, now, Set.empty, ranTargets)
         inFlight += 1
@@ -312,7 +315,12 @@ class PipelineRunner(spark: SparkSession, root: String) {
         })
       }
 
-      jobs.filter(j => indeg(j.target) == 0).foreach(submit)
+      def startReady(): Unit =
+        while (failure.isEmpty && inFlight < parallelism && ready.nonEmpty)
+          start(ready.dequeue())
+
+      ready ++= jobs.filter(j => indeg(j.target) == 0)
+      startReady()
       while (inFlight > 0) {
         val next = done.take()
         inFlight -= 1
@@ -323,12 +331,13 @@ class PipelineRunner(spark: SparkSession, root: String) {
           if (failure.isEmpty)
             consumers.getOrElse(job.target, Nil).foreach { d =>
               indeg(d.target) -= 1
-              if (indeg(d.target) == 0) submit(d)
+              if (indeg(d.target) == 0) ready += d
             }
         } catch {
           case e: java.util.concurrent.ExecutionException =>
             if (failure.isEmpty) failure = Some(e.getCause)
         }
+        startReady()
       }
     } finally pool.shutdown()
     failure.foreach(e => throw e)

@@ -1,13 +1,11 @@
 package graft.queries
 
-import java.nio.file.Files
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.QueryDef
 import graft.functions.Udafs
 import graft.sources.{Events, Tables}
-import graft.util.Det
 import graft.util.Det.dsumSql
 
 /** Completeness batch 2 — SURVEY.md §2.2 rows not covered by the core

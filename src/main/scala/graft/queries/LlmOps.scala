@@ -1,10 +1,9 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.QueryDef
-import graft.functions.{TextFunctions, VectorFunctions}
+import graft.functions.TextFunctions
 import graft.operators.{Dedup, Similarity}
 import graft.sources.Tables
 
@@ -214,13 +213,7 @@ object LlmOps {
           .orderBy("qid", "rnk")
       },
       Some {
-        val planes = graft.operators.Similarity.hyperplanes(6, 64)
-        val bucket = planes.zipWithIndex.map { case (p, i) =>
-          val lst = p.map(_.toString).mkString("[", ", ", "]")
-          s"""(CASE WHEN list_reduce(list_transform(range(1, 65),
-             d -> $lst[d] * CAST(e[d] AS DOUBLE)), (a, b) -> a + b) >= 0
-             THEN 1 ELSE 0 END) * ${1 << i}"""
-        }.mkString(" + ")
+        val bucket = Round6c.bucketSql(Similarity.hyperplanes(6, 64))
         s"""WITH qs AS (SELECT vec_id AS id, embedding AS e FROM embeddings
           WHERE vec_id < 50),
         cs AS (SELECT vec_id AS id, embedding AS e FROM embeddings),
@@ -254,26 +247,18 @@ object LlmOps {
           .select(col("vec_id").as("qid"), col("embedding").as("qe"))
         val corpus = emb
           .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-        Similarity.ivfTopK(queries, corpus, k = 5, nlist = 16)
+        Similarity.ivfTopKProbe(queries, corpus, k = 5, nlist = 16, nprobe = 1)
           .select(col("qid"), col("cid"), col("cos"), col("rnk"))
           .orderBy("qid", "rnk")
       },
-      Some("""WITH cent AS (SELECT vec_id AS centroid_id, embedding AS centroid
+      Some(s"""WITH cent AS (SELECT vec_id AS centroid_id, embedding AS centroid
         FROM embeddings WHERE vec_id < 16),
       qs AS (SELECT vec_id AS id, embedding AS e FROM embeddings WHERE vec_id < 50),
       cs AS (SELECT vec_id AS id, embedding AS e FROM embeddings),
-      qa0 AS (SELECT q.id, c.centroid_id,
-          round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM qs q, cent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      qa AS (SELECT id, centroid_id FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM qa0) WHERE r = 1),
-      ca0 AS (SELECT q.id, c.centroid_id,
-          round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM cs q, cent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      ca AS (SELECT id, centroid_id FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM ca0) WHERE r = 1),
+      qa0 AS (${Round6c.dotScoreSql("q.id", "q.e", "qs q", "cent")}),
+      qa AS (${Round6c.dotRankSql("id, centroid_id", "id", "qa0", "1")}),
+      ca0 AS (${Round6c.dotScoreSql("q.id", "q.e", "cs q", "cent")}),
+      ca AS (${Round6c.dotRankSql("id, centroid_id", "id", "ca0", "1")}),
       scored AS (SELECT qa.id AS qid, ca.id AS cid,
           round(SUM(CAST(q.embedding[i.i] AS DOUBLE) * CAST(c.embedding[i.i] AS DOUBLE)) /
             (sqrt(SUM(CAST(q.embedding[i.i] AS DOUBLE) * CAST(q.embedding[i.i] AS DOUBLE))) *

@@ -78,20 +78,15 @@ object Round10 {
     s"""cpos AS MATERIALIZED (SELECT vec_id, embedding,
           row_number() OVER (ORDER BY vec_id) AS rn
         FROM embeddings WHERE $CorpPred),
-      pqc AS MATERIALIZED (SELECT i.i AS i, c.vec_id AS code,
-          CAST(FLOOR(CAST(c.embedding[i.i] AS DOUBLE) * 1000000) AS BIGINT) AS cx
-        FROM cpos c, (SELECT unnest(range(1, 65)) AS i) i
-        WHERE c.rn <= $nCodes),
-      cqx AS MATERIALIZED (SELECT e.vec_id AS cid, i.i AS i,
-          CAST(FLOOR(CAST(e.embedding[i.i] AS DOUBLE) * 1000000) AS BIGINT) AS x
-        FROM embeddings e, (SELECT unnest(range(1, 65)) AS i) i),
-      enc0 AS MATERIALIZED (SELECT cqx.cid, (cqx.i - 1) // $dsub AS s, pqc.code,
-          SUM((cqx.x - pqc.cx) * (cqx.x - pqc.cx)) AS dist
-        FROM cqx JOIN cpos ON cqx.cid = cpos.vec_id
-        JOIN pqc ON cqx.i = pqc.i GROUP BY 1, 2, 3),
-      enc AS MATERIALIZED (SELECT cid, s, code FROM (SELECT cid, s, code,
-          row_number() OVER (PARTITION BY cid, s ORDER BY dist, code) AS rn
-        FROM enc0) WHERE rn = 1),
+      pqc AS MATERIALIZED (SELECT i, vec_id AS code, x AS cx FROM (
+        ${Round6c.quantSql("c.vec_id", "c.embedding", "cpos c", where = s"c.rn <= $nCodes")})),
+      cqx AS MATERIALIZED (${Round6c.quantSql("e.vec_id AS cid", "e.embedding",
+        "embeddings e")}),
+      enc0 AS MATERIALIZED (${Round6c.l2ScoreSql(
+        Seq("cqx.cid", s"(cqx.i - 1) // $dsub AS s", "pqc.code"), "cqx.x", "pqc.cx",
+        "cqx JOIN cpos ON cqx.cid = cpos.vec_id JOIN pqc ON cqx.i = pqc.i")}),
+      enc AS MATERIALIZED (${Round6c.l2RankSql("cid, s, code", "cid, s", "code", "enc0",
+        "1")}),
       qtab AS MATERIALIZED (SELECT cqx.cid AS qid, (cqx.i - 1) // $dsub AS s,
           pqc.code, SUM(cqx.x * pqc.cx) AS pdot
         FROM cqx JOIN pqc ON cqx.i = pqc.i
@@ -107,14 +102,9 @@ object Round10 {
         FROM adc JOIN nrm qn ON adc.qid = qn.vid JOIN nrm cn ON adc.cid = cn.vid),
       cent AS MATERIALIZED (SELECT vec_id AS centroid_id, embedding AS centroid
         FROM cpos WHERE rn <= $nCents),
-      pa0 AS MATERIALIZED (SELECT e.vec_id AS qid, c.centroid_id,
-          round(SUM(CAST(e.embedding[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM embeddings e, cent c, (SELECT unnest(range(1, 65)) AS i) i
-        WHERE $ProbePred GROUP BY 1, 2),
-      bent AS MATERIALIZED (SELECT qid, centroid_id AS cid FROM (
-          SELECT qid, centroid_id,
-            row_number() OVER (PARTITION BY qid ORDER BY d DESC, centroid_id) AS r
-          FROM pa0) WHERE r <= 2)"""
+      pa0 AS MATERIALIZED (${Round6c.dotScoreSql("e.vec_id AS qid", "e.embedding", "embeddings e",
+        "cent", where = ProbePred)}),
+      bent AS MATERIALIZED (${Round6c.dotRankSql("qid, centroid_id AS cid", "qid", "pa0", "2")})"""
   }
 
   /** q314's sample size: a FIXED count, not a fraction — that is what
@@ -139,10 +129,12 @@ object Round10 {
     * q2/c2 in scope. */
   private def calSampledDecisionSql: String = {
     val mqtb = (0 until 8).map { t =>
-      s"""SELECT id, ${Round7.lshBucketSqlSeed(4, 42L + t)} + ${t * 16} AS tb FROM q2"""
+      s"""SELECT id, ${Round6c.bucketSql(Similarity.hyperplanes(4, 64, 42L + t))} + ${t * 16} AS tb
+        FROM q2"""
     }.mkString(" UNION ALL ")
     val mctb = (0 until 8).map { t =>
-      s"""SELECT id, ${Round7.lshBucketSqlSeed(4, 42L + t)} + ${t * 16} AS tb FROM s2c"""
+      s"""SELECT id, ${Round6c.bucketSql(Similarity.hyperplanes(4, 64, 42L + t))} + ${t * 16} AS tb
+        FROM s2c"""
     }.mkString(" UNION ALL ")
     s"""samp AS MATERIALIZED (SELECT vec_id, embedding FROM (
         SELECT vec_id, embedding,
@@ -161,18 +153,10 @@ object Round10 {
       scent AS MATERIALIZED (SELECT vec_id AS centroid_id, embedding AS centroid
         FROM (SELECT vec_id, embedding, row_number() OVER (ORDER BY vec_id) AS rn
           FROM samp) WHERE rn <= 16),
-      sqa0m AS MATERIALIZED (SELECT q.id, c.centroid_id,
-          round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM q2 q, scent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      sqam AS (SELECT id, centroid_id FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM sqa0m) WHERE r <= 8),
-      sca0m AS MATERIALIZED (SELECT s.id, c.centroid_id,
-          round(SUM(CAST(s.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM s2c s, scent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      scam AS (SELECT id, centroid_id FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM sca0m) WHERE r = 1),
+      sqa0m AS MATERIALIZED (${Round6c.dotScoreSql("q.id", "q.e", "q2 q", "scent")}),
+      sqam AS (${Round6c.dotRankSql("id, centroid_id", "id", "sqa0m", "8")}),
+      sca0m AS MATERIALIZED (${Round6c.dotScoreSql("s.id", "s.e", "s2c s", "scent")}),
+      scam AS (${Round6c.dotRankSql("id, centroid_id", "id", "sca0m", "1")}),
       smsc AS MATERIALIZED (SELECT sqam.id AS qid, scam.id AS cid, ${Round6c.cosSql("q", "c")} AS cos
         FROM sqam JOIN scam ON sqam.centroid_id = scam.centroid_id AND sqam.id <> scam.id
         JOIN embeddings q ON sqam.id = q.vec_id
@@ -204,14 +188,7 @@ object Round10 {
       -- the decision: q306's exact arithmetic over FULL corpus stats,
       -- recalls from the SAMPLED measurements
       st AS (SELECT COUNT(*) AS n, COUNT(DISTINCT embedding) AS nu FROM embeddings),
-      p2t AS (SELECT CAST(power(2, x.x) AS BIGINT) AS p
-        FROM (SELECT unnest(range(0, 40)) AS x) x),
-      nl AS (SELECT CASE WHEN l / lower < (lower * 2) / l
-                         THEN lower ELSE lower * 2 END AS nlist FROM
-        (SELECT GREATEST(1.0, sqrt(CAST(nu AS DOUBLE))) AS l,
-           (SELECT MAX(p) FROM p2t WHERE p <= CAST(FLOOR(
-              GREATEST(1.0, sqrt(CAST(nu AS DOUBLE)))) AS BIGINT)) AS lower
-         FROM st)),
+      ${Round6c.advisorNlistSql("st")},
       np AS (SELECT GREATEST(1, (SELECT nlist FROM nl) // 2) AS nprobe),
       cfg AS (
         SELECT 'ivf' AS fam,
@@ -626,28 +603,22 @@ object Round10 {
       }),
       Some({
         val vqtb = (0 until 8).map { t =>
-          s"""SELECT id, ${Round7.lshBucketSqlSeed(4, 42L + t)} + ${t * 16} AS tb FROM q2"""
+          s"""SELECT id, ${Round6c.bucketSql(Similarity.hyperplanes(4, 64, 42L + t))} + ${t * 16} AS tb
+            FROM q2"""
         }.mkString(" UNION ALL ")
         val vctb = (0 until 8).map { t =>
-          s"""SELECT id, ${Round7.lshBucketSqlSeed(4, 42L + t)} + ${t * 16} AS tb FROM c2"""
+          s"""SELECT id, ${Round6c.bucketSql(Similarity.hyperplanes(4, 64, 42L + t))} + ${t * 16} AS tb
+            FROM c2"""
         }.mkString(" UNION ALL ")
         s"""${Round6c.exactRecallCte},
       ${calSampledDecisionSql},
       -- serving branch A: calibrated IVF over the FULL corpus
       vcent AS (SELECT vec_id AS centroid_id, embedding AS centroid
         FROM embeddings WHERE vec_id < (SELECT nlist FROM nl)),
-      vqa0 AS (SELECT q.id, c.centroid_id,
-          round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM q2 q, vcent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      vqa AS (SELECT id, centroid_id FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM vqa0) WHERE r <= (SELECT nprobe FROM np)),
-      vca0 AS (SELECT q.id, c.centroid_id,
-          round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM c2 q, vcent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      vca AS (SELECT id, centroid_id FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM vca0) WHERE r = 1),
+      vqa0 AS (${Round6c.dotScoreSql("q.id", "q.e", "q2 q", "vcent")}),
+      vqa AS (${Round6c.dotRankSql("id, centroid_id", "id", "vqa0", "SELECT nprobe FROM np")}),
+      vca0 AS (${Round6c.dotScoreSql("q.id", "q.e", "c2 q", "vcent")}),
+      vca AS (${Round6c.dotRankSql("id, centroid_id", "id", "vca0", "1")}),
       vsc AS (SELECT vqa.id AS qid, vca.id AS cid, ${Round6c.cosSql("q", "c")} AS cos
         FROM vqa JOIN vca ON vqa.centroid_id = vca.centroid_id AND vqa.id <> vca.id
         JOIN embeddings q ON vqa.id = q.vec_id
@@ -747,18 +718,10 @@ object Round10 {
       -- measurement 1: the q279 IVF row (nlist=16, nprobe=8)
       mcent AS (SELECT vec_id AS centroid_id, embedding AS centroid
         FROM embeddings WHERE vec_id < 16),
-      mqa0 AS (SELECT q.id, c.centroid_id,
-          round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM q2 q, mcent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      mqa AS (SELECT id, centroid_id FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM mqa0) WHERE r <= 8),
-      mca0 AS (SELECT q.id, c.centroid_id,
-          round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM c2 q, mcent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      mca AS (SELECT id, centroid_id FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM mca0) WHERE r = 1),
+      mqa0 AS (${Round6c.dotScoreSql("q.id", "q.e", "q2 q", "mcent")}),
+      mqa AS (${Round6c.dotRankSql("id, centroid_id", "id", "mqa0", "8")}),
+      mca0 AS (${Round6c.dotScoreSql("q.id", "q.e", "c2 q", "mcent")}),
+      mca AS (${Round6c.dotRankSql("id, centroid_id", "id", "mca0", "1")}),
       mscored AS (SELECT mqa.id AS qid, mca.id AS cid, ${Round6c.cosSql("q", "c")} AS cos
         FROM mqa JOIN mca ON mqa.centroid_id = mca.centroid_id AND mqa.id <> mca.id
         JOIN embeddings q ON mqa.id = q.vec_id
@@ -784,14 +747,7 @@ object Round10 {
       -- the unified decision: costs/bytes re-derived in BIGINT, rows
       -- admissible iff they fit BOTH budgets, cheapest meeting target
       st AS (SELECT COUNT(*) AS n, COUNT(DISTINCT embedding) AS nu FROM embeddings),
-      p2t AS (SELECT CAST(power(2, x.x) AS BIGINT) AS p
-        FROM (SELECT unnest(range(0, 40)) AS x) x),
-      nl AS (SELECT CASE WHEN l / lower < (lower * 2) / l
-                         THEN lower ELSE lower * 2 END AS nlist FROM
-        (SELECT GREATEST(1.0, sqrt(CAST(nu AS DOUBLE))) AS l,
-           (SELECT MAX(p) FROM p2t WHERE p <= CAST(FLOOR(
-              GREATEST(1.0, sqrt(CAST(nu AS DOUBLE)))) AS BIGINT)) AS lower
-         FROM st)),
+      ${Round6c.advisorNlistSql("st")},
       np AS (SELECT GREATEST(1, (SELECT nlist FROM nl) // 2) AS nprobe),
       np2 AS (SELECT GREATEST(1, (10 * (SELECT nlist FROM nl)) // 16) AS nprobe),
       bud AS (SELECT ((SELECT nu FROM st) * 9) // 10 AS b),
@@ -821,18 +777,10 @@ object Round10 {
       -- serving branch A: calibrated IVF over the full corpus
       vcent AS (SELECT vec_id AS centroid_id, embedding AS centroid
         FROM embeddings WHERE vec_id < (SELECT nlist FROM nl)),
-      vqa0 AS (SELECT q.id, c.centroid_id,
-          round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM q2 q, vcent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      vqa AS (SELECT id, centroid_id FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM vqa0) WHERE r <= (SELECT nprobe FROM np)),
-      vca0 AS (SELECT q.id, c.centroid_id,
-          round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM c2 q, vcent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      vca AS (SELECT id, centroid_id FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM vca0) WHERE r = 1),
+      vqa0 AS (${Round6c.dotScoreSql("q.id", "q.e", "q2 q", "vcent")}),
+      vqa AS (${Round6c.dotRankSql("id, centroid_id", "id", "vqa0", "SELECT nprobe FROM np")}),
+      vca0 AS (${Round6c.dotScoreSql("q.id", "q.e", "c2 q", "vcent")}),
+      vca AS (${Round6c.dotRankSql("id, centroid_id", "id", "vca0", "1")}),
       vsc AS (SELECT vqa.id AS qid, vca.id AS cid, ${Round6c.cosSql("q", "c")} AS cos
         FROM vqa JOIN vca ON vqa.centroid_id = vca.centroid_id AND vqa.id <> vca.id
         JOIN embeddings q ON vqa.id = q.vec_id

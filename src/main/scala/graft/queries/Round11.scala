@@ -95,18 +95,12 @@ object Round11 {
   private[queries] def ivfStandingSql(nlistE: String, sp: String): String =
     s"""${sp}cent AS MATERIALIZED (SELECT vec_id AS centroid_id, embedding AS centroid
         FROM embeddings WHERE vec_id < ($nlistE)),
-      ${sp}q0 AS MATERIALIZED (SELECT q.id, c.centroid_id,
-          round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM q2 q, ${sp}cent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      ${sp}qa AS MATERIALIZED (SELECT id AS qid, centroid_id, r FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM ${sp}q0) WHERE r <= ($nlistE)),
-      ${sp}c0 AS MATERIALIZED (SELECT s.id, c.centroid_id,
-          round(SUM(CAST(s.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM c2 s, ${sp}cent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      ${sp}ca AS MATERIALIZED (SELECT id AS cid, centroid_id FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM ${sp}c0) WHERE r = 1)"""
+      ${sp}q0 AS MATERIALIZED (${Round6c.dotScoreSql("q.id", "q.e", "q2 q", s"${sp}cent")}),
+      ${sp}qa AS MATERIALIZED (${Round6c.dotRankSql("id AS qid, centroid_id, r", "id", s"${sp}q0",
+        nlistE)}),
+      ${sp}c0 AS MATERIALIZED (${Round6c.dotScoreSql("s.id", "s.e", "c2 s", s"${sp}cent")}),
+      ${sp}ca AS MATERIALIZED (${Round6c.dotRankSql("id AS cid, centroid_id", "id", s"${sp}c0",
+        "1")})"""
 
   /** One filtered-IVF serve at nprobe = `npE` against standing prefix
     * `sp`: candidates = probed cells' members ∩ fset_<tag>, scored by
@@ -180,13 +174,8 @@ object Round11 {
       "SELECT vec_id, embedding FROM embeddings WHERE vec_id < 16"): String =
     s"""${p}cent AS MATERIALIZED (SELECT vec_id AS centroid_id, embedding AS centroid
         FROM ($centSrc)),
-      ${p}qa0 AS MATERIALIZED (SELECT q.id, c.centroid_id,
-          round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM q2 q, ${p}cent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      ${p}bent AS (SELECT id AS qid, centroid_id AS cid FROM (
-          SELECT id, centroid_id,
-            row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-          FROM ${p}qa0) WHERE r <= 2)"""
+      ${p}qa0 AS MATERIALIZED (${Round6c.dotScoreSql("q.id", "q.e", "q2 q", s"${p}cent")}),
+      ${p}bent AS (${Round6c.dotRankSql("id AS qid, centroid_id AS cid", "id", s"${p}qa0", "2")})"""
 
   /** Top-5 of a visited pool restricted to fset_<tag>, exact-cos ranked
     * (pool ∩ filter scored via ex0). Emits `<p>annr`. */
@@ -553,14 +542,7 @@ object Round11 {
       ${fsetExfSql("f50", F50Pred)},
       stq AS (SELECT COUNT(*) AS nu FROM embeddings),
       fb AS (SELECT COUNT(*) AS f FROM fset_f50),
-      p2t AS (SELECT CAST(power(2, x.x) AS BIGINT) AS p
-        FROM (SELECT unnest(range(0, 40)) AS x) x),
-      nl AS (SELECT CASE WHEN l / lower < (lower * 2) / l
-                         THEN lower ELSE lower * 2 END AS nlist FROM
-        (SELECT GREATEST(1.0, sqrt(CAST(nu AS DOUBLE))) AS l,
-           (SELECT MAX(p) FROM p2t WHERE p <= CAST(FLOOR(
-              GREATEST(1.0, sqrt(CAST(nu AS DOUBLE)))) AS BIGINT)) AS lower
-         FROM stq)),
+      ${Round6c.advisorNlistSql("stq")},
       bud AS (SELECT GREATEST((2 * (SELECT nu FROM stq)) // 5, 800) AS b),
       npx AS (SELECT LEAST((SELECT nlist FROM nl),
         GREATEST(1, $IvfF50Np * (SELECT nlist FROM nl) // 16)) AS np),
@@ -724,14 +706,7 @@ object Round11 {
         p = "v", edge = "e", entry = "gbent", psc = "psc")},
       ${poolSql("v", Round9.BeamRounds, "vpool")},
       st AS (SELECT COUNT(*) AS n, COUNT(DISTINCT embedding) AS nu FROM embeddings),
-      p2t AS (SELECT CAST(power(2, x.x) AS BIGINT) AS p
-        FROM (SELECT unnest(range(0, 40)) AS x) x),
-      nl AS (SELECT CASE WHEN l / lower < (lower * 2) / l
-                         THEN lower ELSE lower * 2 END AS nlist FROM
-        (SELECT GREATEST(1.0, sqrt(CAST(nu AS DOUBLE))) AS l,
-           (SELECT MAX(p) FROM p2t WHERE p <= CAST(FLOOR(
-              GREATEST(1.0, sqrt(CAST(nu AS DOUBLE)))) AS BIGINT)) AS lower
-         FROM st)),
+      ${Round6c.advisorNlistSql("st")},
       np AS (SELECT GREATEST(1, (SELECT nlist FROM nl) // 2) AS nprobe),
       np2 AS (SELECT GREATEST(1, (10 * (SELECT nlist FROM nl)) // 16) AS nprobe),
       cfg AS (
@@ -866,14 +841,7 @@ object Round11 {
       ${fsetExfSql("f50", F50Pred)},
       stq AS (SELECT COUNT(*) AS nu FROM embeddings),
       fb AS (SELECT COUNT(*) AS f FROM fset_f50),
-      p2t AS (SELECT CAST(power(2, x.x) AS BIGINT) AS p
-        FROM (SELECT unnest(range(0, 40)) AS x) x),
-      nl AS (SELECT CASE WHEN l / lower < (lower * 2) / l
-                         THEN lower ELSE lower * 2 END AS nlist FROM
-        (SELECT GREATEST(1.0, sqrt(CAST(nu AS DOUBLE))) AS l,
-           (SELECT MAX(p) FROM p2t WHERE p <= CAST(FLOOR(
-              GREATEST(1.0, sqrt(CAST(nu AS DOUBLE)))) AS BIGINT)) AS lower
-         FROM stq)),
+      ${Round6c.advisorNlistSql("stq")},
       npx AS (SELECT LEAST((SELECT nlist FROM nl),
         GREATEST(1, $IvfF50Np * (SELECT nlist FROM nl) // 16)) AS np),
       cdx AS (SELECT ((SELECT f FROM fb) * (SELECT np FROM npx))

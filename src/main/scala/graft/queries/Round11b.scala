@@ -68,18 +68,10 @@ object Round11b {
   private[queries] def sq8StandingSql(sp: String): String =
     s"""${sp}cent AS MATERIALIZED (SELECT vec_id AS centroid_id, embedding AS centroid
         FROM embeddings WHERE vec_id < 16),
-      ${sp}ca AS MATERIALIZED (SELECT id AS cid, centroid_id FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM (SELECT s.id, c.centroid_id,
-            round(SUM(CAST(s.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-          FROM c2 s, ${sp}cent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2))
-        WHERE r = 1),
-      ${sp}qa AS MATERIALIZED (SELECT id AS qid, centroid_id, r FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM (SELECT q.id, c.centroid_id,
-            round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-          FROM q2 q, ${sp}cent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2))
-        WHERE r <= 16),
+      ${sp}ca AS MATERIALIZED (${Round6c.dotRankSql("id AS cid, centroid_id", "id",
+        Round6c.dotScoreSql("s.id", "s.e", "c2 s", s"${sp}cent"), "1")}),
+      ${sp}qa AS MATERIALIZED (${Round6c.dotRankSql("id AS qid, centroid_id, r", "id",
+        Round6c.dotScoreSql("q.id", "q.e", "q2 q", s"${sp}cent"), "16")}),
       ${sp}sq8 AS MATERIALIZED (SELECT id,
           list_transform(e, x -> CAST(round(CAST(x AS DOUBLE) * 127.0 / am) AS BIGINT)) AS qc,
           CAST(round(am * 1000000000.0 / nn) AS BIGINT) AS rc
@@ -328,14 +320,7 @@ object Round11b {
           / (5.0 * (SELECT nq FROM nq)) AS rec),
       -- the decision: exact BIGINT replay of adviseCalibratedServing
       st AS (SELECT COUNT(*) AS n, COUNT(DISTINCT embedding) AS nu FROM embeddings),
-      p2t AS (SELECT CAST(power(2, x.x) AS BIGINT) AS p
-        FROM (SELECT unnest(range(0, 40)) AS x) x),
-      nl AS (SELECT CASE WHEN l / lower < (lower * 2) / l
-                         THEN lower ELSE lower * 2 END AS nlist FROM
-        (SELECT GREATEST(1.0, sqrt(CAST(nu AS DOUBLE))) AS l,
-           (SELECT MAX(p) FROM p2t WHERE p <= CAST(FLOOR(
-              GREATEST(1.0, sqrt(CAST(nu AS DOUBLE)))) AS BIGINT)) AS lower
-         FROM st)),
+      ${Round6c.advisorNlistSql("st")},
       nps AS (SELECT GREATEST(1, (SELECT nlist FROM nl) // 2) AS nprobe),
       np2 AS (SELECT GREATEST(1, (10 * (SELECT nlist FROM nl)) // 16) AS nprobe),
       bud AS (SELECT ((SELECT nu FROM st) * 9) // 10 AS b),
@@ -511,18 +496,10 @@ object Round11b {
       pg AS MATERIALIZED (SELECT embedding, MIN(vec_id) AS pa FROM pb0 GROUP BY 1),
       cents AS MATERIALIZED (SELECT vec_id AS centroid_id, embedding AS centroid
         FROM (SELECT * FROM corp ORDER BY vec_id LIMIT 16)),
-      ra AS MATERIALIZED (SELECT rep, centroid_id AS cl FROM (SELECT rep, centroid_id,
-          row_number() OVER (PARTITION BY rep ORDER BY d DESC, centroid_id) AS r
-        FROM (SELECT g.rep, c.centroid_id,
-            round(SUM(CAST(g.embedding[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-          FROM grp g, cents c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2))
-        WHERE r = 1),
-      paa AS MATERIALIZED (SELECT pa, centroid_id AS cl FROM (SELECT pa, centroid_id,
-          row_number() OVER (PARTITION BY pa ORDER BY d DESC, centroid_id) AS r
-        FROM (SELECT p.pa, c.centroid_id,
-            round(SUM(CAST(p.embedding[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-          FROM pg p, cents c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2))
-        WHERE r = 1),
+      ra AS MATERIALIZED (${Round6c.dotRankSql("rep, centroid_id AS cl", "rep",
+        Round6c.dotScoreSql("g.rep", "g.embedding", "grp g", "cents"), "1")}),
+      paa AS MATERIALIZED (${Round6c.dotRankSql("pa, centroid_id AS cl", "pa",
+        Round6c.dotScoreSql("p.pa", "p.embedding", "pg p", "cents"), "1")}),
       sqc AS MATERIALIZED (SELECT rep AS id,
           list_transform(e, x -> CAST(round(CAST(x AS DOUBLE) * 127.0 / am) AS BIGINT)) AS qc,
           CAST(round(am * 1000000000.0 / nn) AS BIGINT) AS rc
@@ -754,18 +731,10 @@ object Round11b {
       Some(s"""WITH $maxsimBaseSql,
       cent AS MATERIALIZED (SELECT tid AS centroid_id, e AS centroid
         FROM tok WHERE tid < 16),
-      mca AS MATERIALIZED (SELECT tid, centroid_id FROM (SELECT tid, centroid_id,
-          row_number() OVER (PARTITION BY tid ORDER BY d DESC, centroid_id) AS r
-        FROM (SELECT t.tid, c.centroid_id,
-            round(SUM(CAST(t.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-          FROM tok t, cent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2))
-        WHERE r = 1),
-      mqa AS MATERIALIZED (SELECT tid, centroid_id FROM (SELECT tid, centroid_id,
-          row_number() OVER (PARTITION BY tid ORDER BY d DESC, centroid_id) AS r
-        FROM (SELECT t.tid, c.centroid_id,
-            round(SUM(CAST(t.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-          FROM qtok t, cent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2))
-        WHERE r <= 2),
+      mca AS MATERIALIZED (${Round6c.dotRankSql("tid, centroid_id", "tid",
+        Round6c.dotScoreSql("t.tid", "t.e", "tok t", "cent"), "1")}),
+      mqa AS MATERIALIZED (${Round6c.dotRankSql("tid, centroid_id", "tid",
+        Round6c.dotScoreSql("t.tid", "t.e", "qtok t", "cent"), "2")}),
       msq8 AS MATERIALIZED (SELECT tid,
           list_transform(e, x -> CAST(round(CAST(x AS DOUBLE) * 127.0 / am) AS BIGINT)) AS qc,
           CAST(round(am * 1000000000.0 / nn) AS BIGINT) AS rc

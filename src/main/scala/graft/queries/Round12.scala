@@ -66,12 +66,6 @@ object Round12 {
 
   // ---- q340/q341: takedowns + drift-retrain on the scan index --------
 
-  /** Quantized int64 coords of every corpus vector (the q225 kernel). */
-  private def quantCoordsSql: String =
-    """cq AS MATERIALIZED (SELECT vec_id AS cid, i.i AS i,
-        CAST(FLOOR(CAST(embedding[i.i] AS DOUBLE) * 1000000) AS BIGINT) AS x
-      FROM embeddings, (SELECT unnest(range(1, 65)) AS i) i)"""
-
   /** Cell-occupancy PSI of the survivors vs the full corpus over the
     * STANDING 16-cell assignment (`zca`), fixed-point micro-nats (the
     * q335 recipe: Laplace +1 per cell, common-denominator BIGINT
@@ -125,15 +119,10 @@ object Round12 {
       rexr AS MATERIALIZED (SELECT qid, cid FROM (SELECT qid, cid,
           row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rnk
         FROM rex0) WHERE rnk <= 5),
-      rc0 AS MATERIALIZED (SELECT r.vec_id AS id, c.centroid_id,
-          round(SUM(CAST(r.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM remb r, zcent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      rca AS MATERIALIZED (SELECT id AS cid, centroid_id FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM rc0) WHERE r = 1),
-      rqa AS MATERIALIZED (SELECT id AS qid, centroid_id, r FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM rc0 WHERE id < 50) WHERE r <= 16),
+      rc0 AS MATERIALIZED (${Round6c.dotScoreSql("r.vec_id AS id", "r.e", "remb r", "zcent")}),
+      rca AS MATERIALIZED (${Round6c.dotRankSql("id AS cid, centroid_id", "id", "rc0", "1")}),
+      rqa AS MATERIALIZED (${Round6c.dotRankSql("id AS qid, centroid_id, r", "id",
+        "rc0 WHERE id < 50", "16")}),
       rsq8 AS MATERIALIZED (SELECT vec_id AS id,
           list_transform(e, x -> CAST(round(CAST(x AS DOUBLE) * 127.0 / am) AS BIGINT)) AS qc,
           CAST(round(am * 1000000000.0 / nn) AS BIGINT) AS rc
@@ -142,9 +131,7 @@ object Round12 {
             sqrt(list_reduce(list_transform(e, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)),
               (a, b) -> a + b)) AS nn
           FROM remb)),
-      rcq AS MATERIALIZED (SELECT vec_id AS cid, i.i AS i,
-          CAST(FLOOR(CAST(e[i.i] AS DOUBLE) * 1000000) AS BIGINT) AS x
-        FROM remb, (SELECT unnest(range(1, 65)) AS i) i)"""
+      rcq AS MATERIALIZED (${Round6c.quantSql("vec_id AS cid", "e", "remb")})"""
 
   /** Cell-occupancy PSI of the re-embedded corpus (assignment `rca`)
     * vs the standing corpus (`zca`) over the standing cells. */
@@ -174,25 +161,18 @@ object Round12 {
     * the standing (old-space) centroid coords: one q225 round, then
     * corpus/query re-assignment to the refined centroids. */
   private def rembRetrainSql: String =
-    s"""rctq AS (SELECT cid AS ccid, i, x FROM cq WHERE cid < 16),
-      rld AS (SELECT rcq.cid, c.ccid, SUM((rcq.x - c.x) * (rcq.x - c.x)) AS dist
-        FROM rcq JOIN rctq c USING (i) GROUP BY 1, 2),
-      rla AS (SELECT cid, ccid FROM (SELECT cid, ccid,
-          row_number() OVER (PARTITION BY cid ORDER BY dist, ccid) AS rn
-        FROM rld) WHERE rn = 1),
-      rc1 AS (SELECT rla.ccid, rcq.i,
-          CAST(FLOOR(CAST(SUM(rcq.x) AS DOUBLE) / COUNT(*)) AS BIGINT) AS c
-        FROM rcq JOIN rla ON rcq.cid = rla.cid GROUP BY 1, 2),
-      rrd AS (SELECT rcq.cid, c.ccid, SUM((rcq.x - c.c) * (rcq.x - c.c)) AS dist
-        FROM rcq JOIN rc1 c USING (i) GROUP BY 1, 2),
-      rra1 AS (SELECT cid, ccid FROM (SELECT cid, ccid,
-          row_number() OVER (PARTITION BY cid ORDER BY dist, ccid) AS rn
-        FROM rrd) WHERE rn = 1),
-      rqd AS (SELECT rcq.cid AS qid, c.ccid, SUM((rcq.x - c.c) * (rcq.x - c.c)) AS dist
-        FROM rcq JOIN rc1 c USING (i) WHERE rcq.cid < 50 GROUP BY 1, 2),
-      rqa1 AS (SELECT qid, ccid, r FROM (SELECT qid, ccid,
-          row_number() OVER (PARTITION BY qid ORDER BY dist, ccid) AS r
-        FROM rqd) WHERE r <= 16)"""
+    s"""rctq AS (SELECT cid AS ccid, i, x AS c FROM cq WHERE cid < 16),
+      rld AS (${Round6c.l2ScoreSql(Seq("rcq.cid", "c.ccid"), "rcq.x", "c.c",
+        "rcq JOIN rctq c USING (i)")}),
+      rla AS (${Round6c.l2RankSql("cid, ccid", "cid", "ccid", "rld", "1")}),
+      rc1 AS (${Round6c.lloydSql("rla.ccid", "rcq.i", "rcq.x",
+        "rcq JOIN rla ON rcq.cid = rla.cid")}),
+      rrd AS (${Round6c.l2ScoreSql(Seq("rcq.cid", "c.ccid"), "rcq.x", "c.c",
+        "rcq JOIN rc1 c USING (i)")}),
+      rra1 AS (${Round6c.l2RankSql("cid, ccid", "cid", "ccid", "rrd", "1")}),
+      rqd AS (${Round6c.l2ScoreSql(Seq("rcq.cid AS qid", "c.ccid"), "rcq.x", "c.c",
+        "rcq JOIN rc1 c USING (i) WHERE rcq.cid < 50")}),
+      rqa1 AS (${Round6c.l2RankSql("qid, ccid, rn AS r", "qid", "ccid", "rqd", "16")})"""
 
   /** One SQ8 serve in the re-embedded world at (np, m): `asgQ`/`asgC`
     * are the (qid, cell, r)/(cid, cell) assignment CTE names (stale =
@@ -236,18 +216,10 @@ object Round12 {
         FROM embeddings WHERE $MvProbePred),
       mvcent AS MATERIALIZED (SELECT tid AS centroid_id, e AS centroid
         FROM (SELECT * FROM stok ORDER BY tid LIMIT 16)),
-      mvca AS MATERIALIZED (SELECT tid, centroid_id FROM (SELECT tid, centroid_id,
-          row_number() OVER (PARTITION BY tid ORDER BY d DESC, centroid_id) AS r
-        FROM (SELECT s.tid, c.centroid_id,
-            round(SUM(CAST(s.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-          FROM stok s, mvcent c, (SELECT unnest(range(1, 65)) AS i) i
-          GROUP BY 1, 2)) WHERE r = 1),
-      mvqa AS MATERIALIZED (SELECT tid, centroid_id FROM (SELECT tid, centroid_id,
-          row_number() OVER (PARTITION BY tid ORDER BY d DESC, centroid_id) AS r
-        FROM (SELECT p.tid, c.centroid_id,
-            round(SUM(CAST(p.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-          FROM ptok p, mvcent c, (SELECT unnest(range(1, 65)) AS i) i
-          GROUP BY 1, 2)) WHERE r <= $np),
+      mvca AS MATERIALIZED (${Round6c.dotRankSql("tid, centroid_id", "tid",
+        Round6c.dotScoreSql("s.tid", "s.e", "stok s", "mvcent"), "1")}),
+      mvqa AS MATERIALIZED (${Round6c.dotRankSql("tid, centroid_id", "tid",
+        Round6c.dotScoreSql("p.tid", "p.e", "ptok p", "mvcent"), np.toString)}),
       mvsq8 AS MATERIALIZED (SELECT tid,
           list_transform(e, x -> CAST(round(CAST(x AS DOUBLE) * 127.0 / am) AS BIGINT)) AS qc,
           CAST(round(am * 1000000000.0 / nn) AS BIGINT) AS rc
@@ -346,19 +318,6 @@ object Round12 {
   private def mfE(tag: String): String =
     s"GREATEST(50, 3 * (SELECT COUNT(*) FROM fset_$tag) // 20)"
 
-  /** Quantized int64 coords (the q225 kernel) — Spark side. */
-  private[queries] def quantC(df: DataFrame, id: String, vec: String): DataFrame =
-    df.select(col(id), posexplode(col(vec)))
-      .select(col(id), (col("pos") + 1).as("i"),
-        floor(col("col").cast("double") * lit(1000000L)).as("x"))
-
-  /** Rank-1 by (dist ASC, ccid ASC) over an (id, ccid, dist) frame. */
-  private def rank1(df: DataFrame, id: String): DataFrame = {
-    val w = Window.partitionBy(id).orderBy(col("dist"), col("ccid"))
-    df.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col(id), col("ccid"))
-  }
-
   /** SQ8 serve from CALLER-SUPPLIED assignments (the retrained-index
     * serve): `qa` (qid, ccid, r — probe ranks), `ca` (cid, ccid),
     * codes per side, pool `m`, exact rounded-cosine rerank against the
@@ -389,25 +348,19 @@ object Round12 {
     * spec-tested against an independent driver-side implementation. */
   private[graft] def lloydWarmRetrain(corpus: DataFrame,
       seedCoords: DataFrame): (DataFrame, DataFrame) = {
-    val rcq = quantC(corpus, "cid", "ce")
-    val la = rank1(rcq.join(broadcast(seedCoords), Seq("i"))
-      .groupBy("cid", "ccid")
-      .agg(sum((col("x") - col("c")) * (col("x") - col("c")))
-        .as("dist")), "cid")
-    val c1 = rcq.join(la, Seq("cid")).groupBy("ccid", "i")
-      .agg(floor(sum("x").cast("double") / count(lit(1))).as("c"))
-    val ra1 = rank1(rcq.join(broadcast(c1), Seq("i"))
-      .groupBy("cid", "ccid")
-      .agg(sum((col("x") - col("c")) * (col("x") - col("c")))
-        .as("dist")), "cid")
+    val rcq = Similarity.quantCoords(corpus, "cid", "ce")
+    def nearest(cents: DataFrame): DataFrame = Similarity.l2Nearest(
+      rcq.join(broadcast(cents), Seq("i")), Seq("cid"), "ccid", 1)
       .select(col("cid"), col("ccid"))
-    (c1, ra1)
+    val c1 = Similarity.lloydMean(rcq.join(nearest(seedCoords), Seq("cid")),
+      "ccid")
+    (c1, nearest(c1))
   }
 
   /** Quantized seed coords of the standing centroids (the first 16
     * corpus vectors), shared by q341's retrain and its spec. */
   private[graft] def standingSeedCoords(corpus: DataFrame): DataFrame =
-    quantC(corpus.filter(col("cid") < 16), "cid", "ce")
+    Similarity.quantCoords(corpus.filter(col("cid") < 16), "cid", "ce")
       .select(col("cid").as("ccid"), col("i"), col("x").as("c"))
 
   /** Fixed-point cell-occupancy PSI (the q335 recipe over the 16
@@ -921,14 +874,7 @@ object Round12 {
       st AS (SELECT COUNT(*) AS n, COUNT(DISTINCT embedding) AS nu FROM embeddings),
       fb AS (SELECT COUNT(DISTINCT e.embedding) AS f FROM embeddings e
         JOIN fset_f50 f2 ON e.vec_id = f2.cid),
-      p2t AS (SELECT CAST(power(2, x.x) AS BIGINT) AS p
-        FROM (SELECT unnest(range(0, 40)) AS x) x),
-      nl AS (SELECT CASE WHEN l / lower < (lower * 2) / l
-                         THEN lower ELSE lower * 2 END AS nlist FROM
-        (SELECT GREATEST(1.0, sqrt(CAST(nu AS DOUBLE))) AS l,
-           (SELECT MAX(p) FROM p2t WHERE p <= CAST(FLOOR(
-              GREATEST(1.0, sqrt(CAST(nu AS DOUBLE)))) AS BIGINT)) AS lower
-         FROM st)),
+      ${Round6c.advisorNlistSql("st")},
       nps AS (SELECT LEAST((SELECT nlist FROM nl), GREATEST(1,
         (${Round11.IvfF50Np} * (SELECT nlist FROM nl)) // 16)) AS np),
       npp AS (SELECT LEAST((SELECT nlist FROM nl), GREATEST(1,
@@ -1131,13 +1077,11 @@ object Round12 {
         val ra1 = graft.util.FixtureArtifact.parquet(s, dir,
           "embeddings.parquet", "remb_lloyd_ra1_n16_r1",
           params = Map("nlist" -> 16L, "rounds" -> 1L))(ra1b)
-        val wq = Window.partitionBy("qid").orderBy(col("dist"), col("ccid"))
-        val qa1 = quantC(rqs, "qid", "qe").join(c1, Seq("i"))
-          .groupBy("qid", "ccid")
-          .agg(sum((col("x") - col("c")) * (col("x") - col("c")))
-            .as("dist"))
-          .withColumn("r", row_number().over(wq))
-          .select("qid", "ccid", "r")
+        // probe ranks kept to nlist; the serve slices r <= np
+        val qa1 = Similarity.l2Nearest(
+            Similarity.quantCoords(rqs, "qid", "qe").join(c1, Seq("i")),
+            Seq("qid"), "ccid", 16)
+          .select(col("qid"), col("ccid"), col("rn").as("r"))
         val codesR = graft.util.FixtureArtifact.parquet(s, dir,
           "embeddings.parquet", "remb_sq8")(
           Similarity.sq8Codes(rvecs, "cid", "ce"))
@@ -1168,7 +1112,7 @@ object Round12 {
       Some(s"""${Round6c.exactRecallCte},
       ${Round11.fsetExfSql("tk", Round11.SurvPred)},
       ${Round11b.sq8StandingSql("z")},
-      $quantCoordsSql,
+      cq AS MATERIALIZED (${Round6c.quantSql("vec_id AS cid", "embedding", "embeddings")}),
       -- takedown scenario: current assignment == standing ∩ survivors
       curtk AS (SELECT zca.cid, zca.centroid_id FROM zca
         JOIN fset_tk f ON zca.cid = f.cid),

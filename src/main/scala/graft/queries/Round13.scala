@@ -55,18 +55,10 @@ object Round13 {
     s"""${g}cent AS MATERIALIZED (SELECT tid AS centroid_id, e AS centroid
         FROM (SELECT tid, e, row_number() OVER (ORDER BY tid) AS rn
           FROM tok) WHERE rn <= ($nlistE)),
-      ${g}ca AS MATERIALIZED (SELECT tid, centroid_id FROM (SELECT tid, centroid_id,
-          row_number() OVER (PARTITION BY tid ORDER BY d DESC, centroid_id) AS r
-        FROM (SELECT t.tid, c.centroid_id,
-            round(SUM(CAST(t.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-          FROM tok t, ${g}cent c, (SELECT unnest(range(1, 65)) AS i) i
-          GROUP BY 1, 2)) WHERE r = 1),
-      ${g}qa AS MATERIALIZED (SELECT tid, centroid_id, r FROM (SELECT tid, centroid_id,
-          row_number() OVER (PARTITION BY tid ORDER BY d DESC, centroid_id) AS r
-        FROM (SELECT t.tid, c.centroid_id,
-            round(SUM(CAST(t.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-          FROM qtok t, ${g}cent c, (SELECT unnest(range(1, 65)) AS i) i
-          GROUP BY 1, 2)) WHERE r <= ($nlistE))"""
+      ${g}ca AS MATERIALIZED (${Round6c.dotRankSql("tid, centroid_id", "tid",
+        Round6c.dotScoreSql("t.tid", "t.e", "tok t", s"${g}cent"), "1")}),
+      ${g}qa AS MATERIALIZED (${Round6c.dotRankSql("tid, centroid_id, r", "tid",
+        Round6c.dotScoreSql("t.tid", "t.e", "qtok t", s"${g}cent"), nlistE)})"""
 
   /** One PLAID serve (prefix `p`) over standing prefix `g` at nprobe =
     * `npE`, pool `m`: candidate docs from the co-probed cell join
@@ -159,18 +151,10 @@ object Round13 {
     s"""mvcent AS MATERIALIZED (SELECT tid AS centroid_id, e AS centroid
         FROM (SELECT tid, e, row_number() OVER (ORDER BY tid) AS rn
           FROM stok) WHERE rn <= ($nlistE)),
-      mvca AS MATERIALIZED (SELECT tid, centroid_id FROM (SELECT tid, centroid_id,
-          row_number() OVER (PARTITION BY tid ORDER BY d DESC, centroid_id) AS r
-        FROM (SELECT s.tid, c.centroid_id,
-            round(SUM(CAST(s.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-          FROM stok s, mvcent c, (SELECT unnest(range(1, 65)) AS i) i
-          GROUP BY 1, 2)) WHERE r = 1),
-      mvqa AS MATERIALIZED (SELECT tid, centroid_id FROM (SELECT tid, centroid_id,
-          row_number() OVER (PARTITION BY tid ORDER BY d DESC, centroid_id) AS r
-        FROM (SELECT p.tid, c.centroid_id,
-            round(SUM(CAST(p.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-          FROM ptok p, mvcent c, (SELECT unnest(range(1, 65)) AS i) i
-          GROUP BY 1, 2)) WHERE r <= ($npE)),
+      mvca AS MATERIALIZED (${Round6c.dotRankSql("tid, centroid_id", "tid",
+        Round6c.dotScoreSql("s.tid", "s.e", "stok s", "mvcent"), "1")}),
+      mvqa AS MATERIALIZED (${Round6c.dotRankSql("tid, centroid_id", "tid",
+        Round6c.dotScoreSql("p.tid", "p.e", "ptok p", "mvcent"), npE)}),
       mvsq8 AS MATERIALIZED (SELECT tid,
           list_transform(e, x -> CAST(round(CAST(x AS DOUBLE) * 127.0 / am) AS BIGINT)) AS qc,
           CAST(round(am * 1000000000.0 / nn) AS BIGINT) AS rc
@@ -273,14 +257,9 @@ object Round13 {
   private def worldEntrySql(w: String, tbl: String): String =
     s"""${w}cent AS MATERIALIZED (SELECT vec_id AS centroid_id, embedding AS centroid
         FROM $tbl WHERE vec_id < 16),
-      ${w}qa0 AS MATERIALIZED (SELECT q.vec_id AS id, c.centroid_id,
-          round(SUM(CAST(q.embedding[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM $tbl q, ${w}cent c, (SELECT unnest(range(1, 65)) AS i) i
-        WHERE q.vec_id < 50 GROUP BY 1, 2),
-      ${w}bent AS (SELECT id AS qid, centroid_id AS cid FROM (
-          SELECT id, centroid_id,
-            row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-          FROM ${w}qa0) WHERE r <= 2)"""
+      ${w}qa0 AS MATERIALIZED (${Round6c.dotScoreSql("q.vec_id AS id", "q.embedding", s"$tbl q",
+        s"${w}cent", where = "q.vec_id < 50")}),
+      ${w}bent AS (${Round6c.dotRankSql("id AS qid, centroid_id AS cid", "id", s"${w}qa0", "2")})"""
 
   /** One DiskANN serve in drift world `w` over edge CTE `edge` (prefix
     * `p`): the q312 ADC-ranked walk (beam 24 / rounds 4) + visited-pool
@@ -1104,14 +1083,7 @@ object Round13 {
       mpq AS (${rec20Sql("q1rv")}),
       -- the decision: exact BIGINT replay of adviseCalibratedServing
       st AS (SELECT COUNT(*) AS n, COUNT(DISTINCT embedding) AS nu FROM embeddings),
-      p2t AS (SELECT CAST(power(2, x.x) AS BIGINT) AS p
-        FROM (SELECT unnest(range(0, 40)) AS x) x),
-      nl AS (SELECT CASE WHEN l / lower < (lower * 2) / l
-                         THEN lower ELSE lower * 2 END AS nlist FROM
-        (SELECT GREATEST(1.0, sqrt(CAST(nu AS DOUBLE))) AS l,
-           (SELECT MAX(p) FROM p2t WHERE p <= CAST(FLOOR(
-              GREATEST(1.0, sqrt(CAST(nu AS DOUBLE)))) AS BIGINT)) AS lower
-         FROM st)),
+      ${Round6c.advisorNlistSql("st")},
       nps AS (SELECT GREATEST(1, (SELECT nlist FROM nl) // 2) AS nprobe),
       np2 AS (SELECT GREATEST(1, (10 * (SELECT nlist FROM nl)) // 16) AS nprobe),
       bud AS (SELECT ((SELECT nu FROM st) * 9) // 10 AS b),

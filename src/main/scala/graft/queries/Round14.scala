@@ -305,12 +305,8 @@ object Round14 {
     * (r <= keepE kept; slice r = 1 for cells, r <= np for probes). */
   private def mvAssignSql(tb: String, centP: String, out: String,
       keepE: String): String =
-    s"""$out AS MATERIALIZED (SELECT tid, centroid_id, r FROM (SELECT tid, centroid_id,
-        row_number() OVER (PARTITION BY tid ORDER BY d DESC, centroid_id) AS r
-      FROM (SELECT t.tid, c.centroid_id,
-          round(SUM(CAST(t.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM $tb t, ${centP}cent c, $Dim64
-        GROUP BY 1, 2)) WHERE r <= ($keepE))"""
+    s"""$out AS MATERIALIZED (${Round6c.dotRankSql("tid, centroid_id, r", "tid",
+      Round6c.dotScoreSql("t.tid", "t.e", s"$tb t", s"${centP}cent"), keepE)})"""
 
   /** One PLAID serve of world `tb` from SUPPLIED assignments: probe
     * ranks `qa` (tid, centroid_id, r) sliced at npE, corpus cells `ca`
@@ -344,28 +340,20 @@ object Round14 {
     * the recentered cells) and `<p>qa1` (query-token probe ranks by
     * int64 L2, r kept to nlist — sliced per serve). */
   private def mvLloydSql(tb: String, nlistE: String, p: String): String =
-    s"""${p}cq AS MATERIALIZED (SELECT tid, i.i AS i,
-        CAST(FLOOR(CAST(e[i.i] AS DOUBLE) * 1000000) AS BIGINT) AS x
-      FROM $tb, $Dim64),
+    s"""${p}cq AS MATERIALIZED (${Round6c.quantSql("tid", "e", tb)}),
       ${p}ctq AS (SELECT c.tid AS ccid, q.i, q.x AS c
         FROM cids c JOIN ${p}cq q ON c.tid = q.tid),
-      ${p}ld AS (SELECT cq.tid, c.ccid, SUM((cq.x - c.c) * (cq.x - c.c)) AS dist
-        FROM ${p}cq cq JOIN ${p}ctq c USING (i) GROUP BY 1, 2),
-      ${p}la AS (SELECT tid, ccid FROM (SELECT tid, ccid,
-          row_number() OVER (PARTITION BY tid ORDER BY dist, ccid) AS rn
-        FROM ${p}ld) WHERE rn = 1),
-      ${p}c1 AS MATERIALIZED (SELECT la.ccid, cq.i,
-          CAST(FLOOR(CAST(SUM(cq.x) AS DOUBLE) / COUNT(*)) AS BIGINT) AS c
-        FROM ${p}cq cq JOIN ${p}la la ON cq.tid = la.tid GROUP BY 1, 2),
-      ${p}rd AS MATERIALIZED (SELECT cq.tid, c.ccid, SUM((cq.x - c.c) * (cq.x - c.c)) AS dist
-        FROM ${p}cq cq JOIN ${p}c1 c USING (i) GROUP BY 1, 2),
-      ${p}ra1 AS MATERIALIZED (SELECT tid, ccid AS centroid_id FROM (
-        SELECT tid, ccid, row_number() OVER (PARTITION BY tid ORDER BY dist, ccid) AS rn
-        FROM ${p}rd) WHERE rn = 1),
-      ${p}qa1 AS MATERIALIZED (SELECT tid, centroid_id, r FROM (
-        SELECT rd.tid, rd.ccid AS centroid_id,
-          row_number() OVER (PARTITION BY rd.tid ORDER BY rd.dist, rd.ccid) AS r
-        FROM ${p}rd rd WHERE rd.tid // 4 < 10) WHERE r <= ($nlistE))"""
+      ${p}ld AS (${Round6c.l2ScoreSql(Seq("cq.tid", "c.ccid"), "cq.x", "c.c",
+        s"${p}cq cq JOIN ${p}ctq c USING (i)")}),
+      ${p}la AS (${Round6c.l2RankSql("tid, ccid", "tid", "ccid", s"${p}ld", "1")}),
+      ${p}c1 AS MATERIALIZED (${Round6c.lloydSql("la.ccid", "cq.i", "cq.x",
+        s"${p}cq cq JOIN ${p}la la ON cq.tid = la.tid")}),
+      ${p}rd AS MATERIALIZED (${Round6c.l2ScoreSql(Seq("cq.tid", "c.ccid"), "cq.x", "c.c",
+        s"${p}cq cq JOIN ${p}c1 c USING (i)")}),
+      ${p}ra1 AS MATERIALIZED (${Round6c.l2RankSql("tid, ccid AS centroid_id", "tid", "ccid",
+        s"${p}rd", "1")}),
+      ${p}qa1 AS MATERIALIZED (${Round6c.l2RankSql("tid, ccid AS centroid_id, rn AS r", "tid",
+        "ccid", s"${p}rd WHERE tid // 4 < 10", nlistE)})"""
 
   val defs: Map[String, QueryDef] = Map(
 
@@ -1129,10 +1117,7 @@ object Round14 {
         val tpd = cnt.getLong(0) / cnt.getLong(1)
         val pv = FixtureArtifact.parquet(s, dir, "embeddings.parquet",
           "mv_pooled_int64")(
-          tok.select(col("doc"), posexplode(col("e")))
-            .select(col("doc"), (col("pos") + 1).as("i"),
-              floor(col("col").cast("double") * lit(1000000L))
-                .cast("long").as("x"))
+          Similarity.quantCoords(tok, "doc", "e")
             .groupBy("doc", "i").agg(sum("x").as("x")))
         val nDocU = Round6c.statsArtifact(s, dir, "embeddings.parquet",
           "stats_ndocu_mv")(pv.groupBy("doc")
@@ -1220,10 +1205,8 @@ object Round14 {
       ${Round13.mvStandingSql("(SELECT nlist FROM mvnl)", "g")},
       ${Round13.mvServeAnnrSql("g", "(SELECT np FROM mvnp)", m = 10,
         p = "a")},
-      pvq AS MATERIALIZED (SELECT doc, i.i AS i,
-          CAST(SUM(CAST(FLOOR(CAST(e[i.i] AS DOUBLE) * 1000000) AS BIGINT))
-            AS BIGINT) AS x
-        FROM tok, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
+      pvq AS MATERIALIZED (SELECT doc, i, CAST(SUM(x) AS BIGINT) AS x
+        FROM (${Round6c.quantSql("doc", "e", "tok")}) GROUP BY 1, 2),
       mvdoc AS (SELECT COUNT(DISTINCT l) AS nd FROM (
         SELECT doc, list(x ORDER BY i) AS l FROM pvq GROUP BY doc)),
       tpd AS (SELECT (SELECT COUNT(*) FROM tok)
@@ -1417,7 +1400,7 @@ object Round14 {
           s"mvdrift_lloyd_ra1_gwt_n$nlist",
           params = Map("nlist" -> nlist)) {
           val corpusW = tokt.select(col("tid").as("cid"), col("e").as("ce"))
-          val seed = Round12.quantC(
+          val seed = Similarity.quantCoords(
               tokt.join(cidSet, Seq("tid")).select(col("tid").as("cid"),
                 col("e").as("ce")), "cid", "ce")
             .select(col("cid").as("ccid"), col("i"), col("x").as("c"))
@@ -1428,7 +1411,7 @@ object Round14 {
           s"mvdrift_lloyd_c1_gwt_n$nlist",
           params = Map("nlist" -> nlist)) {
           val corpusW = tokt.select(col("tid").as("cid"), col("e").as("ce"))
-          val seed = Round12.quantC(
+          val seed = Similarity.quantCoords(
               tokt.join(cidSet, Seq("tid")).select(col("tid").as("cid"),
                 col("e").as("ce")), "cid", "ce")
             .select(col("cid").as("ccid"), col("i"), col("x").as("c"))
@@ -1438,16 +1421,10 @@ object Round14 {
           FixtureArtifact.parquet(s, dir, "embeddings.parquet",
             s"mvdrift_rec_np$npd",
             params = Map("np" -> npd.toLong, "m" -> 10L, "k" -> 5L)) {
-            val qcq = Round12.quantC(tokt.filter(col("doc") < 10)
+            val qcq = Similarity.quantCoords(tokt.filter(col("doc") < 10)
               .select(col("tid").as("cid"), col("e").as("ce")), "cid", "ce")
-            val wq = org.apache.spark.sql.expressions.Window
-              .partitionBy("cid").orderBy(col("dist"), col("ccid"))
-            val qa = qcq.join(broadcast(c1), Seq("i"))
-              .groupBy("cid", "ccid")
-              .agg(sum((col("x") - col("c")) * (col("x") - col("c")))
-                .as("dist"))
-              .withColumn("r", row_number().over(wq))
-              .filter(col("r") <= npd)
+            val qa = Similarity.l2Nearest(qcq.join(broadcast(c1), Seq("i")),
+                Seq("cid"), "ccid", npd)
               .select(col("cid").as("qt"), col("ccid").as("centroid_id"))
             Similarity.maxsimPlaidTopKFrom(qtokOf(tokt), ctokOf(tokt),
               qa, ra1, codesT, m = 10, k = 5)

@@ -1,12 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.sources.Tables
 import graft.util.Det
-import graft.util.Det.{davgSql, dsumSql}
+import graft.util.Det.dsumSql
 import graft.util.Slots
 
 /** Round-3 completeness batch: warehouse-maintenance operators (SCD2
@@ -1404,7 +1404,6 @@ object Round3 {
     // same md5 bytes — the full flatMap fan-out path scored.
     "q147_mm_frame_sample" -> QueryDef(
       (s, dir) => {
-        import s.implicits._
         graft.multimodal.Multimodal.frameSample(
           graft.multimodal.Multimodal.syntheticMedia(
             Tables.load(s, dir, "documents")),

@@ -20,6 +20,18 @@ object Round5 {
   private def t(s: org.apache.spark.sql.SparkSession, dir: String, n: String) =
     Tables.load(s, dir, n)
 
+  /** The q225 oracle's two unrolled Lloyd rounds over 4 seeds (shared
+    * with q253): quantized coords `e`, seeds `c0`, assignments `a1`/`a2`
+    * and the round-1 update `c1`. */
+  private def lloydTwoRoundsSql: String =
+    s"""e AS (${Round6c.quantSql("vec_id", "embedding", "embeddings")}),
+      c0 AS (SELECT vec_id AS cid, i, x AS c FROM e WHERE vec_id < 4),
+      d1 AS (${Round6c.l2ScoreSql(Seq("e.vec_id", "c0.cid"), "x", "c", "e JOIN c0 USING (i)")}),
+      a1 AS (${Round6c.l2RankSql("vec_id, cid", "vec_id", "cid", "d1", "1")}),
+      c1 AS (${Round6c.lloydSql("cid", "i", "x", "e JOIN a1 USING (vec_id)")}),
+      d2 AS (${Round6c.l2ScoreSql(Seq("e.vec_id", "c1.cid"), "x", "c", "e JOIN c1 USING (i)")}),
+      a2 AS (${Round6c.l2RankSql("vec_id, cid", "vec_id", "cid", "d2", "1")})"""
+
   val defs: Map[String, QueryDef] = Map(
 
     // ---- arbitrary stateful streaming (transformWithState), SCORED -----
@@ -749,25 +761,15 @@ object Round5 {
     // not data-dependent.
     "q225_llm_kmeans_lloyd" -> QueryDef(
       (s, dir) => {
-        val e = t(s, dir, "embeddings")
-          .select(col("vec_id"), posexplode(col("embedding")))
-          .select(col("vec_id"), (col("pos") + 1).as("i"),
-            floor(col("col").cast("double") * lit(1000000L)).as("x"))
-          .persist()
+        val e = Similarity.quantCoords(t(s, dir, "embeddings"), "vec_id",
+          "embedding").persist()
         val c0 = e.filter(col("vec_id") < 4)
           .select(col("vec_id").as("cid"), col("i"), col("x").as("c"))
-        def assign(cents: org.apache.spark.sql.DataFrame) = {
-          val d = e.join(broadcast(cents), Seq("i"))
-            .groupBy("vec_id", "cid")
-            .agg(sum((col("x") - col("c")) * (col("x") - col("c"))).as("dist"))
-          val w = Window.partitionBy("vec_id").orderBy(col("dist"), col("cid"))
-          d.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-            .select(col("vec_id"), col("cid"))
-        }
+        def assign(cents: org.apache.spark.sql.DataFrame) =
+          Similarity.l2Nearest(e.join(broadcast(cents), Seq("i")),
+            Seq("vec_id"), "cid", 1).select(col("vec_id"), col("cid"))
         def update(asg: org.apache.spark.sql.DataFrame) =
-          e.join(asg, Seq("vec_id"))
-            .groupBy("cid", "i")
-            .agg(floor(sum("x").cast("double") / count(lit(1))).as("c"))
+          Similarity.lloydMean(e.join(asg, Seq("vec_id")), "cid")
         val a1 = assign(c0)
         val c1 = update(a1)
         val a2 = assign(c1).persist()
@@ -776,26 +778,8 @@ object Round5 {
         val csum = c2.groupBy("cid").agg(sum("c").as("c_sum"))
         sizes.join(csum, Seq("cid")).orderBy("cid")
       },
-      Some("""WITH e AS (SELECT vec_id, i.i AS i,
-          CAST(FLOOR(CAST(embedding[i.i] AS DOUBLE) * 1000000) AS BIGINT) AS x
-        FROM embeddings, (SELECT unnest(range(1, 65)) AS i) i),
-      c0 AS (SELECT vec_id AS cid, i, x AS c FROM e WHERE vec_id < 4),
-      d1 AS (SELECT e.vec_id, c0.cid, SUM((x - c) * (x - c)) AS dist
-        FROM e JOIN c0 USING (i) GROUP BY 1, 2),
-      a1 AS (SELECT vec_id, cid FROM (SELECT vec_id, cid,
-          row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-        FROM d1) WHERE rn = 1),
-      c1 AS (SELECT cid, i,
-          CAST(FLOOR(CAST(SUM(x) AS DOUBLE) / COUNT(*)) AS BIGINT) AS c
-        FROM e JOIN a1 USING (vec_id) GROUP BY 1, 2),
-      d2 AS (SELECT e.vec_id, c1.cid, SUM((x - c) * (x - c)) AS dist
-        FROM e JOIN c1 USING (i) GROUP BY 1, 2),
-      a2 AS (SELECT vec_id, cid FROM (SELECT vec_id, cid,
-          row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-        FROM d2) WHERE rn = 1),
-      c2 AS (SELECT cid, i,
-          CAST(FLOOR(CAST(SUM(x) AS DOUBLE) / COUNT(*)) AS BIGINT) AS c
-        FROM e JOIN a2 USING (vec_id) GROUP BY 1, 2)
+      Some(s"""WITH $lloydTwoRoundsSql,
+      c2 AS (${Round6c.lloydSql("cid", "i", "x", "e JOIN a2 USING (vec_id)")})
       SELECT sz.cid, sz.n_vecs, cs.c_sum
       FROM (SELECT cid, COUNT(*) AS n_vecs FROM a2 GROUP BY 1) sz
       JOIN (SELECT cid, CAST(SUM(c) AS BIGINT) AS c_sum FROM c2 GROUP BY 1) cs
@@ -2085,25 +2069,15 @@ object Round5 {
     // oracle replays the full unrolled Lloyd plus the tf tail.
     "q253_llm_cluster_terms" -> QueryDef(
       (s, dir) => {
-        val e = t(s, dir, "embeddings")
-          .select(col("vec_id"), posexplode(col("embedding")))
-          .select(col("vec_id"), (col("pos") + 1).as("i"),
-            floor(col("col").cast("double") * lit(1000000L)).as("x"))
-          .persist()
+        val e = Similarity.quantCoords(t(s, dir, "embeddings"), "vec_id",
+          "embedding").persist()
         val c0 = e.filter(col("vec_id") < 4)
           .select(col("vec_id").as("cid"), col("i"), col("x").as("c"))
-        def assign(cents: org.apache.spark.sql.DataFrame) = {
-          val d = e.join(broadcast(cents), Seq("i"))
-            .groupBy("vec_id", "cid")
-            .agg(sum((col("x") - col("c")) * (col("x") - col("c"))).as("dist"))
-          val w = Window.partitionBy("vec_id").orderBy(col("dist"), col("cid"))
-          d.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-            .select(col("vec_id"), col("cid"))
-        }
+        def assign(cents: org.apache.spark.sql.DataFrame) =
+          Similarity.l2Nearest(e.join(broadcast(cents), Seq("i")),
+            Seq("vec_id"), "cid", 1).select(col("vec_id"), col("cid"))
         def update(asg: org.apache.spark.sql.DataFrame) =
-          e.join(asg, Seq("vec_id"))
-            .groupBy("cid", "i")
-            .agg(floor(sum("x").cast("double") / count(lit(1))).as("c"))
+          Similarity.lloydMean(e.join(asg, Seq("vec_id")), "cid")
         val a2 = assign(update(assign(c0)))
         val tf = t(s, dir, "documents")
           .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
@@ -2122,23 +2096,7 @@ object Round5 {
             col("rnk").cast("long").as("rnk"))
           .orderBy("cid", "rnk")
       },
-      Some("""WITH e AS (SELECT vec_id, i.i AS i,
-          CAST(FLOOR(CAST(embedding[i.i] AS DOUBLE) * 1000000) AS BIGINT) AS x
-        FROM embeddings, (SELECT unnest(range(1, 65)) AS i) i),
-      c0 AS (SELECT vec_id AS cid, i, x AS c FROM e WHERE vec_id < 4),
-      d1 AS (SELECT e.vec_id, c0.cid, SUM((x - c) * (x - c)) AS dist
-        FROM e JOIN c0 USING (i) GROUP BY 1, 2),
-      a1 AS (SELECT vec_id, cid FROM (SELECT vec_id, cid,
-          row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-        FROM d1) WHERE rn = 1),
-      c1 AS (SELECT cid, i,
-          CAST(FLOOR(CAST(SUM(x) AS DOUBLE) / COUNT(*)) AS BIGINT) AS c
-        FROM e JOIN a1 USING (vec_id) GROUP BY 1, 2),
-      d2 AS (SELECT e.vec_id, c1.cid, SUM((x - c) * (x - c)) AS dist
-        FROM e JOIN c1 USING (i) GROUP BY 1, 2),
-      a2 AS (SELECT vec_id, cid FROM (SELECT vec_id, cid,
-          row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-        FROM d2) WHERE rn = 1),
+      Some(s"""WITH $lloydTwoRoundsSql,
       tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
         FROM documents),
       tf AS (SELECT cid, term, COUNT(*) AS tf FROM tok

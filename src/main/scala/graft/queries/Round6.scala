@@ -18,18 +18,6 @@ object Round6 {
   private def t(s: org.apache.spark.sql.SparkSession, dir: String, n: String) =
     Tables.load(s, dir, n)
 
-  /** DuckDB twin of VectorFunctions.hyperplaneBucket over an alias `e`
-    * (the q47 recipe: plane doubles as literals via Java Double.toString
-    * — round-trips exactly through DuckDB's parser; list_reduce's
-    * left-fold matches Spark's HOF summation order). */
-  private[queries] def bucketSql(planes: Seq[Seq[Double]]): String =
-    planes.zipWithIndex.map { case (p, i) =>
-      val lst = p.map(_.toString).mkString("[", ", ", "]")
-      s"""(CASE WHEN list_reduce(list_transform(range(1, 65),
-         d -> $lst[d] * CAST(e[d] AS DOUBLE)), (a, b) -> a + b) >= 0
-         THEN 1 ELSE 0 END) * ${1 << i}"""
-    }.mkString(" + ")
-
   val defs: Map[String, QueryDef] = Map(
 
     // ---- keyless interval join, density-capped -------------------------

@@ -296,18 +296,11 @@ object Round6b {
       (s, dir) => {
         graft.plans.NativeExpressions.register(s)
         val emb = t(s, dir, "embeddings")
-        val e = emb.select(col("vec_id"), posexplode(col("embedding")))
-          .select(col("vec_id"), (col("pos") + 1).as("i"),
-            floor(col("col").cast("double") * lit(1000000L)).as("x"))
-          .persist()
+        val e = Similarity.quantCoords(emb, "vec_id", "embedding").persist()
         val c0 = e.filter(col("vec_id") < 32)
           .select(col("vec_id").as("cid"), col("i"), col("x").as("c"))
-        val d = e.join(broadcast(c0), Seq("i"))
-          .groupBy("vec_id", "cid")
-          .agg(sum((col("x") - col("c")) * (col("x") - col("c"))).as("dist"))
-        val asg = d.withColumn("rn", row_number().over(
-            Window.partitionBy("vec_id").orderBy(col("dist"), col("cid"))))
-          .filter(col("rn") === 1).select(col("vec_id"), col("cid"))
+        val asg = Similarity.l2Nearest(e.join(broadcast(c0), Seq("i")),
+          Seq("vec_id"), "cid", 1).select(col("vec_id"), col("cid"))
         val mem = asg.join(emb, Seq("vec_id"))
           .select(col("cid"), col("vec_id"), col("embedding"))
         val a = mem.select(col("cid"), col("vec_id").as("va"),

@@ -29,19 +29,112 @@ object Round6c {
       (sqrt(SUM(CAST($x.embedding[i.i] AS DOUBLE) * CAST($x.embedding[i.i] AS DOUBLE))) *
        sqrt(SUM(CAST($y.embedding[i.i] AS DOUBLE) * CAST($y.embedding[i.i] AS DOUBLE)))), 6)"""
 
+  // ---- cell assignment ---------------------------------------------------
+  // The DuckDB twins of Similarity.assignToCentroids (the rounded-dot
+  // cell rank) and of Similarity.quantCoords / l2Nearest / lloydMean (the
+  // q225 quantized-L2 kernel). Each returns a SELECT body; callers name
+  // the CTE, keep their own MATERIALIZED hint and pass their own column
+  // and CTE names. These are the only spellings of the kernels in the
+  // oracles (FunctionCatalogSpec guards them).
+
+  /** Rounded-dot score of every row of `from` against every row of
+    * `cent` (centroid_id, centroid): columns (`id`, centroid_id, d) with
+    * d = round(`vec` · centroid, 6). `vec` is the qualified list column;
+    * `where` (optional) filters the rows of `from`. */
+  private[queries] def dotScoreSql(id: String, vec: String, from: String,
+      cent: String, where: String = "", dim: Int = 64): String = {
+    val filter = if (where.isEmpty) "" else s" WHERE $where"
+    s"""SELECT $id, c.centroid_id,
+          round(SUM(CAST($vec[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
+        FROM $from, $cent c, (SELECT unnest(range(1, ${dim + 1})) AS i) i$filter GROUP BY 1, 2"""
+  }
+
+  /** A generated SELECT body as a FROM item; a CTE name (with an
+    * optional WHERE) passes through. */
+  private def fromItem(from: String): String =
+    if (from.startsWith("SELECT ")) s"($from)" else from
+
+  /** The `keep` best cells per `id` of a (id, centroid_id, d) score —
+    * `from` is a CTE name (optionally with a WHERE) or a [[dotScoreSql]]
+    * body — ranked (d DESC, centroid_id) as `r`, the assignToCentroids
+    * order; `cols` selects from (id, centroid_id, r). */
+  private[queries] def dotRankSql(cols: String, id: String, from: String,
+      keep: String): String =
+    s"""SELECT $cols FROM (SELECT $id, centroid_id,
+          row_number() OVER (PARTITION BY $id ORDER BY d DESC, centroid_id) AS r
+        FROM ${fromItem(from)}) WHERE r <= ($keep)"""
+
+  /** The q225 int64 coords of list column `vec` over the rows of `from`:
+    * columns (`id`, i, x), x = floor(v_i · 1e6) as BIGINT. */
+  private[queries] def quantSql(id: String, vec: String, from: String,
+      where: String = ""): String = {
+    val filter = if (where.isEmpty) "" else s" WHERE $where"
+    s"""SELECT $id, i.i AS i,
+          CAST(FLOOR(CAST($vec[i.i] AS DOUBLE) * 1000000) AS BIGINT) AS x
+        FROM $from, (SELECT unnest(range(1, 65)) AS i) i$filter"""
+  }
+
+  /** Exact int64 squared L2 between point coords `x` and cell coords
+    * `c` joined in `from` (which may end in a WHERE): columns (`keys`…,
+    * dist), grouped by every key — the last key is the cell. */
+  private[queries] def l2ScoreSql(keys: Seq[String], x: String, c: String,
+      from: String): String =
+    s"""SELECT ${keys.mkString(", ")}, SUM(($x - $c) * ($x - $c)) AS dist
+        FROM $from GROUP BY ${keys.indices.map(_ + 1).mkString(", ")}"""
+
+  /** The `keep` nearest cells per `keys` of an L2 score `from` (a CTE
+    * name, optionally with a WHERE, or an [[l2ScoreSql]] body), ranked
+    * (dist, `cell`) as `rn` — the Similarity.l2Nearest order; `cols`
+    * selects from (keys…, cell, rn). */
+  private[queries] def l2RankSql(cols: String, keys: String, cell: String,
+      from: String, keep: String): String =
+    s"""SELECT $cols FROM (SELECT $keys, $cell,
+          row_number() OVER (PARTITION BY $keys ORDER BY dist, $cell) AS rn
+        FROM ${fromItem(from)}) WHERE rn <= ($keep)"""
+
+  /** The Lloyd update over assigned coords `from`: per (`cell`, `i`)
+    * the floor mean of `x` as `c`, divided in DOUBLE (DuckDB's `//`
+    * floors, Spark's DIV truncates). */
+  private[queries] def lloydSql(cell: String, i: String, x: String,
+      from: String): String =
+    s"""SELECT $cell, $i,
+          CAST(FLOOR(CAST(SUM($x) AS DOUBLE) / COUNT(*)) AS BIGINT) AS c
+        FROM $from GROUP BY 1, 2"""
+
+  /** DuckDB twin of VectorFunctions.hyperplaneBucket over a list column
+    * aliased `e` (the q47 recipe: plane doubles as literals via Java
+    * Double.toString — round-trips exactly through DuckDB's parser;
+    * list_reduce's left-fold matches Spark's HOF summation order). */
+  private[queries] def bucketSql(planes: Seq[Seq[Double]]): String =
+    planes.zipWithIndex.map { case (p, i) =>
+      val lst = p.map(_.toString).mkString("[", ", ", "]")
+      s"""(CASE WHEN list_reduce(list_transform(range(1, 65),
+         d -> $lst[d] * CAST(e[d] AS DOUBLE)), (a, b) -> a + b) >= 0
+         THEN 1 ELSE 0 END) * ${1 << i}"""
+    }.mkString(" + ")
+
+  /** The DuckDB replay of IndexAdvisor.pow2Near: the `nl` CTE (nlist =
+    * the power of two nearest sqrt(nu), nu from the stats CTE `st`) and
+    * its `p2t` helper; `materialized` hints `nl`. */
+  private[queries] def advisorNlistSql(st: String,
+      materialized: Boolean = false): String =
+    s"""p2t AS (SELECT CAST(power(2, x.x) AS BIGINT) AS p
+        FROM (SELECT unnest(range(0, 40)) AS x) x),
+      nl AS ${if (materialized) "MATERIALIZED " else ""}(SELECT CASE WHEN l / lower < (lower * 2) / l
+                         THEN lower ELSE lower * 2 END AS nlist FROM
+        (SELECT GREATEST(1.0, sqrt(CAST(nu AS DOUBLE))) AS l,
+           (SELECT MAX(p) FROM p2t WHERE p <= CAST(FLOOR(
+              GREATEST(1.0, sqrt(CAST(nu AS DOUBLE)))) AS BIGINT)) AS lower
+         FROM $st))"""
+
   /** Oracle of q264 and of its dedup-first twin q272 (the same rows):
     * rank-1 q225 cells over 32 seeds, same-cell pairs at cos >= 0.35,
     * per member its smallest keeper and best cosine. */
   private[queries] lazy val semDedupOracleSql: String =
-    s"""WITH e AS (SELECT vec_id, i.i AS i,
-          CAST(FLOOR(CAST(embedding[i.i] AS DOUBLE) * 1000000) AS BIGINT) AS x
-        FROM embeddings, (SELECT unnest(range(1, 65)) AS i) i),
+    s"""WITH e AS (${quantSql("vec_id", "embedding", "embeddings")}),
       c0 AS (SELECT vec_id AS cid, i, x AS c FROM e WHERE vec_id < 32),
-      d1 AS (SELECT e.vec_id, c0.cid, SUM((x - c) * (x - c)) AS dist
-        FROM e JOIN c0 USING (i) GROUP BY 1, 2),
-      asg AS (SELECT vec_id, cid FROM (SELECT vec_id, cid,
-          row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-        FROM d1) WHERE rn = 1),
+      d1 AS (${l2ScoreSql(Seq("e.vec_id", "c0.cid"), "x", "c", "e JOIN c0 USING (i)")}),
+      asg AS (${l2RankSql("vec_id, cid", "vec_id", "cid", "d1", "1")}),
       prs AS (SELECT a.vec_id AS va, b.vec_id AS vb
         FROM asg a JOIN asg b ON a.cid = b.cid AND a.vec_id < b.vec_id),
       cs AS (SELECT prs.va, prs.vb, ${cosSql("x", "y")} AS cos
@@ -177,18 +270,9 @@ object Round6c {
       FROM (SELECT DISTINCT qid FROM exr) q LEFT JOIN hits h ON q.qid = h.qid
       ORDER BY q.qid"""
 
-  /** DuckDB fragment for the q47-recipe hyperplane bucket of a list
-    * column aliased `e` (exact double literals; list_reduce fold order
-    * matches Spark's HOF aggregate). */
-  private val lshBucketSql: String = {
-    val planes = graft.operators.Similarity.hyperplanes(6, 64)
-    planes.zipWithIndex.map { case (p, i) =>
-      val lst = p.map(_.toString).mkString("[", ", ", "]")
-      s"""(CASE WHEN list_reduce(list_transform(range(1, 65),
-         d -> $lst[d] * CAST(e[d] AS DOUBLE)), (a, b) -> a + b) >= 0
-         THEN 1 ELSE 0 END) * ${1 << i}"""
-    }.mkString(" + ")
-  }
+  /** The q47 6-plane bucket of a list column aliased `e`. */
+  private val lshBucketSql: String =
+    bucketSql(Similarity.hyperplanes(6, 64))
 
   /** The ANN-side scored/annr CTE pair shared by the two LSH recall
     * oracles: join the (id, bucket) frames, score rounded cosine,
@@ -436,19 +520,12 @@ object Round6c {
           .agg(min("vec_id").as("rep"),
             sort_array(collect_list("vec_id")).as("ids"))
           .persist()
-        val e = g.select(col("rep"), posexplode(col("embedding")))
-          .select(col("rep"), (col("pos") + 1).as("i"),
-            floor(col("col").cast("double") * lit(1000000L)).as("x"))
-        val c0 = emb.filter(col("vec_id") < 32)
-          .select(col("vec_id").as("cid"), posexplode(col("embedding")))
-          .select(col("cid"), (col("pos") + 1).as("i"),
-            floor(col("col").cast("double") * lit(1000000L)).as("c"))
-        val d = e.join(broadcast(c0), Seq("i"))
-          .groupBy("rep", "cid")
-          .agg(sum((col("x") - col("c")) * (col("x") - col("c"))).as("dist"))
-        val asg = d.withColumn("rn", row_number().over(
-            Window.partitionBy("rep").orderBy(col("dist"), col("cid"))))
-          .filter(col("rn") === 1).select(col("rep"), col("cid"))
+        val e = Similarity.quantCoords(g, "rep", "embedding")
+        val c0 = Similarity.quantCoords(emb.filter(col("vec_id") < 32),
+            "vec_id", "embedding")
+          .select(col("vec_id").as("cid"), col("i"), col("x").as("c"))
+        val asg = Similarity.l2Nearest(e.join(broadcast(c0), Seq("i")),
+          Seq("rep"), "cid", 1).select(col("rep"), col("cid"))
         val mem = asg.join(g, Seq("rep")).persist()
         val a = mem.select(col("cid"), col("rep").as("ga"),
           col("embedding").as("ea"), col("ids").as("idsa"))
@@ -659,22 +736,15 @@ object Round6c {
     // joins.
     "q278_llm_ann_ivf_recall" -> QueryDef(
       (s, dir) => recallHarness(s, dir, (qs, corpus) =>
-        graft.operators.Similarity.ivfTopK(qs, corpus, k = 5, nlist = 16)),
+        graft.operators.Similarity.ivfTopKProbe(qs, corpus, k = 5, nlist = 16,
+          nprobe = 1)),
       Some(s"""$exactRecallCte,
       cent AS (SELECT vec_id AS centroid_id, embedding AS centroid
         FROM embeddings WHERE vec_id < 16),
-      qa0 AS (SELECT q.id, c.centroid_id,
-          round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM q2 q, cent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      qa AS (SELECT id, centroid_id FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM qa0) WHERE r = 1),
-      ca0 AS (SELECT q.id, c.centroid_id,
-          round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM c2 q, cent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      ca AS (SELECT id, centroid_id FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM ca0) WHERE r = 1),
+      qa0 AS (${dotScoreSql("q.id", "q.e", "q2 q", "cent")}),
+      qa AS (${dotRankSql("id, centroid_id", "id", "qa0", "1")}),
+      ca0 AS (${dotScoreSql("q.id", "q.e", "c2 q", "cent")}),
+      ca AS (${dotRankSql("id, centroid_id", "id", "ca0", "1")}),
       scored AS (SELECT qa.id AS qid, ca.id AS cid, ${cosSql("q", "c")} AS cos
         FROM qa JOIN ca ON qa.centroid_id = ca.centroid_id AND qa.id <> ca.id
         JOIN embeddings q ON qa.id = q.vec_id

@@ -32,19 +32,6 @@ object Round7 {
   private def t(s: SparkSession, dir: String, n: String) =
     Tables.load(s, dir, n)
 
-  /** DuckDB hyperplane-bucket fragment for a list column aliased `e`,
-    * parameterized by table seed / plane count (the Round6c.lshBucketSql
-    * shape generalized to the multi-table construction). */
-  private[queries] def lshBucketSqlSeed(nPlanes: Int, seed: Long): String = {
-    val planes = graft.operators.Similarity.hyperplanes(nPlanes, 64, seed)
-    planes.zipWithIndex.map { case (p, i) =>
-      val lst = p.map(_.toString).mkString("[", ", ", "]")
-      s"""(CASE WHEN list_reduce(list_transform(range(1, 65),
-         d -> $lst[d] * CAST(e[d] AS DOUBLE)), (a, b) -> a + b) >= 0
-         THEN 1 ELSE 0 END) * ${1 << i}"""
-    }.mkString(" + ")
-  }
-
   /** Shared oracle of q286/q288 — the leakage-free split ground truth
     * (per-doc component over the >= 0.5 Jaccard graph, Lehmer split
     * draw); declared BEFORE `defs` (object-init order, CLAUDE.md). */
@@ -79,18 +66,10 @@ object Round7 {
       Some(s"""${Round6c.exactRecallCte},
       cent AS (SELECT vec_id AS centroid_id, embedding AS centroid
         FROM embeddings WHERE vec_id < 16),
-      qa0 AS (SELECT q.id, c.centroid_id,
-          round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM q2 q, cent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      qa AS (SELECT id, centroid_id FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM qa0) WHERE r <= 8),
-      ca0 AS (SELECT q.id, c.centroid_id,
-          round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM c2 q, cent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      ca AS (SELECT id, centroid_id FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM ca0) WHERE r = 1),
+      qa0 AS (${Round6c.dotScoreSql("q.id", "q.e", "q2 q", "cent")}),
+      qa AS (${Round6c.dotRankSql("id, centroid_id", "id", "qa0", "8")}),
+      ca0 AS (${Round6c.dotScoreSql("q.id", "q.e", "c2 q", "cent")}),
+      ca AS (${Round6c.dotRankSql("id, centroid_id", "id", "ca0", "1")}),
       scored AS (SELECT qa.id AS qid, ca.id AS cid, ${Round6c.cosSql("q", "c")} AS cos
         FROM qa JOIN ca ON qa.centroid_id = ca.centroid_id AND qa.id <> ca.id
         JOIN embeddings q ON qa.id = q.vec_id
@@ -120,10 +99,12 @@ object Round7 {
           nPlanes = 4, dim = 64, nTables = 8)),
       Some({
         val qtb = (0 until 8).map { t =>
-          s"""SELECT id, ${lshBucketSqlSeed(4, 42L + t)} + ${t * 16} AS tb FROM q2"""
+          s"""SELECT id, ${Round6c.bucketSql(Similarity.hyperplanes(4, 64, 42L + t))} + ${t * 16} AS tb
+            FROM q2"""
         }.mkString(" UNION ALL ")
         val ctb = (0 until 8).map { t =>
-          s"""SELECT id, ${lshBucketSqlSeed(4, 42L + t)} + ${t * 16} AS tb FROM c2"""
+          s"""SELECT id, ${Round6c.bucketSql(Similarity.hyperplanes(4, 64, 42L + t))} + ${t * 16} AS tb
+            FROM c2"""
         }.mkString(" UNION ALL ")
         s"""${Round6c.exactRecallCte},
         qtb AS ($qtb),
@@ -159,26 +140,17 @@ object Round7 {
         graft.operators.Similarity.ivfLloydTopK(qs, corpus, k = 5,
           nlist = 16, nprobe = 8, rounds = 1)),
       Some(s"""${Round6c.exactRecallCte},
-      e AS (SELECT vec_id, i.i AS i,
-          CAST(FLOOR(CAST(embedding[i.i] AS DOUBLE) * 1000000) AS BIGINT) AS x
-        FROM embeddings, (SELECT unnest(range(1, 65)) AS i) i),
+      e AS (${Round6c.quantSql("vec_id", "embedding", "embeddings")}),
       lc0 AS (SELECT vec_id AS ccid, i, x AS c FROM e WHERE vec_id < 16),
-      ld1 AS (SELECT e.vec_id, lc0.ccid, SUM((x - c) * (x - c)) AS dist
-        FROM e JOIN lc0 USING (i) GROUP BY 1, 2),
-      la1 AS (SELECT vec_id, ccid FROM (SELECT vec_id, ccid,
-          row_number() OVER (PARTITION BY vec_id ORDER BY dist, ccid) AS rn
-        FROM ld1) WHERE rn = 1),
-      lc1 AS (SELECT ccid, i,
-          CAST(FLOOR(CAST(SUM(x) AS DOUBLE) / COUNT(*)) AS BIGINT) AS c
-        FROM e JOIN la1 USING (vec_id) GROUP BY 1, 2),
-      ld2 AS (SELECT e.vec_id, lc1.ccid, SUM((x - c) * (x - c)) AS dist
-        FROM e JOIN lc1 USING (i) GROUP BY 1, 2),
-      ca AS (SELECT vec_id, ccid FROM (SELECT vec_id, ccid,
-          row_number() OVER (PARTITION BY vec_id ORDER BY dist, ccid) AS rn
-        FROM ld2) WHERE rn = 1),
-      qa AS (SELECT vec_id, ccid FROM (SELECT vec_id, ccid,
-          row_number() OVER (PARTITION BY vec_id ORDER BY dist, ccid) AS rn
-        FROM ld2 WHERE vec_id < 50) WHERE rn <= 8),
+      ld1 AS (${Round6c.l2ScoreSql(Seq("e.vec_id", "lc0.ccid"), "x", "c",
+        "e JOIN lc0 USING (i)")}),
+      la1 AS (${Round6c.l2RankSql("vec_id, ccid", "vec_id", "ccid", "ld1", "1")}),
+      lc1 AS (${Round6c.lloydSql("ccid", "i", "x", "e JOIN la1 USING (vec_id)")}),
+      ld2 AS (${Round6c.l2ScoreSql(Seq("e.vec_id", "lc1.ccid"), "x", "c",
+        "e JOIN lc1 USING (i)")}),
+      ca AS (${Round6c.l2RankSql("vec_id, ccid", "vec_id", "ccid", "ld2", "1")}),
+      qa AS (${Round6c.l2RankSql("vec_id, ccid", "vec_id", "ccid",
+        "ld2 WHERE vec_id < 50", "8")}),
       scored AS (SELECT qa.vec_id AS qid, ca.vec_id AS cid, ${Round6c.cosSql("q", "c")} AS cos
         FROM qa JOIN ca ON qa.ccid = ca.ccid AND qa.vec_id <> ca.vec_id
         JOIN embeddings q ON qa.vec_id = q.vec_id
@@ -227,18 +199,10 @@ object Round7 {
         FROM ex0) WHERE rnk = 1),
       cent AS (SELECT vec_id AS centroid_id, embedding AS centroid
         FROM embeddings WHERE vec_id < 16),
-      qa0 AS (SELECT q.id, c.centroid_id,
-          round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM q2 q, cent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      qa AS (SELECT id, centroid_id FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM qa0) WHERE r <= 8),
-      ca0 AS (SELECT q.id, c.centroid_id,
-          round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM c2 q, cent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      ca AS (SELECT id, centroid_id FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM ca0) WHERE r = 1),
+      qa0 AS (${Round6c.dotScoreSql("q.id", "q.e", "q2 q", "cent")}),
+      qa AS (${Round6c.dotRankSql("id, centroid_id", "id", "qa0", "8")}),
+      ca0 AS (${Round6c.dotScoreSql("q.id", "q.e", "c2 q", "cent")}),
+      ca AS (${Round6c.dotRankSql("id, centroid_id", "id", "ca0", "1")}),
       scored AS (SELECT qa.id AS qid, ca.id AS cid, ${Round6c.cosSql("q", "c")} AS cos
         FROM qa JOIN ca ON qa.centroid_id = ca.centroid_id AND qa.id <> ca.id
         JOIN embeddings q ON qa.id = q.vec_id
@@ -564,20 +528,12 @@ object Round7 {
       },
       Some(s"""WITH cent AS (SELECT vec_id AS centroid_id, embedding AS centroid
         FROM embeddings WHERE vec_id < 16),
-      qa0 AS (SELECT e.vec_id, c.centroid_id,
-          round(SUM(CAST(e.embedding[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM embeddings e, cent c, (SELECT unnest(range(1, 65)) AS i) i
-        WHERE ${Slots.Probe.inSql("e.vec_id")} GROUP BY 1, 2),
-      qa AS (SELECT vec_id, centroid_id FROM (SELECT vec_id, centroid_id,
-          row_number() OVER (PARTITION BY vec_id ORDER BY d DESC, centroid_id) AS r
-        FROM qa0) WHERE r = 1),
-      ca0 AS (SELECT e.vec_id, c.centroid_id,
-          round(SUM(CAST(e.embedding[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM embeddings e, cent c, (SELECT unnest(range(1, 65)) AS i) i
-        WHERE ${Slots.Probe.outSql("e.vec_id")} GROUP BY 1, 2),
-      ca AS (SELECT vec_id, centroid_id FROM (SELECT vec_id, centroid_id,
-          row_number() OVER (PARTITION BY vec_id ORDER BY d DESC, centroid_id) AS r
-        FROM ca0) WHERE r = 1),
+      qa0 AS (${Round6c.dotScoreSql("e.vec_id", "e.embedding", "embeddings e", "cent",
+        where = Slots.Probe.inSql("e.vec_id"))}),
+      qa AS (${Round6c.dotRankSql("vec_id, centroid_id", "vec_id", "qa0", "1")}),
+      ca0 AS (${Round6c.dotScoreSql("e.vec_id", "e.embedding", "embeddings e", "cent",
+        where = Slots.Probe.outSql("e.vec_id"))}),
+      ca AS (${Round6c.dotRankSql("vec_id, centroid_id", "vec_id", "ca0", "1")}),
       al AS (SELECT qa.vec_id AS da, ca.vec_id AS db, ${Round6c.cosSql("x", "y")} AS cos
         FROM qa JOIN ca ON qa.centroid_id = ca.centroid_id
         JOIN embeddings x ON qa.vec_id = x.vec_id

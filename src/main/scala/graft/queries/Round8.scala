@@ -96,7 +96,7 @@ object Round8 {
       p: String = ""): String = {
     val pred = if (where.isEmpty) "" else s" WHERE $where"
     val per = (0 until nTables).map { t =>
-      val bucket = Round6.bucketSql(
+      val bucket = Round6c.bucketSql(
         graft.operators.Similarity.hyperplanes(nPlanes, 64, 42L + t))
       s"""${p}cb$t AS MATERIALIZED (SELECT vec_id AS cid, $bucket AS bucket
         FROM (SELECT vec_id, embedding AS e FROM $tbl$pred)),
@@ -190,14 +190,7 @@ object Round8 {
       st AS (SELECT COUNT(*) AS n, COUNT(DISTINCT embedding) AS nu FROM embeddings),
       f AS (SELECT CASE WHEN 1.0 - CAST(nu AS DOUBLE) / n >= 0.1
                         THEN 1 ELSE 0 END AS dd FROM st),
-      p2t AS (SELECT CAST(power(2, x.x) AS BIGINT) AS p
-        FROM (SELECT unnest(range(0, 40)) AS x) x),
-      nl AS (SELECT CASE WHEN l / lower < (lower * 2) / l
-                         THEN lower ELSE lower * 2 END AS nlist FROM
-        (SELECT GREATEST(1.0, sqrt(CAST(nu AS DOUBLE))) AS l,
-           (SELECT MAX(p) FROM p2t WHERE p <= CAST(FLOOR(
-              GREATEST(1.0, sqrt(CAST(nu AS DOUBLE)))) AS BIGINT)) AS lower
-         FROM st)),
+      ${Round6c.advisorNlistSql("st")},
       np AS (SELECT GREATEST(1, nlist // 2) AS nprobe FROM nl),
       grp AS (SELECT embedding AS ge, MIN(vec_id) AS rep
         FROM embeddings GROUP BY embedding),
@@ -208,18 +201,10 @@ object Round8 {
       cent AS (SELECT id AS centroid_id, e AS centroid FROM (
           SELECT id, e, row_number() OVER (ORDER BY id) AS rn FROM base)
         WHERE rn <= (SELECT nlist FROM nl)),
-      qa0 AS (SELECT q.id, c.centroid_id,
-          round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM q2 q, cent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      qa AS (SELECT id, centroid_id FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM qa0) WHERE r <= (SELECT nprobe FROM np)),
-      ca0 AS (SELECT b.id, c.centroid_id,
-          round(SUM(CAST(b.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM base b, cent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      ca AS (SELECT id, centroid_id FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM ca0) WHERE r = 1),
+      qa0 AS (${Round6c.dotScoreSql("q.id", "q.e", "q2 q", "cent")}),
+      qa AS (${Round6c.dotRankSql("id, centroid_id", "id", "qa0", "SELECT nprobe FROM np")}),
+      ca0 AS (${Round6c.dotScoreSql("b.id", "b.e", "base b", "cent")}),
+      ca AS (${Round6c.dotRankSql("id, centroid_id", "id", "ca0", "1")}),
       scored AS (SELECT qa.id AS qid, ca.id AS cid, ${Round6c.cosSql("q", "c")} AS cos
         FROM qa JOIN ca ON qa.centroid_id = ca.centroid_id AND qa.id <> ca.id
         JOIN embeddings q ON qa.id = q.vec_id
@@ -527,23 +512,12 @@ object Round8 {
         FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
         WHERE length(d.text) >= 40 AND len(string_split(d.text, ' ')) >= 8),
       st AS (SELECT COUNT(*) AS n, COUNT(DISTINCT embedding) AS nu FROM q),
-      p2t AS (SELECT CAST(power(2, x.x) AS BIGINT) AS p
-        FROM (SELECT unnest(range(0, 40)) AS x) x),
-      nl AS (SELECT CASE WHEN l / lower < (lower * 2) / l
-                         THEN lower ELSE lower * 2 END AS nlist FROM
-        (SELECT GREATEST(1.0, sqrt(CAST(nu AS DOUBLE))) AS l,
-           (SELECT MAX(p) FROM p2t WHERE p <= CAST(FLOOR(
-              GREATEST(1.0, sqrt(CAST(nu AS DOUBLE)))) AS BIGINT)) AS lower
-         FROM st)),
+      ${Round6c.advisorNlistSql("st")},
       cent AS (SELECT doc_id AS centroid_id, embedding AS centroid FROM (
           SELECT doc_id, embedding, row_number() OVER (ORDER BY doc_id) AS rn
           FROM q) WHERE rn <= (SELECT nlist FROM nl)),
-      a0 AS (SELECT q.doc_id, c.centroid_id,
-          round(SUM(CAST(q.embedding[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM q, cent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      asg AS (SELECT doc_id, centroid_id FROM (SELECT doc_id, centroid_id,
-          row_number() OVER (PARTITION BY doc_id ORDER BY d DESC, centroid_id) AS r
-        FROM a0) WHERE r = 1),
+      a0 AS (${Round6c.dotScoreSql("q.doc_id", "q.embedding", "q", "cent")}),
+      asg AS (${Round6c.dotRankSql("doc_id, centroid_id", "doc_id", "a0", "1")}),
       prs AS (SELECT a.doc_id AS da, b.doc_id AS db
         FROM asg a JOIN asg b
         ON a.centroid_id = b.centroid_id AND a.doc_id < b.doc_id),
@@ -598,18 +572,10 @@ object Round8 {
       qt AS (SELECT id, list_transform(range(1, 33), d -> e[d]) AS e FROM q2),
       ct AS (SELECT id, list_transform(range(1, 33), d -> e[d]) AS e FROM c2),
       cent AS (SELECT id AS centroid_id, e AS centroid FROM ct WHERE id < 16),
-      qa0 AS (SELECT q.id, c.centroid_id,
-          round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM qt q, cent c, (SELECT unnest(range(1, 33)) AS i) i GROUP BY 1, 2),
-      qa AS (SELECT id, centroid_id FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM qa0) WHERE r <= 10),
-      ca0 AS (SELECT b.id, c.centroid_id,
-          round(SUM(CAST(b.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM ct b, cent c, (SELECT unnest(range(1, 33)) AS i) i GROUP BY 1, 2),
-      ca AS (SELECT id, centroid_id FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM ca0) WHERE r = 1),
+      qa0 AS (${Round6c.dotScoreSql("q.id", "q.e", "qt q", "cent", dim = 32)}),
+      qa AS (${Round6c.dotRankSql("id, centroid_id", "id", "qa0", "10")}),
+      ca0 AS (${Round6c.dotScoreSql("b.id", "b.e", "ct b", "cent", dim = 32)}),
+      ca AS (${Round6c.dotRankSql("id, centroid_id", "id", "ca0", "1")}),
       tsc AS (SELECT qa.id AS qid, ca.id AS cid,
           round(SUM(CAST(x.e[i.i] AS DOUBLE) * CAST(y.e[i.i] AS DOUBLE)) /
             (sqrt(SUM(CAST(x.e[i.i] AS DOUBLE) * CAST(x.e[i.i] AS DOUBLE))) *

@@ -152,19 +152,14 @@ object Round9 {
   private[queries] def pqAdcSql(nSub: Int, nCodes: Int,
       tbl: String = "embeddings", p: String = ""): String = {
     val dsub = 64 / nSub
-    s"""${p}pqc AS MATERIALIZED (SELECT i.i AS i, e.vec_id AS code,
-        CAST(FLOOR(CAST(e.embedding[i.i] AS DOUBLE) * 1000000) AS BIGINT) AS cx
-      FROM $tbl e, (SELECT unnest(range(1, 65)) AS i) i
-      WHERE e.vec_id < $nCodes),
-      ${p}cqx AS MATERIALIZED (SELECT e.vec_id AS cid, i.i AS i,
-        CAST(FLOOR(CAST(e.embedding[i.i] AS DOUBLE) * 1000000) AS BIGINT) AS x
-      FROM $tbl e, (SELECT unnest(range(1, 65)) AS i) i),
-      ${p}enc0 AS MATERIALIZED (SELECT ${p}cqx.cid, (${p}cqx.i - 1) // $dsub AS s, ${p}pqc.code,
-        SUM((${p}cqx.x - ${p}pqc.cx) * (${p}cqx.x - ${p}pqc.cx)) AS dist
-      FROM ${p}cqx JOIN ${p}pqc ON ${p}cqx.i = ${p}pqc.i GROUP BY 1, 2, 3),
-      ${p}enc AS MATERIALIZED (SELECT cid, s, code FROM (SELECT cid, s, code,
-        row_number() OVER (PARTITION BY cid, s ORDER BY dist, code) AS rn
-      FROM ${p}enc0) WHERE rn = 1),
+    s"""${p}pqc AS MATERIALIZED (SELECT i, vec_id AS code, x AS cx FROM (
+        ${Round6c.quantSql("e.vec_id", "e.embedding", s"$tbl e", where = s"e.vec_id < $nCodes")})),
+      ${p}cqx AS MATERIALIZED (${Round6c.quantSql("e.vec_id AS cid", "e.embedding", s"$tbl e")}),
+      ${p}enc0 AS MATERIALIZED (${Round6c.l2ScoreSql(
+        Seq(s"${p}cqx.cid", s"(${p}cqx.i - 1) // $dsub AS s", s"${p}pqc.code"),
+        s"${p}cqx.x", s"${p}pqc.cx", s"${p}cqx JOIN ${p}pqc ON ${p}cqx.i = ${p}pqc.i")}),
+      ${p}enc AS MATERIALIZED (${Round6c.l2RankSql("cid, s, code", "cid, s", "code",
+        s"${p}enc0", "1")}),
       ${p}qtab AS MATERIALIZED (SELECT ${p}cqx.cid AS qid, (${p}cqx.i - 1) // $dsub AS s,
         ${p}pqc.code, SUM(${p}cqx.x * ${p}pqc.cx) AS pdot
       FROM ${p}cqx JOIN ${p}pqc ON ${p}cqx.i = ${p}pqc.i WHERE ${p}cqx.cid < 50 GROUP BY 1, 2, 3),
@@ -203,29 +198,23 @@ object Round9 {
     def c(n: String) = prefix + n
     s"""${c("cent")} AS MATERIALIZED (SELECT vec_id AS centroid_id, embedding AS centroid
         FROM embeddings WHERE vec_id < ($nlistE)),
-      ${c("ia0")} AS MATERIALIZED (SELECT e.vec_id AS cid, c.centroid_id,
-          round(SUM(CAST(e.embedding[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM embeddings e, ${c("cent")} c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      ${c("ica")} AS MATERIALIZED (SELECT cid, centroid_id FROM (SELECT cid, centroid_id,
-          row_number() OVER (PARTITION BY cid ORDER BY d DESC, centroid_id) AS r
-        FROM ${c("ia0")}) WHERE r = 1),
-      ${c("iqa")} AS MATERIALIZED (SELECT cid AS qid, centroid_id FROM (SELECT cid, centroid_id,
-          row_number() OVER (PARTITION BY cid ORDER BY d DESC, centroid_id) AS r
-        FROM ${c("ia0")} WHERE cid < 50) WHERE r <= ($nprobeE)),
-      ${c("cqx")} AS MATERIALIZED (SELECT e.vec_id AS cid, i.i AS i,
-          CAST(FLOOR(CAST(e.embedding[i.i] AS DOUBLE) * 1000000) AS BIGINT) AS x
-        FROM embeddings e, (SELECT unnest(range(1, 65)) AS i) i),
+      ${c("ia0")} AS MATERIALIZED (${Round6c.dotScoreSql("e.vec_id AS cid", "e.embedding",
+        "embeddings e", c("cent"))}),
+      ${c("ica")} AS MATERIALIZED (${Round6c.dotRankSql("cid, centroid_id", "cid", c("ia0"), "1")}),
+      ${c("iqa")} AS MATERIALIZED (${Round6c.dotRankSql("cid AS qid, centroid_id", "cid",
+        s"${c("ia0")} WHERE cid < 50", nprobeE)}),
+      ${c("cqx")} AS MATERIALIZED (${Round6c.quantSql("e.vec_id AS cid", "e.embedding",
+        "embeddings e")}),
       ${c("rres")} AS MATERIALIZED (SELECT ${c("cqx")}.cid, ${c("cqx")}.i, ${c("cqx")}.x - ct.x AS rx
         FROM ${c("cqx")} JOIN ${c("ica")} ON ${c("cqx")}.cid = ${c("ica")}.cid
         JOIN ${c("cqx")} ct ON ct.cid = ${c("ica")}.centroid_id AND ct.i = ${c("cqx")}.i),
       ${c("pqc")} AS MATERIALIZED (SELECT i, cid AS code, rx AS px FROM ${c("rres")}
         WHERE cid >= ($nlistE) AND cid < ($nlistE) + $nCodes),
-      ${c("enc0")} AS MATERIALIZED (SELECT r.cid, (r.i - 1) // $dsub AS s, p.code,
-          SUM((r.rx - p.px) * (r.rx - p.px)) AS dist
-        FROM ${c("rres")} r JOIN ${c("pqc")} p ON r.i = p.i GROUP BY 1, 2, 3),
-      ${c("enc")} AS MATERIALIZED (SELECT cid, s, code FROM (SELECT cid, s, code,
-          row_number() OVER (PARTITION BY cid, s ORDER BY dist, code) AS rn
-        FROM ${c("enc0")}) WHERE rn = 1),
+      ${c("enc0")} AS MATERIALIZED (${Round6c.l2ScoreSql(
+        Seq("r.cid", s"(r.i - 1) // $dsub AS s", "p.code"), "r.rx", "p.px",
+        s"${c("rres")} r JOIN ${c("pqc")} p ON r.i = p.i")}),
+      ${c("enc")} AS MATERIALIZED (${Round6c.l2RankSql("cid, s, code", "cid, s", "code",
+        c("enc0"), "1")}),
       ${c("qres")} AS MATERIALIZED (SELECT ${c("cqx")}.cid AS qid, ${c("iqa")}.centroid_id AS cl, ${c("cqx")}.i,
           ${c("cqx")}.x - ct.x AS rx
         FROM ${c("cqx")} JOIN ${c("iqa")} ON ${c("cqx")}.cid = ${c("iqa")}.qid
@@ -358,30 +347,15 @@ object Round9 {
       },
       Some(s"""WITH st AS (SELECT COUNT(*) AS n, COUNT(DISTINCT embedding) AS nu
         FROM embeddings WHERE ${Slots.Probe.outSql}),
-      p2t AS (SELECT CAST(power(2, x.x) AS BIGINT) AS p
-        FROM (SELECT unnest(range(0, 40)) AS x) x),
-      nl AS (SELECT CASE WHEN l / lower < (lower * 2) / l
-                         THEN lower ELSE lower * 2 END AS nlist FROM
-        (SELECT GREATEST(1.0, sqrt(CAST(nu AS DOUBLE))) AS l,
-           (SELECT MAX(p) FROM p2t WHERE p <= CAST(FLOOR(
-              GREATEST(1.0, sqrt(CAST(nu AS DOUBLE)))) AS BIGINT)) AS lower
-         FROM st)),
+      ${Round6c.advisorNlistSql("st")},
       cent AS (SELECT vec_id AS centroid_id, embedding AS centroid
         FROM embeddings WHERE vec_id < (SELECT nlist FROM nl)),
-      qa0 AS (SELECT e.vec_id, c.centroid_id,
-          round(SUM(CAST(e.embedding[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM embeddings e, cent c, (SELECT unnest(range(1, 65)) AS i) i
-        WHERE ${Slots.Probe.inSql("e.vec_id")} GROUP BY 1, 2),
-      qa AS (SELECT vec_id, centroid_id FROM (SELECT vec_id, centroid_id,
-          row_number() OVER (PARTITION BY vec_id ORDER BY d DESC, centroid_id) AS r
-        FROM qa0) WHERE r = 1),
-      ca0 AS (SELECT e.vec_id, c.centroid_id,
-          round(SUM(CAST(e.embedding[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM embeddings e, cent c, (SELECT unnest(range(1, 65)) AS i) i
-        WHERE ${Slots.Probe.outSql("e.vec_id")} GROUP BY 1, 2),
-      ca AS (SELECT vec_id, centroid_id FROM (SELECT vec_id, centroid_id,
-          row_number() OVER (PARTITION BY vec_id ORDER BY d DESC, centroid_id) AS r
-        FROM ca0) WHERE r = 1),
+      qa0 AS (${Round6c.dotScoreSql("e.vec_id", "e.embedding", "embeddings e", "cent",
+        where = Slots.Probe.inSql("e.vec_id"))}),
+      qa AS (${Round6c.dotRankSql("vec_id, centroid_id", "vec_id", "qa0", "1")}),
+      ca0 AS (${Round6c.dotScoreSql("e.vec_id", "e.embedding", "embeddings e", "cent",
+        where = Slots.Probe.outSql("e.vec_id"))}),
+      ca AS (${Round6c.dotRankSql("vec_id, centroid_id", "vec_id", "ca0", "1")}),
       al AS (SELECT qa.vec_id AS da, ca.vec_id AS db, ${Round6c.cosSql("x", "y")} AS cos
         FROM qa JOIN ca ON qa.centroid_id = ca.centroid_id
         JOIN embeddings x ON qa.vec_id = x.vec_id
@@ -455,28 +429,22 @@ object Round9 {
       }),
       Some({
         val mqtb = (0 until 8).map { t =>
-          s"""SELECT id, ${Round7.lshBucketSqlSeed(4, 42L + t)} + ${t * 16} AS tb FROM q2"""
+          s"""SELECT id, ${Round6c.bucketSql(Similarity.hyperplanes(4, 64, 42L + t))} + ${t * 16} AS tb
+            FROM q2"""
         }.mkString(" UNION ALL ")
         val mctb = (0 until 8).map { t =>
-          s"""SELECT id, ${Round7.lshBucketSqlSeed(4, 42L + t)} + ${t * 16} AS tb FROM c2"""
+          s"""SELECT id, ${Round6c.bucketSql(Similarity.hyperplanes(4, 64, 42L + t))} + ${t * 16} AS tb
+            FROM c2"""
         }.mkString(" UNION ALL ")
         s"""${Round6c.exactRecallCte},
       nq AS (SELECT COUNT(DISTINCT qid) AS nq FROM exr),
       -- measurement pipeline 1: the q279 IVF row (nlist=16, nprobe=8)
       mcent AS (SELECT vec_id AS centroid_id, embedding AS centroid
         FROM embeddings WHERE vec_id < 16),
-      mqa0 AS (SELECT q.id, c.centroid_id,
-          round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM q2 q, mcent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      mqa AS (SELECT id, centroid_id FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM mqa0) WHERE r <= 8),
-      mca0 AS (SELECT q.id, c.centroid_id,
-          round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM c2 q, mcent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      mca AS (SELECT id, centroid_id FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM mca0) WHERE r = 1),
+      mqa0 AS (${Round6c.dotScoreSql("q.id", "q.e", "q2 q", "mcent")}),
+      mqa AS (${Round6c.dotRankSql("id, centroid_id", "id", "mqa0", "8")}),
+      mca0 AS (${Round6c.dotScoreSql("q.id", "q.e", "c2 q", "mcent")}),
+      mca AS (${Round6c.dotRankSql("id, centroid_id", "id", "mca0", "1")}),
       mscored AS (SELECT mqa.id AS qid, mca.id AS cid, ${Round6c.cosSql("q", "c")} AS cos
         FROM mqa JOIN mca ON mqa.centroid_id = mca.centroid_id AND mqa.id <> mca.id
         JOIN embeddings q ON mqa.id = q.vec_id
@@ -511,14 +479,7 @@ object Round9 {
       -- family — the Scala maxBy keeps the FIRST max, and the measured
       -- Seq lists ivf before lsh, which family ASC reproduces)
       st AS (SELECT COUNT(*) AS n, COUNT(DISTINCT embedding) AS nu FROM embeddings),
-      p2t AS (SELECT CAST(power(2, x.x) AS BIGINT) AS p
-        FROM (SELECT unnest(range(0, 40)) AS x) x),
-      nl AS (SELECT CASE WHEN l / lower < (lower * 2) / l
-                         THEN lower ELSE lower * 2 END AS nlist FROM
-        (SELECT GREATEST(1.0, sqrt(CAST(nu AS DOUBLE))) AS l,
-           (SELECT MAX(p) FROM p2t WHERE p <= CAST(FLOOR(
-              GREATEST(1.0, sqrt(CAST(nu AS DOUBLE)))) AS BIGINT)) AS lower
-         FROM st)),
+      ${Round6c.advisorNlistSql("st")},
       np AS (SELECT GREATEST(1, (SELECT nlist FROM nl) // 2) AS nprobe),
       cfg AS (
         SELECT 'ivf' AS fam,
@@ -539,18 +500,10 @@ object Round9 {
       -- measured 16/8 row's 1/2 probe ratio)
       scent AS (SELECT vec_id AS centroid_id, embedding AS centroid
         FROM embeddings WHERE vec_id < (SELECT nlist FROM nl)),
-      sqa0 AS (SELECT q.id, c.centroid_id,
-          round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM q2 q, scent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      sqa AS (SELECT id, centroid_id FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM sqa0) WHERE r <= (SELECT nprobe FROM np)),
-      sca0 AS (SELECT q.id, c.centroid_id,
-          round(SUM(CAST(q.e[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM c2 q, scent c, (SELECT unnest(range(1, 65)) AS i) i GROUP BY 1, 2),
-      sca AS (SELECT id, centroid_id FROM (SELECT id, centroid_id,
-          row_number() OVER (PARTITION BY id ORDER BY d DESC, centroid_id) AS r
-        FROM sca0) WHERE r = 1),
+      sqa0 AS (${Round6c.dotScoreSql("q.id", "q.e", "q2 q", "scent")}),
+      sqa AS (${Round6c.dotRankSql("id, centroid_id", "id", "sqa0", "SELECT nprobe FROM np")}),
+      sca0 AS (${Round6c.dotScoreSql("q.id", "q.e", "c2 q", "scent")}),
+      sca AS (${Round6c.dotRankSql("id, centroid_id", "id", "sca0", "1")}),
       sscored AS (SELECT sqa.id AS qid, sca.id AS cid, ${Round6c.cosSql("q", "c")} AS cos
         FROM sqa JOIN sca ON sqa.centroid_id = sca.centroid_id AND sqa.id <> sca.id
         JOIN embeddings q ON sqa.id = q.vec_id
@@ -713,14 +666,7 @@ object Round9 {
       }),
       Some(s"""${Round6c.exactRecallCte},
       st AS (SELECT COUNT(*) AS n, COUNT(DISTINCT embedding) AS nu FROM embeddings),
-      p2t AS (SELECT CAST(power(2, x.x) AS BIGINT) AS p
-        FROM (SELECT unnest(range(0, 40)) AS x) x),
-      nl AS (SELECT CASE WHEN l / lower < (lower * 2) / l
-                         THEN lower ELSE lower * 2 END AS nlist FROM
-        (SELECT GREATEST(1.0, sqrt(CAST(nu AS DOUBLE))) AS l,
-           (SELECT MAX(p) FROM p2t WHERE p <= CAST(FLOOR(
-              GREATEST(1.0, sqrt(CAST(nu AS DOUBLE)))) AS BIGINT)) AS lower
-         FROM st)),
+      ${Round6c.advisorNlistSql("st")},
       adv AS (SELECT nl.nlist,
           GREATEST(1, nl.nlist // 2) AS nprobe,
           (5 * nl.nlist + 7) // 8 AS pqprobe,
@@ -729,10 +675,8 @@ object Round9 {
         FROM nl, st),
       ${ivfPqSqlE("(SELECT nlist FROM adv)", "(SELECT pqprobe FROM adv)",
         "(SELECT rerank FROM adv)", nSub = 16, nCodes = 16)},
-      vqa AS MATERIALIZED (SELECT cid AS qid, centroid_id FROM (
-          SELECT cid, centroid_id,
-            row_number() OVER (PARTITION BY cid ORDER BY d DESC, centroid_id) AS r
-          FROM ia0 WHERE cid < 50) WHERE r <= (SELECT nprobe FROM adv)),
+      vqa AS MATERIALIZED (${Round6c.dotRankSql("cid AS qid, centroid_id", "cid",
+        "ia0 WHERE cid < 50", "SELECT nprobe FROM adv")}),
       vsc AS MATERIALIZED (SELECT vqa.qid, ica.cid, ${Round6c.cosSql("q", "c")} AS cos
         FROM vqa JOIN ica ON vqa.centroid_id = ica.centroid_id AND vqa.qid <> ica.cid
         JOIN embeddings q ON vqa.qid = q.vec_id
@@ -818,36 +762,20 @@ object Round9 {
       Some(s"""WITH st AS MATERIALIZED (SELECT COUNT(*) AS n,
           COUNT(DISTINCT embedding) AS nu FROM embeddings
         WHERE ${Slots.Probe.outSql}),
-      p2t AS (SELECT CAST(power(2, x.x) AS BIGINT) AS p
-        FROM (SELECT unnest(range(0, 40)) AS x) x),
-      nl AS MATERIALIZED (SELECT CASE WHEN l / lower < (lower * 2) / l
-                         THEN lower ELSE lower * 2 END AS nlist FROM
-        (SELECT GREATEST(1.0, sqrt(CAST(nu AS DOUBLE))) AS l,
-           (SELECT MAX(p) FROM p2t WHERE p <= CAST(FLOOR(
-              GREATEST(1.0, sqrt(CAST(nu AS DOUBLE)))) AS BIGINT)) AS lower
-         FROM st)),
+      ${Round6c.advisorNlistSql("st", materialized = true)},
       cpos AS MATERIALIZED (SELECT vec_id, embedding,
           row_number() OVER (ORDER BY vec_id) AS rn
         FROM embeddings WHERE ${Slots.Probe.outSql}),
       cent AS MATERIALIZED (SELECT vec_id AS centroid_id, embedding AS centroid
         FROM cpos WHERE rn <= (SELECT nlist FROM nl)),
-      ca0 AS MATERIALIZED (SELECT e.vec_id AS cid, c.centroid_id,
-          round(SUM(CAST(e.embedding[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM embeddings e, cent c, (SELECT unnest(range(1, 65)) AS i) i
-        WHERE ${Slots.Probe.outSql("e.vec_id")} GROUP BY 1, 2),
-      ica AS MATERIALIZED (SELECT cid, centroid_id FROM (SELECT cid, centroid_id,
-          row_number() OVER (PARTITION BY cid ORDER BY d DESC, centroid_id) AS r
-        FROM ca0) WHERE r = 1),
-      pa0 AS MATERIALIZED (SELECT e.vec_id AS da, c.centroid_id,
-          round(SUM(CAST(e.embedding[i.i] AS DOUBLE) * CAST(c.centroid[i.i] AS DOUBLE)), 6) AS d
-        FROM embeddings e, cent c, (SELECT unnest(range(1, 65)) AS i) i
-        WHERE ${Slots.Probe.inSql("e.vec_id")} GROUP BY 1, 2),
-      ipa AS MATERIALIZED (SELECT da, centroid_id FROM (SELECT da, centroid_id,
-          row_number() OVER (PARTITION BY da ORDER BY d DESC, centroid_id) AS r
-        FROM pa0) WHERE r = 1),
-      cqx AS MATERIALIZED (SELECT e.vec_id AS cid, i.i AS i,
-          CAST(FLOOR(CAST(e.embedding[i.i] AS DOUBLE) * 1000000) AS BIGINT) AS x
-        FROM embeddings e, (SELECT unnest(range(1, 65)) AS i) i),
+      ca0 AS MATERIALIZED (${Round6c.dotScoreSql("e.vec_id AS cid", "e.embedding", "embeddings e",
+        "cent", where = Slots.Probe.outSql("e.vec_id"))}),
+      ica AS MATERIALIZED (${Round6c.dotRankSql("cid, centroid_id", "cid", "ca0", "1")}),
+      pa0 AS MATERIALIZED (${Round6c.dotScoreSql("e.vec_id AS da", "e.embedding", "embeddings e",
+        "cent", where = Slots.Probe.inSql("e.vec_id"))}),
+      ipa AS MATERIALIZED (${Round6c.dotRankSql("da, centroid_id", "da", "pa0", "1")}),
+      cqx AS MATERIALIZED (${Round6c.quantSql("e.vec_id AS cid", "e.embedding",
+        "embeddings e")}),
       rres AS MATERIALIZED (SELECT cqx.cid, cqx.i, cqx.x - ct.x AS rx
         FROM cqx JOIN ica ON cqx.cid = ica.cid
         JOIN cqx ct ON ct.cid = ica.centroid_id AND ct.i = cqx.i),
@@ -855,12 +783,11 @@ object Round9 {
         FROM rres r JOIN cpos s2 ON r.cid = s2.vec_id
         WHERE s2.rn > (SELECT nlist FROM nl)
           AND s2.rn <= (SELECT nlist FROM nl) + 16),
-      enc0 AS MATERIALIZED (SELECT r.cid, (r.i - 1) // 4 AS s, p.code,
-          SUM((r.rx - p.px) * (r.rx - p.px)) AS dist
-        FROM rres r JOIN pqc p ON r.i = p.i GROUP BY 1, 2, 3),
-      enc AS MATERIALIZED (SELECT cid, s, code FROM (SELECT cid, s, code,
-          row_number() OVER (PARTITION BY cid, s ORDER BY dist, code) AS rn
-        FROM enc0) WHERE rn = 1),
+      enc0 AS MATERIALIZED (${Round6c.l2ScoreSql(
+        Seq("r.cid", "(r.i - 1) // 4 AS s", "p.code"), "r.rx", "p.px",
+        "rres r JOIN pqc p ON r.i = p.i")}),
+      enc AS MATERIALIZED (${Round6c.l2RankSql("cid, s, code", "cid, s", "code", "enc0",
+        "1")}),
       qres AS MATERIALIZED (SELECT cqx.cid AS da, cqx.i, cqx.x - ct.x AS rx
         FROM cqx JOIN ipa ON cqx.cid = ipa.da
         JOIN cqx ct ON ct.cid = ipa.centroid_id AND ct.i = cqx.i),

@@ -148,6 +148,33 @@ class FunctionCatalogSpec extends SparkTestBase {
       "graftmem tables are reset through MemCatalog.recreate")
   }
 
+  test("src/main: one home per cell-assignment kernel") {
+    // the rounded-dot cell rank and the q225 quantized-L2 kernel, each
+    // spelled once per engine: Similarity for Spark, Round6c for DuckDB
+    def homes(re: scala.util.matching.Regex): Seq[String] = sources.flatMap {
+      case (f, text) =>
+        val n = re.findAllMatchIn(text).size
+        if (n > 0) Some(s"${f.getName} x$n") else None
+    }
+    def literal(needle: String) = java.util.regex.Pattern.quote(needle).r
+    val spark = Seq(
+      literal("lit(1000000L)"),
+      """sum\(\(col\("(\w+)"\) - col\("(\w+)"\)\) \* \(col\("\1"\) - col\("\2"\)\)\)\s*\.as\("dist"\)""".r,
+      literal("""sum("x").cast("double") / count(lit(1))"""))
+    val duckdb = Seq(
+      literal("ORDER BY d DESC, centroid_id"),
+      literal("centroid[i.i] AS DOUBLE)), 6)"),
+      literal("* 1000000) AS BIGINT) AS x"),
+      """SUM\(\((\S+) - (\S+)\) \* \(\1 - \2\)\) AS dist""".r,
+      literal("/ COUNT(*)) AS BIGINT) AS c"))
+    for (re <- spark)
+      assert(homes(re) == Seq("Similarity.scala x1"),
+        s"${re.regex}: use Similarity.quantCoords / l2Nearest / lloydMean")
+    for (re <- duckdb)
+      assert(homes(re) == Seq("Round6c.scala x1"),
+        s"${re.regex}: use the Round6c cell-assignment generators")
+  }
+
   /** The top-level argument texts of the parameter list that opens at
     * `text(open)`: commas inside brackets, string literals and `${…}`
     * interpolations do not split. */

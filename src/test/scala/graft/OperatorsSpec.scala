@@ -213,6 +213,48 @@ class OperatorsSpec extends SparkTestBase {
     assert(ms == wantMs)
   }
 
+  test("quantCoords, l2Nearest and lloydMean match a JVM reference; a tie ranks the lower cell first") {
+    val rnd = new scala.util.Random(11)
+    val vecs = Vector.tabulate(40)(_ => Vector.fill(8)(rnd.nextGaussian().toFloat))
+    // the reference arithmetic: floor(x·1e6) longs, Long squared
+    // distances, and the floor of the double mean of a Long sum
+    def quant(v: Seq[Float]): Vector[Long] =
+      v.map(x => Math.floor(x.toDouble * 1000000L).toLong).toVector
+    def dist(a: Seq[Long], b: Seq[Long]): Long =
+      a.indices.map(i => (a(i) - b(i)) * (a(i) - b(i))).sum
+    // planted tie: cells 9 and 7 hold the same coords
+    val cells = Map(5L -> quant(vecs(0)), 9L -> quant(vecs(1)), 7L -> quant(vecs(1)))
+
+    val pts = Similarity.quantCoords(vecs.zipWithIndex
+      .map { case (v, i) => (i.toLong, v: Seq[Float]) }.toDF("pid", "pe"), "pid", "pe")
+    val gotQ = pts.collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
+    val wantQ = (for ((v, p) <- vecs.zipWithIndex; i <- v.indices)
+      yield (p.toLong, i + 1) -> quant(v)(i)).toMap
+    assert(gotQ == wantQ)
+
+    val cellDf = cells.toSeq.flatMap { case (id, cv) =>
+      cv.zipWithIndex.map { case (x, i) => (id, i + 1, x) } }.toDF("cell", "i", "c")
+    val near = Similarity.l2Nearest(pts.join(cellDf, Seq("i")), Seq("pid"), "cell", 2)
+    val gotN = near.select("pid", "cell", "dist", "rn").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    val ranked = vecs.indices.map { p =>
+      p -> cells.toSeq.map { case (id, cv) => (dist(quant(vecs(p)), cv), id) }.sorted }
+    val wantN = ranked.flatMap { case (p, rs) =>
+      rs.take(2).zipWithIndex.map { case ((d, id), k) => (p.toLong, id, d, k + 1L) } }.toSet
+    assert(gotN == wantN)
+    assert(gotN.contains((1L, 7L, 0L, 1L)) && gotN.contains((1L, 9L, 0L, 2L)))
+
+    val asg = near.filter(col("rn") === 1).select("pid", "cell")
+    val gotM = Similarity.lloydMean(pts.join(asg, Seq("pid")), "cell").collect()
+      .map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
+    val wantM = ranked.groupBy(_._2.head._2).flatMap { case (id, members) =>
+      val qs = members.map { case (p, _) => quant(vecs(p)) }
+      (0 until 8).map(i => (id, i + 1) ->
+        Math.floor(qs.map(_(i)).sum.toDouble / qs.size).toLong) }
+    assert(gotM == wantM)
+    assert(wantM.keySet.map(_._1) == Set(5L, 7L))
+  }
+
   test("TopK.perGroup keeps k best rows per group, deterministically") {
     val df = Seq(("a", 3L), ("a", 1L), ("a", 2L), ("b", 9L)).toDF("g", "v")
     val top = TopK.perGroup(df, Seq("g"), Seq(col("v").desc), 2)
@@ -231,14 +273,14 @@ class OperatorsSpec extends SparkTestBase {
     assert(salted == plain)
   }
 
-  test("ivfTopK is deterministic and finds the identical vector") {
+  test("ivfTopKProbe at nprobe=1 is deterministic and finds the identical vector") {
     val vecs = (0 until 30).map(i =>
       (i.toLong, Seq.tabulate(8)(j => math.sin(i * 3 + j).toFloat)))
     val q = Seq((999L, vecs(7)._2)).toDF("qid", "qe")
     val c = vecs.toDF("cid", "ce")
-    val a = Similarity.ivfTopK(q, c, 3, nlist = 4).orderBy("rnk")
+    val a = Similarity.ivfTopKProbe(q, c, 3, nlist = 4, nprobe = 1).orderBy("rnk")
       .collect().map(r => (r.getLong(1), r.getDouble(2)))
-    val b = Similarity.ivfTopK(q, c, 3, nlist = 4).orderBy("rnk")
+    val b = Similarity.ivfTopKProbe(q, c, 3, nlist = 4, nprobe = 1).orderBy("rnk")
       .collect().map(r => (r.getLong(1), r.getDouble(2)))
     assert(a.sameElements(b))
     assert(a.head._1 == 7L && a.head._2 == 1.0) // its own bucket holds it
@@ -269,16 +311,30 @@ class OperatorsSpec extends SparkTestBase {
     assert(all.sameElements(exact))
   }
 
-  test("ivfTopKProbe: nprobe=1 equals ivfTopK") {
+  test("ivfTopKProbe: nprobe=1 equals the rank-1 window assignment") {
+    // assignToCentroids takes rank 1 as an argmax aggregate; the
+    // reference here is the row_number window over the same rounded
+    // dot, (d DESC, centroid_id) — the two must bucket identically
+    graft.plans.NativeExpressions.register(spark)
     val vecs = (0 until 30).map(i =>
       (i.toLong, Seq.tabulate(8)(j => math.sin(i * 3 + j).toFloat)))
-    val q = Seq((999L, vecs(7)._2)).toDF("qid", "qe")
+    val q = vecs.take(6).map { case (i, v) => (i + 100L, v) }.toDF("qid", "qe")
     val c = vecs.toDF("cid", "ce")
+    val cents = c.orderBy("cid").limit(4)
+      .select(col("cid").as("centroid_id"), col("ce").as("centroid"))
+    def rank1(df: org.apache.spark.sql.DataFrame, id: String, vec: String) =
+      df.crossJoin(cents)
+        .withColumn("d", round(expr(s"vec_dot($vec, centroid)"), 6))
+        .withColumn("r", row_number().over(org.apache.spark.sql.expressions.Window
+          .partitionBy(id).orderBy(col("d").desc, col("centroid_id"))))
+        .filter(col("r") === 1).select(col(id), col("centroid_id"))
+    val cand = rank1(q, "qid", "qe").join(rank1(c, "cid", "ce"), "centroid_id")
+      .select("qid", "cid")
+    val base = Similarity.topKByCos(Similarity.exactCos(cand, q, c), 3)
+      .select("qid", "cid", "cos", "rnk").collect().map(_.toString).sorted
     val one = Similarity.ivfTopKProbe(q, c, 3, nlist = 4, nprobe = 1)
-      .collect().map(_.toString).sorted
-    val base = Similarity.ivfTopK(q, c, 3, nlist = 4)
-      .collect().map(_.toString).sorted
-    assert(one.sameElements(base))
+      .select("qid", "cid", "cos", "rnk").collect().map(_.toString).sorted
+    assert(base.nonEmpty && one.sameElements(base))
   }
 
   test("ivfLloydTopK: probing all centroids recovers brute force") {

@@ -260,6 +260,23 @@ class PipelineSpec extends SparkTestBase {
     assert(!downstreamStarted.get(), "a job started after the build failed")
   }
 
+  test("runParallel: a ready job queued behind a failure never starts") {
+    val root = Files.createTempDirectory("graft_par_queue").toString
+    val started = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val bad = PipelineJob("bad", "bad.parquet", Nil)(
+      (s, _) => sys.error("bad job"))
+    val other = PipelineJob("other", "other.parquet", Nil) { (s, _) =>
+      started.set(true)
+      Seq(1L).toDF("id")
+    }
+    val e = intercept[Exception] {
+      new PipelineRunner(spark, root).runParallel(Seq(bad, other),
+        parallelism = 1)
+    }
+    assert(e.getMessage.contains("bad job"), e)
+    assert(!started.get(), "an independent ready job started after the failure")
+  }
+
   test("Compact merges a many-small-file table, preserving rows") {
     val src = Files.createTempDirectory("graft_compact_src").toString
     val dst = Files.createTempDirectory("graft_compact_dst").toString
